@@ -26,7 +26,3 @@ def murmur3_hash(*cols):
     frame ops — /root/reference/frame/ops.go:31-96 registers murmur3 as
     the canonical HashWithSeed)."""
     return _F.hash(*cols)
-
-
-def xxhash(*cols):
-    return _F.xxhash64(*cols)

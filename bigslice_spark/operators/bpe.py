@@ -56,45 +56,6 @@ def word_counts(df: DataFrame, text_col: str = "text",
             .groupBy("word").agg(F.count(F.lit(1)).alias("n")))
 
 
-def _merge_loop_rescan(wc: list[tuple[str, int]],
-                       num_merges: int
-                       ) -> list[tuple[int, str, str, int]]:
-    """Reference BPE loop: full pair recount + full word rescan per
-    merge — O(merges · Σ|word|). Kept as the plain-reading spec the
-    incremental loop below is test-pinned against (and for hand
-    corpora in tests)."""
-    words = [([*w] + [_EOW], n) for w, n in wc]
-    merges: list[tuple[int, str, str, int]] = []
-    for rank in range(num_merges):
-        pairs: dict[tuple[str, str], int] = {}
-        for syms, n in words:
-            for i in range(len(syms) - 1):
-                p = (syms[i], syms[i + 1])
-                pairs[p] = pairs.get(p, 0) + n
-        if not pairs:
-            break
-        (a, b), cnt = min(pairs.items(),
-                          key=lambda kv: (-kv[1], kv[0]))
-        if cnt < 2:
-            break  # nothing left worth merging
-        merges.append((rank, a, b, cnt))
-        ab = a + b
-        nxt = []
-        for syms, n in words:
-            out, i = [], 0
-            while i < len(syms):
-                if (i + 1 < len(syms) and syms[i] == a
-                        and syms[i + 1] == b):
-                    out.append(ab)
-                    i += 2
-                else:
-                    out.append(syms[i])
-                    i += 1
-            nxt.append((out, n))
-        words = nxt
-    return merges
-
-
 def _merge_loop(wc: list[tuple[str, int]],
                 num_merges: int) -> list[tuple[int, str, str, int]]:
     """Classic BPE over a word-frequency list: repeatedly merge the
@@ -111,9 +72,10 @@ def _merge_loop(wc: list[tuple[str, int]],
     comes from a lazy-deletion heap keyed (-count, pair) — exactly the
     rescan form's min((-count, pair)) — where stale entries (count
     changed since push) are discarded on pop by comparing against the
-    live count. Same merge sequence bit-for-bit (test-pinned against
-    _merge_loop_rescan on adversarial corpora: overlapping runs, ties,
-    multi-char remerges)."""
+    live count. Same merge sequence bit-for-bit as the rescan form,
+    which tests/test_r15_optimizations.py keeps as the reference
+    (test_bpe_incremental_merge_loop_matches_rescan: overlapping runs,
+    ties, multi-char remerges)."""
     import heapq
 
     words = [([*w] + [_EOW], n) for w, n in wc]

@@ -84,11 +84,6 @@ def _fullbox(buf: bytes, s: int, e: int) -> tuple:
     return vf >> 24, vf & 0xFFFFFF, s + 4
 
 
-def _need(buf: bytes, s: int, n: int, what: str) -> None:
-    if s + n > len(buf):
-        raise ValueError(f"truncated {what}")
-
-
 def _need_in(s: int, n: int, be: int, what: str) -> None:
     """Field read [s, s+n) must stay inside the enclosing box body
     ending at ``be`` — checking against len(buf) alone would let a

@@ -1,7 +1,7 @@
 """URL tooling for web-corpus pipelines — the standard pre-dedup stage
 (C4/RefinedWeb-style): normalize URLs so the same page collapses to
-one key, extract host/path parts, and reduce hosts to their
-registrable domain for per-site quotas and blocklists.
+one key, and reduce hosts to their registrable domain for per-site
+quotas and blocklists.
 
 Scale shape: everything is a zero-shuffle projection. Parsing and
 normalization are JVM built-ins (parse_url, regexp_*, lower) inside
@@ -45,23 +45,6 @@ def _wstrim(url: Column) -> Column:
     removes only spaces, and a crawl URL wrapped in '\\t' would
     otherwise reach parse_url unparseable (found by fuzzing)."""
     return F.regexp_replace(url, r"^\s+|\s+$", "")
-
-
-def url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Append scheme/host/port/path/query columns (lowercased scheme
-    and host; port NULL when absent; path defaulted to '/')."""
-    u = F.col(url_col)
-    auth = F.try_parse_url(u, F.lit("AUTHORITY"))
-    port = F.regexp_extract(auth, r":(\d+)$", 1)
-    path = F.try_parse_url(u, F.lit("PATH"))
-    return df.withColumns({
-        "scheme": _scheme(u),
-        "host": F.lower(F.try_parse_url(u, F.lit("HOST"))),
-        "port": F.when(port != "", port.cast("int")),
-        "path": F.when((path == "") | path.isNull(), F.lit("/"))
-                 .otherwise(path),
-        "query": F.try_parse_url(u, F.lit("QUERY")),
-    })
 
 
 def registrable_domain(host: Column | str) -> Column:

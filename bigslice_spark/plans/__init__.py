@@ -1,7 +1,7 @@
 """Plan inspection & partitioning policy: the tooling for keeping every
 operator honest at 100TB.
 
-- explain_str / plan_ops:   capture the formatted physical plan.
+- explain_str:              capture the formatted physical plan.
 - assert_pushed_filters:    the parquet scan actually received the filter.
 - assert_broadcast / assert_no_shuffle_before_partial_agg: join/agg
                             strategy checks used by the plan tests.
@@ -19,18 +19,11 @@ import re
 from pyspark.sql import DataFrame
 
 
-def explain_str(df: DataFrame, mode: str = "formatted") -> str:
+def explain_str(df: DataFrame) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain(mode)
+        df.explain("formatted")
     return buf.getvalue()
-
-
-def plan_ops(df: DataFrame) -> list[str]:
-    """Physical operator names, in plan order."""
-    txt = explain_str(df)
-    return re.findall(r"^\s*[*+:-]*\s*\(?\d*\)?\s*([A-Za-z]+\w*)",
-                      txt, re.MULTILINE)
 
 
 def scans_with_pushed_filters(df: DataFrame) -> list[tuple[str, str]]:
@@ -80,13 +73,20 @@ def count_scans(df: DataFrame, source: str = "parquet") -> int:
     return len(re.findall(rf"^\(\d+\) Scan {source}", txt, re.MULTILINE))
 
 
-def codegen_fraction(df: DataFrame) -> float:
-    """Fraction of plan nodes inside WholeStageCodegen spans — widen them
-    (low fraction ⇒ interpreted operators in the hot path)."""
-    txt = explain_str(df, "simple")
-    starred = len(re.findall(r"^\s*\*", txt, re.MULTILINE))
-    total = len(re.findall(r"^\s*[*+]?-?\s*\w", txt, re.MULTILINE))
-    return starred / total if total else 0.0
+def codegen_fraction(df: DataFrame) -> float | None:
+    """Fraction of plan nodes inside WholeStageCodegen spans, which the
+    tree marks ``*(<stage>)`` — widen them (low fraction ⇒ interpreted
+    operators in the hot path). Under adaptive execution the codegen
+    stages exist only once the plan has run, so this reads the final
+    adaptive plan and returns None until an action on ``df`` has run."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        if plan.simpleString(0).endswith("isFinalPlan=false"):
+            return None
+        plan = plan.executedPlan()
+    nodes = [n for n in (ln.lstrip(" :+-")
+                         for ln in plan.toString().splitlines()) if n]
+    return sum(n.startswith("*(") for n in nodes) / len(nodes)
 
 
 # -- partition policy ----------------------------------------------------
@@ -104,22 +104,6 @@ def advise_shuffle_partitions(input_bytes: int,
     return int(min(n, max_partitions))
 
 
-def configure_for_input(spark, paths: list[str]) -> int:
-    """Set spark.sql.shuffle.partitions from the actual input size."""
-    import os
-    total = 0
-    for p in paths:
-        if os.path.isdir(p):
-            for root, _, files in os.walk(p):
-                total += sum(os.path.getsize(os.path.join(root, f))
-                             for f in files)
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    n = advise_shuffle_partitions(total)
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    return n
-
-
 def plan_report(df: DataFrame) -> dict:
     """One-call plan audit for a query under development: the numbers
     every 100 TB readiness review asks for, as a dict —
@@ -130,7 +114,8 @@ def plan_report(df: DataFrame) -> dict:
     - partial_agg: map-side combine present;
     - codegen_fraction: share of plan nodes inside WholeStageCodegen
       (interpreted fallbacks — e.g. an expression past the 64 KB JVM
-      method limit — drag this down);
+      method limit — drag this down); None under adaptive execution
+      until an action on ``df`` has run;
     - n_expands: Expand nodes — grouping sets plan one by design, but
       an UNEXPECTED Expand usually means a DISTINCT aggregate got
       mixed into a multi-aggregate (Catalyst's distinct rewrite runs

@@ -673,10 +673,12 @@ def test_winsorize_single_exchange(spark, sf_dir):
 
 def test_plan_report_summarizes_q3(spark, sf_dir):
     from bigslice_spark.plans import plan_report
-    r = plan_report(QUERIES["q3_shipping_priority"](spark, sf_dir))
+    q3 = QUERIES["q3_shipping_priority"](spark, sf_dir)
+    q3.collect()   # the adaptive plan's codegen stages exist once run
+    r = plan_report(q3)
     assert r["broadcast"] and not r["cartesian"]
     assert r["n_scans"] >= 3 and r["n_exchanges"] >= 1
-    assert 0.0 <= r["codegen_fraction"] <= 1.0
+    assert 0.0 < r["codegen_fraction"] <= 1.0
     assert r["pushed_scans"]
     # pure relational plan: no Expand, no Python nodes
     assert r["n_expands"] == 0 and r["n_python"] == 0
@@ -685,6 +687,28 @@ def test_plan_report_summarizes_q3(spark, sf_dir):
     assert rollup["n_expands"] == 1
     bpe = plan_report(QUERIES["bpe_token_counts"](spark, sf_dir))
     assert bpe["n_python"] == 1
+
+
+def test_codegen_fraction_counts_nodes_not_stages(spark):
+    """range -> groupBy(k).count() without adaptive execution plans
+    five nodes, four inside codegen stages; the Exchange is not. Under
+    adaptive execution the fraction is unknown until the plan runs."""
+    from bigslice_spark.plans import codegen_fraction
+
+    def grouped():
+        return spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+        df = grouped()
+        assert codegen_fraction(df) is None
+        df.collect()
+        assert 0.0 < codegen_fraction(df) < 1.0
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        assert codegen_fraction(grouped()) == 0.8
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
 def test_bpe_encode_no_python_over_corpus(spark, sf_dir):

@@ -265,6 +265,46 @@ def test_trigram_cover_count_star_equals_distinct_shape(spark):
     assert _rows(got, ["q", "doc_id"]) == _rows(ref, ["q", "doc_id"])
 
 
+def _merge_loop_rescan(wc: list[tuple[str, int]],
+                       num_merges: int
+                       ) -> list[tuple[int, str, str, int]]:
+    """Reference BPE loop: full pair recount + full word rescan per
+    merge — O(merges · Σ|word|). The plain-reading spec the
+    incremental bpe._merge_loop is pinned against below."""
+    from bigslice_spark.operators.bpe import _EOW
+
+    words = [([*w] + [_EOW], n) for w, n in wc]
+    merges: list[tuple[int, str, str, int]] = []
+    for rank in range(num_merges):
+        pairs: dict[tuple[str, str], int] = {}
+        for syms, n in words:
+            for i in range(len(syms) - 1):
+                p = (syms[i], syms[i + 1])
+                pairs[p] = pairs.get(p, 0) + n
+        if not pairs:
+            break
+        (a, b), cnt = min(pairs.items(),
+                          key=lambda kv: (-kv[1], kv[0]))
+        if cnt < 2:
+            break  # nothing left worth merging
+        merges.append((rank, a, b, cnt))
+        ab = a + b
+        nxt = []
+        for syms, n in words:
+            out, i = [], 0
+            while i < len(syms):
+                if (i + 1 < len(syms) and syms[i] == a
+                        and syms[i + 1] == b):
+                    out.append(ab)
+                    i += 2
+                else:
+                    out.append(syms[i])
+                    i += 1
+            nxt.append((out, n))
+        words = nxt
+    return merges
+
+
 def test_bpe_incremental_merge_loop_matches_rescan():
     """The heap/delta merge loop must reproduce the rescan reference's
     merge sequence EXACTLY (ranks, pairs, counts — the oracle replays
@@ -273,8 +313,7 @@ def test_bpe_incremental_merge_loop_matches_rescan():
     seeded fuzz sweep."""
     import random
 
-    from bigslice_spark.operators.bpe import (_merge_loop,
-                                              _merge_loop_rescan)
+    from bigslice_spark.operators.bpe import _merge_loop
 
     hard = [
         [("aaaa", 3), ("aaa", 2), ("aa", 5)],
