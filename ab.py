@@ -18,32 +18,17 @@ import argparse
 import json
 import os
 import statistics
-import subprocess
-import sys
 from collections.abc import Callable
 
-RUN_TIMEOUT_S = 900
-
-
-def run_bench(tree: str, query: str) -> float:
-    """Seconds ``query`` took in a fresh ``bench.py`` under ``tree``."""
-    env = dict(os.environ, SPARK_GRAFT_BENCH_ONLY=query)
-    try:
-        p = subprocess.run([sys.executable, os.path.join(tree, "bench.py")],
-                           env=env, capture_output=True, text=True,
-                           cwd=tree, timeout=RUN_TIMEOUT_S)
-    except subprocess.TimeoutExpired:
-        return -1.0
-    for line in p.stdout.splitlines():
-        if line.strip().startswith("{"):
-            return json.loads(line)["queries"].get(query, -1.0)
-    return -1.0
+import bench
 
 
 def ab(trees: list[tuple[str, str]], queries: list[str], iters: int,
-       run: Callable[[str, str], float] = run_bench
+       run: Callable[[str, str], float] = lambda tree, q:
+       bench.run_fresh([q], tree).get(q, -1.0)
        ) -> dict[str, dict[str, list[float]]]:
-    """``runs[query][tree name]``: the seconds of each iteration."""
+    """``runs[query][tree name]``: the seconds ``run(tree, query)`` took
+    in each iteration (by default a fresh ``bench.py`` under ``tree``)."""
     runs = {q: {name: [] for name, _ in trees} for q in queries}
     for it in range(iters):
         order = trees if it % 2 == 0 else trees[::-1]

@@ -5,45 +5,26 @@ its tail queries absorbed the whole sequence's JVM pressure
 (ts_anomaly 12.6s in-sequence vs 4.47s fresh — PERFORMANCE.md r10
 close), so as recorded it could not serve as a per-query scaling
 ratchet. This harness runs EVERY headline query in its own subprocess
-JVM via bench.py's SPARK_GRAFT_BENCH_ONLY knob: each number is a
-fresh-JVM measurement, reproducible within box noise by construction,
-at the cost of paying JVM+Python-worker warmup per query (bench.py's
-untimed warmup runs in each subprocess, so warmup cost stays OUT of
-the recorded times).
+JVM (bench.run_fresh): each number is a fresh-JVM measurement,
+reproducible within box noise by construction, at the cost of paying
+JVM+Python-worker warmup per query (bench.py's untimed warmup runs in
+each subprocess, so warmup cost stays OUT of the recorded times).
 
-Run:  python bench_sf1.py [sf_dir] [out.json]
-defaults: /tmp/spark_graft_sf1.0, BENCH_sf1_r11.json
+Run:  python bench_sf1.py [--adjudicate] SF_DIR OUT.json
+e.g. /tmp/spark_graft_sf1.0 BENCH_sf1_r16.json; the round is read from
+OUT's _r<N> suffix. --adjudicate only re-runs the mover gate of OUT.
+Env: SPARK_GRAFT_CPUS, SPARK_GRAFT_DRIVER_MEM (default 24g here).
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
-import subprocess
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-
-def run_one(name: str, sf_dir: str, cpus: str, mem: str) -> float:
-    env = dict(os.environ,
-               SPARK_GRAFT_SF_DIR=sf_dir,
-               SPARK_GRAFT_CPUS=cpus,
-               SPARK_GRAFT_DRIVER_MEM=mem,
-               SPARK_GRAFT_BENCH_ONLY=name)
-    proc = subprocess.run(
-        [sys.executable, os.path.join(os.path.dirname(
-            os.path.abspath(__file__)), "bench.py")],
-        env=env, capture_output=True, text=True, timeout=1800)
-    for line in proc.stdout.splitlines():
-        line = line.strip()
-        if line.startswith("{"):
-            return json.loads(line)["queries"].get(name, -1.0)
-    print(f"bench_sf1: {name} produced no result:\n{proc.stderr[-2000:]}",
-          file=sys.stderr)
-    return -1.0
+import bench
 
 
 def zstd_decode_probe() -> dict:
@@ -53,8 +34,7 @@ def zstd_decode_probe() -> dict:
     compressed by the REFERENCE zstd binary at level 3, i.e. frames a
     real Avro writer would produce, not this repo's own encoder
     output) single-threaded, best of 3."""
-    fix = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                       "bench_fixtures", "zstd_avro_bench.avro")
+    fix = os.path.join(bench.HERE, "bench_fixtures", "zstd_avro_bench.avro")
     from bigslice_spark.sources.avro import read_avro_blob
     blob = open(fix, "rb").read()
     best = float("inf")
@@ -78,76 +58,47 @@ def zstd_decode_probe() -> dict:
     }
 
 
-def adjudicate(out_path: str, sf_dir: str, cpus: str, mem: str) -> None:
+def adjudicate(out_path: str, env: dict) -> None:
     """In-band >1.5x mover adjudication vs the newest PRIOR sf1
-    artifact (the bench.py r13 protocol, extended to sf1 — VERDICT
-    r13 task 8): each mover re-runs up to three standalone fresh-JVM
-    trials; the artifact records {name: [prev, now, rerun...]} so box
-    noise is adjudicated in the artifact itself instead of burning a
-    judge round. Also callable standalone:
-    python bench_sf1.py --adjudicate <artifact> [sf_dir]."""
-    import glob
+    artifact (the bench.py gate extended to sf1 — VERDICT r13 task 8):
+    each mover re-runs up to three standalone fresh-JVM trials; the
+    artifact records {name: [prev, now, rerun...]}."""
     doc = json.load(open(out_path))
-    cur = doc["bench_sf1"]["queries"]
-    here = os.path.dirname(os.path.abspath(out_path)) or "."
-    prev_round, prev = 0, {}
-    for f in sorted(glob.glob(os.path.join(here, "BENCH_sf1_r*.json")),
-                    reverse=True):
-        n = int(re.search(r"_r(\d+)", f).group(1))
-        if n >= doc.get("round", 1 << 30):
-            continue
-        try:
-            prev = json.load(open(f))["bench_sf1"]["queries"]
-            prev_round = n
-            break
-        except Exception:
-            continue
-    movers: dict[str, list[float]] = {}
-    for name, t in sorted(cur.items()):
-        p = prev.get(name, 0.0)
-        if p > 0.25 and t > 0 and t / p > 1.5:
-            reruns = []
-            for _ in range(3):
-                reruns.append(run_one(name, sf_dir, cpus, mem))
-                # stop early once a rerun lands back inside the gate
-                if 0 < reruns[-1] / p <= 1.5:
-                    break
-            movers[name] = [p, t] + reruns
-            print(f"mover {name}: prev={p} now={t} reruns={reruns}",
-                  flush=True)
+    prev_round, prev = bench.prev_artifact(
+        os.path.dirname(os.path.abspath(out_path)), "BENCH_sf1_",
+        lambda d: d["bench_sf1"]["queries"],
+        below=doc.get("round", 1 << 30))
     doc["prev_sf1_round"] = prev_round
-    doc["movers_vs_prev"] = movers       # {} = gate ran, no movers
+    # {} = gate ran, no movers
+    doc["movers_vs_prev"] = bench.movers(
+        doc["bench_sf1"]["queries"], prev,
+        lambda n: bench.run_fresh([n], env=env).get(n, -1.0), tries=3)
     with open(out_path, "w") as f:
         json.dump(doc, f, indent=1)
 
 
 def main() -> None:
-    from bench import HEADLINE
-    if sys.argv[1:2] == ["--adjudicate"]:
-        out_path = sys.argv[2]
-        sf_dir = (sys.argv[3] if len(sys.argv) > 3
-                  else "/tmp/spark_graft_sf1.0")
-        adjudicate(out_path, sf_dir,
-                   os.environ.get("SPARK_GRAFT_CPUS", "32"),
-                   os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        return
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1.0"
-    out_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH_sf1_r12.json"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
+    ap.add_argument("--adjudicate", action="store_true",
+                    help="only re-run the mover gate of an existing OUT")
+    ap.add_argument("sf_dir", help="e.g. /tmp/spark_graft_sf1.0")
+    ap.add_argument("out", help="artifact, e.g. BENCH_sf1_r16.json")
+    args = ap.parse_args()
+    sf_dir, out_path = args.sf_dir, args.out
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g")
-    times: dict[str, float] = {}
-    t0 = time.time()
-    for i, name in enumerate(HEADLINE):
-        t = run_one(name, sf_dir, cpus, mem)
-        times[name] = t
-        print(f"[{i + 1}/{len(HEADLINE)}] {name}: {t}s "
-              f"(elapsed {time.time() - t0:.0f}s)", flush=True)
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=sf_dir,
+               SPARK_GRAFT_DRIVER_MEM=mem)
+    if args.adjudicate:
+        adjudicate(out_path, env)
+        return
+    times = bench.fresh_each(bench.HEADLINE,
+                             lambda n: bench.run_fresh(n, env=env))
     total = round(sum(v for v in times.values() if v > 0), 3)
     m = re.search(r"_r(\d+)", out_path)
     doc = {
         "round": int(m.group(1)) if m else -1,
         "sf": 1.0,
-        "cpus": int(cpus),
+        "cpus": int(bench.CPUS),
         "driver_mem": mem,
         "protocol": ("fresh JVM per query (bench.py subprocess with "
                      "SPARK_GRAFT_BENCH_ONLY=<name>); bench.py's "
@@ -171,7 +122,7 @@ def main() -> None:
     }
     with open(out_path, "w") as f:
         json.dump(doc, f, indent=1)
-    adjudicate(out_path, sf_dir, cpus, mem)
+    adjudicate(out_path, env)
     print(json.dumps({"metric": "sf1_fresh_jvm_total", "value": total,
                       "unit": "sec", "n": len(times)}))
 

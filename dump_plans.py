@@ -2,72 +2,48 @@
 
 Usage: python dump_plans.py <tag> <suffix> [names...]   (default: all HEADLINE)
 
-Queries with internal materialize() points execute their upstream legs
-eagerly at plan-build time; the dump then shows the final leg over the
-materialized scans (noted in the file header).
+Each plan is the one the bench times (bench.query_fn: a query's bench
+variant where it has one). Queries with internal materialize() points
+execute their upstream legs eagerly at plan-build time; the dump then
+shows the final leg over the materialized scans (noted in the file
+header).
 """
 from __future__ import annotations
 
+import contextlib
 import io
 import os
 import sys
-import contextlib
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import bench
 
 
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:]
+    names = sys.argv[3:] or bench.HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    outdir = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                          "plans", tag)
+    outdir = os.path.join(bench.HERE, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("bigslice_spark_plandump")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-
-    import bench
-    from bigslice_spark.queries import QUERIES
-    if not names:
-        names = list(bench.HEADLINE)
+    spark = bench.bench_session("bigslice_spark_plandump")
+    from bigslice_spark.checkpoint import release_all
 
     for name in names:
-        fn = QUERIES.get(name)
-        if fn is None:
-            print(f"skip {name}: not in registry")
-            continue
         try:
-            df = fn(spark, sf_dir)
+            df = bench.query_fn(name)(spark, sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
             txt = buf.getvalue()
         except Exception as ex:
             txt = f"ERROR building {name}: {ex}\n"
-        hdr = (f"# {name} @ {sf_dir} local[{cpus}] — {suffix}\n"
+        hdr = (f"# {name} @ {sf_dir} {bench.BENCH_CONF['spark.master']} "
+               f"— {suffix}\n"
                f"# NOTE: legs upstream of materialize() points execute "
                f"eagerly at build time and appear here as Scan "
                f"ExistingRDD.\n\n")
         with open(os.path.join(outdir, f"{name}_{suffix}.txt"), "w") as f:
             f.write(hdr + txt)
         print(f"dumped {name} ({len(txt)} bytes)", flush=True)
-        from bigslice_spark.checkpoint import release_all
         release_all(spark)
     spark.stop()
 

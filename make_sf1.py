@@ -11,106 +11,80 @@ otherwise create artificial near-duplicates: document text gets a
 per-replica vowel rotation (every shingle changes — dedup measures
 candidate generation, not an all-dup corner) and embeddings get a
 per-replica coordinate rotation (norms preserved, different cells).
-Same approach as stress_scale.py, but materialized to parquet so the
-full bench harness runs unmodified: SPARK_GRAFT_SF_DIR=<out> bench.py.
+stress_scale.py amplifies in memory with the same ``amplify``; this
+script materializes to parquet so the full bench harness runs
+unmodified: SPARK_GRAFT_SF_DIR=<out> bench.py.
 
-Run: python make_sf1.py [out_dir]   (default /tmp/spark_graft_sf1.0 —
-the 'sf1.0' suffix is what bench.py's sf regex reports)
+Run: python make_sf1.py [out_dir] [src_dir]   (default out
+/tmp/spark_graft_sf1.0 — the 'sf1.0' suffix is what bench.py's sf regex
+reports; the session is bench.py's, on local[$SPARK_GRAFT_CPUS])
 """
 
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from pyspark.sql import functions as F
+
 
 AMP = 10
 KEY_OFF = 10**9        # orderkey/custkey/partkey/suppkey/event_id
 USER_OFF = 10**7       # user_id / doc_id / vec_id (small-cardinality keys)
+SHIFTS = {
+    "customer": {"c_custkey": KEY_OFF},
+    "supplier": {"s_suppkey": KEY_OFF},
+    "part": {"p_partkey": KEY_OFF},
+    "orders": {"o_orderkey": KEY_OFF, "o_custkey": KEY_OFF},
+    "lineitem": {"l_orderkey": KEY_OFF, "l_partkey": KEY_OFF,
+                 "l_suppkey": KEY_OFF},
+    "events": {"event_id": KEY_OFF, "user_id": USER_OFF},
+    "documents": {"doc_id": USER_OFF},
+    "embeddings": {"vec_id": USER_OFF},
+}
+DIM = 64
+
+
+def replica(df, name: str, i: int):
+    """Replica ``i`` of table ``name`` (replica 0 is the table)."""
+    if i == 0:
+        return df
+    cols = {c: F.col(c) + i * off for c, off in SHIFTS[name].items()}
+    if name == "documents":
+        rot = "aeiou"[i % 5:] + "aeiou"[:i % 5]
+        cols["text"] = F.translate("text", "aeiou", rot)
+    if name == "embeddings" and i % DIM:
+        r = i % DIM
+        cols["embedding"] = F.concat(F.slice("embedding", r + 1, DIM - r),
+                                     F.slice("embedding", 1, r))
+    return df.withColumns(cols)
+
+
+def amplify(df, name: str, amp: int):
+    """``amp`` replicas of table ``name``; dimension tables stay as-is."""
+    out = df
+    for i in range(1, amp if name in SHIFTS else 1):
+        out = out.unionByName(replica(df, name, i))
+    return out
 
 
 def main() -> None:
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1.0"
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    spark = (SparkSession.builder.appName("bss_make_sf1")
-             .master("local[32]")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.driver.memory", "16g")
-             .config("spark.sql.session.timeZone", "UTC")
-             .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    import bench
     from bigslice_spark.session import load_tables
+    spark = bench.bench_session("bss_make_sf1")
     t = load_tables(spark, src)
-
-    dim = 64
-
-    def shifted(name, i):
-        df = t[name]
-        if name in ("region", "nation"):
-            return df if i == 0 else None
-        if i == 0 and name not in ("documents", "embeddings"):
-            return df
-        if name == "customer":
-            return df.withColumn("c_custkey",
-                                 F.col("c_custkey") + i * KEY_OFF)
-        if name == "supplier":
-            return df.withColumn("s_suppkey",
-                                 F.col("s_suppkey") + i * KEY_OFF)
-        if name == "part":
-            return df.withColumn("p_partkey",
-                                 F.col("p_partkey") + i * KEY_OFF)
-        if name == "orders":
-            return (df.withColumn("o_orderkey",
-                                  F.col("o_orderkey") + i * KEY_OFF)
-                    .withColumn("o_custkey",
-                                F.col("o_custkey") + i * KEY_OFF))
-        if name == "lineitem":
-            return (df.withColumn("l_orderkey",
-                                  F.col("l_orderkey") + i * KEY_OFF)
-                    .withColumn("l_partkey",
-                                F.col("l_partkey") + i * KEY_OFF)
-                    .withColumn("l_suppkey",
-                                F.col("l_suppkey") + i * KEY_OFF))
-        if name == "events":
-            return (df.withColumn("event_id",
-                                  F.col("event_id") + i * KEY_OFF)
-                    .withColumn("user_id",
-                                F.col("user_id") + i * USER_OFF))
-        if name == "documents":
-            rot = "aeiou"[i % 5:] + "aeiou"[:i % 5]
-            return df.select(
-                (F.col("doc_id") + i * USER_OFF).alias("doc_id"),
-                F.translate("text", "aeiou", rot).alias("text"),
-                "lang", "source", "n_chars")
-        if name == "embeddings":
-            r = i % dim
-            vec = (F.col("embedding") if r == 0 else
-                   F.concat(F.slice("embedding", r + 1, dim - r),
-                            F.slice("embedding", 1, r)))
-            return df.select(
-                (F.col("vec_id") + i * USER_OFF).alias("vec_id"),
-                vec.cast("array<float>").alias("embedding"), "label")
-        raise ValueError(name)
 
     os.makedirs(out, exist_ok=True)
     for name in ("region", "nation", "customer", "supplier", "part",
                  "orders", "lineitem", "events", "documents",
                  "embeddings"):
         t0 = time.time()
-        parts = [p for p in (shifted(name, i) for i in range(AMP))
-                 if p is not None]
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
         # file sizing: big facts get parallel files, dims stay single
         nfiles = {"lineitem": 32, "orders": 16, "events": 16,
                   "customer": 8, "part": 8, "documents": 8,
                   "embeddings": 4}.get(name, 1)
-        (df.repartition(nfiles)
+        (amplify(t[name], name, AMP).repartition(nfiles)
          .write.mode("overwrite")
          .parquet(os.path.join(out, f"{name}.parquet")))
         print(f"{name}: {time.time() - t0:.1f}s", flush=True)

@@ -1,200 +1,168 @@
-"""Per-stage profiler for one bench query (guide §1: measure first).
+"""Per-layer profiler for bench queries (guide §1: measure first).
 
-Runs exactly the bench harness conf (bench.py) plus an event log, runs
-the named quer(ies) with the bench's timed action (count), then parses
-the event log into a per-stage table: wall, task time, shuffle bytes
-read/written, records, spill.  Usage:
+Runs each named query through the bench harness (bench.py's session
+plus an event log, its warmup, its timed build + count()), then
+attributes the event log's jobs to queries by job group (``bss:<name>``)
+and prints per query: eager jobs (submitted before the build returned:
+materialize rounds, broadcast builds, collects) and terminal jobs, each
+as count and seconds; driver-only time (build minus the eager jobs);
+other groups' jobs inside the query's window (expect 0); and per job its
+stages' wall, tasks, task time, GC, shuffle bytes and spill.
 
-    python profile_query.py leakage_split [more names...]
+    python profile_query.py lpa_communities [more names...]
 
 Env: SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS as in bench.py.
 """
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import bench
+
+
+def _union_s(intervals: list[tuple[float, float]]) -> float:
+    total, end = 0.0, float("-inf")
+    for a, b in sorted(intervals):
+        if b > end:
+            total += b - max(a, end)
+            end = b
+    return total
+
+
+def parse_event_log(lines) -> tuple[list[dict], dict[int, dict]]:
+    """Jobs (id, group, submit/end seconds, stage ids) and stages (id ->
+    wall, tasks, task time, GC, shuffle bytes, spill) of an event log."""
+    jobs: dict[int, dict] = {}
+    stages: dict[int, dict] = {}
+
+    def stage(sid: int) -> dict:
+        return stages.setdefault(sid, {
+            "name": "", "t0": 0.0, "t1": 0.0, "ntask": 0, "read": 0,
+            "write": 0, "spill": 0, "tasktime": 0.0, "gc": 0.0})
+    for line in lines:
+        try:
+            ev = json.loads(line)
+        except ValueError:
+            continue
+        e = ev.get("Event")
+        if e == "SparkListenerJobStart":
+            jobs[ev["Job ID"]] = {
+                "id": ev["Job ID"],
+                "group": (ev.get("Properties") or {})
+                .get("spark.jobGroup.id") or "",
+                "t0": ev["Submission Time"] / 1000.0,
+                "t1": ev["Submission Time"] / 1000.0,
+                "stages": [s["Stage ID"] for s in ev["Stage Infos"]]}
+        elif e == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+            jobs[ev["Job ID"]]["t1"] = ev["Completion Time"] / 1000.0
+        elif e == "SparkListenerStageCompleted":
+            si = ev["Stage Info"]
+            stage(si["Stage ID"]).update(
+                name=si["Stage Name"].split("\n")[0][:70],
+                t0=si.get("Submission Time", 0) / 1000.0,
+                t1=si.get("Completion Time", 0) / 1000.0,
+                ntask=si["Number of Tasks"])
+        elif e == "SparkListenerTaskEnd":
+            # a stage's tasks end before the stage completes
+            st = stage(ev["Stage ID"])
+            tm = ev.get("Task Metrics") or {}
+            st["tasktime"] += tm.get("Executor Run Time", 0) / 1000.0
+            st["gc"] += tm.get("JVM GC Time", 0) / 1000.0
+            srm = tm.get("Shuffle Read Metrics") or {}
+            st["read"] += (srm.get("Remote Bytes Read", 0)
+                           + srm.get("Local Bytes Read", 0))
+            st["write"] += (tm.get("Shuffle Write Metrics") or {}) \
+                .get("Shuffle Bytes Written", 0)
+            st["spill"] += tm.get("Disk Bytes Spilled", 0)
+    return list(jobs.values()), stages
+
+
+def job_layers(jobs: list[dict],
+               marks: dict[str, tuple[float, float, float]]
+               ) -> dict[str, dict]:
+    """Per query in ``marks`` ({name: (start, build returned, end)},
+    epoch seconds): its jobs, those of group ``bss:<name>``, split into
+    eager (submitted before the build returned) and terminal, with
+    seconds as the union of job intervals, and the driver-only rest of
+    the build; ``other_jobs`` counts jobs of any other group submitted
+    inside the query's window."""
+    out = {}
+    for name, (start, built, end) in marks.items():
+        own = [j for j in jobs if j["group"] == f"bss:{name}"]
+        eager = [j for j in own if j["t0"] < built]
+        terminal = [j for j in own if j["t0"] >= built]
+        eager_s = _union_s([(j["t0"], min(j["t1"], built)) for j in eager])
+        out[name] = {
+            "jobs": own,
+            "wall_s": end - start,
+            "build_s": built - start,
+            "eager_jobs": len(eager),
+            "eager_s": eager_s,
+            "driver_s": built - start - eager_s,
+            "terminal_jobs": len(terminal),
+            "terminal_s": _union_s([(j["t0"], j["t1"]) for j in terminal]),
+            "other_jobs": sum(1 for j in jobs
+                              if j["group"] != f"bss:{name}"
+                              and start <= j["t0"] <= end),
+        }
+    return out
+
+
+def _fmt_b(b: float) -> str:
+    for u in ("B", "KB", "MB", "GB"):
+        if b < 1024 or u == "GB":
+            return f"{b:.0f}{u}" if u == "B" else f"{b:.1f}{u}"
+        b /= 1024
 
 
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     evdir = f"/tmp/spark-events-{os.getpid()}"
     os.makedirs(evdir, exist_ok=True)
+    spark = bench.bench_session("bigslice_spark_profile", event_dir=evdir)
+    bench.warmup(spark, sf_dir)
 
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.appName("bigslice_spark_profile")
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.rolling.enabled", "false")
-        .config("spark.eventLog.dir", evdir)
-        .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
-
-    from bigslice_spark.queries import QUERIES
-
-    # bench warmup (identical)
-    from pyspark.sql import functions as _F
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    base = spark.range(100_000).withColumn("k", _F.col("id") % 7)
-    base.groupBy("k").count().collect()
-    small = spark.range(7).withColumnRenamed("id", "k")
-    base.join(_F.broadcast(small), "k").count()
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("long")
-    def _warm(s):
-        return s
-    spark.range(10_000).select(_warm("id")).count()
-    try:
-        QUERIES["q1_pricing_summary"](spark, sf_dir).collect()
-    except Exception:
-        pass
-
-    # bench fast-path overrides: bench.py's are function-local, so the
-    # same three are inlined here:
-    def _minhash_fast(spark, sf_dir):
-        from bigslice_spark.operators.dedup import minhash_lsh_pairs
-        from bigslice_spark.session import load_tables
-        t = load_tables(spark, sf_dir)
-        return minhash_lsh_pairs(t["documents"], num_hashes=64, bands=16,
-                                 threshold=0.5, portable=False)
-
-    def _simhash_fast(spark, sf_dir):
-        from bigslice_spark.operators.dedup import simhash_pairs
-        from bigslice_spark.session import load_tables
-        t = load_tables(spark, sf_dir)
-        return simhash_pairs(t["documents"], max_hamming=8, portable=False)
-
-    def _semantic_fast(spark, sf_dir):
-        from bigslice_spark.operators.clustering import (
-            kmeans_assign_ivf, seed_centroids)
-        from bigslice_spark.operators.dedup import semantic_dedup
-        from bigslice_spark.operators.similarity import _auto_ncells
-        from bigslice_spark.session import load_tables
-        t = load_tables(spark, sf_dir)
-        emb = t["embeddings"]
-        k = _auto_ncells(emb.count(), 256)
-        cents = seed_centroids(k, 64)
-        assigned = (kmeans_assign_ivf(emb, cents)
-                    .select("vec_id", "cell"))
-        return semantic_dedup(emb.join(assigned, on="vec_id"), cents,
-                              threshold=0.35, cell_col="cell")
-
-    overrides = {"dedup_minhash": _minhash_fast,
-                 "dedup_simhash": _simhash_fast,
-                 "semantic_dedup": _semantic_fast}
-
-    marks = []
+    marks = {}
     for name in names:
-        fn = overrides.get(name) or QUERIES[name]
-        spark.sparkContext.setJobDescription(f"profile:{name}")
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        t_plan = time.time()
-        n = df.count()
-        t1 = time.time()
-        marks.append((name, t0, t1))
-        print(f"== {name}: total {t1 - t0:.3f}s "
-              f"(python plan-build {t_plan - t0:.3f}s, exec "
-              f"{t1 - t_plan:.3f}s, rows {n})", flush=True)
-        from bigslice_spark.checkpoint import release_all
-        release_all(spark)
+        stamps = []
+
+        def force(df):
+            stamps.append(time.time())
+            df.count()
+            stamps.append(time.time())
+        sec = bench.timed(spark, name, sf_dir, force)
+        if sec >= 0:
+            marks[name] = (stamps[1] - sec, stamps[0], stamps[1])
     spark.stop()
 
-    # parse event log
-    import glob
-    logs = sorted(glob.glob(os.path.join(evdir, "*")), key=os.path.getmtime)
-    path = logs[-1]
-    if os.path.isdir(path):   # Spark 4 rolling event log dir
-        inner = [p for p in glob.glob(os.path.join(path, "*"))
-                 if "appstatus" not in os.path.basename(p)]
-        path = sorted(inner, key=os.path.getmtime)[-1]
-    stages = {}   # id -> dict
-    jobs = []
-    for line in open(path):
-        try:
-            ev = json.loads(line)
-        except Exception:
-            continue
-        e = ev.get("Event")
-        if e == "SparkListenerJobStart":
-            jobs.append({
-                "id": ev["Job ID"],
-                "t0": ev["Submission Time"] / 1000.0,
-                "desc": ev.get("Properties", {})
-                .get("spark.job.description", ""),
-                "stages": [s["Stage ID"] for s in ev["Stage Infos"]]})
-        elif e == "SparkListenerJobEnd":
-            for j in jobs:
-                if j["id"] == ev["Job ID"]:
-                    j["t1"] = ev["Completion Time"] / 1000.0
-        elif e == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            stages[si["Stage ID"]] = {
-                "name": si["Stage Name"].split("\n")[0][:70],
-                "t0": si.get("Submission Time", 0) / 1000.0,
-                "t1": si.get("Completion Time", 0) / 1000.0,
-                "ntask": si["Number of Tasks"],
-                "read": 0, "write": 0, "recs": 0, "spill": 0,
-                "tasktime": 0.0, "gc": 0.0, "fetchwait": 0.0,
-                "pytime": 0.0}
-        elif e == "SparkListenerTaskEnd":
-            sid = ev["Stage ID"]
-            st = stages.get(sid)
-            tm = ev.get("Task Metrics") or {}
-            if st is None or not tm:
-                continue
-            st["tasktime"] += tm.get("Executor Run Time", 0) / 1000.0
-            st["gc"] += tm.get("JVM GC Time", 0) / 1000.0
-            srm = tm.get("Shuffle Read Metrics") or {}
-            swm = tm.get("Shuffle Write Metrics") or {}
-            st["read"] += (srm.get("Remote Bytes Read", 0)
-                           + srm.get("Local Bytes Read", 0))
-            st["fetchwait"] += srm.get("Fetch Wait Time", 0) / 1000.0
-            st["write"] += swm.get("Shuffle Bytes Written", 0)
-            st["recs"] += (tm.get("Input Metrics", {})
-                           .get("Records Read", 0))
-            st["spill"] += tm.get("Disk Bytes Spilled", 0)
-
-    def fmt_b(b):
-        for u in ("B", "KB", "MB", "GB"):
-            if b < 1024 or u == "GB":
-                return f"{b:.0f}{u}" if u == "B" else f"{b:.1f}{u}"
-            b /= 1024
-
-    for name, t0, t1 in marks:
-        print(f"\n### {name} ({t1 - t0:.3f}s wall) jobs+stages in window:")
-        for j in jobs:
-            if j.get("t1", 0) < t0 - 0.05 or j["t0"] > t1:
-                continue
-            print(f"  job {j['id']}: {j.get('t1', 0) - j['t0']:.3f}s")
+    path = max(glob.glob(os.path.join(evdir, "*")), key=os.path.getmtime)
+    with open(path) as f:
+        jobs, stages = parse_event_log(f)
+    for name, r in job_layers(jobs, marks).items():
+        print(f"\n### {name}: wall {r['wall_s']:.3f}s = build "
+              f"{r['build_s']:.3f}s (eager jobs {r['eager_jobs']}, "
+              f"{r['eager_s']:.3f}s; driver-only {r['driver_s']:.3f}s) "
+              f"+ terminal jobs {r['terminal_jobs']}, "
+              f"{r['terminal_s']:.3f}s; other-group jobs in window "
+              f"{r['other_jobs']}")
+        for j in r["jobs"]:
+            kind = "eager" if j["t0"] < marks[name][1] else "terminal"
+            print(f"  job {j['id']} ({kind}): {j['t1'] - j['t0']:.3f}s")
             for sid in sorted(j["stages"]):
                 s = stages.get(sid)
                 if s is None or not s["t1"]:
                     continue
                 print(f"    stage {sid}: wall {s['t1'] - s['t0']:.3f}s "
                       f"tasks {s['ntask']} tasktime {s['tasktime']:.2f}s "
-                      f"gc {s['gc']:.2f}s read {fmt_b(s['read'])} "
-                      f"write {fmt_b(s['write'])} "
-                      f"spill {fmt_b(s['spill'])} | {s['name']}")
-    print(f"\nevent log: {logs[-1]}")
+                      f"gc {s['gc']:.2f}s read {_fmt_b(s['read'])} "
+                      f"write {_fmt_b(s['write'])} "
+                      f"spill {_fmt_b(s['spill'])} | {s['name']}")
+    print(f"\nevent log: {path}")
 
 
 if __name__ == "__main__":

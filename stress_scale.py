@@ -15,66 +15,52 @@ exploding. This harness amplifies the sf0.1 tables in-memory:
 - events: replicate with shifted user_ids (keys and rows both scale —
   the window/agg operators see more groups, not hotter ones).
 
+The replicas are make_sf1.py's (``make_sf1.amplify``).
+
 Run: python stress_scale.py [sf_dir]   (prints one JSON line per
-operator x amplification with rows and wall seconds)
+operator x amplification with rows and wall seconds; the session is
+bench.py's, on local[$SPARK_GRAFT_CPUS])
 """
 
 import json
-import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import pyspark.sql.functions as F
+
+import bench
+from make_sf1 import amplify
 
 AMPS = (1, 4, 16)
 
 
-def amplify_docs(docs, amp):
-    import pyspark.sql.functions as F
-    if amp == 1:
-        return docs
-    parts = []
-    for i in range(amp):
-        rot = "aeiou"[i % 5:] + "aeiou"[:i % 5]
-        parts.append(docs.select(
-            (F.col("doc_id") + i * 10_000_000).alias("doc_id"),
-            F.translate("text", "aeiou", rot).alias("text"),
-            "lang", "source", "n_chars"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+def cold_warm(make) -> dict:
+    """Time four noop-sink writes of ``make()``: the cold run and the
+    median of the three warm ones.
 
+    A noop-sink write, NOT df.count(): under a bare count Catalyst
+    prunes every computed column of a pure projection (gopher_rules
+    would degenerate to a parquet row-count scan); the noop sink fully
+    evaluates every column JVM-side with zero sink cost.
 
-def amplify_events(events, amp):
-    import pyspark.sql.functions as F
-    if amp == 1:
-        return events
-    parts = []
-    for i in range(amp):
-        parts.append(events.select(
-            (F.col("event_id") + i * 100_000_000).alias("event_id"),
-            "ts",
-            (F.col("user_id") + i * 10_000_000).alias("user_id"),
-            "event_type", "value", "props"))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    MEDIAN-OF-3 after recording the cold run (r9c): a single shot
+    conflates the one-time JVM warmup with scaling — at 16x the first
+    evaluation of a window-heavy plan measured 104s cold vs 3.9s warm on
+    identical plans (tiered-JIT + heap growth, paid once per executor JVM
+    in production). "sec" (the scaling curve) is the warm median;
+    "cold_sec" keeps the warmup visible instead of hiding it."""
+    walls = []
+    for _ in range(4):
+        t0 = time.time()
+        bench.noop_write(make())
+        walls.append(round(time.time() - t0, 2))
+    return {"sec": sorted(walls[1:])[1], "cold_sec": walls[0]}
 
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from pyspark.sql import SparkSession
-    import pyspark.sql.functions as F
 
-    spark = (SparkSession.builder.appName("bss_stress")
-             .master("local[32]")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false").getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bench.bench_session("bss_stress")
 
     from bigslice_spark.session import load_tables
     from bigslice_spark.operators.dedup import minhash_lsh_pairs
@@ -88,33 +74,14 @@ def main():
     def run(name, df_builder):
         for amp in AMPS:
             df = df_builder(amp)
-            # Time a noop-sink write, NOT df.count(): under a bare count
-            # Catalyst prunes every computed column of a pure projection
-            # (gopher_rules would degenerate to a parquet row-count
-            # scan). The noop sink fully evaluates every column JVM-side
-            # with zero sink cost. Row count is reported from a separate
-            # untimed pass — metadata only, not part of the measurement.
-            #
-            # MEDIAN-OF-3 after recording the cold run (r9c): a single
-            # shot conflates the one-time JVM warmup with scaling — at
-            # 16x the first evaluation of a window-heavy plan measured
-            # 104s cold vs 3.9s warm on identical plans (tiered-JIT +
-            # heap growth, paid once per executor JVM in production).
-            # "sec" (the scaling curve) is the warm median; "cold_sec"
-            # keeps the warmup visible instead of hiding it.
-            walls = []
-            for _ in range(4):
-                t0 = time.time()
-                df.write.mode("overwrite").format("noop").save()
-                walls.append(round(time.time() - t0, 2))
-            n = df.count()
-            print(json.dumps({"op": name, "amp": amp, "rows": n,
-                              "sec": sorted(walls[1:])[1],
-                              "cold_sec": walls[0]}), flush=True)
+            r = cold_warm(lambda: df)
+            # row count from a separate untimed pass
+            print(json.dumps({"op": name, "amp": amp, "rows": df.count(),
+                              **r}), flush=True)
 
-    docs = {a: amplify_docs(t["documents"], a).localCheckpoint()
+    docs = {a: amplify(t["documents"], "documents", a).localCheckpoint()
             for a in AMPS}
-    evs = {a: amplify_events(t["events"], a).localCheckpoint()
+    evs = {a: amplify(t["events"], "events", a).localCheckpoint()
            for a in AMPS}
 
     run("gopher_rules", lambda a: gopher_rules(docs[a], min_words=20))
@@ -157,9 +124,6 @@ def perceptual_pair_stress(spark):
     corpus where the HASH TABLE no longer fits a broadcast. Hashes
     are synthetic xxhash64 values (uniform, worst-case collision
     profile) with one planted near-dup per 1000 ids."""
-    import time as _t
-
-    import pyspark.sql.functions as F
     from bigslice_spark.operators.imagehash import dhash_pairs
 
     for n in (100_000, 400_000, 1_600_000):
@@ -173,15 +137,9 @@ def perceptual_pair_stress(spark):
                         F.col("dhash").bitwiseXOR(F.lit(8))
                         .alias("dhash")))
         hashes = base.unionByName(dups).localCheckpoint()
-        walls = []
-        for _ in range(4):
-            t0 = _t.time()
-            dhash_pairs(hashes).write.mode("overwrite")                 .format("noop").save()
-            walls.append(round(_t.time() - t0, 2))
-        import json as _j
-        print(_j.dumps({"op": "dhash_pairs", "n_hashes": n + n // 1000,
-                        "sec": sorted(walls[1:])[1],
-                        "cold_sec": walls[0]}), flush=True)
+        print(json.dumps({"op": "dhash_pairs", "n_hashes": n + n // 1000,
+                          **cold_warm(lambda: dhash_pairs(hashes))}),
+              flush=True)
 
 
 def audio_path_stress(spark):
@@ -193,7 +151,6 @@ def audio_path_stress(spark):
     where the numpy path's Arrow-copy cost crosses it (measured:
     numpy wins 3x below ~10^5 clips, codegen wins 3.5x at 320k —
     PERFORMANCE.md §audio-paths)."""
-    import pyspark.sql.functions as F
     from bigslice_spark.operators.audio import band_energy
 
     n_samples, bins = 512, (1, 3, 7)
@@ -207,17 +164,11 @@ def audio_path_stress(spark):
                              .cast("int")).alias("samples"))
                  .localCheckpoint())
         for vec in (False, True):
-            walls = []
-            for _ in range(4):
-                t0 = time.time()
-                band_energy(clips, frame_len=64, bins=bins,
-                            vectorized=vec) \
-                    .write.mode("overwrite").format("noop").save()
-                walls.append(round(time.time() - t0, 2))
+            r = cold_warm(lambda: band_energy(clips, frame_len=64,
+                                              bins=bins, vectorized=vec))
             print(json.dumps({
                 "op": "band_energy_" + ("numpy" if vec else "codegen"),
-                "clips": n_clips, "samples_per_clip": n_samples,
-                "sec": sorted(walls[1:])[1], "cold_sec": walls[0]}),
+                "clips": n_clips, "samples_per_clip": n_samples, **r}),
                 flush=True)
 
 
@@ -237,9 +188,6 @@ def hub_key_fold_stress(spark):
     fold is memory-bounded but single-task per key; the segmented fold
     splits the hub across its segments' tasks.
     """
-    import time
-
-    import pyspark.sql.functions as F
     from bigslice_spark.operators.timeseries import ewma_last
     from bigslice_spark.session import Session
 
@@ -265,7 +213,7 @@ def hub_key_fold_stress(spark):
                             method=method)
             # noop sink: a bare count() lets Catalyst prune the ewma
             # fold away entirely (the sweep.py forcing protocol)
-            out.write.mode("overwrite").format("noop").save()
+            bench.noop_write(out)
             wall = round(time.time() - t0, 2)
             print(json.dumps({"op": f"ewma_hub_{method}", "amp": amp,
                               "hub_rows": hub_n, "keys": out.count(),
@@ -306,7 +254,6 @@ def ivf_cell_scaling(spark, t):
     demonstrates both the sizing rule and the cliff switch surviving
     growth — run naively with a FIXED ncells, the same 16x input makes
     every probe scan 16x more vectors."""
-    import pyspark.sql.functions as F
     from bigslice_spark.operators.clustering import (
         _CODEGEN_TERM_LIMIT, seed_centroids)
     from bigslice_spark.operators.similarity import _auto_ncells, ivf_topk
@@ -315,21 +262,10 @@ def ivf_cell_scaling(spark, t):
     dim = 64
     qs = emb.filter(F.col("vec_id") < 8).localCheckpoint()
     for amp in AMPS:
-        parts = []
-        for i in range(amp):
-            rot = i % dim
-            # rotate coordinates per replica: norms preserved, every
-            # replica lands in different cells
-            vec = (F.col("embedding") if rot == 0 else
-                   F.concat(F.slice("embedding", rot + 1, dim - rot),
-                            F.slice("embedding", 1, rot)))
-            parts.append(emb.select(
-                (F.col("vec_id") + i * 10_000_000).alias("vec_id"),
-                vec.alias("embedding")))
-        corpus = parts[0]
-        for p in parts[1:]:
-            corpus = corpus.unionByName(p)
-        corpus = corpus.localCheckpoint()
+        # coordinates rotate per replica: norms preserved, every
+        # replica lands in different cells
+        corpus = (amplify(emb, "embeddings", amp)
+                  .select("vec_id", "embedding").localCheckpoint())
         n = corpus.count()
         ncells = _auto_ncells(n, 256)
         centers = seed_centroids(ncells, dim)
@@ -338,7 +274,7 @@ def ivf_cell_scaling(spark, t):
         t0 = time.time()
         out = ivf_topk(corpus, qs, k=10, nprobe=4, dim=dim,
                        centers=centers)
-        out.write.mode("overwrite").format("noop").save()
+        bench.noop_write(out)
         print(json.dumps({"op": "ivf_auto_cells", "amp": amp,
                           "rows": n, "ncells": ncells, "path": path,
                           "sec": round(time.time() - t0, 2)}),
@@ -356,7 +292,6 @@ def hot_bucket_stress(spark):
     amp=1 'unsalted' row (chunk_target=2**31: salting disabled) shows
     the counterfactual a fixed-key join produces — one task owning
     all B² rows."""
-    import pyspark.sql.functions as F
     from bigslice_spark.operators.dedup import _bucketed_self_join
 
     def rel(b):

@@ -1,20 +1,23 @@
-"""Full-registry sf0.1 sweep → one JSON artifact per round.
+"""Registry sweeps, each entry forced through the noop sink.
 
-Runs EVERY registry entry (not just the bench headliners) at
-$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) in one local[32]
-JVM and writes SWEEP_r{N}.json: {"sf": ..., "entries": {name: sec},
-"failed": {name: err}} — per-entry wall, diffable round-over-round,
-so a scale cliff in the non-headline tail can't hide behind the
-35-entry bench.
+    python sweep.py [round_number] [sf_dir]
 
-Forcing protocol (fixed at r6, the artifact's first round): each
-entry's DataFrame is evaluated with a noop-sink write, which computes
-every output column JVM-side — a bare count() would let Catalyst
-prune all computed columns out of pure projections (the ADVICE r5
-gopher_rules finding). Entries are timed once, in registry order,
-after a warmup primes JVM codegen and the Python worker pool.
+runs EVERY registry entry at sf_dir (default $SPARK_GRAFT_SF_DIR, else
+/root/testdata/sf0.1) in one JVM, in registry order; with a round it
+writes SWEEP_r{N}.json ({"sf", "entries": {name: sec}, "failed": [...]})
+so a scale cliff in the non-headline tail can't hide behind the bench.
 
-Run: python sweep.py [round_number] [sf_dir]
+    python sweep.py NAME [NAME ...]
+
+runs each named entry in its own fresh JVM at $SPARK_GRAFT_SF_DIR (this
+script re-entered with SPARK_GRAFT_BENCH_ONLY=<name>) and prints
+{"sf_dir": ..., "entries": {name: sec}}.
+
+The noop-sink write (fixed at r6) computes every output column JVM-side;
+a bare count() would let Catalyst prune computed columns out of pure
+projections (the ADVICE r5 gopher_rules finding). Each JVM runs the
+bench warmup first, and entries run through bench.timed, so an entry
+with a bench variant is timed as the bench times it.
 """
 
 from __future__ import annotations
@@ -22,61 +25,41 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+import bench
 
 
 def main() -> None:
-    rnd = int(sys.argv[1]) if len(sys.argv) > 1 else 0
-    sf_dir = (sys.argv[2] if len(sys.argv) > 2
-              else os.environ.get("SPARK_GRAFT_SF_DIR",
-                                  "/root/testdata/sf0.1"))
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.appName("bss_sweep")
-             .master(f"local[{cpus}]")
-             .config("spark.driver.memory", "24g")
-             .config("spark.sql.shuffle.partitions", "32")
-             .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.ui.enabled", "false")
-             .getOrCreate())
-    spark.sparkContext.setLogLevel("ERROR")
+    args = sys.argv[1:]
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    only = os.environ.get("SPARK_GRAFT_BENCH_ONLY")
+    if only:
+        print(json.dumps({"queries": bench.run_here(
+            "bss_sweep", only.split(","), sf_dir, bench.noop_write)}))
+        return
 
     from bigslice_spark.queries import QUERIES
+    if args and not args[0].isdigit():
+        unknown = [n for n in args if n not in QUERIES]
+        if unknown:
+            raise SystemExit(f"not registry entries: {unknown}")
+        times = bench.fresh_each(
+            args, lambda n: bench.run_fresh(n, script="sweep.py"))
+        print(json.dumps({"sf_dir": sf_dir, "entries": times}))
+        return
 
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    try:
-        QUERIES["q1_pricing_summary"](spark, sf_dir).count()
-    except Exception:
-        pass
-
-    entries: dict[str, float] = {}
-    failed: dict[str, str] = {}
-    for name, fn in QUERIES.items():
-        t0 = time.time()
-        try:
-            fn(spark, sf_dir).write.mode("overwrite") \
-                .format("noop").save()
-            entries[name] = round(time.time() - t0, 3)
-        except Exception as ex:
-            failed[name] = str(ex)[:200]
-        # untimed between-entries hygiene (see bench.py): free the
-        # finished entry's materialized intermediates promptly
-        from bigslice_spark.checkpoint import release_all
-        release_all(spark)
-        print(json.dumps({"entry": name,
-                          "sec": entries.get(name),
-                          "err": failed.get(name)}), file=sys.stderr,
-              flush=True)
-
+    rnd = int(args[0]) if args else 0
+    sf_dir = args[1] if len(args) > 1 else sf_dir
+    times = bench.run_here("bss_sweep", list(QUERIES), sf_dir,
+                           bench.noop_write)
+    entries = {n: t for n, t in times.items() if t >= 0}
+    failed = sorted(n for n, t in times.items() if t < 0)
     out = {"sf": sf_dir, "n_entries": len(entries),
            "n_failed": len(failed),
            "total_sec": round(sum(entries.values()), 1),
            "entries": entries, "failed": failed}
     if rnd:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            f"SWEEP_r{rnd:02d}.json")
+        path = os.path.join(bench.HERE, f"SWEEP_r{rnd:02d}.json")
         with open(path, "w") as f:
             json.dump(out, f, indent=1, sort_keys=True)
         print(f"wrote {path}", file=sys.stderr)
