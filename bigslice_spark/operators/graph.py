@@ -23,6 +23,8 @@ reliable checkpoints on clusters, overridable with ``reliable=``.
 
 from __future__ import annotations
 
+import itertools
+
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -396,62 +398,80 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
            dst: str = "dst", iters: int | None = None,
            reliable: bool | None = None) -> DataFrame:
     """k-core peeling → (node, degree): repeatedly "remove every node
-    with degree < k" over the symmetric simple graph (self-edges
-    dropped; parallel edges collapse). The classic graph-quality
-    filter (link-spam cores, dense community seeds) beside
-    CC/LPA/pagerank/triangles.
+    with degree < k" over the symmetric simple graph (self-edges and
+    NULL endpoints dropped; parallel edges and both orientations of an
+    edge collapse). The classic graph-quality filter (link-spam cores,
+    dense community seeds) beside CC/LPA/pagerank/triangles.
 
     ``iters=None`` (default) peels to the FIXPOINT — rounds continue
-    until no edge is removed, so the result is the true k-core at any
-    graph diameter (the peel removes ≥1 node per non-final round, so
-    it terminates in ≤|nodes| rounds; convergence is one count over
-    the just-materialized edge list per round, the CC pattern). A
-    fixed integer ``iters`` runs exactly that many synchronous rounds
-    — each round is deterministic (one exact-degree aggregation + two
-    semi-joins riding the same node partitioning), so it replays
+    until no node is removed, so the result is the true k-core at any
+    graph diameter (a non-final round removes ≥1 node, so it
+    terminates in ≤|nodes| rounds). A fixed integer ``iters`` returns
+    exactly what that many synchronous rounds return — each round is
+    deterministic (one exact-degree aggregation over the edges whose
+    endpoints both survived the previous round), so it replays
     identically in SQL (the unrolled-CTE oracle mode); deep-diameter
     graphs get a superset of the core under this mode, by contract.
-    Lineage truncated per round via checkpoint.materialize; per-round
-    cost is O(edges) rows.
+    Rounds after one that removes no node would repeat it, so they are
+    skipped in both modes.
+
+    Round state is node-sized. The undirected edge list is
+    materialized ONCE, as canonical (u < v) pairs; because the alive
+    sets only shrink (A_i ⊆ A_{i-1}), round i's surviving edges are
+    exactly the pairs with both ends in A_{i-1}, so a round is two
+    semi-joins of the pairs against the previous alive set (broadcast
+    while it fits ``spark.sql.autoBroadcastJoinThreshold``) plus a
+    degree count (``explode(array(u, v))``, partial-agg friendly), and
+    what it materializes is the alive set with its degrees — never an
+    edge list. |A_i| rides each materialize action (an Observation);
+    a round removed nothing when |A_{i+1}| == |A_i| (nested sets:
+    equal sizes mean equal sets). The returned frame is the last
+    round itself; the pair list and superseded rounds are released
+    before returning.
     """
     e = edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"))
-    ne = e.filter(F.col("u") != F.col("v"))
-    # fixpoint mode reads the surviving-edge count off an Observation
-    # riding each materialize action (r15, the CC probe pattern) —
-    # one job per round instead of materialize + count
-    obs0 = Observation()
-    cur = materialize(
-        _oriented(ne).distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("__rows__")), reliable)
+    # least/greatest skip a NULL argument, but u < v is then false
+    # (x < x, or NULL): self-loops and NULL endpoints both drop here
+    pairs = materialize(
+        e.select(F.least("u", "v").alias("u"),
+                 F.greatest("u", "v").alias("v"))
+        .filter(F.col("u") < F.col("v")).distinct(), reliable)
+    # ship the alive set to the pair scan when its 8 B/node payload
+    # fits the session's broadcast threshold (-1 disables broadcasts):
+    # a checkpointed relation's size estimate comes from its origin
+    # plan, so unhinted, AQE plans exchanges of the pair side first
+    thr = edges.sparkSession._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
 
-    def peel(g: DataFrame, obs: Observation | None = None) -> DataFrame:
-        deg = g.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
-        alive = deg.filter(F.col("degree") >= k).select("u")
-        out = (g.join(alive, on="u", how="left_semi")
-               .join(alive.select(F.col("u").alias("v")),
-                     on="v", how="left_semi"))
-        if obs is not None:
-            out = out.observe(obs, F.count(F.lit(1)).alias("__rows__"))
-        return materialize(out, reliable)
-
-    if iters is not None:
-        for _ in range(iters):
-            nxt = peel(cur)
-            release(cur)       # eager materialize inside peel
-            cur = nxt
-    else:
-        n = obs0.get["__rows__"]
-        while n:
-            obs = Observation()
-            nxt = peel(cur, obs)
-            release(cur)       # eager materialize inside peel
-            cur = nxt
-            m = obs.get["__rows__"]
-            if m == n:
-                break
-            n = m
-    # final degrees over the surviving subgraph
-    return (cur.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+    def peel(alive: DataFrame | None, n: int) -> tuple[DataFrame, int]:
+        """(node, degree >= k) over the pairs with both ends in
+        ``alive`` (all pairs when None), materialized, and its size."""
+        p = pairs
+        if alive is not None:
+            hint = F.broadcast if 8 * n <= thr else (lambda a: a)
+            for c in ("u", "v"):
+                p = p.join(hint(alive.select(F.col("node").alias(c))),
+                           c, "left_semi")
+        obs = Observation()
+        d = materialize(
+            p.select(F.explode(F.array("u", "v")).alias("node"))
+            .groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
             .filter(F.col("degree") >= k)
-            .select(F.col("u").alias("node"), "degree"))
+            .observe(obs, F.count(F.lit(1)).alias("__rows__")),
+            reliable)
+        return d, obs.get["__rows__"]
+
+    # the j-th peel() materializes A_j (A_0 = every node) with its
+    # degrees over the pairs inside A_{j-1}; ``iters`` rounds return
+    # the (iters + 1)-th: the degrees over the pairs inside A_iters
+    cur, n = peel(None, 0)
+    for _ in range(iters) if iters is not None else itertools.count():
+        nxt, m = peel(cur, n)
+        release(cur)           # eager materialize inside peel
+        cur = nxt
+        if m == n:
+            break
+        n = m
+    release(pairs)
+    return cur

@@ -7,7 +7,8 @@ and prints per query: eager jobs (submitted before the build returned:
 materialize rounds, broadcast builds, collects) and terminal jobs, each
 as count and seconds; driver-only time (build minus the eager jobs);
 other groups' jobs inside the query's window (expect 0); and per job its
-stages' wall, tasks, task time, GC, shuffle bytes and spill.
+stages' wall, tasks, task time, GC, input records, shuffle bytes and
+spill.
 
     python profile_query.py lpa_communities [more names...]
 
@@ -35,14 +36,15 @@ def _union_s(intervals: list[tuple[float, float]]) -> float:
 
 def parse_event_log(lines) -> tuple[list[dict], dict[int, dict]]:
     """Jobs (id, group, submit/end seconds, stage ids) and stages (id ->
-    wall, tasks, task time, GC, shuffle bytes, spill) of an event log."""
+    wall, tasks, task time, GC, input records, shuffle bytes, spill) of
+    an event log."""
     jobs: dict[int, dict] = {}
     stages: dict[int, dict] = {}
 
     def stage(sid: int) -> dict:
         return stages.setdefault(sid, {
-            "name": "", "t0": 0.0, "t1": 0.0, "ntask": 0, "read": 0,
-            "write": 0, "spill": 0, "tasktime": 0.0, "gc": 0.0})
+            "name": "", "t0": 0.0, "t1": 0.0, "ntask": 0, "records": 0,
+            "read": 0, "write": 0, "spill": 0, "tasktime": 0.0, "gc": 0.0})
     for line in lines:
         try:
             ev = json.loads(line)
@@ -72,6 +74,8 @@ def parse_event_log(lines) -> tuple[list[dict], dict[int, dict]]:
             tm = ev.get("Task Metrics") or {}
             st["tasktime"] += tm.get("Executor Run Time", 0) / 1000.0
             st["gc"] += tm.get("JVM GC Time", 0) / 1000.0
+            st["records"] += (tm.get("Input Metrics") or {}) \
+                .get("Records Read", 0)
             srm = tm.get("Shuffle Read Metrics") or {}
             st["read"] += (srm.get("Remote Bytes Read", 0)
                            + srm.get("Local Bytes Read", 0))
@@ -159,7 +163,8 @@ def main() -> None:
                     continue
                 print(f"    stage {sid}: wall {s['t1'] - s['t0']:.3f}s "
                       f"tasks {s['ntask']} tasktime {s['tasktime']:.2f}s "
-                      f"gc {s['gc']:.2f}s read {_fmt_b(s['read'])} "
+                      f"gc {s['gc']:.2f}s in {s['records']} rows "
+                      f"read {_fmt_b(s['read'])} "
                       f"write {_fmt_b(s['write'])} "
                       f"spill {_fmt_b(s['spill'])} | {s['name']}")
     print(f"\nevent log: {path}")

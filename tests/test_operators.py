@@ -2501,6 +2501,100 @@ def test_k_core_converges_on_deep_chain(spark):
     assert bounded > set(got)  # strict superset: chain not yet peeled
 
 
+def _k_core_edge_peel(edges, k, iters=None, reliable=None):
+    """Parity reference: the k_core shape the node-sized rounds
+    replaced. Every round materializes the surviving ORIENTED edge list
+    (both directions of each simple edge) and the fixpoint is an
+    unchanged edge count."""
+    from bigslice_spark.checkpoint import materialize, release
+    from bigslice_spark.operators.graph import _oriented
+    from pyspark.sql import Observation
+    e = edges.select(F.col("src").cast("long").alias("u"),
+                     F.col("dst").cast("long").alias("v"))
+    obs0 = Observation()
+    cur = materialize(
+        _oriented(e.filter(F.col("u") != F.col("v"))).distinct()
+        .observe(obs0, F.count(F.lit(1)).alias("__rows__")), reliable)
+
+    def peel(g, obs=None):
+        deg = g.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+        alive = deg.filter(F.col("degree") >= k).select("u")
+        out = (g.join(alive, on="u", how="left_semi")
+               .join(alive.select(F.col("u").alias("v")),
+                     on="v", how="left_semi"))
+        if obs is not None:
+            out = out.observe(obs, F.count(F.lit(1)).alias("__rows__"))
+        return materialize(out, reliable)
+
+    if iters is not None:
+        for _ in range(iters):
+            nxt = peel(cur)
+            release(cur)
+            cur = nxt
+    else:
+        n = obs0.get["__rows__"]
+        while n:
+            obs = Observation()
+            nxt = peel(cur, obs)
+            release(cur)
+            cur = nxt
+            m = obs.get["__rows__"]
+            if m == n:
+                break
+            n = m
+    got = {r["u"]: r["degree"] for r in
+           cur.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
+           .filter(F.col("degree") >= k).collect()}
+    release(cur)
+    return got
+
+
+# A 4-clique {1..4} with a tail 20-21-22 that peels one node per round
+# at k=3 (22, then 21, then 20), a triangle 10-11-12 gone in round one
+# at k=3, and the inputs the canonical pairs must collapse or drop:
+# both orientations of an edge, duplicate rows, self-loops, NULLs.
+KCORE_ADVERSARIAL = [
+    (1, 2), (2, 1), (1, 3), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
+    (4, 3), (20, 1), (20, 2), (20, 21), (21, 3), (21, 22), (22, 21),
+    (10, 11), (11, 12), (12, 10), (3, 3), (22, 22), (30, 30),
+    (None, 4), (12, None), (None, None)]
+
+
+@pytest.mark.parametrize("k", [0, 1, 3])
+def test_k_core_matches_edge_list_peel(spark, k):
+    """Equivalence pin: k_core's node-sized rounds (one canonical pair
+    list, a materialized alive set per round) return the same
+    (node, degree) rows as the edge-list peel they replaced, for every
+    iters mode, on the broadcast-hinted and unhinted semi-join paths
+    and on reliable checkpoints, over adversarial and empty inputs."""
+    from bigslice_spark.operators.graph import k_core
+    df = spark.createDataFrame(KCORE_ADVERSARIAL, "src long, dst long")
+    empty = spark.createDataFrame([], "src long, dst long")
+
+    def run(edges, iters, reliable=None):
+        out = k_core(edges, k=k, iters=iters, reliable=reliable)
+        assert [(f.name, f.dataType.simpleString())
+                for f in out.schema.fields] == [("node", "bigint"),
+                                                ("degree", "bigint")]
+        return {r["node"]: r["degree"] for r in out.collect()}
+
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    want = {}
+    for iters in (0, 1, 2, None):
+        want[iters] = _k_core_edge_peel(df, k, iters)
+        assert run(df, iters) == want[iters], iters
+        assert run(empty, iters) == {}, iters
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        try:
+            assert run(df, iters) == want[iters], iters
+        finally:
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+        assert run(df, iters, reliable=True) == want[iters], iters
+    assert _k_core_edge_peel(empty, k) == {}
+    if k == 3:  # the tail peels one node per round
+        assert [len(want[i]) for i in (0, 1, 2, None)] == [6, 5, 4, 4]
+
+
 def test_asof_tolerance_rejects_stale_matches(spark):
     import datetime as dt
     from bigslice_spark.operators.asof import asof_join
@@ -2620,6 +2714,31 @@ def test_release_frees_superseded_checkpoint_blocks(spark):
     assert len(leftover) <= 3, leftover
 
 
+def test_k_core_leaves_only_its_result_persisted(spark):
+    """k_core releases its pair list and every superseded round: after
+    a call at most the returned frame's own RDD stays persisted, and
+    release_all frees that too: the result must be a tracked
+    materialize handle, since an untracked persisted round is out of
+    release_all's reach."""
+    from bigslice_spark.checkpoint import release_all
+    from bigslice_spark.operators.graph import k_core
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
+
+    e = spark.createDataFrame(KCORE_ADVERSARIAL, "src long, dst long")
+    release_all(spark)
+    for iters, n in ((0, 6), (1, 5), (None, 4)):
+        before = persisted()
+        out = k_core(e, k=3, iters=iters)
+        assert len(persisted() - before) <= 1, iters
+        assert out.count() == n, iters
+        release_all(spark)
+        assert not (persisted() - before), iters
+
+
 def test_materialize_attribution_is_direct(spark):
     """materialize() reads the persisted-RDD id straight off the
     LogicalRDD the localCheckpoint returned — a concurrently persisted
@@ -2644,7 +2763,8 @@ def test_iterative_graph_ops_zero_iters_collectable(spark):
     loop inputs; the input blocks must not be released out from under
     it (localCheckpoint truncates lineage, so a released input fails
     instead of recomputing); ADVICE r10 graph.py:266."""
-    from bigslice_spark.operators.graph import (label_propagation,
+    from bigslice_spark.operators.graph import (k_core,
+                                                label_propagation,
                                                 pagerank)
     e = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
     r = {row["node"]: row["rank"]
@@ -2654,6 +2774,9 @@ def test_iterative_graph_ops_zero_iters_collectable(spark):
     lab = {row["node"]: row["label"]
            for row in label_propagation(e, iters=0).collect()}
     assert lab == {1: 1, 2: 2, 3: 3}
+    deg = {row["node"]: row["degree"]
+           for row in k_core(e, k=1, iters=0).collect()}
+    assert deg == {1: 1, 2: 2, 3: 1}
 
 
 def test_bloom_broadcast_rekeys_on_context_change(spark):

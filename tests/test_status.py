@@ -62,11 +62,21 @@ def test_profile_splits_eager_and_terminal_jobs_by_group():
              # a stage's tasks end before the stage completes
              json.dumps({"Event": "SparkListenerTaskEnd", "Stage ID": 0,
                          "Task Metrics": {"Executor Run Time": 700}}),
+             # input records sum over a stage's tasks
+             json.dumps({"Event": "SparkListenerTaskEnd", "Stage ID": 0,
+                         "Task Metrics": {
+                             "Executor Run Time": 0,
+                             "Input Metrics": {"Bytes Read": 64,
+                                               "Records Read": 4834}}}),
+             json.dumps({"Event": "SparkListenerTaskEnd", "Stage ID": 0,
+                         "Task Metrics": {
+                             "Input Metrics": {"Records Read": 166}}}),
              json.dumps({"Event": "SparkListenerStageCompleted",
                          "Stage Info": {"Stage ID": 0, "Stage Name": "s0",
                                         "Number of Tasks": 1}})]
     jobs, stages = profile_query.parse_event_log(lines)
     assert stages[0]["tasktime"] == 0.7 and stages[0]["ntask"] == 1
+    assert stages[0]["records"] == 5000
     layers = profile_query.job_layers(
         jobs, {"a": (99.5, 104.0, 105.0), "b": (104.85, 106.2, 107.2)})
     a, b = layers["a"], layers["b"]
