@@ -19,7 +19,9 @@ from bigslice_spark.queries import ORACLE, QUERIES
 
 # Entries whose implementation changed this round: they must re-prove
 # under the driver before any other, whatever their last match.
-CHANGED: tuple[str, ...] = ()
+CHANGED: tuple[str, ...] = (
+    "source_avro", "source_avro_complex", "source_avro_zstd",
+    "source_avro_logical", "source_avro_evolution")
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 

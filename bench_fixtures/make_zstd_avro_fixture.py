@@ -1,9 +1,9 @@
-"""Builds the committed zstd-Avro throughput fixture (VERDICT r13
-task 7): a multi-megabyte Object Container File whose blocks are
-compressed by the REFERENCE zstd binary (level 3, the real-writer
-default), so the recorded decode throughput measures this repo's
-pure-Python RFC 8878 decoder against frames a real Avro writer would
-produce — not against its own encoder's output.
+"""Builds the committed zstd-Avro throughput fixture: a
+multi-megabyte Object Container File whose blocks are compressed by
+the REFERENCE zstd binary (level 3, the real-writer default), so the
+recorded read throughput (bench_sf1.zstd_decode_probe) measures
+read_avro_blob on frames a real Avro writer would produce, not on
+make_avro's own output.
 
 Deterministic: same bytes on every run (fixed seed, fixed sync
 marker, fixed block split). Regenerate with

@@ -28,12 +28,12 @@ import bench
 
 
 def zstd_decode_probe() -> dict:
-    """VERDICT r13 task 7: the pure-Python zstd decode throughput
-    claim as a recorded measurement. Decodes the COMMITTED
-    multi-megabyte zstd-Avro fixture (bench_fixtures/ — blocks
-    compressed by the REFERENCE zstd binary at level 3, i.e. frames a
-    real Avro writer would produce, not this repo's own encoder
-    output) single-threaded, best of 3."""
+    """zstd-Avro read throughput as a recorded measurement. Decodes
+    the COMMITTED multi-megabyte zstd-Avro fixture (bench_fixtures/ —
+    blocks compressed by the REFERENCE zstd binary at level 3, i.e.
+    frames a real Avro writer would produce) single-threaded through
+    read_avro_blob, best of 3: pyarrow's libzstd block decode plus the
+    pure-Python Avro row parse."""
     fix = os.path.join(bench.HERE, "bench_fixtures", "zstd_avro_bench.avro")
     from bigslice_spark.sources.avro import read_avro_blob
     blob = open(fix, "rb").read()
@@ -52,9 +52,8 @@ def zstd_decode_probe() -> dict:
         "rows": len(rows),
         "sec_best_of_3": round(best, 3),
         "mb_per_s_per_core": round(raw_bytes / 1e6 / best, 2),
-        "note": ("single-core pure-Python decode incl. Avro row "
-                 "parse; grounds PERFORMANCE.md's 'read zstd-Avro "
-                 "through a JVM datasource at 100 TB' guidance"),
+        "note": ("single-core read_avro_blob: libzstd block decode "
+                 "(pyarrow) + pure-Python Avro row parse"),
     }
 
 

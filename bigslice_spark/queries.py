@@ -9490,9 +9490,9 @@ def source_avro_complex_q(spark, sf_dir):
     hex-projected), and a VALUE-FIRST null union (["string","null"] —
     branch index is the position in the union array, the ADVICE r11
     branch-order fix) are
-    written to real .avro files under the SNAPPY codec (clean-room
-    pure-Python block-format decode + big-endian CRC32 trailer, per
-    the Avro spec) and deflate, read back through the
+    written to real .avro files under the SNAPPY codec (pyarrow's
+    libsnappy block + the spec's big-endian CRC32 trailer) and
+    deflate, read back through the
     binaryFile+Arrow reader with a complex pinned DDL (commas inside
     map/struct types exercise the real DDL parser), and projected to
     scalars so the oracle can replay every leaf analytically."""
@@ -9559,14 +9559,10 @@ def source_avro_complex_q(spark, sf_dir):
     SELECT n_nationkey, n_name, n_regionkey FROM nation
 """)
 def source_avro_zstd(spark, sf_dir):
-    """Avro zstd codec (sources/zstd.py — clean-room RFC 8878
-    Zstandard, VERDICT r12 task 7 resolved as BUILD: raw/RLE/
-    compressed blocks, 1- and 4-stream Huffman literals with direct or
-    FSE-compressed weights, all four sequence-table modes, repeat
-    offsets, xxhash64 frame checksums; the decoder is validated
-    against the REFERENCE zstd binary's output at levels 1-19 and the
-    fixture encoder's output is decoded byte-exactly by the reference
-    binary — tests/test_zstd.py): nation is written to REAL .avro
+    """Avro zstd codec (sources/avro.py; the zstd bitstream is
+    pyarrow's libzstd, cross-checked against the REFERENCE zstd
+    binary's output at levels 1-19 in both directions —
+    tests/test_zstd.py): nation is written to REAL .avro
     files under the zstd codec (one zstd frame per Avro block, per the
     Avro spec) plus one deflate file for mixed-codec reading, and read
     back through the binaryFile+Arrow reader with the schema pinned;

@@ -7,12 +7,12 @@ magic ``Obj\\x01`` · file-metadata map (``avro.schema`` JSON,
 ``count(varint) size(varint) payload sync`` where the payload is the
 concatenated binary rows, raw, ``deflate`` (RFC 1951, no zlib header),
 ``snappy`` (raw snappy block + 4-byte big-endian CRC32 of the
-uncompressed data — the spec's snappy framing) or ``zstandard``
-(the spec's codec name, "zstd" accepted as an alias on write: one
-RFC 8878 frame per block, decoded by the clean-room codec in
-sources/zstd.py — validated against the reference zstd binary's
-output, frame checksum verified), ``bzip2`` and ``xz`` (stdlib bz2 /
-lzma, the deflate contract). Row encoding: zigzag
+uncompressed data — the spec's snappy framing), ``zstandard`` (the
+spec's codec name, "zstd" accepted as an alias: one frame per block,
+frame checksums verified when present), ``bzip2`` or ``xz``. The
+snappy and zstd bitstreams are pyarrow's bundled libsnappy / libzstd,
+the others the stdlib's zlib / bz2 / lzma; this module writes only
+the Avro framing around them. Row encoding: zigzag
 varints for int/long, little-endian IEEE float/double, length-prefixed
 bytes/utf8 strings, 1-byte booleans, zero-byte nulls, unions as
 branch-index varint + value (the branch index is the POSITION in the
@@ -28,7 +28,8 @@ null unions in either order, and the primitives null/boolean/int/
 long/float/double/bytes/string. Recursive type references, >2-branch
 unions and unknown codecs raise NotImplementedError by name —
 the repo's honest-raise codec contract. Truncated blocks, sync
-mismatches and snappy CRC mismatches raise ValueError.
+mismatches, snappy CRC mismatches and any block its codec cannot
+decode raise ValueError.
 
 Schema RESOLUTION (spec §"Schema Resolution", r14): pass
 ``reader_schema`` to read files written under older schema versions
@@ -38,12 +39,6 @@ default, writer-only fields are dropped, and primitives promote
 along int→long→float→double / string↔bytes; nested records, arrays,
 maps, enums (symbol-subset check) and null unions resolve
 recursively. Unresolvable pairs raise ValueError naming both sides.
-
-The snappy codec is decoded by a clean-room pure-Python implementation
-of the public snappy block format (literal + copy1/2/4 elements,
-little-endian preamble varint); the writer emits literal-only streams
-(always legal snappy) so the fixture half stays simple while the
-decoder handles real compressor output.
 
 Scale shape: ``avro_reader`` is binaryFile + one Arrow-batched
 mapInPandas pass, file-granular parallelism (the tar/zip/WARC
@@ -56,20 +51,20 @@ never inferred from the first file.
 
 from __future__ import annotations
 
+import bz2
 import json
+import lzma
 import struct
 import zlib
 from collections.abc import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 MAGIC = b"Obj\x01"
 
 _PRIMITIVES = ("null", "boolean", "int", "long", "float", "double",
                "bytes", "string")
-# canonical spec names; "zstd" accepted as a write-side alias for
-# "zstandard" (the name real Avro writers put in avro.codec)
-_CODECS = ("null", "deflate", "snappy", "zstandard", "bzip2", "xz")
 
 
 # ------------------------------------------------------------- varints
@@ -109,7 +104,7 @@ def _read_long(buf: bytes, i: int) -> tuple[int, int]:
             raise ValueError("avro: varint longer than 64 bits")
 
 
-# ------------------------------------------------ snappy (block format)
+# ------------------------------------------------------------- codecs
 
 def _snappy_uvarint_read(buf: bytes, i: int) -> tuple[int, int]:
     """Snappy's plain (non-zigzag) little-endian base-128 varint."""
@@ -128,87 +123,70 @@ def _snappy_uvarint_read(buf: bytes, i: int) -> tuple[int, int]:
 
 
 def snappy_decompress(buf: bytes) -> bytes:
-    """Clean-room decoder for the public snappy block format: preamble
-    = uncompressed length (plain varint), then tagged elements — tag
-    low 2 bits select literal (0) / copy with 1-, 2- or 4-byte offset
-    (1/2/3). Structural defects raise ValueError."""
+    """A raw snappy block (length preamble + elements) to its bytes.
+    The preamble is checked against the most the elements can emit (64
+    bytes per 3 input bytes) before anything is allocated; a stream
+    that decodes to any other length raises."""
     want, i = _snappy_uvarint_read(buf, 0)
-    out = bytearray()
-    while i < len(buf):
-        tag = buf[i]
-        i += 1
-        kind = tag & 3
-        if kind == 0:                                  # literal
-            n = tag >> 2
-            if n >= 60:                                # 1-4 extra bytes
-                nb = n - 59
-                if i + nb > len(buf):
-                    raise ValueError("snappy: truncated literal length")
-                n = int.from_bytes(buf[i:i + nb], "little")
-                i += nb
-            n += 1
-            if i + n > len(buf):
-                raise ValueError("snappy: truncated literal body")
-            out += buf[i:i + n]
-            i += n
-            continue
-        if kind == 1:                                  # copy, 1-byte off
-            n = ((tag >> 2) & 0x7) + 4
-            if i >= len(buf):
-                raise ValueError("snappy: truncated copy offset")
-            off = ((tag >> 5) << 8) | buf[i]
-            i += 1
-        elif kind == 2:                                # copy, 2-byte off
-            n = (tag >> 2) + 1
-            if i + 2 > len(buf):
-                raise ValueError("snappy: truncated copy offset")
-            off = int.from_bytes(buf[i:i + 2], "little")
-            i += 2
-        else:                                          # copy, 4-byte off
-            n = (tag >> 2) + 1
-            if i + 4 > len(buf):
-                raise ValueError("snappy: truncated copy offset")
-            off = int.from_bytes(buf[i:i + 4], "little")
-            i += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy: copy offset out of range")
-        # copies may overlap forward (run-length style): byte-at-a-time
-        # semantics per the spec
-        for _ in range(n):
-            out.append(out[-off])
-    if len(out) != want:
+    if want > (len(buf) - i) * 64 // 3:
         raise ValueError(
-            f"snappy: decoded {len(out)} bytes, preamble said {want}")
-    return bytes(out)
+            f"snappy: preamble says {want} bytes, more than "
+            f"{len(buf) - i} compressed bytes can hold")
+    try:
+        return pa.Codec("snappy").decompress(
+            buf, decompressed_size=want, asbytes=True)
+    except OSError as e:
+        raise ValueError(f"snappy: {e}") from e
 
 
 def snappy_compress(buf: bytes) -> bytes:
-    """Literal-only snappy (always a legal stream — the format does
-    not require copies): preamble varint + literal elements of up to
-    2^16 bytes each. The fixture-writer half; real compressor output
-    (with copy elements) is handled by the decoder above."""
-    out = bytearray()
-    u = len(buf)
-    while True:
-        b = u & 0x7F
-        u >>= 7
-        if u:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            break
-    i = 0
-    while i < len(buf):
-        chunk = buf[i:i + 65536]
-        n = len(chunk) - 1
-        if n < 60:
-            out.append(n << 2)
-        else:
-            out.append(61 << 2)                        # 2-byte length
-            out += n.to_bytes(2, "little")
-        out += chunk
-        i += len(chunk)
-    return bytes(out)
+    """A raw snappy block (length preamble + elements)."""
+    return pa.compress(buf, codec="snappy", asbytes=True)
+
+
+def _snappy_block(payload: bytes) -> bytes:
+    return snappy_compress(payload) + zlib.crc32(payload).to_bytes(4, "big")
+
+
+def _snappy_unblock(data: bytes) -> bytes:
+    if len(data) < 4:
+        raise ValueError("shorter than its CRC trailer")
+    plain = snappy_decompress(data[:-4])
+    if zlib.crc32(plain).to_bytes(4, "big") != data[-4:]:
+        raise ValueError("CRC mismatch")
+    return plain
+
+
+def _zstd_unblock(data: bytes) -> bytes:
+    # reads every frame (skippable ones included) and verifies each
+    # frame's checksum when it carries one
+    return pa.CompressedInputStream(pa.py_buffer(data), "zstd").read()
+
+
+# spec codec name -> (compress, decompress) of one block payload
+_CODECS = {
+    "null": (bytes, bytes),
+    "deflate": (lambda b: zlib.compress(b)[2:-4],      # raw RFC 1951
+                lambda b: zlib.decompress(b, wbits=-15)),
+    "snappy": (_snappy_block, _snappy_unblock),
+    "zstandard": (lambda b: pa.compress(b, codec="zstd", asbytes=True),
+                  _zstd_unblock),
+    "bzip2": (bz2.compress, bz2.decompress),
+    "xz": (lambda b: lzma.compress(b, format=lzma.FORMAT_XZ),
+           lzma.decompress),
+}
+_CODEC_ERRORS = (ValueError, OSError, EOFError, zlib.error,
+                 lzma.LZMAError)
+
+
+def _block_codec(name: str):
+    """(spec name, compress, decompress) for an ``avro.codec`` value;
+    "zstd" is accepted as an alias of the spec's "zstandard", which is
+    the name written."""
+    name = "zstandard" if name == "zstd" else name
+    if name not in _CODECS:
+        raise NotImplementedError(f"avro: codec {name!r}")
+    return (name, *_CODECS[name])
 
 
 # ------------------------------------------------------------- schema
@@ -652,10 +630,7 @@ def make_avro(schema_json: str, rows: list[tuple], codec: str = "null",
     spec name; ``zstd`` is accepted as an alias), ``bzip2`` or
     ``xz``. The fixture half of the round-trip proof."""
     fields = _parse_schema(schema_json)
-    if codec == "zstd":
-        codec = "zstandard"            # spec name in avro.codec
-    if codec not in _CODECS:
-        raise NotImplementedError(f"avro: codec {codec!r}")
+    codec, compress, _ = _block_codec(codec)
     if len(sync) != 16:
         raise ValueError("avro: sync marker must be 16 bytes")
     out = bytearray(MAGIC)
@@ -682,22 +657,7 @@ def make_avro(schema_json: str, rows: list[tuple], codec: str = "null",
                     raise ValueError(
                         f"avro: None in non-nullable field {name!r}")
                 _write_value(payload, ty, v)
-        if codec == "deflate":
-            data = zlib.compress(bytes(payload))[2:-4]
-        elif codec == "snappy":
-            data = (snappy_compress(bytes(payload))
-                    + zlib.crc32(bytes(payload)).to_bytes(4, "big"))
-        elif codec == "zstandard":
-            from .zstd import compress as zstd_compress
-            data = zstd_compress(bytes(payload))
-        elif codec == "bzip2":
-            import bz2
-            data = bz2.compress(bytes(payload))
-        elif codec == "xz":
-            import lzma
-            data = lzma.compress(bytes(payload), format=lzma.FORMAT_XZ)
-        else:
-            data = bytes(payload)
+        data = compress(bytes(payload))
         _write_long(out, len(chunk))
         _write_long(out, len(data))
         out += data
@@ -792,7 +752,7 @@ def read_avro_blob(blob: bytes, reader_schema: str | None = None
                    ) -> tuple[list[tuple[str, dict]], list[tuple]]:
     """One container file → (fields, rows). Every structural defect —
     bad magic, unknown codec, truncated block, sync mismatch, snappy
-    CRC mismatch — raises. With ``reader_schema`` (an Avro schema
+    CRC mismatch, a block its codec cannot decode — raises. With ``reader_schema`` (an Avro schema
     JSON string), rows are RESOLVED from the file's writer schema to
     it per the spec's Schema Resolution rules — name/alias matching,
     reader defaults, writer-only field drop, primitive promotion —
@@ -819,11 +779,8 @@ def read_avro_blob(blob: bytes, reader_schema: str | None = None
     if len(sync) != 16:
         raise ValueError("avro: truncated header sync marker")
     i += 16
-    codec = meta.get("avro.codec", b"null").decode()
-    if codec == "zstd":
-        codec = "zstandard"            # tolerate the short alias
-    if codec not in _CODECS:
-        raise NotImplementedError(f"avro: codec {codec!r}")
+    codec, _, decompress = _block_codec(
+        meta.get("avro.codec", b"null").decode())
     wfields = _parse_schema(meta["avro.schema"].decode())
     fields = wfields
     plan = None
@@ -843,27 +800,10 @@ def read_avro_blob(blob: bytes, reader_schema: str | None = None
         if blob[i:i + 16] != sync:
             raise ValueError("avro: block sync marker mismatch")
         i += 16
-        if codec == "deflate":
-            data = zlib.decompress(data, wbits=-15)
-        elif codec == "snappy":
-            if len(data) < 4:
-                raise ValueError("avro: snappy block shorter than its "
-                                 "CRC trailer")
-            plain = snappy_decompress(data[:-4])
-            if zlib.crc32(plain).to_bytes(4, "big") != data[-4:]:
-                raise ValueError("avro: snappy block CRC mismatch")
-            data = plain
-        elif codec == "zstandard":
-            # one zstd frame per block, no extra trailer (Avro spec);
-            # the frame's own xxhash64 checksum is verified inside
-            from .zstd import decompress as zstd_decompress
-            data = zstd_decompress(data)
-        elif codec == "bzip2":
-            import bz2
-            data = bz2.decompress(data)
-        elif codec == "xz":
-            import lzma
-            data = lzma.decompress(data)
+        try:
+            data = decompress(data)
+        except _CODEC_ERRORS as e:
+            raise ValueError(f"avro: {codec} block: {e}") from e
         j = 0
         for _ in range(count):
             row = []

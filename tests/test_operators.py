@@ -3911,6 +3911,60 @@ def test_avro_complex_types_snappy_and_union_order(spark, tmp_path):
     assert snappy_decompress(enc) == b"xxxxxx"
 
 
+_AVRO_STR_SCHEMA = ('{"type": "record", "name": "t", "fields": '
+                    '[{"name": "s", "type": "string"}]}')
+
+
+def _avro_one_block(codec, data, count=1):
+    """A ``codec`` container of one string column whose only block
+    holds ``count`` rows in the payload ``data``."""
+    from bigslice_spark.sources.avro import _write_long, make_avro
+    blob = bytearray(make_avro(_AVRO_STR_SCHEMA, [], codec=codec))
+    _write_long(blob, count)
+    _write_long(blob, len(data))
+    return bytes(blob + data + b"0123456789abcdef")
+
+
+@pytest.mark.parametrize("codec",
+                         ["deflate", "snappy", "zstandard", "bzip2", "xz"])
+def test_avro_corrupt_block_raises_value_error(codec):
+    """A flipped or truncated block payload raises the container's
+    ValueError contract for every compressed codec, not the codec
+    library's own error type."""
+    from bigslice_spark.sources.avro import (_read_long, make_avro,
+                                             read_avro_blob)
+    rows = [(f"row {i} " * 5,) for i in range(200)]
+    head = len(make_avro(_AVRO_STR_SCHEMA, [], codec=codec))
+    blob = make_avro(_AVRO_STR_SCHEMA, rows, codec=codec)
+    count, i = _read_long(blob, head)
+    size, i = _read_long(blob, i)
+    payload = blob[i:i + size]
+    assert read_avro_blob(_avro_one_block(codec, payload, count))[1] \
+        == rows
+    flipped = bytes([payload[0] ^ 0xFF]) + payload[1:]
+    for data in (flipped, payload[:size // 2]):
+        with pytest.raises(ValueError, match=f"avro: {codec} block"):
+            read_avro_blob(_avro_one_block(codec, data, count))
+
+
+def test_avro_snappy_preamble_checked_before_decode():
+    """The snappy length preamble is validated against the block
+    before anything is allocated, and must equal the decoded length."""
+    import zlib
+
+    from bigslice_spark.sources.avro import read_avro_blob
+    # preamble = 2**34 bytes (varint) over a 3-byte literal body
+    huge = bytes([0x80, 0x80, 0x80, 0x80, 0x40]) + bytes([4, 0x61, 0x62])
+    with pytest.raises(ValueError, match="preamble"):
+        read_avro_blob(_avro_one_block(
+            "snappy", huge + zlib.crc32(b"ab").to_bytes(4, "big")))
+    # preamble says 10 bytes; literal "x" + copy1(len=5, off=1) is 6
+    short = bytes([10, 0, ord("x"), (1 << 2) | 1, 1])
+    with pytest.raises(ValueError, match="avro: snappy block"):
+        read_avro_blob(_avro_one_block(
+            "snappy", short + zlib.crc32(b"x" * 6).to_bytes(4, "big")))
+
+
 def test_protobuf_reader_nested_and_repeated_columns(spark, tmp_path):
     """protobuf_reader (r12b): repeated primitives land as Spark
     ARRAY columns and nested messages as STRUCT columns (None for
