@@ -458,62 +458,49 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
             .groupBy("id_a", "id_b").agg(F.min("hamming").alias("hamming")))
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", threshold: float = 0.6,
-                        max_df_ratio: float = 0.5,
-                        shingle_w: int = 3,
-                        reliable: bool | None = None,
-                        ndocs: int | None = None,
-                        chunk_target: int = 2048,
-                        metric: str = "jaccard") -> DataFrame:
-    """Exact n-gram (word w-shingle) Jaccard via inverted-index self-join —
-    the SQL-expressible (oracle-checkable) dedup path (Broder
-    w-shingling; shingle_w=1 degenerates to plain tokens).
+def _set_sim_pairs(post: DataFrame, id_col: str, count: int | DataFrame,
+                   threshold: float, max_df_ratio: float, metric: str,
+                   reliable: bool | None, chunk_target: int) -> DataFrame:
+    """Exact set-similarity self-join over distinct ``post(id_col, tok)``
+    postings: (id_a, id_b, metric) for every id_a < id_b whose score
+    reaches ``threshold``. The one kernel behind ngram_jaccard_pairs and
+    item_jaccard_pairs; the oracle builder queries._set_sim_ctes replays
+    it.
 
-    Two guards keep the self-join sub-quadratic at 100×:
-    - shingles, not tokens: a w-shingle key space is |vocab|^w, so the
-      posting lists stay short even on small vocabularies (measured: the
-      token formulation was 84s at sf0.1 on a 31-word vocab; shingles
-      make it seconds);
-    - df-pruning: shingles in > max_df_ratio of documents are dropped
-      before the join — quadratic fanout, no discriminative signal.
-    Jaccard is computed on the UNPRUNED set sizes.
+    - One-pass inverted index: set sizes and token document
+      frequencies ride the same postings as window counts.
+    - df-pruning: tokens held by more than max_df_ratio of the ids are
+      dropped before the join — quadratic fanout, no discriminative
+      signal. Scores use the UNPRUNED set sizes. ``count`` is the id
+      count: an int if known, else a 1-row, 1-column frame joined in
+      as a broadcast scalar (the q11/q22 threshold-subquery pattern) —
+      never a driver-side count, which would cost a full extra pass
+      over the input before the real job.
+    - The pruned index is materialized before the self-join, which
+      would otherwise recompute it on both sides (measured
+      7.4s → 2.9s at sf0.1 for the shingle index). Materialization
+      policy comes from checkpoint.materialize; override with
+      ``reliable=``.
+    - Hot posting lists are salted by _bucketed_self_join, with the df
+      window count as the bucket size (bn_col): df-pruning drops whole
+      posting lists, never part of one, so the join needs no counting
+      pass of its own.
 
-    The pruned inverted index (id, tok, set-size) is built in ONE pass —
-    set sizes and document frequencies attached as window counts over
-    the same postings — and materialized before the self-join, which
-    would otherwise recompute the shingling 2× more (measured
-    7.4s → 2.9s at sf0.1). Materialization policy (localCheckpoint on
-    local masters, reliable checkpoint on clusters) comes from
-    checkpoint.materialize; override with ``reliable=``.
-
-    The df-pruning threshold needs the corpus size: pass ``ndocs=`` if
-    known, else it is computed IN-PLAN as a broadcast 1-row aggregate
-    (the q11/q22 threshold-subquery pattern) — never as a driver-side
-    ``df.count()``, which would cost a full extra pass over the corpus
-    before the real job at 100 TB.
-
-    ``metric='containment'`` scores inter/min(|A|,|B|) instead —
-    the asymmetric near-dup case (a doc quoted whole inside a larger
-    one scores ~1.0 where Jaccard stays low); same index, same join,
-    only the final expression changes. Output column is named after
-    the metric."""
+    ``metric`` is 'jaccard', inter/(|A| + |B| − inter), or
+    'containment', inter/min(|A|, |B|); it also names the output
+    column."""
     if metric not in ("jaccard", "containment"):
         raise ValueError(f"unknown metric {metric!r}")
-    toks = _shingle_rows(df, text_col, id_col, shingle_w, distinct=True)
     sz = F.count(F.lit(1)).over(W.partitionBy(id_col))
     dfreq = F.count(F.lit(1)).over(W.partitionBy("tok"))
-    ann = toks.withColumn("sz", sz).withColumn("df", dfreq)
-    if ndocs is not None:
-        pruned = ann.filter(F.col("df") <= int(max_df_ratio * ndocs))
-    else:
-        nd = df.select(F.count(F.lit(1)).alias("__ndocs__"))
-        pruned = (ann.join(F.broadcast(nd))
+    ann = post.withColumn("sz", sz).withColumn("df", dfreq)
+    if isinstance(count, DataFrame):
+        pruned = (ann.join(F.broadcast(count))
                   .filter(F.col("df") <= F.floor(
-                      F.lit(float(max_df_ratio)) * F.col("__ndocs__"))))
-    # the df window count doubles as the self-join's bucket size
-    # (df-pruning drops whole posting lists, never part of one), so
-    # the salted join needs no counting pass of its own (bn_col)
+                      F.lit(float(max_df_ratio))
+                      * F.col(count.columns[0]))))
+    else:
+        pruned = ann.filter(F.col("df") <= int(max_df_ratio * count))
     cold = materialize(pruned.select(id_col, "tok", "sz", "df"),
                        reliable)
     return (_bucketed_self_join(cold.toDF("id", "tok", "sz", "__bn__"),
@@ -530,6 +517,40 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                             - F.col("inter")).cast("double")))
             .filter(F.col(metric) >= threshold)
             .select("id_a", "id_b", metric))
+
+
+def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id", threshold: float = 0.6,
+                        max_df_ratio: float = 0.5,
+                        shingle_w: int = 3,
+                        reliable: bool | None = None,
+                        ndocs: int | None = None,
+                        chunk_target: int = 2048,
+                        metric: str = "jaccard") -> DataFrame:
+    """Exact n-gram (word w-shingle) Jaccard via inverted-index self-join —
+    the SQL-expressible (oracle-checkable) dedup path (Broder
+    w-shingling; shingle_w=1 degenerates to plain tokens). The
+    postings are _shingle_rows' distinct (id, shingle) rows; pruning,
+    the salted self-join and scoring are _set_sim_pairs'.
+
+    Shingles, not tokens, keep the self-join sub-quadratic at 100×: a
+    w-shingle key space is |vocab|^w, so the posting lists stay short
+    even on small vocabularies (measured: the token formulation was
+    84s at sf0.1 on a 31-word vocab; shingles make it seconds).
+
+    df-pruning divides by the row count of ``df``: pass ``ndocs=`` if
+    known, else it is computed in-plan (see _set_sim_pairs).
+
+    ``metric='containment'`` scores inter/min(|A|,|B|) instead —
+    the asymmetric near-dup case (a doc quoted whole inside a larger
+    one scores ~1.0 where Jaccard stays low); same index, same join,
+    only the final expression changes. Output column is named after
+    the metric."""
+    toks = _shingle_rows(df, text_col, id_col, shingle_w, distinct=True)
+    count = (ndocs if ndocs is not None
+             else df.select(F.count(F.lit(1)).alias("__ndocs__")))
+    return _set_sim_pairs(toks, id_col, count, threshold, max_df_ratio,
+                          metric, reliable, chunk_target)
 
 
 def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
@@ -888,39 +909,15 @@ def item_jaccard_pairs(rel: DataFrame, id_col: str, item_col: str,
     with Jaccard(items_a, items_b) ≥ threshold (users by purchased
     parts, docs by cited ids, hosts by outlinks...).
 
-    Same scale guards as the text path: one-pass inverted index with
-    set sizes and item document-frequencies as window counts, items in
-    > max_df_ratio of ids pruned before the join (quadratic fanout, no
-    signal; Jaccard still uses UNPRUNED sizes), hot posting lists
-    salted by _bucketed_self_join. Pass ``nids=`` if the entity count
-    is known, else it is computed in-plan as a broadcast scalar.
+    The postings are the distinct (id, item) rows; pruning, the salted
+    self-join and scoring are _set_sim_pairs'. df-pruning divides by
+    the number of distinct ids: pass ``nids=`` if known, else it is
+    computed in-plan as a broadcast scalar.
     """
-    pairs_in = rel.select(F.col(id_col), F.col(item_col).alias("tok")) \
+    post = rel.select(F.col(id_col), F.col(item_col).alias("tok")) \
         .distinct()
-    sz = F.count(F.lit(1)).over(W.partitionBy(id_col))
-    dfreq = F.count(F.lit(1)).over(W.partitionBy("tok"))
-    ann = pairs_in.withColumn("sz", sz).withColumn("df", dfreq)
-    if nids is not None:
-        pruned = ann.filter(F.col("df") <= int(max_df_ratio * nids))
-    else:
-        nd = pairs_in.select(
-            F.count_distinct(F.col(id_col)).alias("__nids__"))
-        pruned = (ann.join(F.broadcast(nd))
-                  .filter(F.col("df") <= F.floor(
-                      F.lit(float(max_df_ratio)) * F.col("__nids__"))))
-    # bn_col: the df window count IS the post-prune bucket size (the
-    # ngram_jaccard_pairs rationale) — no counting pass in the join
-    cold = materialize(pruned.select(id_col, "tok", "sz", "df"),
-                       reliable)
-    return (_bucketed_self_join(cold.toDF("id", "tok", "sz", "__bn__"),
-                                ["tok"], chunk_target=chunk_target,
-                                bn_col="__bn__")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b", "sz_a", "sz_b")
-            .agg(F.count(F.lit(1)).alias("inter"))
-            .withColumn("jaccard",
-                        F.col("inter").cast("double")
-                        / (F.col("sz_a") + F.col("sz_b")
-                           - F.col("inter")).cast("double"))
-            .filter(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
+    count = (nids if nids is not None
+             else post.select(
+                 F.count_distinct(F.col(id_col)).alias("__nids__")))
+    return _set_sim_pairs(post, id_col, count, threshold, max_df_ratio,
+                          "jaccard", reliable, chunk_target)

@@ -44,12 +44,17 @@ def token_count(col: Column | str) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
+# Java's \s, spelled out: the characters tokens() splits on. RE2 (the
+# DuckDB oracles' regex engine) leaves the vertical tab out of its \s,
+# so a pattern shared by both engines names the class explicitly.
+WS_CHARS = r"\t\n\x0B\f\r "
+
 # BPE-style pre-tokenizer classes (GPT-2-family shape, simplified to the
 # lookahead-free subset shared by Java regex and RE2 so Spark and DuckDB
 # segment identically): letter runs, digit runs, runs of other
 # non-whitespace. A BPE vocabulary then splits within these classes —
 # counting them is the standard cheap token-budget estimator.
-BPE_PRETOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
+BPE_PRETOKEN_RE = rf"[A-Za-z]+|[0-9]+|[^A-Za-z0-9{WS_CHARS}]+"
 
 
 def bpe_token_count(col: Column | str,

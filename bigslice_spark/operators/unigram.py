@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..local_rows import local_df
+from .text import tokens
 
 _NPIECE_SHIFT = 40  # score = -(n_pieces << 40) + sum_counts
 
@@ -118,9 +119,8 @@ def viterbi_segment(word: str, counts: dict[str, int],
 
 def _word_counts(df: DataFrame, text_col: str, min_word_count: int,
                  vocab_cap: int, max_word_len: int) -> DataFrame:
-    w = (df.select(F.explode(F.array_remove(
-            F.split(F.lower(F.col(text_col)), r"\s+"),
-            "")).alias("word"))
+    w = (df.select(F.explode(tokens(F.lower(F.col(text_col))))
+                   .alias("word"))
          .filter(F.length("word") <= max_word_len)
          .groupBy("word").agg(F.count(F.lit(1)).alias("n"))
          .filter(F.col("n") >= min_word_count))
@@ -224,9 +224,7 @@ def unigram_token_counts(df: DataFrame, counts: dict[str, int],
     side when it is small. Out-of-vocab-length words count length
     (char fallback)."""
     _check_objective_headroom(counts, max_word_len)
-    # array_remove, not an interpreted filter lambda — see
-    # operators/text.py tokens()
-    toks = F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")
+    toks = tokens(F.lower(F.col(text_col)))
     doc_words = (df.select(F.col(id_col),
                            F.explode(toks).alias("word"))
                  .groupBy(id_col, "word")

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .local_rows import local_df
+from .operators.text import BPE_PRETOKEN_RE, WS_CHARS
 from .session import Session, load_tables
 from .slice import Slice
 
@@ -68,6 +69,95 @@ def dsum(expr: Column | str, scale: int = 4) -> Column:
 
 def _dsum_sql(expr: str, scale: int = 4) -> str:
     return f"CAST(sum(CAST({expr} AS DECIMAL(38,{scale}))) AS DOUBLE)"
+
+
+# The oracles' text and set-similarity rules, each written once. Every
+# builder replays one Spark operator; an oracle that tokenizes,
+# shingles, scores or closes pairs goes through these, so its SQL
+# cannot drift from the engine one copy at a time.
+
+# tokens()' whitespace class (Java's \s) and its complement (Java's
+# \S), spelled out for RE2, whose \s leaves out the vertical tab
+_WS = f"[{WS_CHARS}]"
+_NWS = f"[^{WS_CHARS}]"
+
+
+def _tokens_sql(text: str = "text") -> str:
+    """operators/text.py tokens(): whitespace split, '' removed."""
+    return (f"list_filter(string_split_regex({text}, '{_WS}+'), "
+            "t -> t <> '')")
+
+
+def _shingle_list_sql(w: int) -> str:
+    """dedup._shingle_rows' shingles of token list ``tk``, in order: each
+    run of w tokens joined by ' '; a list shorter than w is one
+    whole-list shingle (Spark's array_join, so '' for no tokens)."""
+    run = ", ".join(f"tk[i + {k}]" for k in range(w))
+    return (f"CASE WHEN len(tk) >= {w} THEN list_transform("
+            f"generate_series(1, len(tk) - {w - 1}), "
+            f"i -> concat_ws(' ', {run})) "
+            "ELSE [coalesce(array_to_string(tk, ' '), '')] END")
+
+
+def _shingle_ctes(name: str, w: int, distinct: bool,
+                  src: str = "documents") -> str:
+    """CTE ``name(doc_id, tok)``: dedup._shingle_rows(w, distinct) over
+    ``src``'s text (plus its helper ``{name}_tk``). NULL text yields no
+    shingle, as in Spark, where size(NULL) is NULL under ANSI."""
+    sel = "SELECT DISTINCT" if distinct else "SELECT"
+    return f"""
+    {name}_tk AS (SELECT doc_id, {_tokens_sql()} AS tk FROM {src}),
+    {name} AS ({sel} doc_id, unnest({_shingle_list_sql(w)}) AS tok
+              FROM {name}_tk WHERE tk IS NOT NULL)"""
+
+
+def _set_sim_ctes(postings: str, n_sql: str, threshold: float,
+                  max_df_ratio: float, metric: str = "jaccard",
+                  id_col: str = "doc_id") -> str:
+    """CTEs ``ix``, ``cold``, ``inter`` and ``sim_pairs(id_a, id_b,
+    <metric>)``: dedup._set_sim_pairs over the distinct
+    ``postings(id_col, tok)``. Set sizes are unpruned; a token held by
+    more than floor(max_df_ratio · n) ids is pruned, n being the
+    scalar query ``n_sql``; a pair needs a shared unpruned token. This
+    is the unfiltered definition: no prefix or length filter."""
+    score = {"jaccard": "CAST(sz_a + sz_b - inter AS DOUBLE)",
+             "containment": "CAST(least(sz_a, sz_b) AS DOUBLE)"}[metric]
+    return f"""
+    ix AS (
+      SELECT {id_col} AS id, tok,
+             count(*) OVER (PARTITION BY {id_col}) AS sz,
+             count(*) OVER (PARTITION BY tok) AS df
+      FROM {postings}),
+    cold AS (
+      SELECT id, tok, sz FROM ix
+      WHERE df <= (SELECT floor({float(max_df_ratio)!r}::DOUBLE
+                                * ({n_sql})))),
+    inter AS (
+      SELECT a.id AS id_a, b.id AS id_b, a.sz AS sz_a, b.sz AS sz_b,
+             count(*) AS inter
+      FROM cold a JOIN cold b ON a.tok = b.tok AND a.id < b.id
+      GROUP BY a.id, b.id, a.sz, b.sz),
+    sim_pairs AS (
+      SELECT id_a, id_b, {metric} FROM (
+        SELECT id_a, id_b, CAST(inter AS DOUBLE) / {score} AS {metric}
+        FROM inter)
+      WHERE {metric} >= {threshold!r})"""
+
+
+def _min_label_ctes(pairs: str) -> str:
+    """CTEs ``sym``, ``reach`` and ``comp(node, component)``:
+    graph.connected_components over the undirected edges
+    ``pairs(id_a, id_b)`` — each node's component is the least node it
+    reaches. The enclosing WITH must be RECURSIVE."""
+    return f"""
+    sym AS (SELECT id_a AS u, id_b AS v FROM {pairs}
+            UNION SELECT id_b, id_a FROM {pairs}),
+    reach(node, label) AS (
+      SELECT u, u FROM sym
+      UNION
+      SELECT s.v, r.label FROM reach r JOIN sym s ON s.u = r.node),
+    comp AS (SELECT node, CAST(min(label) AS BIGINT) AS component
+             FROM reach GROUP BY node)"""
 
 
 # =====================================================================
@@ -169,11 +259,8 @@ def op_filter(spark, sf_dir):
             .map_("l_orderkey", "l_linenumber", "l_quantity")).df
 
 
-@query("op_flatmap", """
-    SELECT doc_id, token
-    FROM (SELECT doc_id, unnest(string_split_regex(text, '\\s+')) AS token
-          FROM documents)
-    WHERE token <> ''
+@query("op_flatmap", f"""
+    SELECT doc_id, unnest({_tokens_sql()}) AS token FROM documents
 """)
 def op_flatmap(spark, sf_dir):
     """bigslice.Flatmap (reference slice.go:728-841): 1→N via explode."""
@@ -742,11 +829,9 @@ def q5_regional_revenue(spark, sf_dir):
         .alias("revenue"))
 
 
-@query("word_count", """
+@query("word_count", f"""
     SELECT token, CAST(count(*) AS BIGINT) AS n
-    FROM (SELECT unnest(string_split_regex(text, '\\s+')) AS token
-          FROM documents)
-    WHERE token <> ''
+    FROM (SELECT unnest({_tokens_sql()}) AS token FROM documents)
     GROUP BY token
 """)
 def word_count(spark, sf_dir):
@@ -1098,19 +1183,7 @@ def _minhash_pairs_ctes(src: str = "documents", num_hashes: int = 64,
     matches = " + ".join(
         f"(CASE WHEN a.s{i} = b.s{i} THEN 1 ELSE 0 END)"
         for i in range(num_hashes))
-    return f"""
-    mh_base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM {src}),
-    mh_sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM mh_base),
-    mh_toks AS (SELECT doc_id, unnest(sl) AS tok FROM mh_sh),
+    return f"""{_shingle_ctes("mh_toks", 3, distinct=False, src=src)},
     mh_hx AS (SELECT doc_id,
                   ('0x' || substr(md5(tok), 1, 15))::BIGINT
                   % {_MH_PRIME} AS h
@@ -1157,8 +1230,7 @@ def _simhash_oracle(max_hamming: int = 8) -> str:
         for j in range(64))
     return f"""
     WITH toks AS (
-      SELECT doc_id, unnest(list_filter(string_split_regex(text, '\\s+'),
-                                        t -> t <> '')) AS t
+      SELECT doc_id, unnest({_tokens_sql()}) AS t
       FROM documents),
     hx AS (SELECT doc_id,
                   ('0x' || substr(md5(t), 1, 8))::BIGINT AS h_lo,
@@ -1203,40 +1275,18 @@ def dedup_simhash(spark, sf_dir):
     return simhash_pairs(t["documents"], max_hamming=8, portable=True)
 
 
-@query("ngram_jaccard", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
-    sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-              FROM toks GROUP BY doc_id),
-    ndocs AS (SELECT count(*) AS n FROM documents),
-    hot AS (SELECT tok FROM toks GROUP BY tok
-            HAVING count(*) > (SELECT CAST(floor(0.3 * n) AS BIGINT)
-                               FROM ndocs)),
-    cold AS (SELECT doc_id, tok FROM toks
-             WHERE tok NOT IN (SELECT tok FROM hot)),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(count(*) AS BIGINT) AS inter
-      FROM cold a JOIN cold b ON a.tok = b.tok AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)
-               AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE CAST(inter AS DOUBLE) / CAST(sa.sz + sb.sz - inter AS DOUBLE)
-          >= 0.8
+def _ngram_sim_ctes(threshold: float, metric: str = "jaccard") -> str:
+    """CTEs ending in ``sim_pairs``: ngram_jaccard_pairs over documents
+    with shingle_w=3 and max_df_ratio=0.3, the parameters of every
+    ngram-pair entry below."""
+    return (_shingle_ctes("toks", 3, distinct=True) + ","
+            + _set_sim_ctes("toks", "SELECT count(*) FROM documents",
+                            threshold, 0.3, metric))
+
+
+@query("ngram_jaccard", f"""
+    WITH {_ngram_sim_ctes(0.8)}
+    SELECT id_a, id_b, jaccard FROM sim_pairs
 """)
 def ngram_jaccard(spark, sf_dir):
     """Exact word-3-shingle Jaccard pairs via inverted-index self-join —
@@ -1251,41 +1301,11 @@ def ngram_jaccard(spark, sf_dir):
                                max_df_ratio=0.3, shingle_w=3)
 
 
-@query("edit_distance_pairs", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
-    sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-              FROM toks GROUP BY doc_id),
-    ndocs AS (SELECT count(*) AS n FROM documents),
-    hot AS (SELECT tok FROM toks GROUP BY tok
-            HAVING count(*) > (SELECT CAST(floor(0.3 * n) AS BIGINT)
-                               FROM ndocs)),
-    cold AS (SELECT doc_id, tok FROM toks
-             WHERE tok NOT IN (SELECT tok FROM hot)),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(count(*) AS BIGINT) AS inter
-      FROM cold a JOIN cold b ON a.tok = b.tok AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id),
-    pairs AS (
-      SELECT id_a, id_b FROM inter
-      JOIN sizes sa ON sa.doc_id = id_a
-      JOIN sizes sb ON sb.doc_id = id_b
-      WHERE CAST(inter AS DOUBLE)
-            / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.8)
+@query("edit_distance_pairs", f"""
+    WITH {_ngram_sim_ctes(0.8)}
     SELECT p.id_a, p.id_b,
            CAST(levenshtein(da.text, db.text) AS INT) AS edit_dist
-    FROM pairs p
+    FROM sim_pairs p
     JOIN documents da ON da.doc_id = p.id_a
     JOIN documents db ON db.doc_id = p.id_b
 """)
@@ -1306,40 +1326,9 @@ def edit_distance_pairs(spark, sf_dir):
     return edit_distance_rerank(pairs, t["documents"])
 
 
-@query("ngram_containment", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
-    sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-              FROM toks GROUP BY doc_id),
-    ndocs AS (SELECT count(*) AS n FROM documents),
-    hot AS (SELECT tok FROM toks GROUP BY tok
-            HAVING count(*) > (SELECT CAST(floor(0.3 * n) AS BIGINT)
-                               FROM ndocs)),
-    cold AS (SELECT doc_id, tok FROM toks
-             WHERE tok NOT IN (SELECT tok FROM hot)),
-    inter AS (
-      SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-             CAST(count(*) AS BIGINT) AS inter
-      FROM cold a JOIN cold b ON a.tok = b.tok AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id)
-    SELECT id_a, id_b,
-           CAST(inter AS DOUBLE) / CAST(least(sa.sz, sb.sz) AS DOUBLE)
-               AS containment
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = id_a
-    JOIN sizes sb ON sb.doc_id = id_b
-    WHERE CAST(inter AS DOUBLE) / CAST(least(sa.sz, sb.sz) AS DOUBLE)
-          >= 0.9
+@query("ngram_containment", f"""
+    WITH {_ngram_sim_ctes(0.9, "containment")}
+    SELECT id_a, id_b, containment FROM sim_pairs
 """)
 def ngram_containment(spark, sf_dir):
     """Asymmetric near-dup pairs (operators/dedup.py
@@ -1379,49 +1368,10 @@ def equidepth_histogram_q(spark, sf_dir):
                                "o_orderkey", k=10)
 
 
-@query("dedup_components", """
-    WITH RECURSIVE pairs AS (
-      -- same pair generation as the ngram_jaccard oracle
-      SELECT id_a, id_b FROM (
-        WITH base AS (
-          SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                     t -> t <> '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(tk) >= 3 THEN
-                   list_transform(generate_series(1, len(tk) - 2),
-                       i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-                 ELSE [concat_ws(' ', tk)] END AS sl
-          FROM base),
-        toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
-        sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-                  FROM toks GROUP BY doc_id),
-        ndocs AS (SELECT count(*) AS n FROM documents),
-        hot AS (SELECT tok FROM toks GROUP BY tok
-                HAVING count(*) > (SELECT CAST(floor(0.3 * n) AS BIGINT)
-                                   FROM ndocs)),
-        cold AS (SELECT doc_id, tok FROM toks
-                 WHERE tok NOT IN (SELECT tok FROM hot)),
-        inter AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(count(*) AS BIGINT) AS inter
-          FROM cold a JOIN cold b ON a.tok = b.tok AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)
-        SELECT id_a, id_b
-        FROM inter JOIN sizes sa ON sa.doc_id = id_a
-                   JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(inter AS DOUBLE)
-              / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.8)
-    ),
-    sym AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    reach(node, label) AS (
-      SELECT u, u FROM sym
-      UNION
-      SELECT s.v, r.label FROM reach r JOIN sym s ON s.u = r.node)
-    SELECT node, CAST(min(label) AS BIGINT) AS component
-    FROM reach GROUP BY node
+@query("dedup_components", f"""
+    WITH RECURSIVE {_ngram_sim_ctes(0.8)},
+    {_min_label_ctes("sim_pairs")}
+    SELECT node, component FROM comp
 """)
 def dedup_components(spark, sf_dir):
     """Transitive closure of near-duplicate pairs into duplicate
@@ -1722,12 +1672,11 @@ def similarity_ivf(spark, sf_dir):
                     .alias("recall_ok")))
 
 
-@query("token_counts", r"""
+@query("token_counts", rf"""
     SELECT doc_id,
-           CAST(len(list_filter(string_split_regex(text, '\s+'),
-                                t -> t <> '')) AS BIGINT) AS ws_tokens,
+           CAST(len({_tokens_sql()}) AS BIGINT) AS ws_tokens,
            CAST(len(regexp_extract_all(text,
-                    '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) AS BIGINT)
+                    '{BPE_PRETOKEN_RE}')) AS BIGINT)
                AS bpe_tokens
     FROM documents
 """)
@@ -1743,13 +1692,12 @@ def token_counts(spark, sf_dir):
         bpe_token_count("text").alias("bpe_tokens"))
 
 
-@query("text_stats", """
+@query("text_stats", f"""
     WITH s AS (
       SELECT doc_id,
              CAST(length(text) AS BIGINT) AS n_chars,
-             list_filter(string_split_regex(text, '\\s+'),
-                         t -> t <> '') AS toks,
-             CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT)
+             {_tokens_sql()} AS toks,
+             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
                  AS alpha
       FROM documents)
     SELECT doc_id, n_chars,
@@ -1767,12 +1715,11 @@ def text_stats(spark, sf_dir):
     return _ts(t["documents"])
 
 
-@query("quality_score", """
+@query("quality_score", f"""
     WITH s AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         t -> t <> '') AS toks,
-             CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT)
+             {_tokens_sql()} AS toks,
+             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
                  AS alpha
       FROM documents),
     m AS (
@@ -1814,8 +1761,7 @@ def _lang_oracle() -> str:
     case_sql = "CASE " + " ".join(cases) + f" ELSE '{LANGS[-1]}' END"
     return f"""
     WITH s AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS toks
+      SELECT doc_id, {_tokens_sql()} AS toks
       FROM documents),
     sc AS (SELECT doc_id, {', '.join(score_exprs)} FROM s)
     SELECT doc_id, {case_sql} AS pred_lang FROM sc
@@ -2084,11 +2030,11 @@ def op_hash_split(spark, sf_dir):
         .select("doc_id", "split")
 
 
-@query("op_budget_sample", r"""
+@query("op_budget_sample", rf"""
     WITH t AS (
       SELECT doc_id, lang,
              CAST(len(regexp_extract_all(text,
-                  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+')) AS BIGINT)
+                  '{BPE_PRETOKEN_RE}')) AS BIGINT)
                  AS tokens
       FROM documents),
     c AS (
@@ -2420,9 +2366,8 @@ def _pipeline_oracle() -> str:
     way in both engines."""
     return f"""
     WITH qs AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS toks,
-             CAST(length(regexp_replace(text, '\\s+', '', 'g')) AS BIGINT)
+      SELECT doc_id, {_tokens_sql()} AS toks,
+             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
                  AS alpha
       FROM documents),
     qm AS (
@@ -2450,7 +2395,7 @@ def _pipeline_oracle() -> str:
            WHERE doc_id NOT IN (SELECT doc_id FROM losers))
     SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
            CAST(sum(len(regexp_extract_all(text,
-                '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]+'))) AS BIGINT)
+                '{BPE_PRETOKEN_RE}'))) AS BIGINT)
                AS token_budget
     FROM d2 GROUP BY lang
     """
@@ -3055,19 +3000,8 @@ def json_props(spark, sf_dir):
                  F.count(F.lit(1)).alias("n")))
 
 
-@query("decontaminate", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
+@query("decontaminate", f"""
+    WITH {_shingle_ctes("toks", 3, distinct=True)},
     tr AS (SELECT doc_id AS train_id, tok FROM toks WHERE doc_id % 17 <> 0),
     ev AS (SELECT doc_id AS eval_id, tok FROM toks WHERE doc_id % 17 = 0)
     SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS n_shared
@@ -3089,19 +3023,8 @@ def decontaminate(spark, sf_dir):
     return contamination_report(tr, ev, ngram_w=3, min_shared=2)
 
 
-@query("repetition_stats", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 2 THEN
-               list_transform(generate_series(1, len(tk) - 1),
-                   i -> concat_ws(' ', tk[i], tk[i+1]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(sl) AS tok FROM sh),
+@query("repetition_stats", f"""
+    WITH {_shingle_ctes("toks", 2, distinct=False)},
     per AS (SELECT doc_id, tok, count(*) AS c
             FROM toks GROUP BY doc_id, tok)
     SELECT doc_id,
@@ -3121,11 +3044,10 @@ def repetition_stats(spark, sf_dir):
     return _rep(t["documents"], ngram_w=2)
 
 
-@query("pack_sequences", """
+@query("pack_sequences", f"""
     WITH tc AS (
       SELECT doc_id,
-             len(list_filter(string_split_regex(text, '\\s+'),
-                             t -> t <> '')) AS n_tokens
+             len({_tokens_sql()}) AS n_tokens
       FROM documents),
     nz AS (SELECT * FROM tc WHERE n_tokens > 0),
     off AS (
@@ -3159,18 +3081,11 @@ def pack_sequences(spark, sf_dir):
     return _pack(t["documents"], max_len=512)
 
 
-@query("winnow", """
+@query("winnow", f"""
     WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
+      SELECT doc_id, {_tokens_sql()} AS tk
       FROM documents),
-    g AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS gl
-      FROM base),
+    g AS (SELECT doc_id, {_shingle_list_sql(3)} AS gl FROM base),
     kg AS (
       SELECT doc_id, len(gl) AS p,
              unnest(generate_series(1, len(gl))) - 1 AS pos,
@@ -3183,7 +3098,7 @@ def pack_sequences(spark, sf_dir):
       FROM kg),
     m AS (
       SELECT doc_id, p, pos,
-             min({'h': h, 'np': -pos}) OVER (
+             min({{'h': h, 'np': -pos}}) OVER (
                  PARTITION BY doc_id ORDER BY pos
                  ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS mr
       FROM hx)
@@ -3250,10 +3165,10 @@ def pii_scrub(spark, sf_dir):
     return scrub_pii(injected)
 
 
-@query("line_dedup", r"""
+@query("line_dedup", rf"""
     WITH inj AS (
       SELECT doc_id,
-             regexp_replace(text, '((?:\S+\s+){8})',
+             regexp_replace(text, '((?:{_NWS}+{_WS}+){{8}})',
                             '\1' || chr(10), 'g') AS text
       FROM documents),
     sl AS (SELECT doc_id, string_split(text, chr(10)) AS l FROM inj),
@@ -3286,15 +3201,14 @@ def line_dedup(spark, sf_dir):
     return span_dedup(lines)
 
 
-@query("classify_score", """
+@query("classify_score", f"""
     WITH w AS (
       SELECT j AS feature,
              (('0x' || substr(md5(CAST(j AS VARCHAR)), 1, 15))::BIGINT
               % 2001 - 1000) / 1024.0 AS weight
       FROM generate_series(0, 1023) t(j)),
     toks AS (
-      SELECT doc_id, unnest(list_filter(
-                 string_split_regex(text, '\\s+'), t -> t <> '')) AS tok
+      SELECT doc_id, unnest({_tokens_sql()}) AS tok
       FROM documents),
     feats AS (
       SELECT doc_id,
@@ -3399,17 +3313,15 @@ def dedup_against(spark, sf_dir):
                                  portable=True)
 
 
-@query("corpus_stats", """
+@query("corpus_stats", f"""
     SELECT source,
            CAST(count(*) AS BIGINT) AS n_docs,
-           CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> ''))) AS BIGINT)
+           CAST(sum(len({_tokens_sql()})) AS BIGINT)
                AS n_tokens,
            CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct,
            1.0 - count(DISTINCT md5(text))
                  / CAST(count(*) AS DOUBLE) AS dup_frac,
-           CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
-                                    t -> t <> ''))) AS DOUBLE)
+           CAST(sum(len({_tokens_sql()})) AS DOUBLE)
                / count(*) AS mean_tokens
     FROM documents GROUP BY source
 """)
@@ -3443,10 +3355,8 @@ def _bm25_oracle(terms: list[str], k: int = 20, k1: float = 1.2,
     return f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t <> '')) AS term,
-             len(list_filter(string_split_regex(text, '\\s+'),
-                             t -> t <> '')) AS dl
+             unnest({_tokens_sql()}) AS term,
+             len({_tokens_sql()}) AS dl
       FROM documents),
     post AS (SELECT * FROM toks WHERE term IN ({tlist})),
     tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf,
@@ -3454,8 +3364,7 @@ def _bm25_oracle(terms: list[str], k: int = 20, k1: float = 1.2,
            FROM post GROUP BY doc_id, term),
     corpus AS (
       SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-             CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
-                                      t -> t <> ''))) AS DOUBLE) AS tot_dl
+             CAST(sum(len({_tokens_sql()})) AS DOUBLE) AS tot_dl
       FROM documents),
     dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
               FROM tf GROUP BY term),
@@ -3757,11 +3666,10 @@ def triangle_count_q(spark, sf_dir):
     return triangle_count(edges)
 
 
-@query("mix_weights", """
+@query("mix_weights", f"""
     WITH per AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
-                                      t -> t <> ''))) AS BIGINT)
+             CAST(sum(len({_tokens_sql()})) AS BIGINT)
                  AS n_tokens
       FROM documents GROUP BY source),
     tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM per)
@@ -4045,10 +3953,9 @@ def upsert_partitioned_q(spark, sf_dir):
     return read_latest(spark, path)
 
 
-@query("lm_quality", """
+@query("lm_quality", f"""
     WITH tkt AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
+      SELECT doc_id, {_tokens_sql()} AS tk
       FROM documents),
     nz AS (SELECT doc_id, tk FROM tkt WHERE len(tk) >= 2),
     rb AS (SELECT tk[i] AS w1, tk[i+1] AS w2
@@ -4165,11 +4072,10 @@ def compact_partitioned_q(spark, sf_dir):
     return read_latest(spark, path)
 
 
-@query("chunk_docs", """
+@query("chunk_docs", f"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         x -> x <> '') AS tk
+             {_tokens_sql()} AS tk
       FROM documents),
     nz AS (SELECT * FROM t WHERE len(tk) > 0),
     s AS (SELECT doc_id, tk,
@@ -4192,10 +4098,9 @@ def chunk_docs(spark, sf_dir):
     return chunk_documents(t["documents"], chunk_tokens=48)
 
 
-@query("bigram_pmi", """
+@query("bigram_pmi", f"""
     WITH t AS (
-      SELECT list_filter(string_split_regex(text, '\\s+'),
-                         x -> x <> '') AS tk
+      SELECT {_tokens_sql()} AS tk
       FROM documents),
     nz AS (SELECT tk FROM t WHERE len(tk) > 0),
     uni AS (SELECT w1, CAST(count(*) AS BIGINT) AS c1 FROM (
@@ -4308,19 +4213,11 @@ def _keep_best_oracle() -> str:
     quality_score replay."""
     return f"""
     WITH RECURSIVE {_minhash_pairs_ctes('documents', threshold=0.5)},
-    sym AS (SELECT id_a AS u, id_b AS v FROM mh_pairs
-            UNION SELECT id_b, id_a FROM mh_pairs),
-    reach(node, label) AS (
-      SELECT u, u FROM sym
-      UNION
-      SELECT s.v, r.label FROM reach r JOIN sym s ON s.u = r.node),
-    comp AS (SELECT node, min(label) AS component
-             FROM reach GROUP BY node),
+    {_min_label_ctes("mh_pairs")},
     qs AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         t -> t <> '') AS toks,
-             CAST(length(regexp_replace(text, '\\s+', '', 'g'))
+             {_tokens_sql()} AS toks,
+             CAST(length(regexp_replace(text, '{_WS}+', '', 'g'))
                   AS BIGINT) AS alpha
       FROM documents),
     qm AS (
@@ -4423,10 +4320,9 @@ def price_histogram(spark, sf_dir):
             .groupBy("bin").agg(F.count(F.lit(1)).alias("n")))
 
 
-@query("heavy_hitters", """
+@query("heavy_hitters", f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t <> '')) AS tok
+      SELECT unnest({_tokens_sql()}) AS tok
       FROM documents),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM toks)
     SELECT tok, CAST(count(*) AS BIGINT) AS n,
@@ -4445,10 +4341,9 @@ def heavy_hitters_q(spark, sf_dir):
     return heavy_hitters(t["documents"], phi=0.01)
 
 
-@query("heavy_hitters_approx", """
+@query("heavy_hitters_approx", f"""
     WITH toks AS (
-      SELECT unnest(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t <> '')) AS tok
+      SELECT unnest({_tokens_sql()}) AS tok
       FROM documents),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM toks),
     cnt AS (SELECT tok, CAST(count(*) AS BIGINT) AS n_true
@@ -4521,11 +4416,10 @@ def stream_upsert_q(spark, sf_dir):
                          partition_by=["shard"])
 
 
-@query("tfidf_terms", """
+@query("tfidf_terms", f"""
     WITH toks AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t <> '')) AS term
+             unnest({_tokens_sql()}) AS term
       FROM documents),
     tf AS (SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
            FROM toks GROUP BY doc_id, term),
@@ -4805,7 +4699,7 @@ def semantic_dedup_q(spark, sf_dir):
 def _bpe_train_oracle_sql(num_merges: int, min_count: int = 2,
                           vocab_cap: int = 65536) -> str:
     """Full SQL replay of bpe_train's merge loop: the word-frequency
-    table (lowercase, ASCII-\\s split, min_count filter, top-vocab_cap
+    table (lowercase, tokens() split, min_count filter, top-vocab_cap
     by (n DESC, word)) becomes symbol rows, then each of the
     ``num_merges`` iterations is ONE PAIR of chained CTEs — m{r} picks
     the argmax pair (sum of word frequencies over ALL adjacent
@@ -4821,9 +4715,7 @@ def _bpe_train_oracle_sql(num_merges: int, min_count: int = 2,
     ctes = [f"""wc AS MATERIALIZED (
   SELECT word, n FROM (
     SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
-      SELECT unnest(list_filter(string_split_regex(lower(text),
-                                                   '\\s+'),
-                                t -> t <> '')) AS word
+      SELECT unnest({_tokens_sql('lower(text)')}) AS word
       FROM documents)
     GROUP BY word HAVING count(*) >= {min_count})
   ORDER BY n DESC, word LIMIT {vocab_cap})""", """t0 AS MATERIALIZED (
@@ -4964,15 +4856,14 @@ def _bpe_merge_step_sql(prev: str, a: str, b: str) -> str:
 def _bpe_encode_oracle_sql(
         merges: list[tuple[int, str, str, int]]) -> str:
     """Full SQL replay of bpe_encode under a pinned merge list: words
-    (lowercased, ASCII-\\s split), chars + end-of-word sentinel as
+    (lowercased, tokens() split), chars + end-of-word sentinel as
     symbol rows, then ONE CHAINED CTE PER MERGE (the fixed-iteration
     unroll trick) applying the pass above; token count = surviving
     symbol rows per document, 0 for wordless docs via the left join."""
-    ctes = ["""wz AS (
+    ctes = [f"""wz AS (
   SELECT doc_id, unnest(list_transform(
-      list_filter(string_split_regex(lower(text), '\\s+'),
-                  t -> t <> ''),
-      (w, i) -> {'wid': i, 'w': w})) AS u
+      {_tokens_sql('lower(text)')},
+      (w, i) -> {{'wid': i, 'w': w}})) AS u
   FROM documents)""", """s0 AS (
   SELECT doc_id, wid, s.pos AS pos, s.sym AS sym FROM (
     SELECT doc_id, u.wid AS wid,
@@ -5009,11 +4900,10 @@ def bpe_token_counts_q(spark, sf_dir):
     return bpe_encode(t["documents"], _BPE_PINNED)
 
 
-@query("gopher_rules", """
+@query("gopher_rules", f"""
     WITH b AS (
       SELECT doc_id,
-             list_filter(string_split_regex(text, '\\s+'),
-                         t -> t <> '') AS toks,
+             {_tokens_sql()} AS toks,
              list_filter(string_split(text, chr(10)),
                          l -> l <> '') AS lines
       FROM documents),
@@ -5161,11 +5051,10 @@ def range_sorted_layout_q(spark, sf_dir):
             .sortWithinPartitions("o_orderkey"))
 
 
-@query("mixture_sample", """
+@query("mixture_sample", f"""
     WITH per AS (
       SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-             CAST(sum(len(list_filter(string_split_regex(text, '\\s+'),
-                                      t -> t <> ''))) AS BIGINT)
+             CAST(sum(len({_tokens_sql()})) AS BIGINT)
                  AS n_tokens
       FROM documents GROUP BY source),
     tot AS (SELECT CAST(sum(n_tokens) AS BIGINT) AS tot FROM per),
@@ -5564,27 +5453,15 @@ def winsorize_values_q(spark, sf_dir):
     return winsorize(t["events"], "user_id", "value", "event_id")
 
 
-@query("item_jaccard", """
+@query("item_jaccard", f"""
     WITH rel AS (
-      SELECT DISTINCT o_custkey AS id, l_partkey AS tok
+      SELECT DISTINCT o_custkey AS cust, l_partkey AS tok
       FROM orders JOIN lineitem ON l_orderkey = o_orderkey),
-    nids AS (SELECT count(DISTINCT id) AS n FROM rel),
-    sz AS (SELECT id, count(*) AS sz FROM rel GROUP BY id),
-    dfreq AS (SELECT tok, count(*) AS df FROM rel GROUP BY tok),
-    pruned AS (
-      SELECT rel.id, rel.tok FROM rel
-      JOIN dfreq USING (tok), nids
-      WHERE df <= floor(0.5 * n)),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, count(*) AS i
-      FROM pruned a JOIN pruned b
-        ON a.tok = b.tok AND a.id < b.id
-      GROUP BY a.id, b.id)
+    {_set_sim_ctes("rel", "SELECT count(DISTINCT cust) FROM rel", 0.10,
+                   0.5, id_col="cust")}
     SELECT CAST(id_a AS BIGINT) AS id_a, CAST(id_b AS BIGINT) AS id_b,
-           i / CAST(sa.sz + sb.sz - i AS DOUBLE) AS jaccard
-    FROM inter JOIN sz sa ON sa.id = inter.id_a
-    JOIN sz sb ON sb.id = inter.id_b
-    WHERE i / CAST(sa.sz + sb.sz - i AS DOUBLE) >= 0.10
+           jaccard
+    FROM sim_pairs
 """)
 def item_jaccard_q(spark, sf_dir):
     """Generic set-similarity self-join (operators/dedup.py
@@ -6423,7 +6300,7 @@ def web_pipeline_q(spark, sf_dir):
                     "dup_count", "body_md5"))
 
 
-_DUP_SPAN_CORPUS_SQL = r"""
+_DUP_SPAN_CORPUS_SQL = rf"""
 WITH corpus AS (
   SELECT doc_id,
          CASE WHEN doc_id % 5 = 0
@@ -6432,8 +6309,7 @@ WITH corpus AS (
               ELSE text END AS text
   FROM documents),
 tk AS (SELECT doc_id,
-              list_filter(string_split_regex(text, '\s+'),
-                          t -> t <> '') AS t
+              {_tokens_sql()} AS t
        FROM corpus),
 pos AS (SELECT doc_id, len(t) AS n, t,
                unnest(generate_series(1, len(t))) AS p
@@ -6572,19 +6448,8 @@ def charset_decode_q(spark, sf_dir):
         F.octet_length("payload").cast("long").alias("n_bytes"))
 
 
-@query("decontaminate_bloom", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 3 THEN
-               list_transform(generate_series(1, len(tk) - 2),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
+@query("decontaminate_bloom", f"""
+    WITH {_shingle_ctes("toks", 3, distinct=True)},
     tr AS (SELECT doc_id AS train_id, tok FROM toks WHERE doc_id % 17 <> 0),
     ev AS (SELECT doc_id AS eval_id, tok FROM toks WHERE doc_id % 17 = 0)
     SELECT train_id, eval_id, CAST(count(*) AS BIGINT) AS n_shared
@@ -7144,20 +7009,8 @@ def multimodal_mjpeg_q(spark, sf_dir):
         F.md5(F.hex(F.col("frame"))).alias("frame_md5"))
 
 
-@query("ngram_novelty", """
-    WITH base AS (
-      SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                 t -> t <> '') AS tk
-      FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(tk) >= 5 THEN
-               list_transform(generate_series(1, len(tk) - 4),
-                   i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2],
-                                  tk[i+3], tk[i+4]))
-             ELSE [concat_ws(' ', tk)] END AS sl
-      FROM base),
-    toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
+@query("ngram_novelty", f"""
+    WITH {_shingle_ctes("toks", 5, distinct=True)},
     ref AS (SELECT DISTINCT tok FROM toks WHERE doc_id % 10 = 0),
     scored AS (
       SELECT t.doc_id, t.tok, r.tok IS NOT NULL AS seen
@@ -7189,49 +7042,9 @@ def ngram_novelty_q(spark, sf_dir):
     return ngram_novelty(cand, ref, ngram_w=5)
 
 
-@query("leakage_split", """
-    WITH RECURSIVE pairs AS (
-      -- same pair generation as the dedup_components oracle
-      SELECT id_a, id_b FROM (
-        WITH base AS (
-          SELECT doc_id, list_filter(string_split_regex(text, '\\s+'),
-                                     t -> t <> '') AS tk
-          FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(tk) >= 3 THEN
-                   list_transform(generate_series(1, len(tk) - 2),
-                       i -> concat_ws(' ', tk[i], tk[i+1], tk[i+2]))
-                 ELSE [concat_ws(' ', tk)] END AS sl
-          FROM base),
-        toks AS (SELECT doc_id, unnest(list_distinct(sl)) AS tok FROM sh),
-        sizes AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS sz
-                  FROM toks GROUP BY doc_id),
-        ndocs AS (SELECT count(*) AS n FROM documents),
-        hot AS (SELECT tok FROM toks GROUP BY tok
-                HAVING count(*) > (SELECT CAST(floor(0.3 * n) AS BIGINT)
-                                   FROM ndocs)),
-        cold AS (SELECT doc_id, tok FROM toks
-                 WHERE tok NOT IN (SELECT tok FROM hot)),
-        inter AS (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(count(*) AS BIGINT) AS inter
-          FROM cold a JOIN cold b ON a.tok = b.tok AND a.doc_id < b.doc_id
-          GROUP BY a.doc_id, b.doc_id)
-        SELECT id_a, id_b
-        FROM inter JOIN sizes sa ON sa.doc_id = id_a
-                   JOIN sizes sb ON sb.doc_id = id_b
-        WHERE CAST(inter AS DOUBLE)
-              / CAST(sa.sz + sb.sz - inter AS DOUBLE) >= 0.8)
-    ),
-    sym AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b, id_a FROM pairs),
-    reach(node, label) AS (
-      SELECT u, u FROM sym
-      UNION
-      SELECT s.v, r.label FROM reach r JOIN sym s ON s.u = r.node),
-    comp AS (SELECT node, CAST(min(label) AS BIGINT) AS component
-             FROM reach GROUP BY node),
+@query("leakage_split", f"""
+    WITH RECURSIVE {_ngram_sim_ctes(0.8)},
+    {_min_label_ctes("sim_pairs")},
     grp AS (SELECT d.doc_id,
                    CAST(coalesce(c.component, d.doc_id) AS BIGINT)
                        AS split_group
@@ -7847,8 +7660,7 @@ def _code_detect_oracle() -> str:
              CAST({sym_chain} AS BIGINT) AS n_sym,
              list_filter(string_split(text, chr(10)),
                          l -> l <> '') AS lines,
-             list_filter(string_split_regex(text, '\\s+'),
-                         t -> t <> '') AS toks
+             {_tokens_sql()} AS toks
       FROM corpus),
     agg AS (
       SELECT doc_id, n_chars, n_sym,
@@ -8168,8 +7980,8 @@ def _c4_oracle() -> str:
 
     keep = ("l -> l <> '' AND (l LIKE '%.' OR l LIKE '%!' OR "
             "l LIKE '%?' OR l LIKE '%\"') AND "
-            "len(list_filter(string_split_regex(l, '\\s+'), "
-            "w -> w <> '')) >= 5 AND lower(l) NOT LIKE '%javascript%'")
+            f"len({_tokens_sql('l')}) >= 5 AND "
+            "lower(l) NOT LIKE '%javascript%'")
     return f"""
     WITH page AS (
       SELECT doc_id,
@@ -8205,9 +8017,8 @@ def _c4_oracle() -> str:
              CAST({sent('kt')} AS BIGINT) AS n_sentences,
              CAST(length(kt) AS BIGINT) AS kept_chars,
              CAST(len(list_filter([{bl}],
-                 b -> list_contains(list_filter(
-                     string_split_regex(lower(text), '\\s+'),
-                     w -> w <> ''), b))) AS BIGINT) AS n_bad,
+                 b -> list_contains({_tokens_sql('lower(text)')}, b)))
+                 AS BIGINT) AS n_bad,
              lower(text) NOT LIKE '%lorem ipsum%' AS r_no_lorem,
              text NOT LIKE '%{{%' AS r_no_brace,
              kt AS kept_text
@@ -8282,8 +8093,7 @@ def _sentences_oracle() -> str:
     SELECT doc_id, CAST(i - 1 AS INT) AS sent_idx,
            ss[i] AS sentence,
            CAST(length(ss[i]) AS BIGINT) AS n_chars,
-           CAST(len(list_filter(string_split_regex(ss[i], '\\s+'),
-                w -> w <> '')) AS BIGINT) AS n_words
+           CAST(len({_tokens_sql('ss[i]')}) AS BIGINT) AS n_words
     FROM idx
     """
 
@@ -9230,7 +9040,7 @@ def source_arrow_ipc(spark, sf_dir):
 
 
 _UNI_PAIRED = (r"SELECT doc_id, regexp_replace(text, "
-               r"'(\S+) (\S+)( |$)', '\1\2\3', 'g') AS text "
+               rf"'({_NWS}+) ({_NWS}+)( |$)', '\1\2\3', 'g') AS text "
                r"FROM documents")
 
 
@@ -9245,9 +9055,7 @@ def _unigram_base_ctes(seed_top: int = 200, max_piece: int = 4,
     wc AS MATERIALIZED (
       SELECT word, n FROM (
         SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
-          SELECT unnest(list_filter(string_split_regex(lower(text),
-                                                       '\\s+'),
-                                    t -> t <> '')) AS word
+          SELECT unnest({_tokens_sql('lower(text)')}) AS word
           FROM corpus)
         WHERE length(word) <= {max_word_len}
         GROUP BY word HAVING count(*) >= 2)
@@ -9370,9 +9178,7 @@ def unigram_vocab_q(spark, sf_dir):
     dw AS MATERIALIZED (
       SELECT word, CAST(count(*) AS BIGINT) AS n FROM (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(lower(text),
-                                                     '\\s+'),
-                                  t -> t <> '')) AS word
+               unnest({_tokens_sql('lower(text)')}) AS word
         FROM corpus)
       GROUP BY word),
     {_unigram_dp_ctes("dw", "seed")},
@@ -9381,9 +9187,7 @@ def unigram_vocab_q(spark, sf_dir):
       FROM segp GROUP BY word),
     exploded AS (
       SELECT doc_id,
-             unnest(list_filter(string_split_regex(lower(text),
-                                                   '\\s+'),
-                                t -> t <> '')) AS word
+             unnest({_tokens_sql('lower(text)')}) AS word
       FROM corpus)
     SELECT e.doc_id,
            CAST(count(*) AS BIGINT) AS n_words,
@@ -9410,7 +9214,7 @@ def unigram_tokens_q(spark, sf_dir):
     return unigram_token_counts(paired, counts)
 
 
-@query("stream_quality_filter", """
+@query("stream_quality_filter", f"""
     WITH page AS (
       SELECT doc_id,
              substr(text, 1, 50) || '.' || chr(10)
@@ -9423,8 +9227,7 @@ def unigram_tokens_q(spark, sf_dir):
                  l -> l <> ''
                  AND (l LIKE '%.' OR l LIKE '%!' OR l LIKE '%?'
                       OR l LIKE '%"')
-                 AND len(list_filter(string_split_regex(l, '\\s+'),
-                                     w -> w <> '')) >= 5
+                 AND len({_tokens_sql('l')}) >= 5
                  AND lower(l) NOT LIKE '%javascript%') AS kl
       FROM page),
     scored AS (
@@ -9792,11 +9595,10 @@ def metrics_counters_q(spark, sf_dir):
                     "name string, value long")
 
 
-@query("nb_classifier", """
+@query("nb_classifier", f"""
     WITH tok AS (
       SELECT lang AS label,
-             unnest(list_filter(string_split_regex(text, '\\s+'),
-                                t -> t <> '')) AS w
+             unnest({_tokens_sql()}) AS w
       FROM documents),
     wc AS (SELECT label, w, CAST(count(*) AS BIGINT) AS cnt
            FROM tok GROUP BY label, w),
@@ -9811,8 +9613,7 @@ def metrics_counters_q(spark, sf_dir):
     dw AS (
       SELECT doc_id, w, CAST(count(*) AS BIGINT) AS dw FROM (
         SELECT doc_id,
-               unnest(list_filter(string_split_regex(text, '\\s+'),
-                                  t -> t <> '')) AS w
+               unnest({_tokens_sql()}) AS w
         FROM documents)
       GROUP BY doc_id, w),
     terms AS (

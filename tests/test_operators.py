@@ -372,6 +372,110 @@ def test_ngram_jaccard_no_driver_count_job(spark, tables):
     assert got == want and len(got) > 0
 
 
+# Whitespace the two regex engines treat differently (VT: Java's \s has
+# it, RE2's does not), whitespace both split on, NBSP which neither
+# splits on, and documents shorter than every shingle width tested.
+_TEXT_EDGE_DOCS = [
+    (1, "a\x0bb c"), (2, "a\x0cb\x0cc d"), (3, "line one\r\nline two"),
+    (4, "tab\t\t\trun  of   spaces and more"), (5, "nb\u00a0sp stays one"),
+    (6, "  leading and trailing  \n"), (7, ""), (8, " \t\n\x0b\x0c\r "),
+    (9, "solo"), (10, "two words"), (11, "two\x0bwords"),
+    (12, "x y x y x y z"), (13, "a a a a a"), (14, None),
+]
+
+
+def test_oracle_text_fragments_match_spark(spark):
+    """The oracle builders queries._tokens_sql and _shingle_ctes replay
+    text.tokens() and dedup._shingle_rows row for row on inline edge
+    cases the fixtures lack: VT/FF/CRLF/tab runs, NBSP, leading and
+    trailing whitespace, empty, whitespace-only and NULL text, 1- and
+    2-token documents (the whole-document shingle) and a short
+    near-duplicate pair that differ only in a VT."""
+    import duckdb
+    from collections import Counter
+    from bigslice_spark.operators.dedup import _shingle_rows
+    from bigslice_spark.operators.text import tokens
+    from bigslice_spark.queries import _shingle_ctes, _tokens_sql
+    docs = spark.createDataFrame(_TEXT_EDGE_DOCS,
+                                 "doc_id long, text string")
+    con = duckdb.connect()
+    values = ", ".join(f"({i}, NULL)" if t is None else f"({i}, '{t}')"
+                       for i, t in _TEXT_EDGE_DOCS)
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM (VALUES "
+                f"{values}) t(doc_id, text)")
+    got = dict(con.execute(
+        f"SELECT doc_id, {_tokens_sql()} FROM documents").fetchall())
+    want = {r[0]: r[1] for r in docs.select(
+        "doc_id", tokens("text")).collect()}
+    assert got == want
+    assert want[1] == ["a", "b", "c"] and want[5][0] == "nb\u00a0sp"
+    for w in (1, 2, 3, 5):
+        for distinct in (False, True):
+            sql = (f"WITH {_shingle_ctes('sh', w, distinct)} "
+                   "SELECT doc_id, tok FROM sh")
+            got = Counter(map(tuple, con.execute(sql).fetchall()))
+            want = Counter(
+                (r[0], r[1]) for r in _shingle_rows(
+                    docs, "text", "doc_id", w, distinct).collect())
+            assert got == want, (w, distinct)
+    con.close()
+
+
+def _item_jaccard_brute(rows, threshold, max_df_ratio, nids=None):
+    """Reference semantics of item_jaccard_pairs, in plain Python."""
+    import math
+    from collections import Counter
+    sets: dict = {}
+    for i, item in rows:
+        sets.setdefault(i, set()).add(item)
+    n = len(sets) if nids is None else nids
+    dfreq = Counter(item for s in sets.values() for item in s)
+    cap = math.floor(float(max_df_ratio) * n)
+    cold = {i: {x for x in s if dfreq[x] <= cap} for i, s in sets.items()}
+    out = {}
+    for a in sets:
+        for b in sets:
+            inter = len(cold[a] & cold[b])
+            if a < b and inter:
+                j = inter / (len(sets[a]) + len(sets[b]) - inter)
+                if j >= threshold:
+                    out[(a, b)] = j
+    return out
+
+
+def test_item_jaccard_pairs_matches_brute_force(spark):
+    """item_jaccard_pairs against a Python brute force on an
+    adversarial relation: duplicate rows; an item every id holds,
+    pruned while the set sizes keep it (1–2 would reach 0.5 on pruned
+    sizes, and stays at 1/3); a pair exactly at the threshold (3–4);
+    an id whose items are all pruned (5); the id count computed
+    in-plan or given (nids=10 un-prunes the shared item); salted
+    posting lists (chunk_target=1); and an empty relation."""
+    from bigslice_spark.operators.dedup import item_jaccard_pairs
+    rows = ([(1, "a")] * 3 + [(1, "b"), (1, "c"), (1, "all"),
+                              (2, "a"), (2, "b"), (2, "d"), (2, "all"),
+                              (3, "e"), (3, "f"), (3, "all"),
+                              (4, "e"), (4, "f"), (4, "all"), (4, "e"),
+                              (5, "all")])
+    rel = spark.createDataFrame(rows, "cust long, part string")
+    for nids in (None, 5, 10):
+        want = _item_jaccard_brute(rows, 0.5, 0.5, nids)
+        for chunk_target in (1, 2048):
+            got = {(r["id_a"], r["id_b"]): r["jaccard"]
+                   for r in item_jaccard_pairs(
+                       rel, "cust", "part", threshold=0.5,
+                       max_df_ratio=0.5, nids=nids,
+                       chunk_target=chunk_target).collect()}
+            assert got == want, (nids, chunk_target)
+    assert _item_jaccard_brute(rows, 0.5, 0.5) == {(3, 4): 0.5}
+    assert (1, 2) in _item_jaccard_brute(rows, 0.5, 0.5, 10)
+    empty = spark.createDataFrame([], "cust long, part string")
+    for nids in (None, 3):
+        out = item_jaccard_pairs(empty, "cust", "part", nids=nids)
+        assert out.columns == ["id_a", "id_b", "jaccard"]
+        assert out.collect() == []
+
+
 def test_minhash_tracks_exact_jaccard(spark, tables):
     """MinHash signature similarity must approximate exact token-set
     Jaccard: pairs found by LSH at high threshold should have high exact
