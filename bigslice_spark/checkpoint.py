@@ -13,11 +13,11 @@ the lineage doubles per iteration. Two mechanisms with different safety:
   SparkContext checkpoint directory (HDFS/object store on a cluster) and
   survive executor loss.
 
-``materialize`` picks automatically: local master → localCheckpoint,
-anything else → reliable checkpoint (creating a scratch checkpoint dir
-if the caller never set one — on a real cluster, call
-``sc.setCheckpointDir`` to a shared filesystem first). Callers can force
-either with ``reliable=True/False``.
+``materialize`` alone picks, from the master: a single-JVM local
+master → localCheckpoint, anything else → reliable checkpoint, which
+needs a shared checkpoint dir (call ``sc.setCheckpointDir`` on an HDFS
+or object-store path first). Operators take no storage option: where
+an intermediate lives is the runtime's decision, as in the reference.
 
 Reference analog: bigslice's iterative workloads persist a computed
 ``*Result`` between invocations (reference exec/session.go:34-37,
@@ -47,18 +47,14 @@ def _single_jvm(master: str) -> bool:
     return master == "local" or re.match(r"local\[", master) is not None
 
 
-def materialize(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Eagerly compute ``df`` once and return a lineage-free handle.
-
-    reliable=None (default): localCheckpoint under a single-JVM
-    ``local[...]`` master, reliable checkpoint otherwise (including
-    ``local-cluster[...]``). See module docstring.
+def materialize(df: DataFrame) -> DataFrame:
+    """Eagerly compute ``df`` once and return a lineage-free handle:
+    localCheckpoint under a single-JVM ``local[...]`` master, reliable
+    checkpoint otherwise (including ``local-cluster[...]``). See module
+    docstring.
     """
     spark = df.sparkSession
-    if reliable is None:
-        master = spark.conf.get("spark.master", "local")
-        reliable = not _single_jvm(master)
-    if not reliable:
+    if _single_jvm(spark.conf.get("spark.master", "local")):
         # Track the persisted-RDD id this checkpoint creates so
         # release() can free superseded rounds of an iterative loop
         # promptly: localCheckpoint blocks otherwise live until the
@@ -82,20 +78,14 @@ def materialize(df: DataFrame, reliable: bool | None = None) -> DataFrame:
         with _TRACK_LOCK:
             _TRACKED[out] = (spark.sparkContext, ids)
         return out
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        master = spark.conf.get("spark.master", "local")
-        if _single_jvm(master):
-            import tempfile
-            sc.setCheckpointDir(tempfile.mkdtemp(prefix="bss_ckpt_"))
-        else:
-            # a driver-local temp dir is NOT reliable on a real cluster
-            # (executors can't read it back) — fail loudly up front
-            # instead of mid-job far from the cause
-            raise RuntimeError(
-                "materialize(reliable=True) on a cluster needs a shared "
-                "checkpoint dir: call spark.sparkContext.setCheckpointDir"
-                "('hdfs://... or s3a://...') first")
+    if spark.sparkContext.getCheckpointDir() is None:
+        # a driver-local temp dir is NOT reliable on a real cluster
+        # (executors can't read it back) — fail loudly up front
+        # instead of mid-job far from the cause
+        raise RuntimeError(
+            "materialize on a cluster needs a shared checkpoint dir: "
+            "call spark.sparkContext.setCheckpointDir"
+            "('hdfs://... or s3a://...') first")
     return df.checkpoint()
 
 

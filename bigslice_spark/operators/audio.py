@@ -12,27 +12,17 @@ expansion, so the repo's usual decimal-cast-sum trick cannot pin a
 trig product across engines; integer products can). Magnitudes:
 |pcm| < 2^15, |basis| ≤ 2^shift, frame ≤ 2^12 samples keeps every
 partial sum under 2^(15+shift+12) — well inside int64 AND exact in
-float64 (< 2^53), which is what makes the numpy path bit-equal too.
+float64 (< 2^53).
 
-Two physical paths, one bit-identical result:
-
-- ``vectorized=False`` (declarative — the SCALE path): posexplode the
-  samples, look the basis up in literal arrays, integer-sum per
-  (id, frame) — everything inside whole-stage codegen; the
-  oracle-paired path. The explode is pipelined (no materialized
-  sample rows); the only exchange is the per-(id, frame)
-  partial-aggregated projections — samples reduce ``frame_len``-fold
-  map-side, and the PCM bytes never leave the JVM. Measured
-  (PERFORMANCE.md §audio-paths): near-flat 1.1→1.6s from 2.5M→164M
-  samples on local[32].
-- ``vectorized=True``: one Arrow-batched mapInPandas pass, numpy
-  matmul of each frame against the same integer basis. Wins below
-  ~10⁵ clips (no explode floor: 0.4s vs 1.2s), but the Arrow copy of
-  every sample array INTO Python becomes the bottleneck at scale —
-  5.6s vs codegen's 1.6s at 164M samples — so it is the small-batch
-  path, not the 100 TB one. Exact-int float64 arithmetic keeps it
-  bit-equal to the declarative path (pytest-gated equality, not
-  tolerance).
+One physical path, the declarative one the oracle checks: posexplode
+the samples, look the basis up in literal arrays, integer-sum per
+(id, frame) — everything inside whole-stage codegen. The explode is
+pipelined (no materialized sample rows); the only exchange is the
+per-(id, frame) partial-aggregated projections — samples reduce
+``frame_len``-fold map-side, and the PCM bytes never leave the JVM.
+Measured (PERFORMANCE.md §audio-paths): near-flat 1.1→1.6s from
+2.5M→164M samples on local[32], 3.5x ahead of an Arrow-batched numpy
+matmul there, whose copy of every sample array into Python dominates.
 
 Reference: no analog in bigslice (grep: no audio/DSP operator); part
 of the multimodal pipeline surface this engine adds (SURVEY §2.4).
@@ -52,8 +42,8 @@ Q_SHIFT = 20  # basis quantization: round(cos·2^20)
 def dft_basis(frame_len: int, k: int) -> tuple[list[int], list[int]]:
     """Quantized cos/sin basis row for bin ``k`` of an N-point DFT:
     ``round(cos(2πkn/N)·2^Q_SHIFT)`` (and ``-sin``), as plain ints.
-    Both execution paths AND the SQL oracles are built from THESE
-    values, so every engine multiplies by identical integers."""
+    The operator AND the SQL oracles are built from THESE values, so
+    every engine multiplies by identical integers."""
     w = 2.0 * math.pi * k / frame_len
     s = 1 << Q_SHIFT
     return ([round(math.cos(w * n) * s) for n in range(frame_len)],
@@ -63,19 +53,17 @@ def dft_basis(frame_len: int, k: int) -> tuple[list[int], list[int]]:
 def band_energy(df: DataFrame, samples_col: str = "samples",
                 id_col: str = "id", frame_len: int = 64,
                 bins: Sequence[int] = (1, 3, 7),
-                vectorized: bool = False,
                 pos_rows: bool = False) -> DataFrame:
     """Per-frame spectral energy at the requested DFT ``bins``:
     ``e{k} = ((Σ x·cos)² + (Σ x·sin)²)·2^(-2·Q_SHIFT)`` over
     non-overlapping ``frame_len``-sample frames of an integer PCM
     array column. Returns ``(id_col, frame, e{k}...)``; a trailing
-    partial frame is aggregated over the samples it has (both paths
-    agree). ``id_col`` must be UNIQUE per input row: the declarative
-    path aggregates by (id, frame), so two rows sharing an id would
-    have their same-numbered frames summed together, while the
-    vectorized path emits frames per ROW — bit-equality holds only
-    under the unique-id contract (pre-aggregate or disambiguate ids
-    first, e.g. ``(id, track_id)`` for multi-track mp4_pcm output). ``frame_len`` ≤ 4096 keeps the integer sums exact FOR
+    partial frame is aggregated over the samples it has. ``id_col``
+    must be UNIQUE per input row: frames aggregate by (id, frame), so
+    two rows sharing an id would have their same-numbered frames
+    summed together (pre-aggregate or disambiguate ids first, e.g.
+    ``(id, track_id)`` for multi-track mp4_pcm output).
+    ``frame_len`` ≤ 4096 keeps the integer sums exact FOR
     int16-RANGE samples (the PCM the decoders produce — see the module
     docstring's magnitude analysis); feeding full-int32 values would
     overflow the exactness bound silently, so rescale wider PCM before
@@ -85,15 +73,10 @@ def band_energy(df: DataFrame, samples_col: str = "samples",
     if frame_len > 4096:
         raise ValueError("frame_len > 4096 can overflow the exact "
                          "int64/float64 projection sums")
-    if vectorized:
-        if pos_rows:
-            raise ValueError("pos_rows applies to the declarative "
-                             "path only")
-        return _band_energy_np(df, samples_col, id_col, frame_len, bins)
     if pos_rows:
         # ``df`` is already the exploded sample relation
         # (id_col, pos, x) — e.g. resample's (id, m, y) output. The
-        # declarative path's first step IS this relation (posexplode
+        # plan's first step IS this relation (posexplode
         # assigns pos = array index), so consuming rows directly is
         # plan-only: an upstream per-clip reassembly
         # (collect_list → array_sort → interpreted transform →
@@ -131,44 +114,6 @@ def band_energy(df: DataFrame, samples_col: str = "samples",
         ss = F.col(f"__s{k}").cast("double")
         out.append(((cs * cs + ss * ss) * scale).alias(f"e{k}"))
     return g.select(*out)
-
-
-def _band_energy_np(df: DataFrame, samples_col: str, id_col: str,
-                    frame_len: int, bins: Sequence[int]) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    # (2·len(bins), frame_len) integer basis as float64: products and
-    # partial sums stay integer-valued < 2^53, so the matmul is EXACT
-    # and the result is bit-equal to the declarative path
-    basis = np.array(
-        [row for k in bins for row in dft_basis(frame_len, k)],
-        dtype=np.float64)
-    scale = 2.0 ** (-2 * Q_SHIFT)
-    names = [f"e{k}" for k in bins]
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (f"{id_col} {id_type}, frame long, "
-              + ", ".join(f"{n} double" for n in names))
-
-    def proj(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, arr in zip(pdf[id_col], pdf[samples_col]):
-                if arr is None:  # posexplode yields no rows for NULL
-                    continue     # arrays; the paths must agree
-                x = np.asarray(arr, dtype=np.float64)
-                for f0 in range(0, len(x), frame_len):
-                    fr = x[f0:f0 + frame_len]
-                    p = basis[:, :len(fr)] @ fr
-                    cs, ss = p[0::2], p[1::2]
-                    # same op order as the declarative path:
-                    # (cs·cs + ss·ss)·scale
-                    e = (cs * cs + ss * ss) * scale
-                    rows.append((rid, f0 // frame_len, *e))
-            yield pd.DataFrame(rows,
-                               columns=[id_col, "frame", *names])
-
-    return df.select(id_col, samples_col).mapInPandas(proj, schema)
 
 
 def wav_samples(df: DataFrame, media_col: str = "media",
@@ -381,8 +326,7 @@ def mp4_pcm(df: DataFrame, media_col: str = "media",
 def active_segments(df: DataFrame, samples_col: str = "samples",
                     id_col: str = "id", frame_len: int = 64,
                     bins: Sequence[int] = (1, 3, 7),
-                    threshold: float = 1.0,
-                    vectorized: bool = False) -> DataFrame:
+                    threshold: float = 1.0) -> DataFrame:
     """Silence-split segmentation: frames whose total band energy
     (sum over ``bins``) reaches ``threshold`` are ACTIVE; maximal runs
     of consecutive active frames become segments —
@@ -394,8 +338,7 @@ def active_segments(df: DataFrame, samples_col: str = "samples",
     ~samples/frame_len — thousands per clip, never corpus-scale), and
     the island key is ``frame - row_number()`` so no self-join."""
     from pyspark.sql import Window as W
-    e = band_energy(df, samples_col, id_col, frame_len, bins,
-                    vectorized)
+    e = band_energy(df, samples_col, id_col, frame_len, bins)
     total = None
     for k in bins:
         total = F.col(f"e{k}") if total is None else total + F.col(f"e{k}")

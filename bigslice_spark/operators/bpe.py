@@ -23,17 +23,13 @@ sequence is reproducible on any engine/partitioning.
 loop (per-row Python by nature) runs once over the DISTINCT-words
 relation — vocab-scale, bounded by Heaps' law — and per-word token
 counts join back onto the per-document word counts, so no Python UDF
-ever touches the corpus-scale documents relation. The row-at-a-time
-variant is kept as ``bpe_encode_rowwise`` for tiny inputs / parity
-tests.
+ever touches the corpus-scale documents relation.
 
 Reference: no analog in bigslice (its text story is user map funcs);
 this is part of the LLM-pipeline surface the engine adds.
 """
 
 from __future__ import annotations
-
-import re
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -194,12 +190,11 @@ def bpe_encode(df: DataFrame,
     materializing the corpus-scale (doc, word, cnt) relation); join
     per-word token counts back (AQE broadcasts the vocab side when it
     is small) and sum. Documents with no tokens come back 0 via the
-    left join, matching the row-wise encoder exactly.
+    left join.
 
     Precondition: ``id_col`` must uniquely identify rows (the natural
     doc-id contract) — duplicate ids aggregate their token counts
-    together and every duplicate row receives the combined total,
-    where the row-wise encoder would count each row separately."""
+    together and every duplicate row receives the combined total."""
     c = F.col(text_col)
     if lowercase:
         c = F.lower(c)
@@ -233,48 +228,3 @@ def _word_tokens_udf(merges: list[tuple[int, str, str, int]]):
 
     return n_word_tokens
 
-
-def bpe_encode_rowwise(df: DataFrame,
-                       merges: list[tuple[int, str, str, int]],
-                       text_col: str = "text", id_col: str = "doc_id",
-                       lowercase: bool = True) -> DataFrame:
-    """Row-at-a-time variant of ``bpe_encode`` (Arrow-batched pandas
-    UDF over the documents relation, per-executor LRU over distinct
-    words). Kept as the parity reference and for tiny interactive
-    inputs; the join plan above is the corpus-scale path."""
-    from pyspark.sql.functions import pandas_udf
-
-    ranks = {(a, b): r for r, a, b, _ in merges}
-    # plain dict memo in the closure: pickled empty to each python
-    # worker, then SHARED across that worker's Arrow batches (an
-    # lru_cache built inside the UDF body would reset per batch and
-    # re-encode every hot word each time)
-    cache: dict[str, int] = {}
-
-    @pandas_udf("long")
-    def n_tokens(texts: pd.Series) -> pd.Series:
-        def enc(w: str) -> int:
-            n = cache.get(w)
-            if n is None:
-                if len(cache) > (1 << 20):
-                    cache.clear()  # Zipf head long gone by here
-                n = cache[w] = _encode_word(w, ranks)
-            return n
-
-        # same tokenizer as training/word_counts and the join plan:
-        # Java-regex \s is ASCII-only, so split with re.ASCII — a bare
-        # str.split() would also break on unicode whitespace and
-        # silently disagree with the corpus-side word table
-        ws = re.compile(r"\s+", re.ASCII)
-
-        def doc(t: str) -> int:
-            if t is None:
-                return 0
-            if lowercase:
-                t = t.lower()
-            return sum(enc(w) for w in ws.split(t) if w)
-
-        return texts.map(doc)
-
-    return df.select(F.col(id_col),
-                     n_tokens(F.col(text_col)).alias("n_tokens"))

@@ -111,8 +111,8 @@ def nb_train(df: DataFrame, label_col: str = "label",
 
 
 def nb_self_classify(df: DataFrame, label_col: str = "label",
-                     text_col: str = "text", id_col: str = "doc_id",
-                     reliable: bool | None = None) -> DataFrame:
+                     text_col: str = "text",
+                     id_col: str = "doc_id") -> DataFrame:
     """Train on ``df`` and classify the SAME corpus — the common
     self-labelling loop — returning exactly
     ``nb_classify(df, *nb_train(df, label_col, text_col))``, but
@@ -144,7 +144,7 @@ def nb_self_classify(df: DataFrame, label_col: str = "label",
                    F.explode(tokens(text_col)).alias("w"))
          .groupBy(id_col, "label", "w")
          .agg(F.count(F.lit(1)).cast("long").alias("dw")))
-    g = materialize(g, reliable)
+    g = materialize(g)
     wc = (g.groupBy("label", "w")
           .agg(F.sum("dw").cast("long").alias("cnt")))
     cls = (df.groupBy(F.col(label_col).alias("label"))

@@ -13,8 +13,9 @@ shuffle of the corpus at all; the only exchange is the final narrow
 aggregation of (train_id, eval_id) hit counts (map-side combined).
 A Zipf-hot n-gram cannot skew this: a broadcast join has no per-key
 task ownership, so fanout spreads with the train partitions wherever
-the hot gram occurs. Set ``broadcast_eval=False`` for an unusually
-large eval set and the same plan runs as a shuffle join.
+the hot gram occurs. An eval set too large to broadcast goes to
+``contamination_report_bloom`` / ``decontaminate_bloom`` instead: same
+exact output, the corpus still unshuffled.
 
 Shingling reuses the codegen'd posexplode+lead path from the dedup
 module (whole-stage codegen; docs shorter than ``ngram_w`` contribute
@@ -36,21 +37,20 @@ from .dedup import _shingle_rows
 
 def contamination_report(train: DataFrame, eval_df: DataFrame,
                          text_col: str = "text", id_col: str = "doc_id",
-                         ngram_w: int = 8, min_shared: int = 1,
-                         broadcast_eval: bool = True) -> DataFrame:
+                         ngram_w: int = 8, min_shared: int = 1) -> DataFrame:
     """(train_id, eval_id, n_shared): training docs sharing at least
     ``min_shared`` DISTINCT word ``ngram_w``-grams with an eval doc.
 
     ``n_shared`` counts distinct shared grams per (train, eval) pair —
     both sides' shingle relations are de-duplicated per doc, so a gram
-    repeated inside a document doesn't inflate the count."""
+    repeated inside a document doesn't inflate the count. The distinct
+    eval shingles are always broadcast; for an eval set too large for
+    that, use contamination_report_bloom."""
     tr = _shingle_rows(train, text_col, id_col, w=ngram_w,
                        distinct=True).toDF("train_id", "tok")
     ev = _shingle_rows(eval_df, text_col, id_col, w=ngram_w,
                        distinct=True).toDF("eval_id", "tok")
-    if broadcast_eval:
-        ev = F.broadcast(ev)
-    return (tr.join(ev, on="tok")
+    return (tr.join(F.broadcast(ev), on="tok")
             .groupBy("train_id", "eval_id")
             .agg(F.count(F.lit(1)).alias("n_shared"))
             .filter(F.col("n_shared") >= min_shared))
@@ -58,15 +58,14 @@ def contamination_report(train: DataFrame, eval_df: DataFrame,
 
 def decontaminate(train: DataFrame, eval_df: DataFrame,
                   text_col: str = "text", id_col: str = "doc_id",
-                  ngram_w: int = 8, min_shared: int = 1,
-                  broadcast_eval: bool = True) -> DataFrame:
+                  ngram_w: int = 8, min_shared: int = 1) -> DataFrame:
     """Drop training docs contaminated by the eval set (any eval doc,
     ``min_shared`` distinct shared grams). Anti-join on the report's
     train ids — the report stays narrow, the corpus passes through
-    unshuffled."""
+    unshuffled. Eval sets too large to broadcast: decontaminate_bloom."""
     flagged = contamination_report(
-        train, eval_df, text_col, id_col, ngram_w, min_shared,
-        broadcast_eval).select(F.col("train_id").alias(id_col)).distinct()
+        train, eval_df, text_col, id_col, ngram_w, min_shared
+    ).select(F.col("train_id").alias(id_col)).distinct()
     return train.join(flagged, on=id_col, how="left_anti")
 
 

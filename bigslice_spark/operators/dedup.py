@@ -316,7 +316,6 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 64,
                       bands: int = 16, threshold: float = 0.5,
                       shingle_w: int = 3,
-                      reliable: bool | None = None,
                       portable: bool = False,
                       chunk_target: int = 2048) -> DataFrame:
     """Near-duplicate candidate pairs via banded LSH, verified by signature
@@ -343,8 +342,7 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     # materialized: banding + both sides of the verify join reference it
     sig = materialize(
         minhash_signatures(df, text_col, id_col, num_hashes, shingle_w,
-                           portable),
-        reliable)
+                           portable))
     # Banding stays in the interpreted array-lambda form DELIBERATELY:
     # a codegen formulation (16 band-hash structs off the wide agg
     # columns in one projection) measured 23s cold vs 5s here — Janino
@@ -427,7 +425,6 @@ def simhash64(df: DataFrame, text_col: str = "text",
 
 def simhash_pairs(df: DataFrame, text_col: str = "text",
                   id_col: str = "doc_id", max_hamming: int = 3,
-                  reliable: bool | None = None,
                   portable: bool = False,
                   chunk_target: int = 2048) -> DataFrame:
     """Near-dup pairs by SimHash: pigeonhole on 4×16-bit bands (hamming ≤ 3
@@ -438,7 +435,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
     rides the band rows
     (×4 amplification of 8 bytes is noise), so the verify needs no
     join-back."""
-    sh = materialize(simhash64(df, text_col, id_col, portable), reliable)
+    sh = materialize(simhash64(df, text_col, id_col, portable))
     banded = sh.select(
         F.col(id_col).alias("id"), "sh",
         F.explode(F.array(*[
@@ -460,7 +457,7 @@ def simhash_pairs(df: DataFrame, text_col: str = "text",
 
 def _set_sim_pairs(post: DataFrame, id_col: str, count: int | DataFrame,
                    threshold: float, max_df_ratio: float, metric: str,
-                   reliable: bool | None, chunk_target: int) -> DataFrame:
+                   chunk_target: int) -> DataFrame:
     """Exact set-similarity self-join over distinct ``post(id_col, tok)``
     postings: (id_a, id_b, metric) for every id_a < id_b whose score
     reaches ``threshold``. The one kernel behind ngram_jaccard_pairs and
@@ -478,9 +475,8 @@ def _set_sim_pairs(post: DataFrame, id_col: str, count: int | DataFrame,
       over the input before the real job.
     - The pruned index is materialized before the self-join, which
       would otherwise recompute it on both sides (measured
-      7.4s → 2.9s at sf0.1 for the shingle index). Materialization
-      policy comes from checkpoint.materialize; override with
-      ``reliable=``.
+      7.4s → 2.9s at sf0.1 for the shingle index). Where it is stored
+      is checkpoint.materialize's call (the master decides).
     - Hot posting lists are salted by _bucketed_self_join, with the df
       window count as the bucket size (bn_col): df-pruning drops whole
       posting lists, never part of one, so the join needs no counting
@@ -501,8 +497,7 @@ def _set_sim_pairs(post: DataFrame, id_col: str, count: int | DataFrame,
                       * F.col(count.columns[0]))))
     else:
         pruned = ann.filter(F.col("df") <= int(max_df_ratio * count))
-    cold = materialize(pruned.select(id_col, "tok", "sz", "df"),
-                       reliable)
+    cold = materialize(pruned.select(id_col, "tok", "sz", "df"))
     return (_bucketed_self_join(cold.toDF("id", "tok", "sz", "__bn__"),
                                 ["tok"], chunk_target=chunk_target,
                                 bn_col="__bn__")
@@ -523,7 +518,6 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
                         id_col: str = "doc_id", threshold: float = 0.6,
                         max_df_ratio: float = 0.5,
                         shingle_w: int = 3,
-                        reliable: bool | None = None,
                         ndocs: int | None = None,
                         chunk_target: int = 2048,
                         metric: str = "jaccard") -> DataFrame:
@@ -550,7 +544,7 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
     count = (ndocs if ndocs is not None
              else df.select(F.count(F.lit(1)).alias("__ndocs__")))
     return _set_sim_pairs(toks, id_col, count, threshold, max_df_ratio,
-                          metric, reliable, chunk_target)
+                          metric, chunk_target)
 
 
 def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
@@ -713,7 +707,6 @@ def minhash_pairs_against(new_df: DataFrame, corpus_df: DataFrame,
                           id_col: str = "doc_id", num_hashes: int = 64,
                           bands: int = 16, shingle_w: int = 3,
                           threshold: float = 0.8,
-                          reliable: bool | None = None,
                           portable: bool = False,
                           chunk_target: int = 2048,
                           corpus_sig: DataFrame | None = None
@@ -732,10 +725,10 @@ def minhash_pairs_against(new_df: DataFrame, corpus_df: DataFrame,
     every call re-indexes the full corpus."""
     sig_n = materialize(
         minhash_signatures(new_df, text_col, id_col, num_hashes,
-                           shingle_w, portable), reliable)
+                           shingle_w, portable))
     sig_c = corpus_sig if corpus_sig is not None else materialize(
         minhash_signatures(corpus_df, text_col, id_col, num_hashes,
-                           shingle_w, portable), reliable)
+                           shingle_w, portable))
     rpb = num_hashes // bands
     bn = _band_rows(sig_n, id_col, bands, rpb, portable)
     bc = _band_rows(sig_c, id_col, bands, rpb, portable)
@@ -902,7 +895,6 @@ def item_jaccard_pairs(rel: DataFrame, id_col: str, item_col: str,
                        threshold: float = 0.3,
                        max_df_ratio: float = 0.5,
                        nids: int | None = None,
-                       reliable: bool | None = None,
                        chunk_target: int = 2048) -> DataFrame:
     """Generic exact set-similarity self-join over ANY (id, item)
     relation — the ngram_jaccard machinery freed from text: entities
@@ -920,4 +912,4 @@ def item_jaccard_pairs(rel: DataFrame, id_col: str, item_col: str,
              else post.select(
                  F.count_distinct(F.col(id_col)).alias("__nids__")))
     return _set_sim_pairs(post, id_col, count, threshold, max_df_ratio,
-                          "jaccard", reliable, chunk_target)
+                          "jaccard", chunk_target)

@@ -12,13 +12,20 @@ ngram-jaccard output) into duplicate CLUSTERS — canonical docs are the
 component minima. Deterministic on integer ids, so it oracle-checks
 against a recursive CTE.
 
-Scale shape: each iteration is one join (labels ⋈ symmetric edges) +
-one min-aggregation — both hash-partitioned on node id, so every
-iteration reuses the same partitioning. Iterations = graph diameter
-(near-dup clusters are shallow; ≤10 covers real corpora). Each round
-is materialized (checkpoint.materialize) to truncate the
-exponentially growing lineage — localCheckpoint on local masters,
-reliable checkpoints on clusters, overridable with ``reliable=``.
+Scale shape: each iteration is one join (labels ⋈ symmetric edges,
+the labels broadcast while they fit) + one min-aggregation on node
+id. Iterations = graph diameter (near-dup clusters are shallow; ≤10
+covers real corpora). Each round is materialized
+(checkpoint.materialize) to truncate the exponentially growing
+lineage; the master alone picks localCheckpoint or a reliable
+checkpoint.
+
+The operators take no physical-plan options. Each iterative loop joins
+a node-sized relation (labels, ranks, the k-core alive set) against
+the edge list every round; _broadcast_if_fits hints a broadcast of it
+when its size fits ``spark.sql.autoBroadcastJoinThreshold`` (-1
+disables), from a row count the loop's own materialize already
+observes — no extra job decides the plan.
 """
 
 from __future__ import annotations
@@ -50,26 +57,35 @@ def _oriented(e: DataFrame, self_loops: bool = False) -> DataFrame:
             .select("s.u", "s.v"))
 
 
+def _broadcast_if_fits(spark, row_bytes: int, n: int):
+    """``F.broadcast`` when an ``n``-row relation of ``row_bytes`` per
+    row fits the session's ``spark.sql.autoBroadcastJoinThreshold``
+    (-1 disables broadcasts), else the identity. The node-sized
+    relations the loops join are checkpointed, and a checkpointed
+    relation's size estimate comes from its origin plan, so unhinted,
+    AQE plans exchanges of the edge side first."""
+    thr = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    return F.broadcast if row_bytes * n <= thr else (lambda df: df)
+
+
 def connected_components(edges: DataFrame, src: str = "src",
                          dst: str = "dst",
                          nodes: DataFrame | None = None,
                          node_col: str = "node",
-                         max_iter: int = 20,
-                         reliable: bool | None = None,
-                         broadcast_labels: bool = False) -> DataFrame:
+                         max_iter: int = 20) -> DataFrame:
     """(node, component) for every node, component = min reachable id.
 
     `edges` are undirected (symmetrized internally). `nodes` optionally
     supplies isolated vertices (emitted as their own singleton
     component). Converges when an iteration changes no label; raises if
-    max_iter rounds don't converge (diameter > max_iter).
-    ``broadcast_labels``: ship the |nodes|-row label relation per round
-    instead of exchanging the edge list (the label_propagation knob) —
-    opt-in, for graphs whose node set fits a broadcast.
+    max_iter rounds don't converge (diameter > max_iter). The
+    16 B/node label relation is broadcast to the edge scan each round
+    while it fits (_broadcast_if_fits).
     """
     e = edges.select(F.col(src).cast("long").alias("u"),
                      F.col(dst).cast("long").alias("v"))
-    sym = materialize(_oriented(e).distinct(), reliable)
+    sym = materialize(_oriented(e).distinct())
 
     lab = sym.select("u").distinct() \
         .select(F.col("u").alias("node"), F.col("u").alias("label"))
@@ -78,7 +94,12 @@ def connected_components(edges: DataFrame, src: str = "src",
                  .join(lab.select("node"), on="node", how="left_anti")
                  .select("node", F.col("node").alias("label")))
         lab = lab.unionByName(extra)
-    lab = materialize(lab, reliable)
+    # |nodes| rides the materialize action and sizes the broadcast
+    obs_n = Observation()
+    lab = materialize(
+        lab.observe(obs_n, F.count(F.lit(1)).alias("__rows__")))
+    hint = _broadcast_if_fits(edges.sparkSession, 16,
+                              obs_n.get["__rows__"])
 
     prev_mat = lab            # superseded rounds release() their blocks
     for _ in range(max_iter):
@@ -87,10 +108,9 @@ def connected_components(edges: DataFrame, src: str = "src",
         # piggybacks the PREVIOUS label onto each node — convergence
         # detection is then a filter over the just-materialized result
         # (one cheap job), not a node⋈node join + shuffle per round.
-        rhs = F.broadcast(lab) if broadcast_labels else lab
         own = lab.select("node", F.col("label").alias("cand"),
                          F.lit(True).alias("own"))
-        nbr = (sym.join(rhs, sym.v == lab.node)
+        nbr = (sym.join(hint(lab), sym.v == lab.node)
                .select(F.col("u").alias("node"),
                        F.col("label").alias("cand"),
                        F.lit(False).alias("own")))
@@ -109,21 +129,20 @@ def connected_components(edges: DataFrame, src: str = "src",
                 .alias("__old__"))
             .observe(obs, F.count(F.when(
                 F.col("label") != F.col("__old__"), 1))
-                .alias("__changed__")),
-            reliable)
+                .alias("__changed__")))
         release(prev_mat)     # eager materialize above consumed it
         prev_mat = new
         lab = new.select("node", "label")
         if obs.get["__changed__"] == 0:
             release(sym)
             return lab.select("node", F.col("label").alias("component"))
+    release(prev_mat)
+    release(sym)
     raise RuntimeError(f"did not converge in {max_iter} iterations")
 
 
 def label_propagation(edges: DataFrame, src: str = "src",
-                      dst: str = "dst", iters: int = 4,
-                      reliable: bool | None = None,
-                      broadcast_labels: bool = False) -> DataFrame:
+                      dst: str = "dst", iters: int = 4) -> DataFrame:
     """Synchronous label-propagation communities → (node, label).
 
     Each round, every node adopts the most frequent label among its
@@ -143,7 +162,8 @@ def label_propagation(edges: DataFrame, src: str = "src",
     arg-max folded into a second aggregation as ``max(struct(c,
     -label))`` — partial-agg friendly, no per-node sort/window — all
     on (node, label) pairs, O(edges) rows; lineage truncated per round
-    via checkpoint.materialize. The own-label vote enters as a
+    via checkpoint.materialize, the 16 B/node label relation broadcast
+    while it fits (_broadcast_if_fits). The own-label vote enters as a
     one-time self-loop on every node instead of a per-round union.
     Fixed iteration count (synchronous LPA on bipartite structures can
     oscillate rather than converge — a bound, not a convergence test,
@@ -154,19 +174,20 @@ def label_propagation(edges: DataFrame, src: str = "src",
     # scan (_oriented): the self-loop is the own-label vote, entering
     # once per node — an input (u,u) edge explodes to four copies of
     # (u,u) and distinct() keeps one, so it can neither collide with
-    # the injected loop nor double-count
-    sym = materialize(_oriented(e, self_loops=True).distinct(),
-                      reliable)
+    # the injected loop nor double-count. Every node has exactly one
+    # (u, u) row, so counting them on the materialize action gives
+    # |nodes| for the broadcast decision without a job of its own
+    obs_n = Observation()
+    sym = materialize(
+        _oriented(e, self_loops=True).distinct()
+        .observe(obs_n, F.count(F.when(F.col("u") == F.col("v"), 1))
+                 .alias("__nodes__")))
+    hint = _broadcast_if_fits(edges.sparkSession, 16,
+                              obs_n.get["__nodes__"])
     lab = (sym.select("u").distinct()
            .select(F.col("u").alias("node"), F.col("u").alias("label")))
     prev_mat = None           # superseded rounds release() their blocks
     for it in range(iters):
-        # broadcast_labels: ship the |nodes|-row label relation to the
-        # executors instead of exchanging the edge list every round —
-        # ~30% faster when labels fit in memory (graphs up to tens of
-        # millions of nodes); leave False when |nodes| outgrows a
-        # broadcast, the hash join is the any-scale path
-        rhs = F.broadcast(lab) if broadcast_labels else lab
         # the self-loop vote row (u == v) IS the node's previous
         # label; flagging it lets the round aggregation carry the old
         # label through, so the exact-fixpoint probe below is a filter
@@ -178,7 +199,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
         # wasted rounds are skipped. Oscillating (period-2)
         # configurations never trigger the probe and run the full
         # bound, as documented.
-        votes = (sym.join(rhs, sym.v == lab.node)
+        votes = (sym.join(hint(lab), sym.v == lab.node)
                  .select(F.col("u").alias("node"), "label",
                          (sym.u == sym.v).alias("own")))
         counts = votes.groupBy("node", "label").agg(
@@ -198,8 +219,7 @@ def label_propagation(edges: DataFrame, src: str = "src",
             .select("node", (-F.col("m.nl")).alias("label"), "__old__")
             .observe(obs, F.count(F.when(
                 F.col("label") != F.col("__old__"), 1))
-                .alias("__changed__")),
-            reliable)
+                .alias("__changed__")))
         done = (it == iters - 1) or obs.get["__changed__"] == 0
         if prev_mat is not None:
             release(prev_mat)  # eager materialize above consumed it
@@ -215,15 +235,15 @@ def label_propagation(edges: DataFrame, src: str = "src",
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
              iters: int = 3, damping: float = 0.85,
-             ordered: bool = False,
-             reliable: bool | None = None,
-             broadcast_ranks: bool = False) -> DataFrame:
+             ordered: bool = False) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list → (node, rank).
 
     The second iterative §3-C workload next to connected_components:
     each iteration is one join (ranks ⋈ edges) + one aggregation, both
     hash-partitioned on node id; ranks are materialized per round
-    (checkpoint.materialize) to truncate lineage. Simple variant:
+    (checkpoint.materialize) to truncate lineage, and the 16 B/node
+    rank relation is broadcast to the edge scan while it fits
+    (_broadcast_if_fits). Simple variant:
     dangling-node mass is dropped (not redistributed) — deterministic
     and replayed identically by the SQL oracle.
 
@@ -239,31 +259,30 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     e = (edges.select(F.col(src).cast("long").alias("s"),
                       F.col(dst).cast("long").alias("d"))
          .distinct())
-    e = materialize(e, reliable)
+    e = materialize(e)
     nodes = (e.select(F.col("s").alias("node"))
              .union(e.select(F.col("d").alias("node"))).distinct())
     # |nodes| rides the materialize action (r15 Observation fold) —
     # no separate count job
     obs_n = Observation()
     nodes = materialize(
-        nodes.observe(obs_n, F.count(F.lit(1)).alias("__rows__")),
-        reliable)
+        nodes.observe(obs_n, F.count(F.lit(1)).alias("__rows__")))
     n = obs_n.get["__rows__"]
+    hint = _broadcast_if_fits(edges.sparkSession, 16, n)
+    # an empty graph has no node to rank: dividing by 1 instead of 0
+    # keeps the constant-folded 1/n from raising DIVIDE_BY_ZERO
+    nf = F.lit(float(max(n, 1)))
     # materialized: referenced by the contribution join EVERY iteration
     deg = materialize(
-        e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")), reliable)
+        e.groupBy("s").agg(F.count(F.lit(1)).alias("outdeg")))
     # both literals forced double so Spark and the SQL replay compute
     # the identical IEEE (1.0-0.85)/N and d*S — DuckDB would otherwise
     # parse 0.85 as DECIMAL and disagree in the last ulp
-    base = (F.lit(1.0) - F.lit(float(damping))) / F.lit(float(n))
-    rank = nodes.select("node", (F.lit(1.0) / F.lit(float(n)))
-                        .alias("r"))
+    base = (F.lit(1.0) - F.lit(float(damping))) / nf
+    rank = nodes.select("node", (F.lit(1.0) / nf).alias("r"))
     prev_mat = None           # superseded rounds release() their blocks
     for _ in range(iters):
-        # broadcast_ranks: the label_propagation knob — ship the
-        # |nodes|-row rank relation per round when it fits a broadcast
-        rhs = F.broadcast(rank) if broadcast_ranks else rank
-        contrib = (e.join(rhs, e.s == rank.node)
+        contrib = (e.join(hint(rank), e.s == rank.node)
                    .join(deg, on="s")
                    .select(F.col("d").alias("node"),
                            F.col("s").alias("nbr"),
@@ -284,8 +303,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
             .select("node",
                     (base + F.lit(float(damping))
                      * F.coalesce(F.col("in_sum"), F.lit(0.0)))
-                    .alias("r")),
-            reliable)
+                    .alias("r")))
         if prev_mat is not None:
             release(prev_mat)  # eager materialize above consumed it
         prev_mat = rank
@@ -300,8 +318,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
 
 
 def triangle_count(edges: DataFrame, src: str = "src",
-                   dst: str = "dst",
-                   reliable: bool | None = None) -> DataFrame:
+                   dst: str = "dst") -> DataFrame:
     """Global triangle count over an undirected edge list.
 
     DEGREE-ORIENTED edge-iterator counting (the standard power-law
@@ -331,7 +348,7 @@ def triangle_count(edges: DataFrame, src: str = "src",
          .filter(F.col("a") < F.col("b"))
          .distinct())
     # scanned by deg (twice) and the degree-attach join: one compute
-    e = materialize(e, reliable)
+    e = materialize(e)
     deg = (e.select(F.col("a").alias("n"))
            .unionAll(e.select(F.col("b").alias("n")))
            .groupBy("n").agg(F.count(F.lit(1)).alias("d")))
@@ -352,8 +369,7 @@ def triangle_count(edges: DataFrame, src: str = "src",
     # action (r15 Observation fold)
     obs_m = Observation()
     d_e = materialize(
-        d_e.observe(obs_m, F.count(F.lit(1)).alias("__rows__")),
-        reliable)
+        d_e.observe(obs_m, F.count(F.lit(1)).alias("__rows__")))
     # per-u out-neighbor sets; arrays are O(√m)-bounded by the
     # orientation, so no single row can blow up
     adj = d_e.groupBy("u").agg(F.collect_set("v").alias("nbrs"))
@@ -388,15 +404,14 @@ def triangle_count(edges: DataFrame, src: str = "src",
     # lineage-free frame
     out = materialize(
         closed.agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long")
-                   .alias("n_triangles")), reliable)
+                   .alias("n_triangles")))
     release(e)
     release(d_e)
     return out
 
 
 def k_core(edges: DataFrame, k: int = 2, src: str = "src",
-           dst: str = "dst", iters: int | None = None,
-           reliable: bool | None = None) -> DataFrame:
+           dst: str = "dst", iters: int | None = None) -> DataFrame:
     """k-core peeling → (node, degree): repeatedly "remove every node
     with degree < k" over the symmetric simple graph (self-edges and
     NULL endpoints dropped; parallel edges and both orientations of an
@@ -420,9 +435,9 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
     sets only shrink (A_i ⊆ A_{i-1}), round i's surviving edges are
     exactly the pairs with both ends in A_{i-1}, so a round is two
     semi-joins of the pairs against the previous alive set (broadcast
-    while it fits ``spark.sql.autoBroadcastJoinThreshold``) plus a
-    degree count (``explode(array(u, v))``, partial-agg friendly), and
-    what it materializes is the alive set with its degrees — never an
+    while its 8 B/node fits, _broadcast_if_fits) plus a degree count
+    (``explode(array(u, v))``, partial-agg friendly), and what it
+    materializes is the alive set with its degrees — never an
     edge list. |A_i| rides each materialize action (an Observation);
     a round removed nothing when |A_{i+1}| == |A_i| (nested sets:
     equal sizes mean equal sets). The returned frame is the last
@@ -436,20 +451,14 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
     pairs = materialize(
         e.select(F.least("u", "v").alias("u"),
                  F.greatest("u", "v").alias("v"))
-        .filter(F.col("u") < F.col("v")).distinct(), reliable)
-    # ship the alive set to the pair scan when its 8 B/node payload
-    # fits the session's broadcast threshold (-1 disables broadcasts):
-    # a checkpointed relation's size estimate comes from its origin
-    # plan, so unhinted, AQE plans exchanges of the pair side first
-    thr = edges.sparkSession._jsparkSession.sessionState().conf() \
-        .autoBroadcastJoinThreshold()
+        .filter(F.col("u") < F.col("v")).distinct())
 
     def peel(alive: DataFrame | None, n: int) -> tuple[DataFrame, int]:
         """(node, degree >= k) over the pairs with both ends in
         ``alive`` (all pairs when None), materialized, and its size."""
         p = pairs
         if alive is not None:
-            hint = F.broadcast if 8 * n <= thr else (lambda a: a)
+            hint = _broadcast_if_fits(edges.sparkSession, 8, n)
             for c in ("u", "v"):
                 p = p.join(hint(alive.select(F.col("node").alias(c))),
                            c, "left_semi")
@@ -458,8 +467,7 @@ def k_core(edges: DataFrame, k: int = 2, src: str = "src",
             p.select(F.explode(F.array("u", "v")).alias("node"))
             .groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
             .filter(F.col("degree") >= k)
-            .observe(obs, F.count(F.lit(1)).alias("__rows__")),
-            reliable)
+            .observe(obs, F.count(F.lit(1)).alias("__rows__")))
         return d, obs.get["__rows__"]
 
     # the j-th peel() materializes A_j (A_0 = every node) with its

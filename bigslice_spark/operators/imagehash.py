@@ -97,8 +97,7 @@ def image_dhash(df: DataFrame, media_col: str = "media",
 
 def dhash_pairs(hashes: DataFrame, id_col: str = "id",
                 hash_col: str = "dhash",
-                max_hamming: int = 3,
-                reliable: bool | None = None) -> DataFrame:
+                max_hamming: int = 3) -> DataFrame:
     """Near-duplicate image pairs (a, b, hamming) with hamming <=
     ``max_hamming`` (<= 3 is COMPLETE by pigeonhole over the 4
     16-bit bands; larger thresholds return only pairs that share a
@@ -117,7 +116,7 @@ def dhash_pairs(hashes: DataFrame, id_col: str = "id",
     between queries (the bench does): the input checkpoint has no
     per-call release() here because the returned pairs still
     reference it lazily (ADVICE r14)."""
-    hashes = materialize(hashes.select(id_col, hash_col), reliable)
+    hashes = materialize(hashes.select(id_col, hash_col))
     h = F.col(hash_col)
     banded = hashes.select(
         F.col(id_col), h,
@@ -185,8 +184,7 @@ def video_dhash(df: DataFrame, media_col: str = "media",
 
 
 def video_pairs(frame_hashes: DataFrame, id_col: str = "id",
-                min_shared: int = 3,
-                reliable: bool | None = None) -> DataFrame:
+                min_shared: int = 3) -> DataFrame:
     """Near-duplicate video pairs (a, b, shared_frames): clips whose
     same-position frames hash EQUAL at >= ``min_shared`` positions —
     re-encoded/trimmed-tail copies share almost every frame hash,
@@ -201,7 +199,7 @@ def video_pairs(frame_hashes: DataFrame, id_col: str = "id",
     relation is (id, frame_idx, dhash), ~20 bytes per frame.
     Same ``release_all()`` expectation as dhash_pairs (ADVICE r14)."""
     frame_hashes = materialize(
-        frame_hashes.select(id_col, "frame_idx", "dhash"), reliable)
+        frame_hashes.select(id_col, "frame_idx", "dhash"))
     a = frame_hashes.select(F.col(id_col).alias("a"),
                             "frame_idx", "dhash")
     b = frame_hashes.select(F.col(id_col).alias("b"),

@@ -6,8 +6,8 @@ FIXED-POINT, deliberately (the band_energy discipline, audio.py): the
 polyphase low-pass taps are quantized to integers
 (``round(coef·2^Q_SHIFT)``), every accumulator is an exact int64 sum
 of sample·tap products, and the final renormalization is an
-arithmetic shift — so the Spark plan, a numpy reference, and the ANSI
-SQL oracle compute BIT-identical outputs with no float summation
+arithmetic shift — so the Spark plan, a pure-Python reference, and the
+ANSI SQL oracle compute BIT-identical outputs with no float summation
 order to adjudicate. Magnitudes: |pcm| < 2^15, |tap| ≤ 2^Q_SHIFT,
 taps-per-output ≤ 2^7 keeps every accumulator under 2^(15+20+7) —
 well inside int64.
@@ -21,7 +21,7 @@ with x zero-padded outside [0, n) and n_out = ⌈n·L/M⌉. K taps per
 output phase; the prototype filter h has K·L taps (windowed-sinc,
 Hamming, cutoff 1/(2·max(L,M)) of the upsampled rate, DC gain L).
 
-Scale shape (``resample``, the declarative path): posexplode the
+Scale shape (``resample``, one declarative path): posexplode the
 samples, explode each sample over its K tap positions, compute the
 (at most ⌈L/M⌉+1) output indices it feeds in closed form, and
 integer-sum per (id, m) — everything whole-stage codegen, no Python
@@ -38,7 +38,6 @@ band_energy/active_segments (operators/audio.py).
 from __future__ import annotations
 
 import math
-from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -77,15 +76,12 @@ def polyphase_taps(l_up: int, m_down: int, k: int = 8,
 
 def resample(df: DataFrame, l_up: int, m_down: int,
              samples_col: str = "samples", id_col: str = "id",
-             k: int = 8, q_shift: int = Q_SHIFT,
-             vectorized: bool = False) -> DataFrame:
+             k: int = 8, q_shift: int = Q_SHIFT) -> DataFrame:
     """Polyphase-resample an integer PCM array column by the rational
     factor ``l_up/m_down`` → ``(id_col, m, y)`` with ``m`` the output
     sample index in ``[0, ceil(n·L/M))`` and ``y`` the fixed-point
     output (int64, already shifted back). Same unique-``id_col``
-    contract as band_energy (the declarative path aggregates by
-    (id, m)). ``vectorized=True`` runs the bit-equal numpy path (the
-    small-batch regime; the declarative path is the scale path)."""
+    contract as band_energy (outputs aggregate by (id, m))."""
     if l_up < 1 or m_down < 1:
         raise ValueError("resample: L and M must be >= 1")
     if math.gcd(l_up, m_down) != 1:
@@ -94,9 +90,6 @@ def resample(df: DataFrame, l_up: int, m_down: int,
         raise ValueError("resample: k > 128 can overflow the exact "
                          "int64 accumulators")
     taps = polyphase_taps(l_up, m_down, k, q_shift)
-    if vectorized:
-        return _resample_np(df, l_up, m_down, samples_col, id_col,
-                            taps, k, q_shift)
     # ONE parsed expression for the tap table: k·L literals built
     # Column-by-Column cost a py4j round trip each (1280 for a
     # 44.1k→48k L=160 filter — the band_energy/PERFORMANCE.md
@@ -143,35 +136,3 @@ def resample(df: DataFrame, l_up: int, m_down: int,
             .select(id_col, "m",
                     F.shiftright(F.col("__acc"), q_shift).alias("y")))
 
-
-def _resample_np(df: DataFrame, l_up: int, m_down: int,
-                 samples_col: str, id_col: str, taps: Sequence[int],
-                 k: int, q_shift: int) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
-    h = np.asarray(taps, dtype=np.int64)
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, m long, y long"
-
-    def rs(batches):
-        for pdf in batches:
-            rows = []
-            for rid, arr in zip(pdf[id_col], pdf[samples_col]):
-                if arr is None:
-                    continue
-                x = np.asarray(arr, dtype=np.int64)
-                n = len(x)
-                n_out = -(-n * l_up // m_down)
-                for m in range(n_out):
-                    t = m * m_down
-                    base, p = divmod(t, l_up)
-                    acc = 0
-                    for j in range(k):
-                        i = base - j
-                        if 0 <= i < n:
-                            acc += int(x[i]) * int(h[j * l_up + p])
-                    rows.append((rid, m, acc >> q_shift))
-            yield pd.DataFrame(rows, columns=[id_col, "m", "y"])
-
-    return df.select(id_col, samples_col).mapInPandas(rs, schema)

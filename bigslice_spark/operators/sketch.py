@@ -34,12 +34,9 @@ oracle-compared.
 
 Scan economics at 100 TB: exact mode reads the source twice (candidate
 pass + recount) — both map-side-pruned, linear, and cheaper than
-caching a corpus-sized token explosion. ``persist_tokens=True`` opts
-into caching the exploded tokens instead, cutting the source to ONE
-scan when the cache fits (or spills acceptably); the caller owns the
-cache lifetime (``spark.catalog.clearCache()`` or unpersist via
-session cache tools). ``exact=False`` is the one-scan-no-cache point
-on the same trade-off curve.
+caching a corpus-sized token explosion, so the tokens are never
+cached. ``exact=False`` is the one-scan point on the same trade-off
+curve.
 """
 
 from __future__ import annotations
@@ -55,8 +52,7 @@ from .text import tokens
 
 
 def heavy_hitters(df: DataFrame, phi: float = 0.01,
-                  text_col: str = "text", exact: bool = True,
-                  persist_tokens: bool = False) -> DataFrame:
+                  text_col: str = "text", exact: bool = True) -> DataFrame:
     """Tokens with frequency ≥ phi of the total token count.
 
     ``exact=True`` (default): (token, n, freq) with EXACT counts;
@@ -69,8 +65,6 @@ def heavy_hitters(df: DataFrame, phi: float = 0.01,
     k = int(math.ceil(2.0 / phi))
 
     toks = df.select(F.explode(tokens(text_col)).alias("tok"))
-    if persist_tokens:
-        toks = toks.persist()
 
     def mg_partial(batches: Iterator["object"]) -> Iterator["object"]:
         # Batched Misra-Gries via the mergeable-summaries combine

@@ -111,6 +111,41 @@ def _shingle_ctes(name: str, w: int, distinct: bool,
               FROM {name}_tk WHERE tk IS NOT NULL)"""
 
 
+def _text_stats_ctes(name: str, src: str = "documents") -> str:
+    """CTE ``name(doc_id, n_chars, n_tokens, mean_token_len,
+    distinct_ratio)``: operators/text.py text_stats over ``src``'s text
+    (plus its helper ``{name}_tk``)."""
+    return f"""
+    {name}_tk AS (
+      SELECT doc_id,
+             CAST(length(text) AS BIGINT) AS n_chars,
+             {_tokens_sql()} AS toks,
+             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
+                 AS alpha
+      FROM {src}),
+    {name} AS (
+      SELECT doc_id, n_chars,
+             CAST(len(toks) AS BIGINT) AS n_tokens,
+             CAST(alpha AS DOUBLE)
+                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS mean_token_len,
+             CAST(len(list_distinct(toks)) AS DOUBLE)
+                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS distinct_ratio
+      FROM {name}_tk)"""
+
+
+def _quality_ctes(name: str, src: str = "documents") -> str:
+    """CTE ``name(doc_id, quality)``: operators/text.py quality_score
+    over ``src``, built on the text_stats CTE ``{name}_ts``."""
+    return f"""{_text_stats_ctes(f"{name}_ts", src)},
+    {name} AS (
+      SELECT doc_id,
+             least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
+             + (CASE WHEN mean_token_len >= 3.0 AND mean_token_len <= 10.0
+                     THEN 1.0 ELSE 0.0 END) * 0.3
+             + distinct_ratio * 0.3 AS quality
+      FROM {name}_ts)"""
+
+
 def _set_sim_ctes(postings: str, n_sql: str, threshold: float,
                   max_df_ratio: float, metric: str = "jaccard",
                   id_col: str = "doc_id") -> str:
@@ -1506,7 +1541,7 @@ def lpa_communities(spark, sf_dir):
          .join(t["orders"], F.col("o_orderkey") == F.col("l_orderkey"))
          .select(F.col("l_suppkey").alias("src"),
                  (F.col("o_custkey") + 1000000).alias("dst")))
-    return label_propagation(e, iters=4, broadcast_labels=True)
+    return label_propagation(e, iters=4)
 
 
 @query("pagerank", _pagerank_oracle())
@@ -1693,19 +1728,8 @@ def token_counts(spark, sf_dir):
 
 
 @query("text_stats", f"""
-    WITH s AS (
-      SELECT doc_id,
-             CAST(length(text) AS BIGINT) AS n_chars,
-             {_tokens_sql()} AS toks,
-             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
-                 AS alpha
-      FROM documents)
-    SELECT doc_id, n_chars,
-           CAST(len(toks) AS BIGINT) AS n_tokens,
-           CAST(alpha AS DOUBLE)
-               / CAST(greatest(len(toks), 1) AS DOUBLE) AS mean_token_len,
-           CAST(len(list_distinct(toks)) AS DOUBLE)
-               / CAST(greatest(len(toks), 1) AS DOUBLE) AS distinct_ratio
+    WITH {_text_stats_ctes("s")}
+    SELECT doc_id, n_chars, n_tokens, mean_token_len, distinct_ratio
     FROM s
 """)
 def text_stats(spark, sf_dir):
@@ -1716,26 +1740,8 @@ def text_stats(spark, sf_dir):
 
 
 @query("quality_score", f"""
-    WITH s AS (
-      SELECT doc_id,
-             {_tokens_sql()} AS toks,
-             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
-                 AS alpha
-      FROM documents),
-    m AS (
-      SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS n_tokens,
-             CAST(alpha AS DOUBLE)
-                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS mtl,
-             CAST(len(list_distinct(toks)) AS DOUBLE)
-                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS dr
-      FROM s)
-    SELECT doc_id,
-           least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-           + (CASE WHEN mtl >= 3.0 AND mtl <= 10.0
-                   THEN 1.0 ELSE 0.0 END) * 0.3
-           + dr * 0.3 AS quality
-    FROM m
+    WITH {_quality_ctes("q")}
+    SELECT doc_id, quality FROM q
 """)
 def quality_score(spark, sf_dir):
     """Deterministic cheap quality prefilter (operators/text.py)."""
@@ -2365,25 +2371,8 @@ def _pipeline_oracle() -> str:
     per-stage oracles end-to-end pins that the stages compose the same
     way in both engines."""
     return f"""
-    WITH qs AS (
-      SELECT doc_id, {_tokens_sql()} AS toks,
-             CAST(length(regexp_replace(text, '{_WS}+', '', 'g')) AS BIGINT)
-                 AS alpha
-      FROM documents),
-    qm AS (
-      SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS n_tokens,
-             CAST(alpha AS DOUBLE)
-                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS mtl,
-             CAST(len(list_distinct(toks)) AS DOUBLE)
-                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS dr
-      FROM qs),
-    keepq AS (
-      SELECT doc_id FROM qm
-      WHERE least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-            + (CASE WHEN mtl >= 3.0 AND mtl <= 10.0
-                    THEN 1.0 ELSE 0.0 END) * 0.3
-            + dr * 0.3 >= 0.5),
+    WITH {_quality_ctes("q")},
+    keepq AS (SELECT doc_id FROM q WHERE quality >= 0.5),
     d0 AS (SELECT * FROM documents
            WHERE doc_id IN (SELECT doc_id FROM keepq)),
     ex AS (SELECT CAST(min(doc_id) AS BIGINT) AS doc_id
@@ -4214,27 +4203,7 @@ def _keep_best_oracle() -> str:
     return f"""
     WITH RECURSIVE {_minhash_pairs_ctes('documents', threshold=0.5)},
     {_min_label_ctes("mh_pairs")},
-    qs AS (
-      SELECT doc_id,
-             {_tokens_sql()} AS toks,
-             CAST(length(regexp_replace(text, '{_WS}+', '', 'g'))
-                  AS BIGINT) AS alpha
-      FROM documents),
-    qm AS (
-      SELECT doc_id,
-             CAST(len(toks) AS BIGINT) AS n_tokens,
-             CAST(alpha AS DOUBLE)
-                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS mtl,
-             CAST(len(list_distinct(toks)) AS DOUBLE)
-                 / CAST(greatest(len(toks), 1) AS DOUBLE) AS dr
-      FROM qs),
-    q AS (
-      SELECT doc_id,
-             least(CAST(n_tokens AS DOUBLE) / 50.0, 1.0) * 0.4
-             + (CASE WHEN mtl >= 3.0 AND mtl <= 10.0
-                     THEN 1.0 ELSE 0.0 END) * 0.3
-             + dr * 0.3 AS quality
-      FROM qm),
+    {_quality_ctes("q")},
     member AS (SELECT c.node AS doc_id, c.component, q.quality
                FROM comp c JOIN q ON q.doc_id = c.node),
     best AS (SELECT component,
@@ -7148,10 +7117,9 @@ def audio_spectral_q(spark, sf_dir):
     (wav_samples), so the oracle — which regenerates the samples
     analytically and replays the projection from the SAME
     quantized-integer basis with exact int64 sums — also proves the
-    codec round trip. This declarative path is also the measured
-    SCALE path (PERFORMANCE.md §audio-paths: PCM never leaves the
-    JVM); the numpy path (band_energy(vectorized=True)) is
-    pytest-gated BIT-EQUAL to it."""
+    codec round trip. This declarative path is band_energy's only
+    path and the measured SCALE path (PERFORMANCE.md §audio-paths:
+    PCM never leaves the JVM)."""
     import pandas as pd
 
     from .operators.audio import band_energy, wav_samples

@@ -143,13 +143,10 @@ def perceptual_pair_stress(spark):
 
 
 def audio_path_stress(spark):
-    """band_energy's two bit-equal paths at growing clip counts: the
-    declarative path explodes samples into codegen rows (one exchange,
-    frame_len-fold map-side combine); the vectorized path matmuls
-    inside Arrow batches (no exchange). The question a 100 TB audio
-    corpus asks: does the declarative path's explode stay linear, and
-    where the numpy path's Arrow-copy cost crosses it (measured:
-    numpy wins 3x below ~10^5 clips, codegen wins 3.5x at 320k —
+    """band_energy at growing clip counts: the plan explodes samples
+    into codegen rows (one exchange, frame_len-fold map-side combine).
+    The question a 100 TB audio corpus asks: does the explode stay
+    linear (measured near-flat 1.1 -> 1.6 s from 2.5M to 164M samples,
     PERFORMANCE.md §audio-paths)."""
     from bigslice_spark.operators.audio import band_energy
 
@@ -163,13 +160,10 @@ def audio_path_stress(spark):
                                          + n) % 4001 - 2000)
                              .cast("int")).alias("samples"))
                  .localCheckpoint())
-        for vec in (False, True):
-            r = cold_warm(lambda: band_energy(clips, frame_len=64,
-                                              bins=bins, vectorized=vec))
-            print(json.dumps({
-                "op": "band_energy_" + ("numpy" if vec else "codegen"),
-                "clips": n_clips, "samples_per_clip": n_samples, **r}),
-                flush=True)
+        r = cold_warm(lambda: band_energy(clips, frame_len=64, bins=bins))
+        print(json.dumps({
+            "op": "band_energy", "clips": n_clips,
+            "samples_per_clip": n_samples, **r}), flush=True)
 
 
 def hub_key_fold_stress(spark):

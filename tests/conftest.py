@@ -58,3 +58,26 @@ def duck(sf_dir):
                 f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{path}')")
     yield con
     con.close()
+
+
+@pytest.fixture
+def cluster_checkpoint(spark):
+    """Context-manager factory: inside it, checkpoint.materialize takes
+    the cluster path (a reliable checkpoint, as under a non-local
+    master) — ``_single_jvm`` is patched to say no, and the context
+    has a checkpoint dir."""
+    import contextlib
+    import tempfile
+    from unittest import mock
+
+    from bigslice_spark import checkpoint
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        sc.setCheckpointDir(tempfile.mkdtemp(prefix="bss_ckpt_"))
+
+    @contextlib.contextmanager
+    def cluster():
+        with mock.patch.object(checkpoint, "_single_jvm",
+                               lambda master: False):
+            yield
+    return cluster

@@ -1,0 +1,48 @@
+"""API census: operators take the user's functions and data, not
+execution policy. Where an intermediate is stored (checkpoint kind),
+whether a node-sized relation is broadcast, and which physical path
+runs are the runtime's decisions (checkpoint.materialize, the graph
+loops' size rule), so no callable in the package may grow these
+options back."""
+
+import importlib
+import inspect
+import pkgutil
+
+import bigslice_spark
+
+# Execution-policy options the operators used to take; each is now a
+# decision the code makes (see CHANGES.md).
+REMOVED_OPTIONS = {"reliable", "broadcast_labels", "broadcast_ranks",
+                   "vectorized", "persist_tokens", "broadcast_eval"}
+
+
+def _callables():
+    """(qualified name, function) for every function and method defined
+    in a bigslice_spark module, private helpers included."""
+    mods = [bigslice_spark] + [
+        importlib.import_module(m.name) for m in pkgutil.walk_packages(
+            bigslice_spark.__path__, "bigslice_spark.")]
+    for mod in mods:
+        for name, obj in vars(mod).items():
+            if getattr(obj, "__module__", None) != mod.__name__:
+                continue
+            if inspect.isfunction(obj):
+                yield f"{mod.__name__}.{name}", obj
+            elif inspect.isclass(obj):
+                for attr, fn in vars(obj).items():
+                    if inspect.isfunction(fn):
+                        yield f"{mod.__name__}.{name}.{attr}", fn
+
+
+def test_no_callable_takes_a_removed_execution_option():
+    found = list(_callables())
+    names = {q for q, _ in found}
+    # the census really walks the operator modules
+    assert "bigslice_spark.checkpoint.materialize" in names
+    assert "bigslice_spark.operators.graph.pagerank" in names
+    assert "bigslice_spark.operators.dedup._set_sim_pairs" in names
+    bad = sorted((q, p) for q, fn in found
+                 for p in inspect.signature(fn).parameters
+                 if p in REMOVED_OPTIONS)
+    assert bad == [], bad

@@ -1,5 +1,6 @@
 """Audio spectral analysis (operators/audio.py): fixed-point DFT band
-energy — path equivalence, codec round trip, frame edge cases."""
+energy — exactness against the definition, codec round trip, frame
+edge cases."""
 
 import math
 
@@ -16,21 +17,45 @@ def _tone(freq_bin: int, n: int, frame_len: int = 64,
             for i in range(n)]
 
 
+def _band_energy_def(samples: list[int], frame_len: int,
+                     bins: tuple[int, ...]) -> list[tuple[float, ...]]:
+    """Per-frame energies straight from the definition: exact integer
+    projections on the quantized basis, then the operator's double
+    op order (cs·cs + ss·ss)·2^(-2·Q_SHIFT)."""
+    scale = 2.0 ** (-2 * Q_SHIFT)
+    basis = {k: dft_basis(frame_len, k) for k in bins}
+    out = []
+    for f0 in range(0, len(samples), frame_len):
+        fr = samples[f0:f0 + frame_len]
+        e = []
+        for k in bins:
+            cos_t, sin_t = basis[k]
+            cs = float(sum(x * c for x, c in zip(fr, cos_t)))
+            ss = float(sum(x * s for x, s in zip(fr, sin_t)))
+            e.append((cs * cs + ss * ss) * scale)
+        out.append(tuple(e))
+    return out
+
+
 def test_band_energy_paths_bit_equal(spark):
-    """The vectorized numpy path must be BIT-equal to the declarative
-    path: the quantized-integer basis keeps every product and partial
-    sum integer-valued below 2^53, so float64 matmul is exact — no
-    tolerance needed. Includes a trailing partial frame (200 % 64)."""
+    """band_energy over sample arrays and over the exploded
+    (id, pos, x) rows (``pos_rows=True``) are both BIT-equal to the
+    definition: the quantized-integer basis keeps every product and
+    partial sum an exact int64, so no tolerance is needed. Includes a
+    trailing partial frame (200 % 64)."""
     rows = [(1, _tone(3, 200)), (2, _tone(7, 200, amp=500)),
             (3, [0] * 64), (4, [((i * i * 13 + 7) % 3001) - 1500
                                 for i in range(128)])]
     df = spark.createDataFrame(rows, "id long, samples array<int>")
+    want = {(rid, f): e for rid, xs in rows
+            for f, e in enumerate(_band_energy_def(xs, 64, (1, 3, 7)))}
     a = band_energy(df, frame_len=64, bins=(1, 3, 7)).collect()
-    b = band_energy(df, frame_len=64, bins=(1, 3, 7),
-                    vectorized=True).collect()
+    exploded = df.select("id", F.posexplode("samples").alias("pos", "x"))
+    b = band_energy(exploded, frame_len=64, bins=(1, 3, 7),
+                    pos_rows=True).collect()
     ka = {(r["id"], r["frame"]): (r["e1"], r["e3"], r["e7"]) for r in a}
     kb = {(r["id"], r["frame"]): (r["e1"], r["e3"], r["e7"]) for r in b}
-    assert ka == kb  # exact ==, not approx
+    assert ka == kb == want  # exact ==, not approx
     # physics: a bin-3 tone puts (much) more energy in e3 than e1/e7,
     # and silence is exactly zero
     e = ka[(1, 0)]
@@ -59,15 +84,13 @@ def test_band_energy_validation(spark):
 
 
 def test_band_energy_null_and_empty_arrays_agree(spark):
-    """NULL / empty sample arrays produce no frames on BOTH paths
-    (posexplode semantics); they must not crash the numpy path."""
+    """NULL / empty sample arrays produce no frames (posexplode
+    semantics) and do not disturb the other rows."""
     df = spark.createDataFrame(
         [(1, None), (2, []), (3, _tone(1, 64))],
         "id long, samples array<int>")
     a = sorted(r["id"] for r in band_energy(df, bins=(1,)).collect())
-    b = sorted(r["id"] for r in
-               band_energy(df, bins=(1,), vectorized=True).collect())
-    assert a == b == [3]
+    assert a == [3]
 
 
 def test_wav_samples_roundtrip(spark):
@@ -128,19 +151,16 @@ def test_mp4_pcm_roundtrip_and_contract(spark):
 
 def test_active_segments_islands(spark):
     """Consecutive active frames merge into maximal segments; silent
-    frames split them; all-silent clips yield no rows; both band_energy
-    paths produce identical segments."""
+    frames split them; all-silent clips yield no rows."""
     from bigslice_spark.operators.audio import active_segments
     tone, silence = _tone(3, 64), [0] * 64
     rows = [(1, tone + silence + tone + tone),   # [0-0], [2-3]
             (2, silence + silence),              # no rows
             (3, tone * 3)]                       # [0-2]
     df = spark.createDataFrame(rows, "id long, samples array<int>")
-    for vec in (False, True):
-        got = {(r["id"], r["start_frame"], r["end_frame"]): r["n_frames"]
-               for r in active_segments(df, bins=(3,),
-                                        vectorized=vec).collect()}
-        assert got == {(1, 0, 0): 1, (1, 2, 3): 2, (3, 0, 2): 3}, vec
+    got = {(r["id"], r["start_frame"], r["end_frame"]): r["n_frames"]
+           for r in active_segments(df, bins=(3,)).collect()}
+    assert got == {(1, 0, 0): 1, (1, 2, 3): 2, (3, 0, 2): 3}
 
 
 def test_adpcm_codec_contracts():

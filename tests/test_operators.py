@@ -2291,13 +2291,49 @@ def test_bpe_train_layout_stable_and_encode(spark, tables):
     assert [(r["doc_id"], r["n_tokens"]) for r in got] == [(1, 6)]
 
 
+def _bpe_encode_rowwise(df, merges, text_col="text", id_col="doc_id",
+                        lowercase=True):
+    """Parity reference: bpe_encode row at a time (an Arrow-batched
+    pandas UDF over the documents relation, a per-worker memo over
+    distinct words), the shape the distinct-word join plan replaced."""
+    import re
+
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from bigslice_spark.operators.bpe import _encode_word
+    ranks = {(a, b): r for r, a, b, _ in merges}
+    cache: dict[str, int] = {}
+    # same tokenizer as training/word_counts and the join plan:
+    # Java-regex \s is ASCII-only, so split with re.ASCII
+    ws = re.compile(r"\s+", re.ASCII)
+
+    @pandas_udf("long")
+    def n_tokens(texts: pd.Series) -> pd.Series:
+        def enc(w: str) -> int:
+            n = cache.get(w)
+            if n is None:
+                n = cache[w] = _encode_word(w, ranks)
+            return n
+
+        def doc(t):
+            if t is None:
+                return 0
+            if lowercase:
+                t = t.lower()
+            return sum(enc(w) for w in ws.split(t) if w)
+
+        return texts.map(doc)
+
+    return df.select(F.col(id_col),
+                     n_tokens(F.col(text_col)).alias("n_tokens"))
+
+
 def test_bpe_encode_join_plan_matches_rowwise(spark, tables):
     """The plan-native encoder (distinct-word encode + join-back) must
     be count-identical to the row-at-a-time reference on real data,
     including empty/NULL documents (0 tokens via the left join)."""
-    from bigslice_spark.operators.bpe import (bpe_encode,
-                                              bpe_encode_rowwise,
-                                              bpe_train)
+    from bigslice_spark.operators.bpe import bpe_encode, bpe_train
     docs = tables["documents"]
     merges = bpe_train(docs, num_merges=25)
     edge = spark.createDataFrame(
@@ -2307,7 +2343,7 @@ def test_bpe_encode_join_plan_matches_rowwise(spark, tables):
     plan = {r["doc_id"]: r["n_tokens"]
             for r in bpe_encode(both, merges).collect()}
     ref = {r["doc_id"]: r["n_tokens"]
-           for r in bpe_encode_rowwise(both, merges).collect()}
+           for r in _bpe_encode_rowwise(both, merges).collect()}
     assert plan == ref
     assert plan[900001] == plan[900002] == plan[900003] == 0
 
@@ -2605,7 +2641,7 @@ def test_k_core_converges_on_deep_chain(spark):
     assert bounded > set(got)  # strict superset: chain not yet peeled
 
 
-def _k_core_edge_peel(edges, k, iters=None, reliable=None):
+def _k_core_edge_peel(edges, k, iters=None):
     """Parity reference: the k_core shape the node-sized rounds
     replaced. Every round materializes the surviving ORIENTED edge list
     (both directions of each simple edge) and the fixpoint is an
@@ -2618,7 +2654,7 @@ def _k_core_edge_peel(edges, k, iters=None, reliable=None):
     obs0 = Observation()
     cur = materialize(
         _oriented(e.filter(F.col("u") != F.col("v"))).distinct()
-        .observe(obs0, F.count(F.lit(1)).alias("__rows__")), reliable)
+        .observe(obs0, F.count(F.lit(1)).alias("__rows__")))
 
     def peel(g, obs=None):
         deg = g.groupBy("u").agg(F.count(F.lit(1)).alias("degree"))
@@ -2628,7 +2664,7 @@ def _k_core_edge_peel(edges, k, iters=None, reliable=None):
                      on="v", how="left_semi"))
         if obs is not None:
             out = out.observe(obs, F.count(F.lit(1)).alias("__rows__"))
-        return materialize(out, reliable)
+        return materialize(out)
 
     if iters is not None:
         for _ in range(iters):
@@ -2665,7 +2701,7 @@ KCORE_ADVERSARIAL = [
 
 
 @pytest.mark.parametrize("k", [0, 1, 3])
-def test_k_core_matches_edge_list_peel(spark, k):
+def test_k_core_matches_edge_list_peel(spark, cluster_checkpoint, k):
     """Equivalence pin: k_core's node-sized rounds (one canonical pair
     list, a materialized alive set per round) return the same
     (node, degree) rows as the edge-list peel they replaced, for every
@@ -2675,8 +2711,8 @@ def test_k_core_matches_edge_list_peel(spark, k):
     df = spark.createDataFrame(KCORE_ADVERSARIAL, "src long, dst long")
     empty = spark.createDataFrame([], "src long, dst long")
 
-    def run(edges, iters, reliable=None):
-        out = k_core(edges, k=k, iters=iters, reliable=reliable)
+    def run(edges, iters):
+        out = k_core(edges, k=k, iters=iters)
         assert [(f.name, f.dataType.simpleString())
                 for f in out.schema.fields] == [("node", "bigint"),
                                                 ("degree", "bigint")]
@@ -2693,7 +2729,8 @@ def test_k_core_matches_edge_list_peel(spark, k):
             assert run(df, iters) == want[iters], iters
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
-        assert run(df, iters, reliable=True) == want[iters], iters
+        with cluster_checkpoint():
+            assert run(df, iters) == want[iters], iters
     assert _k_core_edge_peel(empty, k) == {}
     if k == 3:  # the tail peels one node per round
         assert [len(want[i]) for i in (0, 1, 2, None)] == [6, 5, 4, 4]
@@ -2816,6 +2853,149 @@ def test_release_frees_superseded_checkpoint_blocks(spark):
     # only the final round's blocks (the returned frame's backing) may
     # survive; 11 rounds of a path graph would leak ~12 without release
     assert len(leftover) <= 3, leftover
+
+
+# Components {1,2,3} (a path plus a duplicate and both orientations),
+# {10,11} with a self-loop, {20,...,23} (a star with reversed copies),
+# a lone self-loop node 30, and the inputs the operators must collapse:
+# duplicate rows, both orientations of an edge, self-loops.
+GRAPH_ADVERSARIAL = [
+    (1, 2), (2, 1), (1, 2), (2, 3), (10, 11), (11, 11), (10, 10),
+    (20, 21), (20, 22), (22, 20), (23, 20), (20, 23), (30, 30)]
+# isolated nodes for connected_components(nodes=): 40 and 41 are new,
+# 3 and 30 already sit in the edge list and must not be duplicated
+GRAPH_EXTRA_NODES = [3, 30, 40, 41]
+
+
+def _cc_ref(edges, nodes=()):
+    """Min reachable id per node, by repeated relaxation."""
+    lab = {x: x for e in edges for x in e}
+    lab.update({x: x for x in nodes if x not in lab})
+    changed = True
+    while changed:
+        changed = False
+        for u, v in edges:
+            m = min(lab[u], lab[v])
+            if lab[u] != m or lab[v] != m:
+                lab[u] = lab[v] = m
+                changed = True
+    return lab
+
+
+def _lpa_ref(edges, iters):
+    """Synchronous LPA: each round a node takes the most frequent label
+    over its distinct neighbors plus itself once, ties to the min."""
+    nbrs = {}
+    for u, v in edges:
+        for a, b in ((u, v), (v, u), (u, u), (v, v)):
+            nbrs.setdefault(a, set()).add(b)
+    lab = {x: x for x in nbrs}
+    for _ in range(iters):
+        new = {}
+        for x, ns in nbrs.items():
+            c = {}
+            for y in ns:
+                c[lab[y]] = c.get(lab[y], 0) + 1
+            new[x] = min(c, key=lambda la: (-c[la], la))
+        lab = new
+    return lab
+
+
+def _pagerank_ordered_ref(edges, iters, damping=0.85):
+    """pagerank(ordered=True) in the same double op order: in-edge
+    contributions folded in source-id order from 0.0."""
+    e = sorted(set(edges))
+    nodes = {x for ed in e for x in ed}
+    n = float(len(nodes))
+    outdeg = {}
+    for s, _ in e:
+        outdeg[s] = outdeg.get(s, 0) + 1
+    rank = {x: 1.0 / n for x in nodes}
+    for _ in range(iters):
+        acc = {}
+        for s, d in e:                   # sorted: s ascending per d
+            acc[d] = acc.get(d, 0.0) + rank[s] / outdeg[s]
+        rank = {x: (1.0 - damping) / n + damping * acc.get(x, 0.0)
+                for x in nodes}
+    return rank
+
+
+def test_graph_loops_same_rows_on_every_plan_path(spark,
+                                                  cluster_checkpoint):
+    """Equivalence pin: connected_components, label_propagation and
+    pagerank(ordered=True) return identical rows whether the node-sized
+    relation is broadcast (session threshold), exchanged (threshold
+    -1) or checkpointed reliably (the cluster path), and those rows
+    are the definitions' — over duplicate and both-orientation edges,
+    self-loops, isolated ``nodes=`` and an empty input."""
+    import contextlib
+
+    from bigslice_spark.operators.graph import (_broadcast_if_fits,
+                                                connected_components,
+                                                label_propagation,
+                                                pagerank)
+    schema = "src long, dst long"
+    df = spark.createDataFrame(GRAPH_ADVERSARIAL, schema)
+    empty = spark.createDataFrame([], schema)
+    nodes = spark.createDataFrame([(x,) for x in GRAPH_EXTRA_NODES],
+                                  "node long")
+
+    def runs():
+        cc = {r["node"]: r["component"]
+              for r in connected_components(df).collect()}
+        ccn = {r["node"]: r["component"]
+               for r in connected_components(df, nodes=nodes).collect()}
+        lpa = {r["node"]: r["label"]
+               for r in label_propagation(df, iters=3).collect()}
+        pr = {r["node"]: r["rank"]
+              for r in pagerank(df, iters=3, ordered=True).collect()}
+        empties = (connected_components(empty).collect(),
+                   label_propagation(empty).collect(),
+                   pagerank(empty, ordered=True).collect())
+        only_nodes = {r["node"]: r["component"] for r in
+                      connected_components(empty, nodes=nodes).collect()}
+        return cc, ccn, lpa, pr, empties, only_nodes
+
+    want = (_cc_ref(GRAPH_ADVERSARIAL),
+            _cc_ref(GRAPH_ADVERSARIAL, GRAPH_EXTRA_NODES),
+            _lpa_ref(GRAPH_ADVERSARIAL, 3),
+            _pagerank_ordered_ref(GRAPH_ADVERSARIAL, 3),
+            ([], [], []),
+            {x: x for x in GRAPH_EXTRA_NODES})
+    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    assert _broadcast_if_fits(spark, 16, 1000) is F.broadcast
+    for path in (contextlib.nullcontext, cluster_checkpoint):
+        with path():
+            assert runs() == want, path
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        assert _broadcast_if_fits(spark, 16, 0) is not F.broadcast
+        assert runs() == want
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
+
+
+def test_connected_components_releases_on_no_convergence(spark,
+                                                         monkeypatch):
+    """A run that hits max_iter raises AND frees what it materialized:
+    the symmetric edge list and the last round are no longer tracked
+    (so no executor blocks stay pinned for the session)."""
+    from bigslice_spark import checkpoint
+    from bigslice_spark.operators import graph
+    made = []
+
+    def recording(df):
+        out = checkpoint.materialize(df)
+        made.append(out)
+        return out
+
+    monkeypatch.setattr(graph, "materialize", recording)
+    path = spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                 "src long, dst long")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        graph.connected_components(path, max_iter=1)
+    assert len(made) == 3  # sym, the initial labels, round one
+    assert not [m for m in made if m in checkpoint._TRACKED]
 
 
 def test_k_core_leaves_only_its_result_persisted(spark):
@@ -3214,8 +3394,7 @@ def test_bpe_tokenizers_agree_on_unicode_whitespace(spark):
     Java-regex ASCII \\s. Real unicode whitespace (NBSP, thin space)
     is NOT a separator for any of them; a bare python str.split()
     in the row-wise path would silently disagree."""
-    from bigslice_spark.operators.bpe import (bpe_encode,
-                                              bpe_encode_rowwise)
+    from bigslice_spark.operators.bpe import bpe_encode
     merges = []  # no merges: every word costs len(word)+1 (EOW)
     df = spark.createDataFrame(
         [(1, "ab\u00a0cd ef"), (2, "x\ty \u2009z")],
@@ -3223,7 +3402,7 @@ def test_bpe_tokenizers_agree_on_unicode_whitespace(spark):
     plan = {r["doc_id"]: r["n_tokens"]
             for r in bpe_encode(df, merges).collect()}
     ref = {r["doc_id"]: r["n_tokens"]
-           for r in bpe_encode_rowwise(df, merges).collect()}
+           for r in _bpe_encode_rowwise(df, merges).collect()}
     assert plan == ref
     # doc1: NBSP not a separator -> ['ab\xa0cd', 'ef'] -> 6 + 3
     # doc2: tab + space are -> ['x', 'y', '\u2009z'] -> 2 + 2 + 3

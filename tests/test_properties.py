@@ -1139,7 +1139,7 @@ _PCM = st.lists(st.integers(min_value=-32768, max_value=32767),
        bins=st.sets(st.integers(min_value=0, max_value=7),
                     min_size=1, max_size=3))
 def test_band_energy_matches_python_dft(spark, clips, frame_len, bins):
-    """Both band_energy paths equal a pure-Python integer DFT over
+    """band_energy equals a pure-Python integer DFT over
     random int16 PCM, any frame length, any bin set — including empty
     clips and trailing partial frames. Equality is exact (fixed-point
     construction), not approximate."""
@@ -1161,12 +1161,10 @@ def test_band_energy_matches_python_dft(spark, clips, frame_len, bins):
                 es.append((cs * cs + ss * ss) * 2.0 ** (-2 * Q_SHIFT))
             want[(i, f0 // frame_len)] = tuple(es)
 
-    for vec in (False, True):
-        got = {(r["id"], r["frame"]): tuple(r[f"e{k}"] for k in bins)
-               for r in band_energy(df, frame_len=frame_len,
-                                    bins=bins,
-                                    vectorized=vec).collect()}
-        assert got == want, ("vectorized" if vec else "declarative")
+    got = {(r["id"], r["frame"]): tuple(r[f"e{k}"] for k in bins)
+           for r in band_energy(df, frame_len=frame_len,
+                                bins=bins).collect()}
+    assert got == want
 
 
 @PROP

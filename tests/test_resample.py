@@ -1,4 +1,4 @@
-"""Polyphase rational resampling (operators/resample.py): both paths
+"""Polyphase rational resampling (operators/resample.py): the plan
 against the literal definition, edge cases, validation."""
 
 import random
@@ -35,11 +35,9 @@ def test_resample_matches_definition_both_paths(spark):
     for l_up, m_down in ((2, 3), (1, 2), (3, 1), (1, 1), (5, 4)):
         want = {(d, m): y for d, x in rows
                 for m, y in enumerate(_ref(x, l_up, m_down))}
-        for vec in (False, True):
-            got = {(r["id"], r["m"]): r["y"]
-                   for r in resample(df, l_up, m_down,
-                                     vectorized=vec).collect()}
-            assert got == want, (l_up, m_down, vec)
+        got = {(r["id"], r["m"]): r["y"]
+               for r in resample(df, l_up, m_down).collect()}
+        assert got == want, (l_up, m_down)
 
 
 def test_resample_dc_gain_and_rate(spark):
@@ -89,8 +87,8 @@ def test_resample_plan_is_codegen(spark):
 
 def test_resample_fuzz_vs_definition(spark):
     """Randomized batch (Hypothesis-free — one Spark job checks many
-    clips, the dual-path pattern): random lengths/values per clip,
-    both physical paths must equal the literal definition exactly."""
+    clips): random lengths/values per clip, the plan must equal the
+    literal definition exactly."""
     rng = random.Random(91)
     for l_up, m_down in ((2, 3), (4, 3), (1, 3), (7, 2)):
         rows = [(d, [rng.randint(-32768, 32767)
@@ -101,8 +99,5 @@ def test_resample_fuzz_vs_definition(spark):
                 for m, y in enumerate(_ref(x, l_up, m_down))}
         got = {(r["id"], r["m"]): r["y"]
                for r in resample(df, l_up, m_down).collect()}
-        gotv = {(r["id"], r["m"]): r["y"]
-                for r in resample(df, l_up, m_down,
-                                  vectorized=True).collect()}
-        assert got == want and gotv == want, (l_up, m_down)
+        assert got == want, (l_up, m_down)
 

@@ -85,15 +85,18 @@ def test_map_missing_column_fails_eagerly(sl):
         sl.map_(F.col("nope"))
 
 
-def test_reliable_checkpoint_mode(spark):
-    """checkpoint.materialize(reliable=True) must produce the same data
-    through a reliable (driver-visible, executor-loss-safe) checkpoint
-    and leave files in the checkpoint dir."""
+def test_reliable_checkpoint_mode(spark, cluster_checkpoint):
+    """Under a cluster master, checkpoint.materialize must produce the
+    same data through a reliable (driver-visible, executor-loss-safe)
+    checkpoint, leave files in the checkpoint dir, and track nothing
+    for release()."""
     import glob
     import os
-    from bigslice_spark.checkpoint import materialize
+    from bigslice_spark.checkpoint import _TRACKED, materialize
     df = spark.range(0, 1000, 1, 4).withColumn("v", F.col("id") * 3)
-    out = materialize(df, reliable=True)
+    with cluster_checkpoint():
+        out = materialize(df)
+    assert out not in _TRACKED
     ckdir = spark.sparkContext.getCheckpointDir()
     assert ckdir is not None
     assert glob.glob(os.path.join(ckdir.replace("file:", ""), "**"),
@@ -102,14 +105,15 @@ def test_reliable_checkpoint_mode(spark):
     assert out.agg(F.sum("v")).collect()[0][0] == 3 * 999 * 1000 // 2
 
 
-def test_connected_components_reliable(spark):
+def test_connected_components_reliable(spark, cluster_checkpoint):
+    import contextlib
     from bigslice_spark.operators.graph import connected_components
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],
         "src long, dst long")
-    for reliable in (False, True):
-        got = {(r["node"], r["component"])
-               for r in connected_components(
-                   edges, reliable=reliable).collect()}
+    for path in (contextlib.nullcontext, cluster_checkpoint):
+        with path():
+            got = {(r["node"], r["component"])
+                   for r in connected_components(edges).collect()}
         assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10),
                        (20, 20), (21, 20), (22, 20)}
