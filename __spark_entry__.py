@@ -20,20 +20,8 @@ from bigslice_spark.queries import ORACLE, QUERIES
 # Entries whose implementation changed this round: they must re-prove
 # under the driver before any other, whatever their last match.
 CHANGED: tuple[str, ...] = (
-    "op_flatmap", "word_count", "dedup_minhash", "dedup_simhash",
-    "ngram_jaccard", "edit_distance_pairs", "ngram_containment",
-    "dedup_components", "token_counts", "text_stats", "quality_score",
-    "lang_id", "op_budget_sample", "pipeline_end2end", "decontaminate",
-    "repetition_stats", "pack_sequences", "winnow", "line_dedup",
-    "classify_score", "dedup_against", "corpus_stats", "bm25_search",
-    "mix_weights", "lm_quality", "chunk_docs", "bigram_pmi",
-    "dedup_keep_best", "heavy_hitters", "heavy_hitters_approx",
-    "tfidf_terms", "bpe_merges", "bpe_token_counts", "gopher_rules",
-    "mixture_sample", "stream_dedup_against", "item_jaccard", "dup_spans",
-    "strip_dup_spans", "decontaminate_bloom", "ngram_novelty",
-    "leakage_split", "code_detect", "c4_filters", "text_sentences",
-    "unigram_vocab", "unigram_tokens", "stream_quality_filter",
-    "nb_classifier")
+    "semantic_dedup", "kmeans_step", "kmeans_train", "kmeans_assign_ivf",
+    "similarity_ivf", "similarity_pq")
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 

@@ -227,14 +227,14 @@ def _simhash_fast(spark, sf_dir):
 
 
 # semantic_dedup's registry entry pins k=8 cells so its DuckDB oracle (an
-# 8x64 unrolled argmin) can replay the assignment — fine for the sf0.01
-# correctness gate, quadratic at scale: with k fixed, per-cell pair
-# counts grow as (N/k)^2 (measured 62x wall at 10x rows, the sf1.0
+# 8x64 argmin written out as SQL) can replay the assignment — fine for
+# the sf0.01 correctness gate, quadratic at scale: with k fixed, per-cell
+# pair counts grow as (N/k)^2 (measured 62x wall at 10x rows, the sf1.0
 # sweep's one superlinear query). The bench measures the PRODUCTION
 # sizing the operator documents (k ~ N/256, the similarity_ivf auto-cell
 # rule): per-cell size stays ~constant, so pair volume grows ~linearly
-# with N. Assignment auto-routes to the broadcast-join path past the
-# ~1500-term codegen cliff.
+# with N. Cells come from kmeans_assign_ivf and reach semantic_dedup as
+# cell_col, so the timed variant runs no inline assignment.
 def _semantic_fast(spark, sf_dir):
     from bigslice_spark.operators.clustering import (
         kmeans_assign_ivf, seed_centroids)

@@ -8,10 +8,11 @@ exact arithmetic, so the full assign→update step is value-checkable
 bit-for-bit against a SQL oracle — and composable into an iterative
 driver loop (collect k·d doubles per iteration, nothing else).
 
-Scale shape: assignment is a pure projection (wide codegen argmin over
-k literal centroids — no join, no shuffle); the update is one hash
-aggregation on the cell id. Per-iteration cost at 100 TB = one scan +
-one k-row shuffle, the textbook distributed Lloyd step. Means use
+Scale shape: assignment broadcasts the k centroids, folds one squared
+L2 per (vector, centroid) with similarity._sq_l2 and keeps
+min(struct(d, cell)) per vector — the partial aggregate collapses the k
+candidates map-side, so the only assignment exchange is n 1-row
+groups; the update is one hash aggregation on the cell id. Means use
 decimal-exact sums (queries.py float conventions) so results don't
 depend on partial-aggregation order.
 """
@@ -22,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..local_rows import local_df
-from .similarity import _hyperplanes
+from .similarity import _as_double_vec, _hyperplanes, _lit_vec, _sq_l2
 
 
 def seed_centroids(k: int, dim: int, seed: int = 7,
@@ -36,84 +37,43 @@ def seed_centroids(k: int, dim: int, seed: int = 7,
     return [[x * scale for x in row] for row in _hyperplanes(dim, k, seed=seed)]
 
 
-def _argmin_expr(centroids: list[list[float]],
-                 v_col: str = "__v__") -> "F.Column":
-    """struct('d', 'cell') of the nearest centroid (squared L2, argmin;
-    ties break toward the lower cell id) over a double-array column.
-    One F.expr parse; pure codegen projection."""
-    dim = len(centroids[0])
-    entries = []
-    for ci, c in enumerate(centroids):
-        d = " + ".join(
-            f"({v_col}[{j}] - ({c[j]!r})) * ({v_col}[{j}] - ({c[j]!r}))"
-            for j in range(dim))
-        entries.append(f"named_struct('d', ({d}), 'cell', {ci})")
-    return F.expr("array_min(array(" + ", ".join(entries) + "))")
+def _vecs(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    return df.select(F.col(id_col),
+                     _as_double_vec(F.col(vec_col)).alias("__v__"))
 
 
-# Above this many unrolled multiply-add terms (k·dim) the inline
-# argmin/dot expressions stop being the fast path — the join path
-# below has no such cliff. Re-measured on Spark 4.1 (r9), three data
-# points: a 16x64 = 1024-term argmin HARD-FAILS Janino ("Code grows
-# beyond 64 KB"); a 512-term argmin compiles but executes SLOWER than
-# the broadcast-join fold (9.6s vs 5.9s warm over 2M rows); and the
-# plain unrolled dot shows a 36x per-row cost cliff between 32 and 64
-# terms (whole-stage codegen silently gives up). 32 is the largest
-# width measured codegen-fast, so `auto` only inlines genuinely tiny
-# k·dim and otherwise takes the fold-based join (bitwise-identical
-# results either way — test-pinned).
-_CODEGEN_TERM_LIMIT = 32
-
-
-def kmeans_assign(df: DataFrame, centroids: list[list[float]],
-                  vec_col: str = "embedding",
-                  id_col: str = "vec_id",
-                  method: str = "auto") -> DataFrame:
-    """Assign each vector to its nearest centroid (squared L2, argmin;
-    ties break toward the lower cell id).
-
-    Two physical strategies with bitwise-identical results:
-
-    - ``unrolled`` (small k·dim): a single codegen argmin projection —
-      zero shuffles, the fastest path while the generated method fits
-      the JVM's 64 KB limit;
-    - ``join`` (large k·dim): broadcast the k centroids, compute each
-      distance with an index-ordered array fold (same left-assoc sum →
-      same IEEE doubles), take min(struct(d, cell)) per vector — the
-      partial aggregation collapses the k candidate rows map-side, so
-      the only exchange is n 1-row groups. No codegen cliff at any k.
-
-    ``auto`` picks unrolled only while k·dim ≤ 32 (_CODEGEN_TERM_LIMIT
-    — measured r9: 512 terms compiles but runs 1.6x slower than the
-    join, 1024 fails Janino outright).
-    """
-    k, dim = len(centroids), len(centroids[0])
-    if method == "auto":
-        method = "unrolled" if k * dim <= _CODEGEN_TERM_LIMIT else "join"
-    v = df.select(F.col(id_col),
-                  F.transform(F.col(vec_col),
-                              lambda x: x.cast("double")).alias("__v__"))
-    if method == "unrolled":
-        arg = _argmin_expr(centroids)
-        return v.select(id_col, arg["cell"].cast("int").alias("cell"),
-                        arg["d"].alias("dist"))
-    if method != "join":
-        raise ValueError(f"unknown method: {method}")
-    spark = df.sparkSession
-    cents = local_df(
-        spark, [(ci, c) for ci, c in enumerate(centroids)],
-        "cell int, c array<double>")
-    d = F.aggregate(
-        F.zip_with("__v__", "c", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, t: acc + t)
+def _nearest(v: DataFrame, cents: DataFrame, id_col: str,
+             on: str | None = None) -> DataFrame:
+    """(id, cell, dist) of the nearest centroid per vector: broadcast
+    the centroid table (cell, c, [on]) onto the (id, __v__) rows, one
+    _sq_l2 fold per candidate, min(struct(d, cell)) per id — ties go
+    to the lower cell, and the partial aggregation collapses the
+    candidate rows map-side, so the only exchange is n 1-row groups."""
     best = F.min(F.struct(F.col("__d").alias("d"), "cell"))
-    return (v.join(F.broadcast(cents))
-            .withColumn("__d", d)
+    return (v.join(F.broadcast(cents), on=on)
+            .withColumn("__d", _sq_l2("__v__", "c"))
             .groupBy(id_col)
             .agg(best.alias("__best"))
             .select(id_col,
                     F.col("__best.cell").cast("int").alias("cell"),
                     F.col("__best.d").alias("dist")))
+
+
+def kmeans_assign(df: DataFrame, centroids: list[list[float]],
+                  vec_col: str = "embedding",
+                  id_col: str = "vec_id") -> DataFrame:
+    """Assign each vector to its nearest centroid (squared L2, argmin;
+    ties break toward the lower cell id) → (id, cell, dist).
+
+    The k centroids are a broadcast table; each distance is one
+    index-ordered _sq_l2 fold (the left-associative sum the oracles
+    replay, bitwise), and min(struct(d, cell)) per vector is partially
+    aggregated map-side, so the only exchange is n 1-row groups. No
+    generated-code width limit at any k·dim."""
+    cents = local_df(
+        df.sparkSession, [(ci, c) for ci, c in enumerate(centroids)],
+        "cell int, c array<double>")
+    return _nearest(_vecs(df, vec_col, id_col), cents, id_col)
 
 
 def coarse_membership(centroids: list[list[float]],
@@ -145,8 +105,8 @@ def kmeans_assign_ivf(df: DataFrame, centroids: list[list[float]],
     (~√k data-independent seeds), then argmins over only those
     groups' member centroids.
 
-    This is the hierarchical-assignment scale path kmeans_assign's
-    join strategy cannot provide: flat assignment is O(k) per vector,
+    This is the hierarchical-assignment scale path the flat
+    kmeans_assign cannot provide: flat assignment is O(k) per vector,
     and with the IVF sizing k ~ N/cell_target that makes index build
     O(N²/cell_target) — the quadratic cliff _auto_ncells documents.
     Here per-vector work is O(√k + nprobe·k/√k) = O(√k): at sf1.0
@@ -161,10 +121,10 @@ def kmeans_assign_ivf(df: DataFrame, centroids: list[list[float]],
     when k_coarse is absurdly oversized for k).
 
     Scale shape: one narrow projection computing the k_coarse struct
-    array + native array_sort (no shuffle), explode to nprobe rows,
-    one broadcast join on the group id (k·(dim+2) doubles), and the
-    same map-side min(struct(d, cell)) collapse kmeans_assign uses —
-    the only exchange is n 1-row groups."""
+    array of _sq_l2 folds + native array_sort (no shuffle), explode to
+    nprobe rows, then kmeans_assign's broadcast fold (_nearest) joined
+    on the group id (k·(dim+2) doubles) — the only exchange is n 1-row
+    groups."""
     k, dim = len(centroids), len(centroids[0])
     if coarse is None:
         if k_coarse is None:
@@ -172,19 +132,11 @@ def kmeans_assign_ivf(df: DataFrame, centroids: list[list[float]],
             k_coarse = max(2, math.isqrt(k))
         coarse = seed_centroids(k_coarse, dim, seed=coarse_seed)
     member = coarse_membership(centroids, coarse)
-    spark = df.sparkSession
-    v = df.select(F.col(id_col),
-                  F.transform(F.col(vec_col),
-                              lambda x: x.cast("double")).alias("__v__"))
+    v = _vecs(df, vec_col, id_col)
     # stage 1: struct(d, g) per coarse seed; array_sort orders by the
     # struct fields (d, then g) — the tie-break — and slice keeps the
     # nprobe nearest groups
-    def _d_to(c: list[float]):
-        arr = F.array(*[F.lit(float(x)) for x in c])
-        return F.aggregate(
-            F.zip_with("__v__", arr, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, t: acc + t)
-    cds = F.array(*[F.struct(_d_to(c).alias("d"),
+    cds = F.array(*[F.struct(_sq_l2("__v__", _lit_vec(c)).alias("d"),
                              F.lit(g).alias("g"))
                     for g, c in enumerate(coarse)])
     pv = (v.select(id_col, "__v__",
@@ -193,19 +145,10 @@ def kmeans_assign_ivf(df: DataFrame, centroids: list[list[float]],
           .select(id_col, "__v__", F.col("__p__.g").alias("g")))
     # stage 2: candidates = member centroids of the probed groups
     cents = local_df(
-        spark, [(ci, member[ci], c) for ci, c in enumerate(centroids)],
+        df.sparkSession,
+        [(ci, member[ci], c) for ci, c in enumerate(centroids)],
         "cell int, g int, c array<double>")
-    d = F.aggregate(
-        F.zip_with("__v__", "c", lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, t: acc + t)
-    best = F.min(F.struct(F.col("__d").alias("d"), "cell"))
-    return (pv.join(F.broadcast(cents), on="g")
-            .withColumn("__d", d)
-            .groupBy(id_col)
-            .agg(best.alias("__best"))
-            .select(id_col,
-                    F.col("__best.cell").cast("int").alias("cell"),
-                    F.col("__best.d").alias("dist")))
+    return _nearest(pv, cents, id_col, on="g")
 
 
 def kmeans_update(df: DataFrame, centroids: list[list[float]],
@@ -220,10 +163,7 @@ def kmeans_update(df: DataFrame, centroids: list[list[float]],
     significant digits, so decimal(38,scale) sums are exact and the
     mean double = exact_sum / count is bitwise engine-neutral."""
     assigned = kmeans_assign(df, centroids, vec_col, id_col)
-    vecs = df.select(F.col(id_col),
-                     F.transform(F.col(vec_col),
-                                 lambda x: x.cast("double")).alias("__v__"))
-    j = assigned.join(vecs, on=id_col)
+    j = assigned.join(_vecs(df, vec_col, id_col), on=id_col)
     aggs = [F.count(F.lit(1)).alias("n")]
     for m in range(mean_dims):
         aggs.append(
@@ -234,45 +174,27 @@ def kmeans_update(df: DataFrame, centroids: list[list[float]],
 
 def kmeans_means(df: DataFrame, centroids: list[list[float]],
                  vec_col: str = "embedding", id_col: str = "vec_id",
-                 scale: int = 12, method: str = "auto") -> DataFrame:
+                 scale: int = 12) -> DataFrame:
     """Full-width Lloyd update: (cell, n, m0..m{dim-1}) per non-empty
     cell, means decimal-exact (order-independent, engine-bitwise).
-
-    Small k·dim: inline codegen assignment fused into the scan — one
-    exchange total. Past the codegen limit (``auto`` switches like
-    kmeans_assign): assignment via the broadcast-join path, joined
-    back on ``id_col`` before the per-cell aggregation — one more
-    exchange, no interpreted-eval cliff, same bits either way."""
-    k, dim = len(centroids), len(centroids[0])
-    if method == "auto":
-        method = "unrolled" if k * dim <= _CODEGEN_TERM_LIMIT else "join"
+    Assignment is kmeans_assign's broadcast fold, joined back to the
+    vectors on ``id_col`` before the per-cell aggregation."""
+    dim = len(centroids[0])
     aggs = [F.count(F.lit(1)).alias("n")]
     for m in range(dim):
         aggs.append(
             (F.sum(F.col("__v__")[m].cast(f"decimal(38,{scale})"))
              .cast("double") / F.count(F.lit(1))).alias(f"m{m}"))
-    if method == "unrolled":
-        v = df.select(F.transform(F.col(vec_col),
-                                  lambda x: x.cast("double"))
-                      .alias("__v__"))
-        arg = _argmin_expr(centroids)
-        assigned = v.select(arg["cell"].cast("int").alias("cell"),
-                            "__v__")
-        return assigned.groupBy("cell").agg(*aggs)
-    cells = kmeans_assign(df, centroids, vec_col, id_col,
-                          method=method).select(id_col, "cell")
-    vecs = df.select(F.col(id_col),
-                     F.transform(F.col(vec_col),
-                                 lambda x: x.cast("double"))
-                     .alias("__v__"))
-    return vecs.join(cells, on=id_col).groupBy("cell").agg(*aggs)
+    cells = kmeans_assign(df, centroids, vec_col, id_col) \
+        .select(id_col, "cell")
+    return (_vecs(df, vec_col, id_col).join(cells, on=id_col)
+            .groupBy("cell").agg(*aggs))
 
 
 def kmeans_train(df: DataFrame, k: int = 8, dim: int = 64,
                  iters: int = 5, vec_col: str = "embedding",
                  id_col: str = "vec_id", seed: int = 7,
-                 scale: int = 12,
-                 method: str = "auto") -> list[list[float]]:
+                 scale: int = 12) -> list[list[float]]:
     """Iterative Lloyd k-means with deterministic everything: seeded
     data-independent init, exact-decimal means, (d, cell) tie-break —
     the same run on any engine/partitioning yields bitwise-identical
@@ -288,7 +210,7 @@ def kmeans_train(df: DataFrame, k: int = 8, dim: int = 64,
     for _ in range(iters):
         rows = {r["cell"]: r
                 for r in kmeans_means(df, cents, vec_col, id_col,
-                                      scale, method=method).collect()}
+                                      scale).collect()}
         cents = [[rows[c][f"m{j}"] for j in range(dim)]
                  if c in rows else cents[c] for c in range(k)]
     return cents

@@ -828,10 +828,10 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
                    chunk_target: int = 2048,
                    cell_col: str | None = None) -> DataFrame:
     """SemDeDup-style semantic deduplication: assign every embedding to
-    its nearest centroid (a zero-shuffle codegen argmin — centroids
-    typically come from clustering.kmeans_train), then drop any vector
-    that has a lower-id neighbor with cosine ≥ ``threshold`` INSIDE its
-    cluster. Returns the survivors as (id, cell).
+    its nearest centroid (centroids typically come from
+    clustering.kmeans_train), then drop any vector that has a lower-id
+    neighbor with cosine ≥ ``threshold`` INSIDE its cluster. Returns
+    the survivors as (id, cell).
 
     The cluster step is what makes this scale: candidate pairs are
     generated per-cell (k cells bound the quadratic blowup to
@@ -841,27 +841,27 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
     results are deterministic and engine-reproducible (exact-double
     cosines, (d, cell) assignment tie-break).
 
-    The inline argmin stays codegen-compiled up to k·dim ≈ 1500 (the
-    JVM method limit, see clustering._CODEGEN_TERM_LIMIT). For larger
-    k, either cluster in a reduced space (random_projection first —
-    what the SemDeDup paper's pipeline does) or precompute cells with
-    ``kmeans_assign(method='join')`` and pass ``cell_col=`` to skip
-    the inline assignment entirely.
+    The inline assignment is a join-free projection: array_min over
+    struct(_sq_l2(v, centroid literal), cell), one fold per centroid —
+    the coarse stage of clustering.kmeans_assign_ivf. Its work is
+    O(k) per vector; for large k precompute cells (e.g. with
+    clustering.kmeans_assign_ivf, O(√k) per vector) and pass
+    ``cell_col=`` to skip the inline assignment entirely.
     """
-    from .similarity import _dot_wide
-    from .clustering import _argmin_expr
+    from .similarity import _dot_wide, _lit_vec, _sq_l2
     dim = len(centroids[0])
     keep = [F.col(cell_col)] if cell_col else []
     v = df.select(F.col(id_col), *keep,
                   F.transform(F.col(vec_col),
                               lambda x: x.cast("double")).alias("__v__"))
     if cell_col:
-        v = v.select(F.col(id_col).alias("id"),
-                     F.col(cell_col).cast("int").alias("cell"), "__v__")
+        cell = F.col(cell_col).cast("int")
     else:
-        arg = _argmin_expr(centroids)
-        v = v.select(F.col(id_col).alias("id"),
-                     arg["cell"].cast("int").alias("cell"), "__v__")
+        cell = F.array_min(F.array(*[
+            F.struct(_sq_l2("__v__", _lit_vec(c)).alias("d"),
+                     F.lit(ci).alias("cell"))
+            for ci, c in enumerate(centroids)]))["cell"]
+    v = v.select(F.col(id_col).alias("id"), cell.alias("cell"), "__v__")
     v = v.withColumn("n", F.sqrt(_dot_wide("__v__", "__v__", dim)))
     # the assignment subtree feeds BOTH the candidate self-join and
     # the survivor anti-join — cut it once so the corpus-scale scan +

@@ -242,24 +242,22 @@ def _cbc_decrypt_py(key: bytes, iv: bytes, data: bytes) -> bytes:
     return bytes(out)
 
 
-def aes_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes,
-                          pure: bool = False) -> bytes:
+def aes_cbc_encrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     """Raw CBC over whole blocks, no IV prefix, no padding — the §7.6.4
     layout for /UE /OE key wrapping and the Algorithm 2.B inner AES.
-    ``pure=True`` forces the clean-room path (tests pin it against
-    the OpenSSL one)."""
+    OpenSSL when ``cryptography`` is installed, else the clean-room
+    cipher (tests pin _cbc_encrypt_py against OpenSSL)."""
     if len(data) % 16:
         raise ValueError("aes: CBC-nopad needs whole blocks")
-    if _OsslCipher is not None and not pure:
+    if _OsslCipher is not None:
         return _ossl_cbc(key, iv, data, True)
     return _cbc_encrypt_py(key, iv, data)
 
 
-def aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes,
-                          pure: bool = False) -> bytes:
+def aes_cbc_decrypt_nopad(key: bytes, iv: bytes, data: bytes) -> bytes:
     if len(data) % 16:
         raise ValueError("aes: CBC-nopad needs whole blocks")
-    if _OsslCipher is not None and not pure:
+    if _OsslCipher is not None:
         return _ossl_cbc(key, iv, data, False)
     return _cbc_decrypt_py(key, iv, data)
 

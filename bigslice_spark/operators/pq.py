@@ -15,11 +15,10 @@ Spark-first shape, reusing the engine's deterministic pieces:
     subvectors (bitwise-reproducible: seeded data-independent init,
     exact-decimal means). Codebooks are m × ksub × (dim/m) floats —
     KBs, a plan literal.
-  - ENCODE: one codegen projection — per subspace, argmin over ksub
-    centroids as least() over (distance, code) structs, each distance
-    one array fold against a literal centroid (the
-    _fold_dot_literal template; no interpretation cliff at these
-    widths). No shuffle, no Python.
+  - ENCODE: broadcast the m*ksub centroids onto the exploded
+    (vector, subspace) rows and keep, per subspace, the code of least
+    ||c||^2 - 2<x_j, c> (ties to the smaller code) — one grouped pass,
+    one exchange, no Python.
   - SEARCH (ADC): the query's m×ksub inner-product table is built
     driver-side (queries are metadata-scale by contract, like k-means
     centroids) and broadcast; each corpus row's score is m
@@ -50,8 +49,8 @@ def _seq_dot(a, b) -> float:
     return acc
 
 from .clustering import seed_centroids
-from .similarity import (_as_double_vec, _dim_of, _dot_wide,
-                         _fold_dot_literal, _prep, _rerank)
+from .similarity import (_as_double_vec, _dim_of, _dot_wide, _prep,
+                         _rerank, _sq_l2)
 
 
 def _normed(df: DataFrame, vec_col: str, id_col: str,
@@ -108,9 +107,7 @@ def pq_train(df: DataFrame, m: int = 8, ksub: int = 16,
     try:
         books = [seed_centroids(ksub, dsub, seed=seed + j)
                  for j in range(m)]
-        d = F.aggregate(
-            F.zip_with("sub", "c", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, t: acc + t)
+        d = _sq_l2("sub", "c")
         # min(struct(d, cell, sub)): 'sub' is constant within the
         # (vector, subspace) group, so the tie-break is still (d, cell)
         # — carried only so the winning subvector feeds the mean.
@@ -142,61 +139,21 @@ def pq_train(df: DataFrame, m: int = 8, ksub: int = 16,
             rows.unpersist()
 
 
-def _code_expr(j: int, dsub: int, ksub: int, book) -> F.Column:
-    """argmin_c ||x_j - c||^2 = argmin_c (||c||^2 - 2<x_j, c>) as a
-    least() over (partial-distance, code) structs — ties resolve to
-    the smaller code by struct ordering."""
-    sl = f"slice(v, {j * dsub + 1}, {dsub})"
-    cands = []
-    for c, cent in enumerate(book):
-        c_norm = sum(x * x for x in cent)
-        d = F.expr(_fold_dot_literal(sl, cent)) * F.lit(-2.0) \
-            + F.lit(float(c_norm))
-        cands.append(F.struct(d.alias("d"), F.lit(c).alias("c")))
-    return F.least(*cands).getField("c")
-
-
 def pq_encode(df: DataFrame, codebooks: list,
               vec_col: str = "embedding", id_col: str = "vec_id",
-              dim: int | None = None,
-              method: str = "auto") -> DataFrame:
+              dim: int | None = None) -> DataFrame:
     """(nid, codes array<int>) — vectors are L2-normalized before
-    encoding (cosine regime). Two physical strategies (same ANN
-    contract; code ids may differ at float-tie margins):
-
-    - ``unrolled``: one zero-shuffle codegen projection — m least()
-      argmins over ksub (distance, code) structs. Fastest per row,
-      but the generated expression carries m*ksub*dsub multiply-add
-      terms: past the measured codegen cliff (clustering.py
-      _CODEGEN_TERM_LIMIT notes) Janino compile time dominates and
-      eventually hard-fails, and every NEW plan containing the
-      expression pays seconds of re-analysis — measured 3.3s of the
-      registry entry's wall at m=8, ksub=16.
-    - ``join``: broadcast the m*ksub centroids onto exploded
-      (vector, subspace, subvector) rows, min(struct(d, code)) per
-      (vector, subspace), re-assemble the code array with an
-      array_sort over the m collected (subspace, code) pairs. Two
-      compact exchanges (n*m rows of ~16 bytes + n m-entry groups),
-      tiny expressions, no compile cliff at any m*ksub.
-
-    ``auto`` unrolls only while m*ksub*dsub stays within the codegen
-    limit — with the default PQ shapes that means the join path."""
-    from .clustering import _CODEGEN_TERM_LIMIT
-
+    encoding (cosine regime). Broadcast the m*ksub centroids onto
+    exploded (vector, subspace, subvector) rows; per subspace the code
+    is argmin_c ||x_j - c||^2 = argmin_c (||c||^2 - 2<x_j, c>), ties to
+    the smaller code, as m conditional min(struct(d, code)) aggregates
+    of one grouped pass: one exchange of n m-entry groups, tiny
+    expressions, no generated-code limit at any m*ksub."""
     dim = dim or _dim_of(df, vec_col)
     m = len(codebooks)
     dsub = dim // m
     ksub = len(codebooks[0])
-    if method == "auto":
-        method = ("unrolled" if m * ksub * dsub <= _CODEGEN_TERM_LIMIT
-                  else "join")
     unit = _normed(df, vec_col, id_col, dim)
-    if method == "unrolled":
-        codes = F.array(*[_code_expr(j, dsub, ksub, codebooks[j])
-                          for j in range(m)])
-        return unit.select("nid", codes.alias("codes"))
-    if method != "join":
-        raise ValueError(f"unknown method: {method}")
     spark = df.sparkSession
     cents = local_df(
         spark, [(j, c, [float(x) for x in codebooks[j][c]],
@@ -209,7 +166,7 @@ def pq_encode(df: DataFrame, codebooks: list,
     rows = (unit.select(
         "nid", F.explode(F.array(*sub_structs)).alias("s"))
         .select("nid", "s.j", "s.sub"))
-    # same argmin objective as _code_expr: ||c||^2 - 2<x_j, c>
+    # argmin objective ||c||^2 - 2<x_j, c>
     d = F.col("c_norm") - F.lit(2.0) * F.aggregate(
         F.zip_with("sub", "c", lambda x, y: x * y),
         F.lit(0.0), lambda acc, t: acc + t)

@@ -15,12 +15,13 @@ Three tiers, same output shape (qid, nid, cosine, rank):
                      sample), assign each vector to its cell, probe the
                      nprobe nearest cells per query, exact rerank inside.
 
-All distance math is a WIDE left-associative codegen expression
-(a[0]*b[0] + a[1]*b[1] + ...): Spark's array lambdas (zip_with /
-aggregate) are interpreted, measured 10× slower, and their evaluation
-order is opaque — the wide form is fast AND bitwise-reproducible in any
-engine that writes the same sum, which is what the DuckDB oracle does.
-Hyperplanes are a deterministic seeded family so results replay.
+All distance math is an index-ordered array fold seeded with 0.0 —
+_dot_wide for dot products, _sq_l2 for squared L2: the same
+left-associative sum (a[0]*b[0] + a[1]*b[1] + ...) the DuckDB oracles
+write out term by term, so results are bitwise-reproducible, with none
+of the codegen width cliff of the unrolled expression text (see
+_dot_wide). Hyperplanes are a deterministic seeded family so results
+replay.
 """
 
 from __future__ import annotations
@@ -57,6 +58,22 @@ def _dot_wide(a: str, b: str, dim: int) -> "F.Column":
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         f"CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)")
+
+
+def _sq_l2(a, b) -> "F.Column":
+    """Squared L2 distance of two double arrays (column names or
+    Columns, e.g. an F.array of literal centroid coordinates) as one
+    index-ordered fold seeded with 0.0: the same left-associative sum
+    the DuckDB oracles write out term by term ((0.0 + t) == t for every
+    t >= 0). The one Spark-side distance kernel of clustering,
+    similarity and pq, the role _dot_wide plays for dot products."""
+    return F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                       F.lit(0.0), lambda acc, t: acc + t)
+
+
+def _lit_vec(c) -> "F.Column":
+    """A literal double array (one centroid) for _sq_l2."""
+    return F.array(*[F.lit(float(x)) for x in c])
 
 
 def _fold_dot_literal(vec: str, coeffs) -> str:
@@ -199,7 +216,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
              dim: int | None = None,
              centers: list[list[float]] | None = None,
              max_iter: int = 8, cell_target: int = 4096,
-             assign_method: str = "auto") -> DataFrame:
+             assign_method: str = "join") -> DataFrame:
     """IVF ANN: KMeans cells (pyspark.ml), probe nprobe nearest cells.
     Trains on a sample; assignment + rerank are expression-level.
     Pass ``dim`` when known — the fallback inference is a driver-side
@@ -222,21 +239,20 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     until the caps bind (one column-pruned count() when neither
     ncells nor centers is given).
 
-    ``assign_method``: ``unrolled`` inlines the per-cell distances as
-    one codegen expression — fastest only for tiny ncells·dim (≤ 32;
-    clustering._CODEGEN_TERM_LIMIT, re-measured r9: wider inline
-    expressions run interpreted or fail Janino); ``join`` broadcasts
-    the centroid
-    table and takes min(struct(d, cell)) per vector (map-side partial
-    agg — no cliff at any ncells) with a small window on the query
-    side for the nprobe probe list. ``auto`` switches at the cliff.
-    Both compute the identical left-associative float sums, so
-    results are bitwise-identical either way. ``hierarchical`` keeps
-    the join path's query side but assigns the CORPUS through
-    clustering.kmeans_assign_ivf — O(√ncells) per vector instead of
-    O(ncells), the opt-in for index builds where auto-sized ncells
-    makes flat assignment the O(N^1.5) bottleneck; cell contents may
-    differ slightly from the exact argmin (IVF approximation)."""
+    ``assign_method``: ``join`` (exact) assigns the corpus with
+    clustering.kmeans_assign — broadcast the centroid table, one
+    _sq_l2 fold per (vector, cell), min(struct(d, cell)) per vector
+    (map-side partial agg, no cliff at any ncells) — and takes the
+    nprobe nearest cells per query with the same broadcast and a
+    small window. ``hierarchical`` keeps that query side but assigns
+    the CORPUS through clustering.kmeans_assign_ivf — O(√ncells) per
+    vector instead of O(ncells), the opt-in for index builds where
+    auto-sized ncells makes flat assignment the O(N^1.5) bottleneck;
+    cell contents may differ slightly from the exact argmin (IVF
+    approximation)."""
+    if assign_method not in ("join", "hierarchical"):
+        raise ValueError(f"unknown assign_method: {assign_method!r} "
+                         "(expected 'join' or 'hierarchical')")
     dim = dim or _dim_of(df, vec_col)
     n_corpus = None
     if ncells is None:
@@ -283,70 +299,29 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
         # just returns every cell), exactly like the trained path with
         # nprobe > ncells — train-once/reuse parity
 
-    from .clustering import _CODEGEN_TERM_LIMIT, kmeans_assign
-    if assign_method == "auto":
-        assign_method = ("unrolled"
-                         if ncells * dim <= _CODEGEN_TERM_LIMIT
-                         else "join")
+    from .clustering import kmeans_assign, kmeans_assign_ivf
     qs = queries.select(F.col(id_col).alias("qid"),
                         _as_double_vec(F.col(vec_col)).alias("qv"))
     qs = (qs.withColumn("qnrm", F.sqrt(_dot_wide("qv", "qv", dim)))
           .filter(F.col("qnrm") > 0))
-    if assign_method == "unrolled":
-        def cell_dists(vec: str):
-            """array<struct<d,cell>> of squared L2 to each centroid,
-            wide — one F.expr parse (driver-latency, see _dot_wide)."""
-            entries = []
-            for ci, c in enumerate(centers):
-                d = " + ".join(
-                    f"({vec}[{j}] - ({c[j]!r})) "
-                    f"* ({vec}[{j}] - ({c[j]!r}))"
-                    for j in range(dim))
-                entries.append(f"named_struct('d', ({d}), 'cell', {ci})")
-            return F.expr("array(" + ", ".join(entries) + ")")
-
-        assigned = corpus.withColumn(
-            "cell", F.array_min(cell_dists("v"))["cell"])
-        qs = (qs.withColumn("cells", F.slice(
-                  F.array_sort(cell_dists("qv")), 1, nprobe))
-              .withColumn("cell", F.explode(
-                  F.transform("cells", lambda s: s["cell"])))
-              .drop("cells"))
-    elif assign_method in ("join", "hierarchical"):
-        # corpus: broadcast-join argmin (map-side partial agg — the
-        # only exchange hashes nid, never the 16-value cell id);
-        # queries: same broadcast with a per-qid window for the
-        # nprobe-nearest cells — query sets are small by contract.
-        # ``hierarchical`` swaps the corpus side for the two-level
-        # kmeans_assign_ivf (O(√ncells) per vector instead of
-        # O(ncells)) — the index-build scale knob for corpora whose
-        # auto-sized ncells runs into the O(N^1.5) flat-assign cost;
-        # cell contents shift slightly (standard IVF approximation),
-        # recall still comes from nprobe
-        if assign_method == "hierarchical":
-            from .clustering import kmeans_assign_ivf
-            cells = kmeans_assign_ivf(df, centers, vec_col, id_col) \
-                .select(F.col(id_col).alias("nid"), "cell")
-        else:
-            cells = kmeans_assign(df, centers, vec_col, id_col,
-                                  method="join") \
-                .select(F.col(id_col).alias("nid"), "cell")
-        assigned = corpus.join(cells, on="nid")
-        spark = df.sparkSession
-        cents = local_df(
-            spark, [(ci, c) for ci, c in enumerate(centers)],
-            "cell int, c array<double>")
-        qd = F.aggregate(
-            F.zip_with("qv", "c", lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, t: acc + t)
-        wq = W.partitionBy("qid").orderBy("__qd", "cell")
-        qs = (qs.join(F.broadcast(cents))
-              .withColumn("__qd", qd)
-              .withColumn("__pr", F.row_number().over(wq))
-              .filter(F.col("__pr") <= nprobe)
-              .drop("c", "__qd", "__pr"))
-    else:
-        raise ValueError(f"unknown assign_method: {assign_method}")
+    # corpus: broadcast-join argmin (map-side partial agg — the only
+    # exchange hashes nid, never the 16-value cell id); queries: same
+    # broadcast with a per-qid window for the nprobe-nearest cells —
+    # query sets are small by contract
+    assign = kmeans_assign_ivf if assign_method == "hierarchical" \
+        else kmeans_assign
+    cells = assign(df, centers, vec_col, id_col) \
+        .select(F.col(id_col).alias("nid"), "cell")
+    assigned = corpus.join(cells, on="nid")
+    cents = local_df(
+        df.sparkSession, [(ci, c) for ci, c in enumerate(centers)],
+        "cell int, c array<double>")
+    wq = W.partitionBy("qid").orderBy("__qd", "cell")
+    qs = (qs.join(F.broadcast(cents))
+          .withColumn("__qd", _sq_l2("qv", "c"))
+          .withColumn("__pr", F.row_number().over(wq))
+          .filter(F.col("__pr") <= nprobe)
+          .drop("c", "__qd", "__pr"))
     scored = (assigned.join(qs, on="cell")
               .filter(F.col("nid") != F.col("qid"))
               .withColumn("cosine", _dot_wide("v", "qv", dim)

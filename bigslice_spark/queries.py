@@ -3496,8 +3496,8 @@ def _kmeans_oracle(k: int = 8, dim: int = 64, mean_dims: int = 4,
     """SQL replay of operators/clustering.kmeans_update: per-cell
     distances as one UNION ALL branch per centroid (same left-assoc
     sums), argmin via row_number ordered (d, cell) — the tie-break
-    array_min(struct(d, cell)) uses — then decimal-exact coordinate
-    means."""
+    kmeans_assign's min(struct(d, cell)) uses — then decimal-exact
+    coordinate means."""
     from .operators.clustering import seed_centroids
     cents = seed_centroids(k, dim)
     branches = " UNION ALL ".join(
@@ -3530,7 +3530,7 @@ def _kmeans_oracle(k: int = 8, dim: int = 64, mean_dims: int = 4,
 @query("kmeans_step", _kmeans_oracle())
 def kmeans_step(spark, sf_dir):
     """One deterministic Lloyd step (operators/clustering.py):
-    zero-shuffle argmin assignment against literal centroids + one
+    broadcast-fold argmin assignment against literal centroids + one
     k-row aggregation with decimal-exact coordinate means — the
     bit-checkable complement to similarity_ivf's ml-KMeans cells."""
     from .operators.clustering import kmeans_update, seed_centroids
@@ -4531,8 +4531,9 @@ def ts_anomaly_q(spark, sf_dir):
 
 def _seed_cells_cte(k: int, dim: int) -> str:
     """Shared CTE text: argmin cell assignment against the literal
-    seed_centroids(k, dim) — the same left-assoc squared-L2 sums and
-    (d, cell) tie-break clustering._argmin_expr codegens."""
+    seed_centroids(k, dim) — the same left-assoc squared-L2 sums
+    (similarity._sq_l2) and (d, cell) tie-break as
+    clustering.kmeans_assign and semantic_dedup's inline assignment."""
     from .operators.clustering import seed_centroids
     cents = seed_centroids(k, dim)
     branches = " UNION ALL ".join(
@@ -6775,7 +6776,7 @@ def stream_warc_q(spark, sf_dir):
 def similarity_pq_q(spark, sf_dir):
     """Product-quantization ANN (operators/pq.py — the IVF+PQ-standard
     compressed-domain search): per-subspace deterministic k-means
-    codebooks, one codegen encode projection to m=8 one-byte codes
+    codebooks, a broadcast-join encode to m=8 one-byte codes
     (64x vector compression), ADC scoring as m table lookups per
     candidate, exact cosine re-rank of the 16k-deep shortlist. Like
     similarity_ivf, codebooks aren't ANSI-SQL-replayable, so the

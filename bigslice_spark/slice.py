@@ -759,10 +759,9 @@ class Slice:
 
     # -- relational surface beyond the reference (SURVEY §2.3) -------------
 
-    def join(self, other: "Slice", on: Any = None, how: str = "inner",
-             broadcast_other: bool = False) -> "Slice":
-        right = F.broadcast(other.df) if broadcast_other else other.df
-        return self._with(self.df.join(right, on=on, how=how))
+    def join(self, other: "Slice", on: Any = None,
+             how: str = "inner") -> "Slice":
+        return self._with(self.df.join(other.df, on=on, how=how))
 
     def union(self, other: "Slice") -> "Slice":
         return self._with(self.df.unionByName(other.df))

@@ -242,14 +242,12 @@ def hub_key_fold_stress(spark):
 def ivf_cell_scaling(spark, t):
     """ivf_topk growth curve with AUTO-SIZED cells: the corpus grows
     1x/4x/16x, ncells tracks ~N/cell_target (so the per-probe
-    candidate set stays ~constant), and past the ~1500-term codegen
-    cliff the assignment auto-routes through the broadcast-join path.
-    The JSON rows record ncells and the chosen path so the curve
-    demonstrates both the sizing rule and the cliff switch surviving
-    growth — run naively with a FIXED ncells, the same 16x input makes
-    every probe scan 16x more vectors."""
-    from bigslice_spark.operators.clustering import (
-        _CODEGEN_TERM_LIMIT, seed_centroids)
+    candidate set stays ~constant), and assignment is the broadcast
+    fold at every size. The JSON rows record ncells so the curve
+    demonstrates the sizing rule surviving growth — run naively with a
+    FIXED ncells, the same 16x input makes every probe scan 16x more
+    vectors."""
+    from bigslice_spark.operators.clustering import seed_centroids
     from bigslice_spark.operators.similarity import _auto_ncells, ivf_topk
 
     emb = t["embeddings"]
@@ -263,14 +261,12 @@ def ivf_cell_scaling(spark, t):
         n = corpus.count()
         ncells = _auto_ncells(n, 256)
         centers = seed_centroids(ncells, dim)
-        path = ("unrolled" if ncells * dim <= _CODEGEN_TERM_LIMIT
-                else "join")
         t0 = time.time()
         out = ivf_topk(corpus, qs, k=10, nprobe=4, dim=dim,
                        centers=centers)
         bench.noop_write(out)
         print(json.dumps({"op": "ivf_auto_cells", "amp": amp,
-                          "rows": n, "ncells": ncells, "path": path,
+                          "rows": n, "ncells": ncells,
                           "sec": round(time.time() - t0, 2)}),
               flush=True)
 

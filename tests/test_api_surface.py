@@ -9,12 +9,15 @@ import importlib
 import inspect
 import pkgutil
 
+import pytest
+
 import bigslice_spark
 
 # Execution-policy options the operators used to take; each is now a
 # decision the code makes (see CHANGES.md).
 REMOVED_OPTIONS = {"reliable", "broadcast_labels", "broadcast_ranks",
-                   "vectorized", "persist_tokens", "broadcast_eval"}
+                   "vectorized", "persist_tokens", "broadcast_eval",
+                   "broadcast_other", "pure"}
 
 
 def _callables():
@@ -46,3 +49,29 @@ def test_no_callable_takes_a_removed_execution_option():
                  for p in inspect.signature(fn).parameters
                  if p in REMOVED_OPTIONS)
     assert bad == [], bad
+
+
+def test_nearest_centroid_operators_take_no_method():
+    """One distance fold: the vector operators no longer pick between
+    an unrolled expression-text argmin and the broadcast fold.
+    (timeseries.ewma_last's ``method`` picks a numeric domain and is
+    not a census name, so these four are checked by name.)"""
+    from bigslice_spark.operators import clustering, pq
+    for fn in (clustering.kmeans_assign, clustering.kmeans_means,
+               clustering.kmeans_train, pq.pq_encode):
+        assert "method" not in inspect.signature(fn).parameters, fn
+    assert not hasattr(clustering, "_argmin_expr")
+    assert not hasattr(clustering, "_CODEGEN_TERM_LIMIT")
+    assert not hasattr(pq, "_code_expr")
+
+
+def test_ivf_topk_accepts_only_join_and_hierarchical():
+    from bigslice_spark.operators.similarity import ivf_topk
+    assert inspect.signature(ivf_topk).parameters[
+        "assign_method"].default == "join"
+    for gone in ("auto", "unrolled"):
+        # the value is checked before the frames are touched
+        with pytest.raises(ValueError) as ex:
+            ivf_topk(None, None, assign_method=gone)
+        assert "'join'" in str(ex.value), ex.value
+        assert "'hierarchical'" in str(ex.value), ex.value

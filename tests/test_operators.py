@@ -2164,12 +2164,13 @@ def test_time_rollup_grains_are_consistent(spark, tables):
 def test_kmeans_assign_join_path_matches_unrolled_bitwise(spark, tables):
     from bigslice_spark.operators.clustering import (kmeans_assign,
                                                      seed_centroids)
+    from .unrolled_argmin import kmeans_assign_unrolled
     emb = tables["embeddings"]
     cents = seed_centroids(8, 64)
     a = {r["vec_id"]: (r["cell"], r["dist"]) for r in
-         kmeans_assign(emb, cents, method="unrolled").collect()}
+         kmeans_assign_unrolled(emb, cents).collect()}
     b = {r["vec_id"]: (r["cell"], r["dist"]) for r in
-         kmeans_assign(emb, cents, method="join").collect()}
+         kmeans_assign(emb, cents).collect()}
     assert a == b  # cells AND exact doubles
 
 
@@ -2185,7 +2186,7 @@ def test_kmeans_assign_ivf_exact_when_probing_all_groups(spark, tables):
     emb = tables["embeddings"]
     cents = seed_centroids(16, 64)
     flat = {r["vec_id"]: (r["cell"], r["dist"]) for r in
-            kmeans_assign(emb, cents, method="join").collect()}
+            kmeans_assign(emb, cents).collect()}
     ivf = {r["vec_id"]: (r["cell"], r["dist"]) for r in
            kmeans_assign_ivf(emb, cents, nprobe=4,
                              k_coarse=4).collect()}
@@ -2256,12 +2257,85 @@ def test_semantic_dedup_drops_planted_near_dup(spark):
     assert set(got) == {1, 3}, got           # 2 dropped (near-dup of 1)
     # precomputed-cell path gives the same answer
     from bigslice_spark.operators.clustering import kmeans_assign
-    cells = kmeans_assign(df, cents, method="join") \
+    cells = kmeans_assign(df, cents) \
         .select("vec_id", F.col("cell").alias("c"))
     got2 = {r["vec_id"]: r["cell"] for r in semantic_dedup(
         df.join(cells, on="vec_id"), cents, threshold=0.95,
         cell_col="c").collect()}
     assert got2 == got
+
+
+def test_nearest_centroid_fold_matches_unrolled_adversarial(spark):
+    """The _sq_l2 fold paths (kmeans_assign, kmeans_means,
+    semantic_dedup's inline projection, kmeans_assign_ivf probing every
+    group) against the unrolled distance text they replaced, on
+    adversarial inputs: equidistant centroids (the lower cell must
+    win), k=4 over 8 coordinates (the shape the text used to be picked
+    for), 32x64 (2,048 terms, past the width Janino rejects), a NULL
+    embedding row and an all-zero vector."""
+    import math
+
+    from bigslice_spark.operators.clustering import (kmeans_assign,
+                                                     kmeans_assign_ivf,
+                                                     kmeans_means,
+                                                     seed_centroids)
+    from bigslice_spark.operators.dedup import semantic_dedup
+    from .unrolled_argmin import (kmeans_assign_unrolled,
+                                  kmeans_means_unrolled)
+
+    schema = "vec_id long, embedding array<double>"
+
+    def frame(dim, k):
+        cents = seed_centroids(k, dim, scale=0.5)
+        mid = [(a + b) / 2 for a, b in zip(cents[1], cents[2])]
+        rows = [(1, mid), (2, [0.0] * dim), (3, None),
+                (4, [x * 2 for x in cents[k - 1]])]
+        rows += [(10 + i, [math.sin(i * 7 + j) / 4 for j in range(dim)])
+                 for i in range(40)]
+        return spark.createDataFrame(rows, schema), cents
+
+    # (0.5, 0.5) is exactly equidistant from both centroids, and so is
+    # the all-zero vector
+    tie = (spark.createDataFrame([(1, [0.5, 0.5]), (2, [0.0, 0.0]),
+                                  (3, None), (4, [2.0, 0.0])], schema),
+           [[0.0, 1.0], [1.0, 0.0]])
+    rows = lambda d: sorted(map(tuple, d.collect()))
+    for df, cents in (tie, frame(8, 4), frame(64, 32)):
+        ref = rows(kmeans_assign_unrolled(df, cents))
+        assert rows(kmeans_assign(df, cents)) == ref, len(cents)
+        by_id = {i: c for i, c, _ in ref}
+        assert by_id[3] == 0 and ref[2][2] is None  # NULL row
+        if len(cents) == 2:
+            assert by_id == {1: 0, 2: 0, 3: 0, 4: 1}
+        # probing every coarse group is the exact argmin
+        ivf = rows(kmeans_assign_ivf(df, cents, nprobe=2, k_coarse=2))
+        assert ([r for r in ivf if r[0] != 3]
+                == [r for r in ref if r[0] != 3]), len(cents)
+        assert (rows(kmeans_means(df, cents))
+                == rows(kmeans_means_unrolled(df, cents))), len(cents)
+        # threshold 2.0 drops nothing: the survivors carry every cell
+        sem = {r["vec_id"]: r["cell"]
+               for r in semantic_dedup(df, cents, threshold=2.0).collect()}
+        assert sem == by_id, len(cents)
+
+
+@pytest.mark.parametrize("k", [8, 32])
+def test_semantic_dedup_inline_assignment_matches_unrolled(spark, tables,
+                                                           k):
+    """semantic_dedup's inline fold projection returns the rows the
+    unrolled argmin text gives, fed in as precomputed cells."""
+    from bigslice_spark.operators.clustering import seed_centroids
+    from bigslice_spark.operators.dedup import semantic_dedup
+    from .unrolled_argmin import kmeans_assign_unrolled
+    emb = tables["embeddings"]
+    cents = seed_centroids(k, 64)
+    cells = kmeans_assign_unrolled(emb, cents) \
+        .select("vec_id", F.col("cell").alias("c"))
+    ref = semantic_dedup(emb.join(cells, on="vec_id"), cents,
+                         threshold=0.35, cell_col="c")
+    got = semantic_dedup(emb, cents, threshold=0.35)
+    rows = lambda d: sorted(map(tuple, d.collect()))
+    assert rows(got) == rows(ref)
 
 
 def test_bpe_merge_loop_hand_computed():
@@ -3459,40 +3533,32 @@ def test_ivf_accepts_precomputed_centers(spark, tables):
 
 
 def test_ivf_join_assignment_matches_unrolled_bitwise(spark, tables):
-    """Past the 512-term codegen cliff ivf_topk must route
-    assignment through the broadcast-join path (auto), and the two
-    strategies must agree on every (qid, nid, cosine, rank) — the
-    join path computes the identical left-associative float sums."""
+    """ivf_topk's broadcast-fold assignment (the default, and the
+    explicit ``join``) agrees on every (qid, nid, cosine, rank) with
+    the unrolled distance text it replaced — the fold computes the
+    identical left-associative float sums."""
     import pyspark.sql.functions as F
-    from bigslice_spark.operators.clustering import (
-        _CODEGEN_TERM_LIMIT, seed_centroids)
+    from bigslice_spark.operators.clustering import seed_centroids
     from bigslice_spark.operators.similarity import ivf_topk
+    from .unrolled_argmin import ivf_topk_unrolled
     emb = tables["embeddings"]
     qs = emb.filter(F.col("vec_id") < 3)
-    cents = seed_centroids(24, 64)          # 24*64 >> 32: past cliff
-    assert 24 * 64 > _CODEGEN_TERM_LIMIT
-    un = ivf_topk(emb, qs, k=5, nprobe=3, dim=64, centers=cents,
-                  assign_method="unrolled")
+    cents = seed_centroids(24, 64)
+    un = ivf_topk_unrolled(emb, qs, cents, k=5, nprobe=3, dim=64)
     jo = ivf_topk(emb, qs, k=5, nprobe=3, dim=64, centers=cents,
                   assign_method="join")
     au = ivf_topk(emb, qs, k=5, nprobe=3, dim=64, centers=cents)
     rows = lambda d: sorted(map(tuple, d.collect()))
     assert rows(un) == rows(jo) == rows(au)
-    # plan gate: at dim 64 NO cell count fits under the 32-term inline
-    # limit, so auto must never carry the unrolled argmin
+    # plan gate: no cell count carries the unrolled argmin
     # mega-expression (array_min over inline distances — measured
-    # interpreted/Janino-failing at these widths); only an explicit
-    # assign_method='unrolled' does. (zip_with is no longer a
+    # interpreted/Janino-failing at these widths). (zip_with is no
     # discriminator: _dot_wide is itself a zip_with fold.)
     from bigslice_spark.plans import explain_str
     assert "array_min" not in explain_str(au).lower()
     small = ivf_topk(emb, qs, k=5, nprobe=3, dim=64,
                      centers=seed_centroids(8, 64))
     assert "array_min" not in explain_str(small).lower()
-    forced = ivf_topk(emb, qs, k=5, nprobe=3, dim=64,
-                      centers=seed_centroids(8, 64),
-                      assign_method="unrolled")
-    assert "array_min" in explain_str(forced).lower()
 
 
 def test_ivf_auto_ncells_rule():
@@ -3771,24 +3837,23 @@ def test_hll_sketches_merge_like_partial_aggs(spark, tables):
 
 
 def test_pq_encode_roundtrip_properties(spark, tables):
-    # codes are m small ints; the unrolled strategy is zero-shuffle,
-    # the join strategy exactly one fused exchange; both yield the
-    # SAME codes (same argmin objective, same (d, cell) tie-break)
-    import pyspark.sql.functions as F
+    # codes are m small ints from exactly one fused exchange, and equal
+    # the unrolled least() text's codes (same argmin objective, same
+    # (d, cell) tie-break)
     from bigslice_spark.operators.pq import pq_encode, pq_train
     from bigslice_spark.plans import count_exchanges
+    from .unrolled_argmin import pq_encode_unrolled
     emb = tables["embeddings"]
     books = pq_train(emb, m=4, ksub=8, dim=64, iters=1)
     assert len(books) == 4 and all(len(b) == 8 for b in books)
-    enc = pq_encode(emb, books, dim=64, method="join")
+    enc = pq_encode(emb, books, dim=64)
     assert count_exchanges(enc) == 1
-    unrolled = pq_encode(emb, books, dim=64, method="unrolled")
-    assert count_exchanges(unrolled) == 0
     rows = enc.collect()
     assert all(len(r["codes"]) == 4 for r in rows)
     assert all(0 <= c < 8 for r in rows for c in r["codes"])
-    # deterministic and method-independent: unrolled codes equal
-    again = {r["nid"]: list(r["codes"]) for r in unrolled.collect()}
+    again = {r["nid"]: list(r["codes"])
+             for r in pq_encode_unrolled(emb, books, dim=64).collect()}
+    assert len(again) == len(rows)
     assert all(list(r["codes"]) == again[r["nid"]] for r in rows)
 
 

@@ -109,8 +109,7 @@ def test_aes_cross_validated_against_openssl():
                                                         modes)
 
     from bigslice_spark.operators.pdfcrypt import (
-        aes128_encrypt_block, aes_cbc_decrypt_nopad,
-        aes_cbc_encrypt_nopad)
+        _cbc_decrypt_py, _cbc_encrypt_py, aes128_encrypt_block)
     rnd = random.Random(20260816)
     for klen in (16, 32):
         for _ in range(8):
@@ -124,12 +123,10 @@ def test_aes_cross_validated_against_openssl():
                          for _ in range(16 * rnd.randint(1, 6)))
             ref = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
             want = ref.update(data) + ref.finalize()
-            # pure=True forces the clean-room path — this is the
-            # cross-implementation pin, not OpenSSL vs itself
-            assert aes_cbc_encrypt_nopad(key, iv, data,
-                                         pure=True) == want
-            assert aes_cbc_decrypt_nopad(key, iv, want,
-                                         pure=True) == data
+            # the clean-room CBC directly — the cross-implementation
+            # pin, not OpenSSL vs itself
+            assert _cbc_encrypt_py(key, iv, data) == want
+            assert _cbc_decrypt_py(key, iv, want) == data
 
 
 def test_aes_cbc_padding_round_trip_and_corruption():

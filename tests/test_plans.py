@@ -404,22 +404,21 @@ def test_random_projection_zero_exchanges(spark, tables):
 
 
 def test_kmeans_assign_zero_exchanges(spark, tables):
-    """auto at 8x64 = 512 terms routes the broadcast-join fold (the
-    measured-faster plan past the r9-corrected 32-term inline limit):
-    centroids arrive by BROADCAST, the per-vector argmin is a map-side
-    partial aggregate, and the only shuffle is n 1-row groups; the
-    explicitly-inlined path stays shuffle-AND-join-free."""
+    """The broadcast fold at 8x64: centroids arrive by BROADCAST, the
+    per-vector argmin is a map-side partial aggregate, and the only
+    shuffle is n 1-row groups — with the rows of the unrolled argmin
+    text it replaced."""
     from bigslice_spark.operators.clustering import (kmeans_assign,
                                                      seed_centroids)
-    auto = kmeans_assign(tables["embeddings"], seed_centroids(8, 64))
+    from .unrolled_argmin import kmeans_assign_unrolled
+    cents = seed_centroids(8, 64)
+    auto = kmeans_assign(tables["embeddings"], cents)
     plan = explain_str(auto)
     assert "BroadcastExchange" in plan
     assert count_exchanges(auto) == 1, plan[:1200]
     assert_partial_aggregation(auto)
-    inline = kmeans_assign(tables["embeddings"], seed_centroids(8, 64),
-                           method="unrolled")
-    assert count_exchanges(inline) == 0
-    assert "Join" not in explain_str(inline)
+    ref = kmeans_assign_unrolled(tables["embeddings"], cents)
+    assert sorted(auto.collect()) == sorted(ref.collect())
 
 
 def test_bm25_scalars_broadcast_and_bounded_exchanges(spark, sf_dir):
@@ -593,25 +592,21 @@ def test_semantic_dedup_no_cartesian_and_salted_cells(spark, sf_dir):
 
 
 def test_kmeans_means_is_projection_plus_single_agg(spark, tables):
-    """The per-iteration Lloyd cost, both assignment strategies: the
-    explicit inline path is zero joins + one k-row exchange; auto (at
-    8x64 = 512 terms, past the r9-corrected 32-term inline limit)
-    takes the broadcast-join fold — no extra DATA shuffle beyond the
-    assignment join-back, never a data-scale exchange."""
+    """The per-iteration Lloyd cost: the broadcast-join fold assignment
+    — no extra DATA shuffle beyond the assignment join-back, never a
+    data-scale exchange — with the rows of the unrolled argmin text it
+    replaced."""
     from bigslice_spark.operators.clustering import (kmeans_means,
                                                      seed_centroids)
-    inline = kmeans_means(tables["embeddings"], seed_centroids(8, 64),
-                          method="unrolled")
-    n = count_exchanges(inline)
-    assert n == 1, f"expected exactly 1 shuffle, plan has {n}"
-    txt = explain_str(inline)
-    assert "Join" not in txt, "inline assignment must not join"
-    assert_partial_aggregation(inline)
-    auto = kmeans_means(tables["embeddings"], seed_centroids(8, 64))
+    from .unrolled_argmin import kmeans_means_unrolled
+    cents = seed_centroids(8, 64)
+    auto = kmeans_means(tables["embeddings"], cents)
     plan = explain_str(auto)
     assert "BroadcastExchange" in plan, plan[:1200]
     assert count_exchanges(auto) <= 3, plan[:1200]
     assert_partial_aggregation(auto)
+    ref = kmeans_means_unrolled(tables["embeddings"], cents)
+    assert sorted(auto.collect()) == sorted(ref.collect())
 
 
 def test_gopher_rules_zero_exchanges(spark, sf_dir):
