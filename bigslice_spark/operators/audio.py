@@ -31,10 +31,12 @@ of the multimodal pipeline surface this engine adds (SURVEY §2.4).
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..slice import field_ddl, flatmap_rows
 
 Q_SHIFT = 20  # basis quantization: round(cos·2^20)
 
@@ -122,27 +124,17 @@ def wav_samples(df: DataFrame, media_col: str = "media",
     Arrow-batched mapInPandas pass (operators/multimodal.py decode_wav
     does the chunk walk; corruption raises there). Channels are
     interleaved as stored — callers slice per channel if they need to."""
-    import pandas as pd
+    from .multimodal import _blob, decode_wav
 
-    from .multimodal import decode_wav
+    def dec(row):
+        rid, blob = row
+        rate, _ch, data = decode_wav(
+            _blob("wav_samples", id_col, rid, blob))
+        yield rid, rate, data.astype("int32").tolist()
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, rate long, samples array<int>"
-
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[media_col]):
-                if blob is None:
-                    raise ValueError(
-                        f"NULL media blob for {id_col}={rid!r}: "
-                        "filter missing rows before wav_samples")
-                rate, _ch, data = decode_wav(bytes(blob))
-                rows.append((rid, rate, data.astype("int32").tolist()))
-            yield pd.DataFrame(rows,
-                               columns=[id_col, "rate", "samples"])
-
-    return df.select(id_col, media_col).mapInPandas(dec, schema)
+    return flatmap_rows(
+        df.select(id_col, media_col), dec,
+        f"{field_ddl(df, id_col)}, rate long, samples array<int>")
 
 
 MEL_W_SHIFT = 10  # filterbank weight quantization: round(w·2^10)
@@ -224,29 +216,20 @@ def flac_samples(df: DataFrame, media_col: str = "media",
     and ``verify_md5`` additionally pins the whole decoded stream to
     STREAMINFO's MD5 signature — corruption raises there). Samples are
     interleaved as stored, the wav_samples contract."""
-    import pandas as pd
-
     from .flac import decode_flac
+    from .multimodal import _blob
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = (f"{id_col} {id_type}, rate long, channels int, "
-              f"samples array<int>")
+    def dec(row):
+        rid, blob = row
+        rate, ch, data = decode_flac(
+            _blob("flac_samples", id_col, rid, blob),
+            verify_md5=verify_md5)
+        yield rid, rate, ch, data.tolist()
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[media_col]):
-                if blob is None:
-                    raise ValueError(
-                        f"NULL media blob for {id_col}={rid!r}: "
-                        "filter missing rows before flac_samples")
-                rate, ch, data = decode_flac(bytes(blob),
-                                             verify_md5=verify_md5)
-                rows.append((rid, rate, ch, data.tolist()))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "rate", "channels", "samples"])
-
-    return df.select(id_col, media_col).mapInPandas(dec, schema)
+    return flatmap_rows(
+        df.select(id_col, media_col), dec,
+        f"{field_ddl(df, id_col)}, rate long, channels int, "
+        f"samples array<int>")
 
 
 _PCM_CODECS = {"twos": ">i2", "sowt": "<i2"}  # QuickTime raw PCM16
@@ -269,58 +252,49 @@ def mp4_pcm(df: DataFrame, media_col: str = "media",
     Channels are interleaved as stored (same contract as
     wav_samples)."""
     import numpy as np
-    import pandas as pd
 
     from .mp4 import demux_samples, parse_mp4
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, track_id int, samples array<int>"
+    def dec(row):
+        rid, blob = row
+        blob = bytes(blob or b"")
+        if not blob:
+            return                           # missing blob: no rows
+        m = parse_mp4(blob)
+        for t in m.tracks:
+            if t.handler != "soun":
+                continue
+            if t.codec == "ima4":
+                from .adpcm import decode_ima4
+                yield rid, t.track_id, decode_ima4(demux_samples(blob, t))
+                continue
+            if t.codec in ("ulaw", "alaw"):  # G.711 log PCM
+                table = np.asarray(
+                    G711_ULAW if t.codec == "ulaw" else G711_ALAW,
+                    dtype=np.int32)
+                codes = np.frombuffer(
+                    b"".join(demux_samples(blob, t)), np.uint8)
+                yield rid, t.track_id, table[codes].tolist()
+                continue
+            dt = _PCM_CODECS.get(t.codec)
+            if dt is None:
+                raise NotImplementedError(
+                    f"audio codec {t.codec!r} needs libraries this "
+                    f"container lacks; raw PCM16 ('twos'/'sowt'), IMA "
+                    f"ADPCM ('ima4') and G.711 ('ulaw'/'alaw') decode "
+                    f"(container demux itself is real: "
+                    f"operators/mp4.py)")
+            pcm = b"".join(demux_samples(blob, t))
+            if len(pcm) % 2:
+                raise ValueError(
+                    f"corrupt PCM track {t.track_id}: odd byte count "
+                    f"{len(pcm)}")
+            yield (rid, t.track_id,
+                   np.frombuffer(pcm, dt).astype("int32").tolist())
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[media_col]):
-                blob = bytes(blob or b"")
-                if not blob:
-                    continue                 # missing blob: no rows
-                m = parse_mp4(blob)
-                for t in m.tracks:
-                    if t.handler != "soun":
-                        continue
-                    if t.codec == "ima4":
-                        from .adpcm import decode_ima4
-                        rows.append((rid, t.track_id, decode_ima4(
-                            demux_samples(blob, t))))
-                        continue
-                    if t.codec in ("ulaw", "alaw"):  # G.711 log PCM
-                        table = np.asarray(
-                            G711_ULAW if t.codec == "ulaw"
-                            else G711_ALAW, dtype=np.int32)
-                        codes = np.frombuffer(
-                            b"".join(demux_samples(blob, t)), np.uint8)
-                        rows.append((rid, t.track_id,
-                                     table[codes].tolist()))
-                        continue
-                    dt = _PCM_CODECS.get(t.codec)
-                    if dt is None:
-                        raise NotImplementedError(
-                            f"audio codec {t.codec!r} needs libraries "
-                            f"this container lacks; raw PCM16 "
-                            f"('twos'/'sowt'), IMA ADPCM ('ima4') and "
-                            f"G.711 ('ulaw'/'alaw') decode (container "
-                            f"demux itself is real: operators/mp4.py)")
-                    pcm = b"".join(demux_samples(blob, t))
-                    if len(pcm) % 2:
-                        raise ValueError(
-                            f"corrupt PCM track {t.track_id}: odd "
-                            f"byte count {len(pcm)}")
-                    rows.append((rid, t.track_id,
-                                 np.frombuffer(pcm, dt)
-                                 .astype("int32").tolist()))
-            yield pd.DataFrame(rows,
-                               columns=[id_col, "track_id", "samples"])
-
-    return df.select(id_col, media_col).mapInPandas(dec, schema)
+    return flatmap_rows(
+        df.select(id_col, media_col), dec,
+        f"{field_ddl(df, id_col)}, track_id int, samples array<int>")
 
 
 def active_segments(df: DataFrame, samples_col: str = "samples",

@@ -161,15 +161,11 @@ def kmeans_update(df: DataFrame, centroids: list[list[float]],
     means work identically; the registry entry keeps the output narrow
     for the driver's hash compare). Input floats are exact in ≤7
     significant digits, so decimal(38,scale) sums are exact and the
-    mean double = exact_sum / count is bitwise engine-neutral."""
-    assigned = kmeans_assign(df, centroids, vec_col, id_col)
-    j = assigned.join(_vecs(df, vec_col, id_col), on=id_col)
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for m in range(mean_dims):
-        aggs.append(
-            (F.sum(F.col("__v__")[m].cast(f"decimal(38,{scale})"))
-             .cast("double") / F.count(F.lit(1))).alias(f"m{m}"))
-    return j.groupBy("cell").agg(*aggs)
+    mean double = exact_sum / count is bitwise engine-neutral. A
+    projection of :func:`kmeans_means`; column pruning drops the sums
+    of the unselected coordinates."""
+    return kmeans_means(df, centroids, vec_col, id_col, scale).select(
+        "cell", "n", *[f"m{m}" for m in range(mean_dims)])
 
 
 def kmeans_means(df: DataFrame, centroids: list[list[float]],

@@ -124,8 +124,7 @@ def decontaminate_bloom(train: DataFrame, eval_df: DataFrame,
 
 def ngram_novelty(df: DataFrame, reference: DataFrame,
                   text_col: str = "text", id_col: str = "doc_id",
-                  ngram_w: int = 5,
-                  broadcast_reference: bool = True) -> DataFrame:
+                  ngram_w: int = 5) -> DataFrame:
     """Per-document novelty against a reference corpus: the fraction of
     a document's DISTINCT word ``ngram_w``-grams that do NOT occur
     anywhere in ``reference`` — the standard curation signal for
@@ -141,8 +140,10 @@ def ngram_novelty(df: DataFrame, reference: DataFrame,
     join in via a map-side broadcast hash join (left outer, so unseen
     grams survive as nulls), then one narrow per-doc aggregation that
     clusters on the shingle window's own partitioning. The corpus never
-    shuffles on gram text. ``broadcast_reference=False`` degrades to a
-    shuffle join for beyond-broadcast references. NOTE: a Bloom-filter
+    shuffles on gram text. The reference side is always broadcast, as
+    in :func:`contamination_report`, so its distinct grams must fit in
+    executor memory; references beyond that bound need a shuffle join
+    this operator does not offer. NOTE: a Bloom-filter
     reference is deliberately NOT offered here — Bloom false positives
     would mark genuinely novel grams as seen and silently UNDERCOUNT
     novelty, unlike decontaminate_bloom where the exact verify join
@@ -154,9 +155,7 @@ def ngram_novelty(df: DataFrame, reference: DataFrame,
                                distinct=True)
                  .select("tok").distinct()
                  .withColumn("__seen", F.lit(1)))
-    if broadcast_reference:
-        ref_grams = F.broadcast(ref_grams)
-    joined = doc_grams.join(ref_grams, on="tok", how="left")
+    joined = doc_grams.join(F.broadcast(ref_grams), on="tok", how="left")
     novel = F.sum(F.when(F.col("__seen").isNull(), 1)
                   .otherwise(0)).alias("novel_grams")
     return (joined.groupBy(id_col)

@@ -28,9 +28,10 @@ LLM-pipeline surface (SURVEY.md §2.4), like the URL tooling.
 from __future__ import annotations
 
 from html.parser import HTMLParser
-from typing import Iterator
 
 from pyspark.sql import DataFrame
+
+from ..slice import field_ddl, flatmap_rows
 
 _SKIP = frozenset(("script", "style", "noscript", "template"))
 _BLOCK = frozenset((
@@ -130,24 +131,16 @@ def html_extract(df: DataFrame, html_col: str = "html",
     """Arrow-batched extraction: (id, title, text, main_text,
     n_links, n_blocks) per input row. NULL html → empty extraction
     (missing page, not an error)."""
-    import pandas as pd
+    def run(row):
+        rid, h = row
+        r = extract_text(h if isinstance(h, str) else "", max_link_density)
+        yield (rid, r["title"], r["text"], r["main_text"], r["n_links"],
+               r["n_blocks"])
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for rid, h in zip(pdf[id_col], pdf[html_col]):
-                r = extract_text(h if isinstance(h, str) else "",
-                                 max_link_density)
-                out.append((rid, r["title"], r["text"], r["main_text"],
-                            r["n_links"], r["n_blocks"]))
-            yield pd.DataFrame(out, columns=[
-                id_col, "title", "text", "main_text", "n_links",
-                "n_blocks"])
-
-    id_ddl = df.schema[id_col].dataType.simpleString()
-    return df.mapInPandas(
-        run, schema=f"{id_col} {id_ddl}, title string, text string, "
-                    f"main_text string, n_links int, n_blocks int")
+    return flatmap_rows(
+        df.select(id_col, html_col), run,
+        f"{field_ddl(df, id_col)}, title string, text string, "
+        f"main_text string, n_links int, n_blocks int")
 
 
 class _LinkCollector(HTMLParser):
@@ -223,23 +216,16 @@ def html_links(df: DataFrame, html_col: str = "html",
     url_normalize). Same Arrow-batched zero-shuffle shape as
     html_extract; relative hrefs resolve against ``base_col`` when
     given (urljoin). Pages with no links contribute no rows."""
-    import pandas as pd
+    def run(row):
+        rid, h, b = row if base_col is not None else (*row, None)
+        for resolved, raw, anchor in extract_links(
+                h if isinstance(h, str) else "",
+                b if isinstance(b, str) else None):
+            yield rid, resolved, raw, anchor
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            bases = (pdf[base_col] if base_col is not None
-                     else [None] * len(pdf))
-            for rid, h, b in zip(pdf[id_col], pdf[html_col], bases):
-                links = extract_links(
-                    h if isinstance(h, str) else "",
-                    b if isinstance(b, str) else None)
-                for resolved, raw, anchor in links:
-                    out.append((rid, resolved, raw, anchor))
-            yield pd.DataFrame(out, columns=[
-                id_col, "href", "raw_href", "anchor"])
-
-    id_ddl = df.schema[id_col].dataType.simpleString()
-    return df.mapInPandas(
-        run, schema=f"{id_col} {id_ddl}, href string, "
-                    f"raw_href string, anchor string")
+    cols = [id_col, html_col] + ([base_col] if base_col is not None
+                                 else [])
+    return flatmap_rows(
+        df.select(*cols), run,
+        f"{field_ddl(df, id_col)}, href string, raw_href string, "
+        f"anchor string")

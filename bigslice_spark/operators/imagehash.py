@@ -33,13 +33,12 @@ cartesian (the dedup_minhash/simhash plan contract).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..checkpoint import materialize
-from .multimodal import decode_image, resize_rgb
+from ..slice import field_ddl, flatmap_rows
+from .multimodal import _blob, decode_image, resize_rgb
 
 
 def dhash_raster(raster: bytes, w: int, h: int, hash_w: int = 8,
@@ -72,27 +71,17 @@ def image_dhash(df: DataFrame, media_col: str = "media",
     """(id_col, dhash long): the 64-bit perceptual hash per image.
     One Arrow-batched mapInPandas pass; undecodable blobs raise (the
     honest-raise codec contract)."""
-    import pandas as pd
-
     if hash_w * hash_h != 64:
         raise ValueError("image_dhash packs exactly 64 bits: "
                          "hash_w * hash_h must be 64")
-    id_type = df.schema[id_col].dataType.simpleString()
 
-    def hsh(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[media_col]):
-                if blob is None:
-                    raise ValueError(
-                        f"NULL media blob for {id_col}={rid!r}: "
-                        "filter missing rows before image_dhash")
-                rows.append((rid, dhash_bytes(bytes(blob),
-                                              hash_w, hash_h)))
-            yield pd.DataFrame(rows, columns=[id_col, "dhash"])
+    def hsh(row):
+        rid, blob = row
+        yield rid, dhash_bytes(_blob("image_dhash", id_col, rid, blob),
+                               hash_w, hash_h)
 
-    return df.select(id_col, media_col).mapInPandas(
-        hsh, schema=f"{id_col} {id_type}, dhash long")
+    return flatmap_rows(df.select(id_col, media_col), hsh,
+                        f"{field_ddl(df, id_col)}, dhash long")
 
 
 def dhash_pairs(hashes: DataFrame, id_col: str = "id",
@@ -152,8 +141,6 @@ def video_dhash(df: DataFrame, media_col: str = "media",
     is uniform frame geometry per call — mixed-geometry corpora
     partition by geometry first). One Arrow pass for decode, plain
     Python core per raster."""
-    import pandas as pd
-
     from .multimodal import frame_sample
     if width <= 0 or height <= 0:
         raise ValueError("video_dhash needs the frame geometry "
@@ -161,26 +148,18 @@ def video_dhash(df: DataFrame, media_col: str = "media",
     frames = frame_sample(
         df.select(F.col(id_col).alias("id"), F.col(media_col)
                   .alias("media")), every_n=every_n, fake=False)
-    id_type = df.schema[id_col].dataType.simpleString()
 
-    def hsh(batches):
-        for pdf in batches:
-            rows = []
-            for rid, idx, raster in zip(pdf["id"], pdf["frame_idx"],
-                                        pdf["frame"]):
-                raster = bytes(raster)
-                if len(raster) != width * height * 3:
-                    raise ValueError(
-                        f"frame of {len(raster)} bytes does not match "
-                        f"the declared {width}x{height} geometry")
-                rows.append((rid, int(idx),
-                             dhash_raster(raster, width, height)))
-            yield pd.DataFrame(rows,
-                               columns=["id", "frame_idx", "dhash"])
+    def hsh(row):
+        rid, idx, raster = row
+        raster = bytes(raster)
+        if len(raster) != width * height * 3:
+            raise ValueError(
+                f"frame of {len(raster)} bytes does not match the "
+                f"declared {width}x{height} geometry")
+        yield rid, int(idx), dhash_raster(raster, width, height)
 
-    out = frames.mapInPandas(
-        hsh, schema=f"id {id_type}, frame_idx int, dhash long")
-    return out.withColumnRenamed("id", id_col) if id_col != "id" else out
+    return flatmap_rows(frames, hsh,
+                        f"{field_ddl(df, id_col)}, frame_idx int, dhash long")
 
 
 def video_pairs(frame_hashes: DataFrame, id_col: str = "id",

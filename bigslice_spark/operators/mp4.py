@@ -31,6 +31,7 @@ from __future__ import annotations
 import struct
 from dataclasses import dataclass, field
 
+from ..slice import flatmap_rows
 
 # ---------------------------------------------------------------------
 # Box-tree primitives
@@ -444,33 +445,22 @@ def mp4_meta(df, id_col: str = "id", payload_col: str = "media"):
     sample_count, sample_bytes). Exact integers only — replays
     bitwise in any engine. One output row per track; a corrupt blob
     raises (hostile-input contract)."""
-    import pandas as pd
+    def metas(row):
+        rid, blob = row
+        blob = bytes(blob or b"")
+        if not blob:
+            return                             # missing blob: no rows
+        m = parse_mp4(blob)
+        for t in m.tracks:
+            yield (int(rid), m.brand, m.duration_ms, t.track_id,
+                   t.handler, t.codec, t.width, t.height,
+                   t.sample_count, sum(n for _o, n in t.samples))
 
-    def metas(batches):
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[payload_col]):
-                blob = bytes(blob or b"")
-                if not blob:
-                    continue                   # missing blob: no rows
-                m = parse_mp4(blob)
-                for t in m.tracks:
-                    rows.append((
-                        int(rid), m.brand, m.duration_ms, t.track_id,
-                        t.handler, t.codec, t.width, t.height,
-                        t.sample_count,
-                        sum(n for _o, n in t.samples)))
-            yield pd.DataFrame(rows, columns=[
-                "id", "brand", "duration_ms", "track_id", "handler",
-                "codec", "width", "height", "sample_count",
-                "sample_bytes"])
-
-    return df.mapInPandas(
-        metas,
-        schema="id long, brand string, duration_ms long, "
-               "track_id int, handler string, codec string, "
-               "width int, height int, sample_count int, "
-               "sample_bytes long")
+    return flatmap_rows(
+        df.select(id_col, payload_col), metas,
+        "id long, brand string, duration_ms long, track_id int, "
+        "handler string, codec string, width int, height int, "
+        "sample_count int, sample_bytes long")
 
 
 def mp4_demux(df, id_col: str = "id", payload_col: str = "media",
@@ -481,27 +471,19 @@ def mp4_demux(df, id_col: str = "id", payload_col: str = "media",
     one big opaque file into decoder-sized work units WITHOUT codec
     decode (pure sample-table byte slicing, parallel across files via
     Arrow batches). ``handler`` filters tracks ('vide'/'soun')."""
-    import pandas as pd
+    def demux(row):
+        rid, blob = row
+        blob = bytes(blob or b"")
+        if not blob:
+            return                             # missing blob: no rows
+        m = parse_mp4(blob)
+        for t in m.tracks:
+            if handler is not None and t.handler != handler:
+                continue
+            for i, payload in enumerate(demux_samples(blob, t)):
+                yield int(rid), t.track_id, t.handler, i, payload
 
-    def demux(batches):
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[payload_col]):
-                blob = bytes(blob or b"")
-                if not blob:
-                    continue
-                m = parse_mp4(blob)
-                for t in m.tracks:
-                    if handler is not None and t.handler != handler:
-                        continue
-                    for i, payload in enumerate(
-                            demux_samples(blob, t)):
-                        rows.append((int(rid), t.track_id, t.handler,
-                                     i, payload))
-            yield pd.DataFrame(rows, columns=[
-                "id", "track_id", "handler", "sample_idx", "sample"])
-
-    return df.mapInPandas(
-        demux,
-        schema="id long, track_id int, handler string, "
-               "sample_idx int, sample binary")
+    return flatmap_rows(
+        df.select(id_col, payload_col), demux,
+        "id long, track_id int, handler string, sample_idx int, "
+        "sample binary")

@@ -27,10 +27,11 @@ transfer — an Arrow batch must fit comfortably in executor memory.
 from __future__ import annotations
 
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..slice import field_ddl, flatmap_rows
 
 MEDIA_SCHEMA = ("id long, media binary, mime string, width int, height int, "
                 "n_frames int")
@@ -390,6 +391,17 @@ def decode_image(blob: bytes) -> tuple[int, int, bytes]:
     raise ValueError("not a PPM/BMP payload")
 
 
+def _blob(op: str, id_col: str, rid, blob) -> bytes:
+    """The honest-raise decoders' missing-blob check: a NULL or empty
+    payload names the row and the operator instead of surfacing as a
+    misleading codec error."""
+    if not blob:
+        raise ValueError(
+            f"NULL media blob for {id_col}={rid!r}: "
+            f"filter missing rows before {op}")
+    return bytes(blob)
+
+
 def decode_wav(blob: bytes) -> tuple[int, int, "object"]:
     """WAV PCM16 → (sample_rate, n_channels, int16 numpy samples);
     corruption surfaces as ValueError only."""
@@ -449,7 +461,6 @@ def extract_features(df: DataFrame, fake: bool = True,
     container lacks). ``fake=True`` keeps the deterministic
     byte-histogram descriptor at any ``feat_dim``."""
     import numpy as np
-    import pandas as pd
 
     if not fake and feat_dim != 8:
         raise ValueError("fake=False emits the fixed 8-wide "
@@ -483,30 +494,26 @@ def extract_features(df: DataFrame, fake: bool = True,
         mean = int(data.sum(dtype=np.int64)) / n if n else 0.0
         return [2.0, float(rate), float(ch), 16.0, n, mean, 0.0, 0.0]
 
-    def feats(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf["id"], pdf["media"]):
-                b = np.frombuffer(blob or b"", dtype=np.uint8)
-                if not fake:
-                    # NULL and b'' payloads are MISSING blobs (empty
-                    # bytes is the common missing-blob encoding), not
-                    # decode errors — zero descriptor; non-empty
-                    # garbage still raises (a corrupt file must fail
-                    # loudly, and never by falling through a magic
-                    # check into a misleading wrong-format error)
-                    rows.append((int(rid), int(len(b)),
-                                 [0.0] * feat_dim if len(b) == 0
-                                 else real_feat(bytes(blob))))
-                elif len(b) == 0:
-                    rows.append((int(rid), 0, [0.0] * feat_dim))
-                else:
-                    hist = np.bincount(b % feat_dim, minlength=feat_dim)
-                    rows.append((int(rid), int(len(b)),
-                                 (hist / len(b)).tolist()))
-            yield pd.DataFrame(rows, columns=["id", "n_bytes", "feat"])
+    def feats(row):
+        rid, blob = row
+        b = np.frombuffer(blob or b"", dtype=np.uint8)
+        if not fake:
+            # NULL and b'' payloads are MISSING blobs (empty bytes is
+            # the common missing-blob encoding), not decode errors —
+            # zero descriptor; non-empty garbage still raises (a
+            # corrupt file must fail loudly, and never by falling
+            # through a magic check into a misleading wrong-format
+            # error)
+            yield (int(rid), int(len(b)),
+                   [0.0] * feat_dim if len(b) == 0
+                   else real_feat(bytes(blob)))
+        elif len(b) == 0:
+            yield int(rid), 0, [0.0] * feat_dim
+        else:
+            hist = np.bincount(b % feat_dim, minlength=feat_dim)
+            yield int(rid), int(len(b)), (hist / len(b)).tolist()
 
-    return df.mapInPandas(feats, schema=out_schema)
+    return flatmap_rows(df.select("id", "media"), feats, out_schema)
 
 
 def frame_sample(df: DataFrame, every_n: int = 10,
@@ -526,55 +533,48 @@ def frame_sample(df: DataFrame, every_n: int = 10,
     still need libraries this environment lacks and raise.
     ``fake=True`` keeps the deterministic byte-slice stub for
     shape-only pipelines."""
-    import pandas as pd
-
     _MJPEG = ("jpeg", "mjpa", "mjpg", "MJPG")
 
-    def sample(batches):
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf["id"], pdf["media"]):
-                blob = bytes(blob or b"")
-                if fake:
-                    n = max(1, len(blob) // 64)
-                    for i in range(0, n, every_n):
-                        rows.append((int(rid), i,
-                                     blob[i * 64:(i + 1) * 64]))
-                    continue
-                if blob[:6] in (b"GIF87a", b"GIF89a"):
-                    from .gif import decode_gif_frames
-                    _w, _h, frames = decode_gif_frames(blob)
-                elif blob[4:8] == b"ftyp":
-                    from .jpeg import decode_jpeg
-                    from .mp4 import demux_samples, parse_mp4
-                    m = parse_mp4(blob)
-                    vid = [t for t in m.tracks if t.handler == "vide"]
-                    if not vid:
-                        continue                 # no video: no frames
-                    if vid[0].codec not in _MJPEG:
-                        raise NotImplementedError(
-                            f"video codec {vid[0].codec!r} needs "
-                            f"libraries this container lacks; only "
-                            f"MJPEG tracks decode (container demux "
-                            f"itself is real: operators/mp4.py)")
-                    samples = demux_samples(blob, vid[0])
-                    # unlike GIF composition, MJPEG samples decode
-                    # independently — only the sampled ones pay
-                    for i in range(0, len(samples), every_n):
-                        rows.append((int(rid), i,
-                                     decode_jpeg(samples[i])[2]))
-                    continue
-                elif len(blob) == 0:
-                    continue                     # missing blob: no rows
-                else:
-                    _w, _h, raster = decode_image(blob)
-                    frames = [raster]
-                for i in range(0, len(frames), every_n):
-                    rows.append((int(rid), i, frames[i]))
-            yield pd.DataFrame(rows, columns=["id", "frame_idx", "frame"])
+    def sample(row):
+        rid, blob = row
+        rid, blob = int(rid), bytes(blob or b"")
+        if fake:
+            n = max(1, len(blob) // 64)
+            for i in range(0, n, every_n):
+                yield rid, i, blob[i * 64:(i + 1) * 64]
+            return
+        if blob[:6] in (b"GIF87a", b"GIF89a"):
+            from .gif import decode_gif_frames
+            _w, _h, frames = decode_gif_frames(blob)
+        elif blob[4:8] == b"ftyp":
+            from .jpeg import decode_jpeg
+            from .mp4 import demux_samples, parse_mp4
+            m = parse_mp4(blob)
+            vid = [t for t in m.tracks if t.handler == "vide"]
+            if not vid:
+                return                           # no video: no frames
+            if vid[0].codec not in _MJPEG:
+                raise NotImplementedError(
+                    f"video codec {vid[0].codec!r} needs libraries "
+                    f"this container lacks; only MJPEG tracks decode "
+                    f"(container demux itself is real: "
+                    f"operators/mp4.py)")
+            samples = demux_samples(blob, vid[0])
+            # unlike GIF composition, MJPEG samples decode
+            # independently — only the sampled ones pay
+            for i in range(0, len(samples), every_n):
+                yield rid, i, decode_jpeg(samples[i])[2]
+            return
+        elif len(blob) == 0:
+            return                               # missing blob: no rows
+        else:
+            _w, _h, raster = decode_image(blob)
+            frames = [raster]
+        for i in range(0, len(frames), every_n):
+            yield rid, i, frames[i]
 
-    return df.mapInPandas(sample, schema="id long, frame_idx int, "
-                                         "frame binary")
+    return flatmap_rows(df.select("id", "media"), sample,
+                        "id long, frame_idx int, frame binary")
 
 
 def resize_rgb(raster: bytes, w: int, h: int, out_w: int,
@@ -612,19 +612,12 @@ def resize_images(df: "DataFrame", out_w: int, out_h: int,
     where raster is the out_w x out_h x 3 RGB bytes. Same mapInPandas
     shape as extract_features; undecodable payloads raise (the
     hostile-input contract of the codecs applies)."""
-    import pandas as pd
+    def run(row):
+        rid, blob = row
+        w, h, px = decode_image(bytes(blob))
+        yield rid, out_w, out_h, resize_rgb(px, w, h, out_w, out_h)
 
-    def run(batches):
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[blob_col]):
-                w, h, px = decode_image(bytes(blob))
-                rows.append((rid, out_w, out_h,
-                             resize_rgb(px, w, h, out_w, out_h)))
-            yield pd.DataFrame(rows, columns=[
-                id_col, "width", "height", "raster"])
-
-    id_ddl = df.schema[id_col].dataType.simpleString()
-    return df.mapInPandas(
-        run, schema=f"{id_col} {id_ddl}, width int, height int, "
-                    f"raster binary")
+    return flatmap_rows(
+        df.select(id_col, blob_col), run,
+        f"{field_ddl(df, id_col)}, width int, height int, "
+        f"raster binary")

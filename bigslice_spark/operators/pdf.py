@@ -47,9 +47,10 @@ from __future__ import annotations
 
 import re
 import zlib
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
+
+from ..slice import field_ddl, flatmap_rows
 
 # ---------------------------------------------------------------- build
 
@@ -1110,24 +1111,15 @@ def pdf_pages(df: DataFrame, media_col: str = "media",
     in document order, text per extract_text. One Arrow-batched
     mapInPandas pass; corrupt xrefs / truncated or undecodable streams
     / unsupported constructs raise (honest-raise codec contract)."""
-    import pandas as pd
+    from .multimodal import _blob
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    schema = f"{id_col} {id_type}, page int, text string, n_chars long"
+    def dec(row):
+        rid, blob = row
+        doc = PdfDoc(_blob("pdf_pages", id_col, rid, blob))
+        for p, content in enumerate(doc.pages()):
+            text = extract_text(content)
+            yield rid, p, text, len(text)
 
-    def dec(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for rid, blob in zip(pdf[id_col], pdf[media_col]):
-                if blob is None:
-                    raise ValueError(
-                        f"NULL media blob for {id_col}={rid!r}: "
-                        "filter missing rows before pdf_pages")
-                doc = PdfDoc(bytes(blob))
-                for p, content in enumerate(doc.pages()):
-                    text = extract_text(content)
-                    rows.append((rid, p, text, len(text)))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "page", "text", "n_chars"])
-
-    return df.select(id_col, media_col).mapInPandas(dec, schema)
+    return flatmap_rows(
+        df.select(id_col, media_col), dec,
+        f"{field_ddl(df, id_col)}, page int, text string, n_chars long")

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from .local_rows import local_df
 from .operators.text import BPE_PRETOKEN_RE, WS_CHARS
 from .session import Session, load_tables
-from .slice import Slice
+from .slice import Slice, flatmap_rows
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -5596,35 +5596,31 @@ def multimodal_decode_q(spark, sf_dir):
     match. Fixture generation is a bounded-width pandas UDF (8x8x3 +
     header bytes per row); decode itself is the production mapInPandas
     path."""
-    import pandas as pd
     from .operators.multimodal import (extract_features, make_bmp,
                                        make_png, make_ppm, make_wav,
                                        pack_media)
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 2 == 0:
-                    px = bytes((d * 7 + i) % 256 for i in range(192))
-                    if d % 4 == 0:
-                        blob = make_bmp(8, 8, px)
-                    elif d % 8 == 2:
-                        blob = make_png(8, 8, px,
-                                        filter_type=(d // 8) % 5)
-                    else:
-                        blob = make_ppm(8, 8, px)
-                else:
-                    blob = make_wav(8000, [
-                        ((d * 31 + i * 17) % 65536) - 32768
-                        for i in range(64)])
-                rows.append((d, blob))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def gen(row):
+        d = int(row[0])
+        if d % 2 == 0:
+            px = bytes((d * 7 + i) % 256 for i in range(192))
+            if d % 4 == 0:
+                blob = make_bmp(8, 8, px)
+            elif d % 8 == 2:
+                blob = make_png(8, 8, px,
+                                filter_type=(d // 8) % 5)
+            else:
+                blob = make_ppm(8, 8, px)
+        else:
+            blob = make_wav(8000, [
+                ((d * 31 + i * 17) % 65536) - 32768
+                for i in range(64)])
+        yield d, blob
 
-    media = t["documents"].select("doc_id").mapInPandas(
-        gen, schema="doc_id long, media binary")
+    media = flatmap_rows(
+        t["documents"].select("doc_id"), gen,
+        "doc_id long, media binary")
     out = extract_features(pack_media(media, "media", "doc_id"),
                            fake=False)
     return out.select(
@@ -5699,66 +5695,60 @@ def multimodal_jpeg_q(spark, sf_dir):
     exact integer-sum mean. Fixture generation is bounded (<=1 KiB
     per row) inside the same Arrow batch as the decode."""
     import numpy as np
-    import pandas as pd
     from .operators.jpeg import make_jpeg
     from .operators.multimodal import decode_image
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                if d % 2 == 0:
-                    nx, ny = 1 + d % 4, 1 + (d // 2) % 2
-                    a = np.zeros((ny * 8, nx * 8), np.uint8)
-                    for b in range(nx * ny):
-                        r, c = divmod(b, nx)
-                        a[r * 8:(r + 1) * 8, c * 8:(c + 1) * 8] = \
-                            (3 * d + 41 * b) % 256
-                    px = np.repeat(a[:, :, None], 3, axis=2).tobytes()
-                    # d%8==4: PROGRESSIVE grayscale (multi-block: DC
-                    # refine + AC band scans over real block rasters);
-                    # d%4==2: restart markers (baseline only)
-                    blob = make_jpeg(
-                        nx * 8, ny * 8, px, quality=100, grayscale=True,
-                        restart_interval=2 if d % 4 == 2 else 0,
-                        progressive=(d % 8 == 4))
-                else:
-                    px = bytes(((3 * d) % 256, (5 * d) % 256,
-                                (7 * d) % 256)) * 256
-                    # d%8>=5: PROGRESSIVE color (interleaved DC scan +
-                    # per-component AC scans, subsampled chroma grids)
-                    blob = make_jpeg(
-                        16, 16, px, quality=100,
-                        subsampling="4:2:0" if d % 4 == 1 else "4:4:4",
-                        progressive=(d % 8 >= 5))
-                w, h, out = decode_image(blob)
-                arr = np.frombuffer(out, np.uint8).reshape(h, w, 3)
-                red = arr[:, :, 0].astype(np.int64)
-                mean_r = int(red.sum()) / (w * h)
-                if d % 2 == 0:
-                    blks = (red.reshape(h // 8, 8, w // 8, 8)
-                            .transpose(0, 2, 1, 3).reshape(-1, 64))
-                    uniform = bool(
-                        (arr[:, :, 0] == arr[:, :, 1]).all()
-                        and (arr[:, :, 0] == arr[:, :, 2]).all()
-                        and (blks.min(1) == blks.max(1)).all())
-                    checksum = int(((np.arange(len(blks)) + 1)
-                                    * blks[:, 0]).sum())
-                else:
-                    uniform = bool((arr == arr[0, 0]).all())
-                    checksum = (int(arr[0, 0, 0])
-                                + 1000 * int(arr[0, 0, 1])
-                                + 1000000 * int(arr[0, 0, 2]))
-                rows.append((d, w, h, mean_r, checksum, uniform))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "mean_r", "checksum",
-                "uniform"])
+    def gen(row):
+        d = int(row[0])
+        if d % 2 == 0:
+            nx, ny = 1 + d % 4, 1 + (d // 2) % 2
+            a = np.zeros((ny * 8, nx * 8), np.uint8)
+            for b in range(nx * ny):
+                r, c = divmod(b, nx)
+                a[r * 8:(r + 1) * 8, c * 8:(c + 1) * 8] = \
+                    (3 * d + 41 * b) % 256
+            px = np.repeat(a[:, :, None], 3, axis=2).tobytes()
+            # d%8==4: PROGRESSIVE grayscale (multi-block: DC
+            # refine + AC band scans over real block rasters);
+            # d%4==2: restart markers (baseline only)
+            blob = make_jpeg(
+                nx * 8, ny * 8, px, quality=100, grayscale=True,
+                restart_interval=2 if d % 4 == 2 else 0,
+                progressive=(d % 8 == 4))
+        else:
+            px = bytes(((3 * d) % 256, (5 * d) % 256,
+                        (7 * d) % 256)) * 256
+            # d%8>=5: PROGRESSIVE color (interleaved DC scan +
+            # per-component AC scans, subsampled chroma grids)
+            blob = make_jpeg(
+                16, 16, px, quality=100,
+                subsampling="4:2:0" if d % 4 == 1 else "4:4:4",
+                progressive=(d % 8 >= 5))
+        w, h, out = decode_image(blob)
+        arr = np.frombuffer(out, np.uint8).reshape(h, w, 3)
+        red = arr[:, :, 0].astype(np.int64)
+        mean_r = int(red.sum()) / (w * h)
+        if d % 2 == 0:
+            blks = (red.reshape(h // 8, 8, w // 8, 8)
+                    .transpose(0, 2, 1, 3).reshape(-1, 64))
+            uniform = bool(
+                (arr[:, :, 0] == arr[:, :, 1]).all()
+                and (arr[:, :, 0] == arr[:, :, 2]).all()
+                and (blks.min(1) == blks.max(1)).all())
+            checksum = int(((np.arange(len(blks)) + 1)
+                            * blks[:, 0]).sum())
+        else:
+            uniform = bool((arr == arr[0, 0]).all())
+            checksum = (int(arr[0, 0, 0])
+                        + 1000 * int(arr[0, 0, 1])
+                        + 1000000 * int(arr[0, 0, 2]))
+        yield d, w, h, mean_r, checksum, uniform
 
-    return t["documents"].select("doc_id").mapInPandas(
-        gen, schema="doc_id long, width int, height int, mean_r double, "
-                    "checksum long, uniform boolean")
+    return flatmap_rows(
+        t["documents"].select("doc_id"), gen,
+        "doc_id long, width int, height int, mean_r double, "
+        "checksum long, uniform boolean")
 
 
 @query("ewma_hub", """
@@ -5882,44 +5872,38 @@ def multimodal_gif_q(spark, sf_dir):
     LZW variable-width coding, the four-pass interlace, multi-frame
     composition, and the NETSCAPE looping extension skip."""
     import numpy as np
-    import pandas as pd
     from .operators.gif import decode_gif_frames, make_gif
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                nf = 1 + d % 3
-                lut = np.array(
-                    [[(17 * d + 11 * j) % 256, (23 * d + 5 * j) % 256,
-                      (29 * d + 7 * j) % 256] for j in range(4)],
-                    np.uint8)
-                frames = []
-                for fi in range(nf):
-                    r = np.arange(8)[:, None]
-                    c = np.arange(16)[None, :]
-                    a = (d + fi + 2 * r + c) % 4
-                    frames.append(lut[a].tobytes())
-                blob = make_gif(16, 8, frames,
-                                interlace=(d % 2 == 0))
-                w, h, dec = decode_gif_frames(blob)
-                reds = [np.frombuffer(fr, np.uint8)[0::3].astype(np.int64)
-                        for fr in dec]
-                total = sum(int(rr.sum()) for rr in reds)
-                mean_r = total / (w * h * len(dec))
-                checksum = sum(
-                    (fi + 1) * int(((np.arange(w * h) + 1) * rr).sum())
-                    for fi, rr in enumerate(reds))
-                rows.append((d, w, h, len(dec), mean_r, checksum))
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "width", "height", "n_frames", "mean_r",
-                "checksum"])
+    def gen(row):
+        d = int(row[0])
+        nf = 1 + d % 3
+        lut = np.array(
+            [[(17 * d + 11 * j) % 256, (23 * d + 5 * j) % 256,
+              (29 * d + 7 * j) % 256] for j in range(4)],
+            np.uint8)
+        frames = []
+        for fi in range(nf):
+            r = np.arange(8)[:, None]
+            c = np.arange(16)[None, :]
+            a = (d + fi + 2 * r + c) % 4
+            frames.append(lut[a].tobytes())
+        blob = make_gif(16, 8, frames,
+                        interlace=(d % 2 == 0))
+        w, h, dec = decode_gif_frames(blob)
+        reds = [np.frombuffer(fr, np.uint8)[0::3].astype(np.int64)
+                for fr in dec]
+        total = sum(int(rr.sum()) for rr in reds)
+        mean_r = total / (w * h * len(dec))
+        checksum = sum(
+            (fi + 1) * int(((np.arange(w * h) + 1) * rr).sum())
+            for fi, rr in enumerate(reds))
+        yield d, w, h, len(dec), mean_r, checksum
 
-    return t["documents"].select("doc_id").mapInPandas(
-        gen, schema="doc_id long, width int, height int, "
-                    "n_frames int, mean_r double, checksum long")
+    return flatmap_rows(
+        t["documents"].select("doc_id"), gen,
+        "doc_id long, width int, height int, "
+        "n_frames int, mean_r double, checksum long")
 
 
 _URL_SQL = """
@@ -6034,31 +6018,27 @@ def multimodal_mp4_q(spark, sf_dir):
     multimodal.extract_features raises honestly) — container work IS
     the Spark-side job at scale; sample payloads go to decoder
     services. All other columns are exact integers."""
-    import pandas as pd
     from .operators.mp4 import TrackSpec, make_mp4, mp4_demux, mp4_meta
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                v = TrackSpec(
-                    handler="vide", codec="mp4v",
-                    samples=[f"{d}:{i};".encode() * (1 + (d + i) % 5)
-                             for i in range(1 + d % 4)],
-                    width=16 + d % 64, height=16 + d % 48,
-                    timescale=1000, sample_delta=40)
-                a = TrackSpec(
-                    handler="soun", codec="mp4a",
-                    samples=[f"a{d}.{i};".encode() * (1 + i % 2)
-                             for i in range(1 + d % 3)],
-                    timescale=48000, sample_delta=1024)
-                rows.append((d, bytearray(make_mp4([v, a]))))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def gen(row):
+        d = int(row[0])
+        v = TrackSpec(
+            handler="vide", codec="mp4v",
+            samples=[f"{d}:{i};".encode() * (1 + (d + i) % 5)
+                     for i in range(1 + d % 4)],
+            width=16 + d % 64, height=16 + d % 48,
+            timescale=1000, sample_delta=40)
+        a = TrackSpec(
+            handler="soun", codec="mp4a",
+            samples=[f"a{d}.{i};".encode() * (1 + i % 2)
+                     for i in range(1 + d % 3)],
+            timescale=48000, sample_delta=1024)
+        yield d, bytearray(make_mp4([v, a]))
 
-    media = t["documents"].select("doc_id").mapInPandas(
-        gen, schema="doc_id long, media binary")
+    media = flatmap_rows(
+        t["documents"].select("doc_id"), gen,
+        "doc_id long, media binary")
     meta = mp4_meta(media, id_col="doc_id", payload_col="media")
     # pivot the two per-track rows into one row per doc
     per_doc = meta.groupBy("id").agg(
@@ -6846,22 +6826,18 @@ def multimodal_resize_q(spark, sf_dir):
     oracle recomputes every resized pixel from the closed-form
     formula WITHOUT touching bytes — a box-sum slip, an index-map
     off-by-one, or a channel swap breaks the weighted hash."""
-    import pandas as pd
     from .operators.multimodal import make_ppm, resize_images
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                px = bytes((d * 7 + i) % 256 for i in range(192))
-                rows.append((d, make_ppm(8, 8, px)))
-            yield pd.DataFrame(rows, columns=["doc_id", "media"])
+    def gen(row):
+        d = int(row[0])
+        px = bytes((d * 7 + i) % 256 for i in range(192))
+        yield d, make_ppm(8, 8, px)
 
-    imgs = (t["documents"].filter(F.col("doc_id") % 2 == 0)
-            .select("doc_id")
-            .mapInPandas(gen, schema="doc_id long, media binary"))
+    imgs = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 2 == 0)
+        .select("doc_id"),
+        gen, "doc_id long, media binary")
 
     def _sums(resized, n, prefix):
         hexc = F.hex(F.col("raster"))
@@ -6943,35 +6919,31 @@ def multimodal_mjpeg_q(spark, sf_dir):
     a wrong sample offset, frame order slip, Huffman/IDCT error, or
     channel swap breaks the hash. H.264/AAC stay honest raises
     (multimodal.py frame_sample)."""
-    import pandas as pd
     from .operators.jpeg import make_jpeg
     from .operators.mp4 import TrackSpec, make_mp4
     from .operators.multimodal import frame_sample
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                frames = []
-                for i in range(1 + d % 5):
-                    px = bytes(((3 * d + 11 * i) % 256,
-                                (5 * d + 17 * i) % 256,
-                                (7 * d + 23 * i) % 256)) * 256
-                    frames.append(make_jpeg(
-                        16, 16, px, quality=100,
-                        subsampling="4:2:0" if d % 4 == 0
-                        else "4:4:4"))
-                v = TrackSpec(handler="vide", codec="jpeg",
-                              samples=frames, width=16, height=16,
-                              timescale=1000, sample_delta=40)
-                rows.append((d, bytearray(make_mp4([v]))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        frames = []
+        for i in range(1 + d % 5):
+            px = bytes(((3 * d + 11 * i) % 256,
+                        (5 * d + 17 * i) % 256,
+                        (7 * d + 23 * i) % 256)) * 256
+            frames.append(make_jpeg(
+                16, 16, px, quality=100,
+                subsampling="4:2:0" if d % 4 == 0
+                else "4:4:4"))
+        v = TrackSpec(handler="vide", codec="jpeg",
+                      samples=frames, width=16, height=16,
+                      timescale=1000, sample_delta=40)
+        yield d, bytearray(make_mp4([v]))
 
-    media = (t["documents"].filter(F.col("doc_id") % 2 == 0)
-             .select(F.col("doc_id").alias("id"))
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 2 == 0)
+        .select(F.col("doc_id").alias("id")),
+        gen, "id long, media binary")
     out = frame_sample(media, every_n=2, fake=False)
     return out.select(
         F.col("id").alias("doc_id"), "frame_idx",
@@ -7121,25 +7093,20 @@ def audio_spectral_q(spark, sf_dir):
     codec round trip. This declarative path is band_energy's only
     path and the measured SCALE path (PERFORMANCE.md §audio-paths:
     PCM never leaves the JVM)."""
-    import pandas as pd
-
     from .operators.audio import band_energy, wav_samples
     from .operators.multimodal import make_wav
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                samples = [((d * 31 + 17 * n * n + n) % 4001) - 2000
-                           for n in range(256)]
-                rows.append((d, bytearray(make_wav(8000, samples))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        samples = [((d * 31 + 17 * n * n + n) % 4001) - 2000
+                   for n in range(256)]
+        yield d, bytearray(make_wav(8000, samples))
 
-    media = (t["documents"].filter(F.col("doc_id") % 4 == 0)
-             .select(F.col("doc_id").alias("id"))
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 4 == 0)
+        .select(F.col("doc_id").alias("id")),
+        gen, "id long, media binary")
     dec = wav_samples(media)
     return (band_energy(dec, frame_len=64, bins=(1, 3, 7))
             .select(F.col("id").alias("doc_id"), "frame",
@@ -7161,32 +7128,27 @@ def audio_mp4_pcm_q(spark, sf_dir):
     regenerates the samples analytically and replays the
     quantized-integer DFT bitwise, proves mux, demux, PCM decode, and
     the spectral projection in one value-hash."""
-    import pandas as pd
-
     from .operators.audio import band_energy, mp4_pcm
     from .operators.mp4 import TrackSpec, make_mp4
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        import struct
+    import struct
 
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                pcm = [((d * 29 + 13 * n * n + 3 * n) % 3001) - 1500
-                       for n in range(192)]
-                chunks = [struct.pack(">64h", *pcm[i:i + 64])
-                          for i in range(0, 192, 64)]
-                a = TrackSpec(handler="soun", codec="twos",
-                              samples=chunks, timescale=8000,
-                              sample_delta=64)
-                rows.append((d, bytearray(make_mp4([a]))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        pcm = [((d * 29 + 13 * n * n + 3 * n) % 3001) - 1500
+               for n in range(192)]
+        chunks = [struct.pack(">64h", *pcm[i:i + 64])
+                  for i in range(0, 192, 64)]
+        a = TrackSpec(handler="soun", codec="twos",
+                      samples=chunks, timescale=8000,
+                      sample_delta=64)
+        yield d, bytearray(make_mp4([a]))
 
-    media = (t["documents"].filter(F.col("doc_id") % 4 == 1)
-             .select(F.col("doc_id").alias("id"))
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 4 == 1)
+        .select(F.col("doc_id").alias("id")),
+        gen, "id long, media binary")
     dec = mp4_pcm(media)
     return (band_energy(dec, frame_len=64, bins=(2, 5))
             .select(F.col("id").alias("doc_id"), "frame", "e2", "e5"))
@@ -7218,25 +7180,20 @@ def audio_segments_q(spark, sf_dir):
     corpus and an off-by-one in the island merge shifts values. The
     oracle replays energies (exact int64 DFT), the threshold, and the
     row_number island key end-to-end."""
-    import pandas as pd
-
     from .operators.audio import active_segments
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                rows.append((d, [
-                    0 if ((n // 64) + d) % 3 == 0
-                    else ((d * 37 + 19 * n * n + 5 * n) % 4001) - 2000
-                    for n in range(256)]))
-            yield pd.DataFrame(rows, columns=["id", "samples"])
+    def gen(row):
+        d = int(row[0])
+        yield (d, [
+            0 if ((n // 64) + d) % 3 == 0
+            else ((d * 37 + 19 * n * n + 5 * n) % 4001) - 2000
+            for n in range(256)])
 
-    clips = (t["documents"].filter(F.col("doc_id") % 4 == 2)
-             .select(F.col("doc_id").alias("id"))
-             .mapInPandas(gen, schema="id long, samples array<int>"))
+    clips = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 4 == 2)
+        .select(F.col("doc_id").alias("id")),
+        gen, "id long, samples array<int>")
     return (active_segments(clips, frame_len=64, bins=(2, 5),
                             threshold=1.0)
             .select(F.col("id").alias("doc_id"), "start_frame",
@@ -7348,29 +7305,24 @@ def audio_adpcm_q(spark, sf_dir):
     CTE over exact integer arithmetic — a single wrong step-table
     entry, clamp, or packet-boundary truncation diverges the state
     recurrence and breaks the hash."""
-    import pandas as pd
-
     from .operators.adpcm import encode_ima4
     from .operators.audio import mp4_pcm
     from .operators.mp4 import TrackSpec, make_mp4
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                pcm = [((d * 41 + 23 * n * n + 7 * n) % 4001) - 2000
-                       for n in range(256)]
-                a = TrackSpec(handler="soun", codec="ima4",
-                              samples=encode_ima4(pcm), timescale=8000,
-                              sample_delta=64)
-                rows.append((d, bytearray(make_mp4([a]))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        pcm = [((d * 41 + 23 * n * n + 7 * n) % 4001) - 2000
+               for n in range(256)]
+        a = TrackSpec(handler="soun", codec="ima4",
+                      samples=encode_ima4(pcm), timescale=8000,
+                      sample_delta=64)
+        yield d, bytearray(make_mp4([a]))
 
-    media = (t["documents"].filter(F.col("doc_id") % 4 == 3)
-             .select(F.col("doc_id").alias("id"))
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 4 == 3)
+        .select(F.col("doc_id").alias("id")),
+        gen, "id long, media binary")
     dec = mp4_pcm(media)
     s = dec.select(F.col("id").alias("doc_id"),
                    F.posexplode("samples").alias("pos", "s"))
@@ -7418,26 +7370,21 @@ def audio_g711_q(spark, sf_dir):
     the same table literals — covering the RIFF fmt-6/7 parse, the
     complement/XOR masking, segment expansion, and the INVERTED
     A-law sign convention in one value-hash."""
-    import pandas as pd
-
     from .operators.audio import wav_samples
     from .operators.multimodal import make_wav_g711
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                codes = bytes((d * 13 + 7 * n + n * n) % 256
-                              for n in range(200))
-                rows.append((d, bytearray(make_wav_g711(
-                    8000, codes, law="u" if d % 10 == 0 else "a"))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        codes = bytes((d * 13 + 7 * n + n * n) % 256
+                      for n in range(200))
+        yield (d, bytearray(make_wav_g711(
+            8000, codes, law="u" if d % 10 == 0 else "a")))
 
-    media = (t["documents"].filter(F.col("doc_id") % 5 == 0)
-             .select(F.col("doc_id").alias("id"))
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 5 == 0)
+        .select(F.col("doc_id").alias("id")),
+        gen, "id long, media binary")
     s = wav_samples(media).select(
         F.col("id").alias("doc_id"),
         F.posexplode("samples").alias("pos", "s"))
@@ -7486,37 +7433,32 @@ def audio_flac_q(spark, sf_dir):
     needs no codec replay: it regenerates the signal analytically and
     position-checksums it — the whole encode -> container -> decode
     chain must be bit-exact for the hash to match."""
-    import pandas as pd
-
     from .operators.audio import flac_samples
     from .operators.flac import encode_flac
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                k = 4 if d % 3 == 0 else 1
-                inter = []
-                for n in range(200):
-                    inter.append(k * (((d * 43 + 29 * n * n + 11 * n)
-                                       % 4001) - 2000))
-                    inter.append(k * (((d * 47 + 31 * n * n + 13 * n)
-                                       % 3001) - 1500))
-                rows.append((d, bytearray(encode_flac(
-                    inter, 8000, channels=2, block_size=64,
-                    lpc_order=8 if d % 2 == 0 else None))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        k = 4 if d % 3 == 0 else 1
+        inter = []
+        for n in range(200):
+            inter.append(k * (((d * 43 + 29 * n * n + 11 * n)
+                               % 4001) - 2000))
+            inter.append(k * (((d * 47 + 31 * n * n + 13 * n)
+                               % 3001) - 1500))
+        yield (d, bytearray(encode_flac(
+            inter, 8000, channels=2, block_size=64,
+            lpc_order=8 if d % 2 == 0 else None)))
 
     # the id projection is 8 bytes/row — repartitioning it to full
     # core fan-out is ~free and is what parallelizes the per-doc
     # encode+decode CPU (the parquet scan alone yields a handful of
     # partitions at small SF; at 100 TB the scan already fans out)
-    media = (t["documents"].filter(F.col("doc_id") % 5 == 1)
-             .select(F.col("doc_id").alias("id"))
-             .repartition(spark.sparkContext.defaultParallelism)
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 5 == 1)
+        .select(F.col("doc_id").alias("id"))
+        .repartition(spark.sparkContext.defaultParallelism),
+        gen, "id long, media binary")
     s = flac_samples(media).select(
         F.col("id").alias("doc_id"),
         F.posexplode("samples").alias("pos", "s"))
@@ -7774,27 +7716,22 @@ def audio_pipeline_q(spark, sf_dir):
     analytically; any defect anywhere in the chain — codec, filter
     taps, floor semantics, basis quantization, combine order — breaks
     the hash."""
-    import pandas as pd
-
     from .operators.audio import mel_energy, wav_samples
     from .operators.multimodal import make_wav
     from .operators.resample import resample
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["id"]:
-                d = int(d)
-                pcm = [((d * 61 + 19 * n * n + 5 * n) % 4001) - 2000
-                       for n in range(192)]
-                rows.append((d, bytearray(make_wav(24000, pcm))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d = int(row[0])
+        pcm = [((d * 61 + 19 * n * n + 5 * n) % 4001) - 2000
+               for n in range(192)]
+        yield d, bytearray(make_wav(24000, pcm))
 
-    media = (t["documents"].filter(F.col("doc_id") % 3 == 2)
-             .select(F.col("doc_id").alias("id"))
-             .repartition(spark.sparkContext.defaultParallelism)
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 3 == 2)
+        .select(F.col("doc_id").alias("id"))
+        .repartition(spark.sparkContext.defaultParallelism),
+        gen, "id long, media binary")
     pcm = wav_samples(media)
     rs = resample(pcm, 2, 3)
     # rows-input fusion (r14): resample's (id, m, y) output IS the
@@ -8248,32 +8185,28 @@ def pdf_extract_q(spark, sf_dir):
     extraction is lossless, so the oracle regenerates the page text
     analytically (the WAV/make_wav contract). One Arrow mapInPandas
     pass per side, blobs never leave the executors."""
-    import pandas as pd
-
     from .operators.pdf import make_pdf, pdf_pages
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d, text in zip(pdf["id"], pdf["text"]):
-                d = int(d)
-                pages = [[text[:40], text[40:80]],
-                         [f"Page two of doc {d}."]]
-                k = d // 6
-                enc = [None, "rc4-128", "aes-128", "rc4-40",
-                       "rc4-128-v4", "aes-256"][k % 6]
-                comp = [False, True, "lzw", "lzw-tiff"][k % 4]
-                rows.append((d, bytearray(make_pdf(
-                    pages, compress=comp,
-                    xref_stream=(d // 12) % 2 == 0, encrypt=enc,
-                    encrypt_metadata=(d // 18) % 2 == 0))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        d, text = row
+        d = int(d)
+        pages = [[text[:40], text[40:80]],
+                 [f"Page two of doc {d}."]]
+        k = d // 6
+        enc = [None, "rc4-128", "aes-128", "rc4-40",
+               "rc4-128-v4", "aes-256"][k % 6]
+        comp = [False, True, "lzw", "lzw-tiff"][k % 4]
+        yield (d, bytearray(make_pdf(
+            pages, compress=comp,
+            xref_stream=(d // 12) % 2 == 0, encrypt=enc,
+            encrypt_metadata=(d // 18) % 2 == 0)))
 
-    media = (t["documents"].filter(F.col("doc_id") % 6 == 3)
-             .select(F.col("doc_id").alias("id"), "text")
-             .repartition(spark.sparkContext.defaultParallelism)
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 6 == 3)
+        .select(F.col("doc_id").alias("id"), "text")
+        .repartition(spark.sparkContext.defaultParallelism),
+        gen, "id long, media binary")
     return pdf_pages(media).withColumnRenamed("id", "doc_id")
 
 
@@ -8486,18 +8419,13 @@ def source_tfrecord(spark, sf_dir):
                 [encode_message(pb, r) for r in chunk]))
     recs = tfrecord_reader(spark, d)
 
-    import pandas as pd
+    def dec(row):
+        _record, payload = row
+        m = decode_message(pb, bytes(payload))
+        yield m["n_nationkey"], m["n_name"], m["n_regionkey"]
 
-    def dec(batches):
-        for pdf in batches:
-            out = [decode_message(pb, bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                [(m["n_nationkey"], m["n_name"], m["n_regionkey"])
-                 for m in out],
-                columns=["n_nationkey", "n_name", "n_regionkey"])
-
-    return recs.mapInPandas(
-        dec, schema="n_nationkey long, n_name string, n_regionkey long")
+    return flatmap_rows(
+        recs, dec, "n_nationkey long, n_name string, n_regionkey long")
 
 
 @query("source_webdataset", """
@@ -8610,34 +8538,28 @@ def image_dhash_q(spark, sf_dir):
     pixels → box means → luma → bits → pack in pure SQL; a defect in
     decode, resize, grayscale or packing breaks the hash column
     itself."""
-    import pandas as pd
-
     from .operators.imagehash import image_dhash
     from .operators.multimodal import make_ppm
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["id"]:
-                did = int(did)
-                b, dd = did // 10, did % 10
-                out = bytearray()
-                for y in range(16):
-                    for x in range(18):
-                        r = (b*53 + x*x*13 + y*29 + x*y*(b % 5)
-                             + (dd*53 if x == 8 else 0)) % 256
-                        g = (b*13 + x*29 + y*y*53) % 256
-                        bl = (b*29 + x*53 + y*13) % 256
-                        out += bytes((r, g, bl))
-                rows.append((did, bytearray(make_ppm(18, 16,
-                                                     bytes(out)))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        did = int(row[0])
+        b, dd = did // 10, did % 10
+        out = bytearray()
+        for y in range(16):
+            for x in range(18):
+                r = (b*53 + x*x*13 + y*29 + x*y*(b % 5)
+                     + (dd*53 if x == 8 else 0)) % 256
+                g = (b*13 + x*29 + y*y*53) % 256
+                bl = (b*29 + x*53 + y*13) % 256
+                out += bytes((r, g, bl))
+        yield did, bytearray(make_ppm(18, 16, bytes(out)))
 
-    media = (t["documents"].filter(F.col("doc_id") % 5 == 2)
-             .select(F.col("doc_id").alias("id"))
-             .repartition(spark.sparkContext.defaultParallelism)
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 5 == 2)
+        .select(F.col("doc_id").alias("id"))
+        .repartition(spark.sparkContext.defaultParallelism),
+        gen, "id long, media binary")
     return image_dhash(media).withColumnRenamed("id", "doc_id")
 
 
@@ -8810,37 +8732,32 @@ def video_dhash_q(spark, sf_dir):
     gets the 64-bit dHash. The oracle replays pixels → box means →
     luma → pack per (doc, frame) — decode, composition, geometry and
     hashing all gate one value-hash."""
-    import pandas as pd
-
     from .operators.gif import make_gif
     from .operators.imagehash import video_dhash
     _, t = _s(spark, sf_dir)
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for did in pdf["id"]:
-                did = int(did)
-                base, dd = did // 10, did % 10
-                frames = []
-                for f in range(4):
-                    out = bytearray()
-                    for y in range(16):
-                        for x in range(18):
-                            c = (x + 2*y + base*5 + f*11
-                                 + (dd*3 if x == 8 and f == 0
-                                    else 0)) % 24
-                            out += bytes(((c*37) % 256,
-                                          (c*59 + 7) % 256,
-                                          (c*83 + 13) % 256))
-                    frames.append(bytes(out))
-                rows.append((did, bytearray(make_gif(18, 16, frames))))
-            yield pd.DataFrame(rows, columns=["id", "media"])
+    def gen(row):
+        did = int(row[0])
+        base, dd = did // 10, did % 10
+        frames = []
+        for f in range(4):
+            out = bytearray()
+            for y in range(16):
+                for x in range(18):
+                    c = (x + 2*y + base*5 + f*11
+                         + (dd*3 if x == 8 and f == 0
+                            else 0)) % 24
+                    out += bytes(((c*37) % 256,
+                                  (c*59 + 7) % 256,
+                                  (c*83 + 13) % 256))
+            frames.append(bytes(out))
+        yield did, bytearray(make_gif(18, 16, frames))
 
-    media = (t["documents"].filter(F.col("doc_id") % 7 == 3)
-             .select(F.col("doc_id").alias("id"))
-             .repartition(spark.sparkContext.defaultParallelism)
-             .mapInPandas(gen, schema="id long, media binary"))
+    media = flatmap_rows(
+        t["documents"].filter(F.col("doc_id") % 7 == 3)
+        .select(F.col("doc_id").alias("id"))
+        .repartition(spark.sparkContext.defaultParallelism),
+        gen, "id long, media binary")
     return video_dhash(media, width=18, height=16) \
         .withColumnRenamed("id", "doc_id")
 

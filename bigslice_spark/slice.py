@@ -66,6 +66,70 @@ def _check_cogroup_keys(slices: Sequence["Slice"]) -> None:
                 f"!= input 0 key types {[str(t) for t in want]}")
 
 
+def field_ddl(df: DataFrame, name: str) -> str:
+    """``"name type"`` for one column of ``df`` — how a per-row stage
+    carries an input column's type into its output schema."""
+    return f"{name} {df.schema[name].dataType.simpleString()}"
+
+
+def flatmap_rows(df: DataFrame, fn: Callable[[tuple], Iterable[tuple]],
+                 schema: Any) -> DataFrame:
+    """The one per-row Python stage (Flatmap's fn path, reference
+    slice.go:728-841): ``fn(row_tuple)`` runs on each row of ``df`` (its
+    columns in order; NULL reaches ``fn`` as None, or NaN for a numeric
+    column holding nulls) and returns an iterable of output tuples whose
+    fields follow ``schema`` by POSITION. Rows travel in Arrow batches;
+    a batch that produces no rows yields no frame."""
+    import pandas as pd
+
+    def _gen(batches):
+        for pdf in batches:
+            rows = [out for tup in pdf.itertuples(index=False, name=None)
+                    for out in fn(tup)]
+            if rows:
+                yield pd.DataFrame(rows)
+
+    return df.mapInPandas(_gen, schema=schema)
+
+
+_NO_ACC = object()  # fold_stream stage 2: no segment merged yet
+
+
+def _fold_key_runs(batches, keys, init, step, finish):
+    """The key-run loop under ``Slice.fold_stream``: over key-sorted
+    Arrow batches, each run of equal ``keys`` folds chunk by chunk as
+    ``acc = step(acc, chunk)`` from ``init()`` (a run may span
+    batches), and ``finish(key_tuple, acc)`` makes its output row.
+    Yields the rows each batch completed, then the last run's."""
+    import pandas as pd
+
+    cur_key, acc = None, None
+    rows: list = []
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        # consecutive runs of equal keys (input is key-sorted);
+        # dropna=False — Spark groupBy keeps a null-key group
+        for key, chunk in pdf.groupby(list(keys), sort=False,
+                                      dropna=False):
+            key = key if isinstance(key, tuple) else (key,)
+            # normalize pandas' NaN null-key marker to None so a null-key
+            # group compares equal ACROSS chunks (NaN != NaN would
+            # re-emit it once per batch)
+            key = tuple(None if (isinstance(x, float) and x != x) else x
+                        for x in key)
+            if key != cur_key:
+                if cur_key is not None:
+                    rows.append(finish(cur_key, acc))
+                cur_key, acc = key, init()
+            acc = step(acc, chunk)
+        if rows:
+            yield pd.DataFrame(rows)
+            rows = []
+    if cur_key is not None:
+        yield pd.DataFrame([finish(cur_key, acc)])
+
+
 class Slice:
     """A sharded, keyed dataset. ``prefix`` = key width (first k columns)."""
 
@@ -190,7 +254,8 @@ class Slice:
 
         Fast path: expressions where one (``explode_col``) is array-valued →
         explode. Slow path: ``fn(row_tuple) -> iterable[tuple]`` executed
-        over Arrow batches with carry-over buffering handled by Spark.
+        over Arrow batches by :func:`flatmap_rows`, the one per-row
+        Python stage the operators share.
         """
         if fn is None:
             out = self.df.select(*exprs)
@@ -203,22 +268,8 @@ class Slice:
             return Slice(out, prefix=prefix)
 
         _require_schema("flatmap", schema)
-        import pandas as pd
-
-        def _fm(it):
-            for pdf in it:
-                rows = []
-                for tup in pdf.itertuples(index=False, name=None):
-                    rows.extend(fn(tup))
-                yield pd.DataFrame(rows) if rows else None
-
-        def _gen(it):
-            for out in _fm(it):
-                if out is not None:
-                    yield out
-
         src = _apply_pragma(self.df, pragma)
-        return Slice(src.mapInPandas(_gen, schema=schema), prefix=prefix)
+        return Slice(flatmap_rows(src, fn, schema), prefix=prefix)
 
     def fold(self, aggs: dict[str, Column] | None = None,
              fn: Callable | None = None, schema: Any = None,
@@ -291,35 +342,7 @@ class Slice:
             raise TypeError("fold_stream: merge requires segment_col")
 
         def run(batches):
-            import pandas as pd
-            cur_key, acc = None, None
-            rows: list[dict] = []
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                # consecutive runs of equal keys (input is key-sorted);
-                # dropna=False — Spark groupBy keeps a null-key group
-                grouped = pdf.groupby(list(keys), sort=False,
-                                      dropna=False)
-                for key, chunk in grouped:
-                    key = key if isinstance(key, tuple) else (key,)
-                    # normalize pandas' NaN null-key marker to None so a
-                    # null-key group compares equal ACROSS chunks
-                    # (NaN != NaN would re-emit it once per batch)
-                    key = tuple(None if (isinstance(x, float) and x != x)
-                                else x for x in key)
-                    if key != cur_key:
-                        if cur_key is not None:
-                            rows.append(emit(cur_key, acc))
-                        cur_key, acc = key, init()
-                    acc = step(acc, chunk)
-                if rows:
-                    yield pd.DataFrame(rows)
-                    rows = []
-            if cur_key is not None:
-                rows.append(emit(cur_key, acc))
-            if rows:
-                yield pd.DataFrame(rows)
+            return _fold_key_runs(batches, keys, init, step, emit)
 
         df = (self.df.repartition(*keys)
               .sortWithinPartitions(*keys)
@@ -346,26 +369,11 @@ class Slice:
         seg_keys = list(keys) + [segment_col]
 
         def run1(batches):
-            import pandas as pd
-            cur_key, acc = None, None
-            rows: list[tuple] = []
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                grouped = pdf.groupby(seg_keys, sort=False, dropna=False)
-                for key, chunk in grouped:
-                    key = key if isinstance(key, tuple) else (key,)
-                    key = tuple(None if (isinstance(x, float) and x != x)
-                                else x for x in key)
-                    if key != cur_key:
-                        if cur_key is not None:
-                            rows.append((*cur_key, pickle.dumps(acc)))
-                        cur_key, acc = key, init()
-                    acc = step(acc, chunk)
-            if cur_key is not None:
-                rows.append((*cur_key, pickle.dumps(acc)))
-            if rows:
-                yield pd.DataFrame(rows, columns=[*seg_keys, "__acc__"])
+            # positional rows: (keys..., segment, __acc__) in the
+            # stage-1 schema order
+            return _fold_key_runs(
+                batches, seg_keys, init, step,
+                lambda key, acc: (*key, pickle.dumps(acc)))
 
         st1_schema = StructType(
             list(self.df.select(*seg_keys).schema.fields)
@@ -374,32 +382,16 @@ class Slice:
                .sortWithinPartitions(*seg_keys)
                .mapInPandas(run1, schema=st1_schema))
 
-        nk = len(keys)
+        def merge_chunk(acc, chunk):
+            # a chunk's rows are in segment order (the stage-2 sort)
+            for blob in chunk["__acc__"]:
+                a = pickle.loads(blob)
+                acc = a if acc is _NO_ACC else merge(acc, a)
+            return acc
 
         def run2(batches):
-            import pandas as pd
-            cur_key, acc = None, None
-            rows: list[dict] = []
-            for pdf in batches:
-                # positional tuples: (keys..., segment, __acc__) in the
-                # stage-1 schema order — robust to odd column names
-                for vals in pdf.itertuples(index=False, name=None):
-                    key = tuple(None if (isinstance(x, float) and x != x)
-                                else x for x in vals[:nk])
-                    a = pickle.loads(vals[-1])
-                    if key != cur_key:
-                        if cur_key is not None:
-                            rows.append(emit(cur_key, acc))
-                        cur_key, acc = key, a
-                    else:
-                        acc = merge(acc, a)
-                if rows:
-                    yield pd.DataFrame(rows)
-                    rows = []
-            if cur_key is not None:
-                rows.append(emit(cur_key, acc))
-            if rows:
-                yield pd.DataFrame(rows)
+            return _fold_key_runs(batches, keys, lambda: _NO_ACC,
+                                  merge_chunk, emit)
 
         df = (st1.repartition(*keys)
               .sortWithinPartitions(*keys, segment_col)

@@ -12,10 +12,10 @@
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..slice import flatmap_rows
 
 
 def ddl_field_names(spark: SparkSession, schema: str) -> list[str]:
@@ -48,27 +48,19 @@ def tar_reader(spark: SparkSession, path: str) -> DataFrame:
     import io
     import tarfile
 
-    import pandas as pd
-
     raw = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.tar").load(path)
 
-    def unpack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for apath, content in zip(pdf["path"], pdf["content"]):
-                with tarfile.open(fileobj=io.BytesIO(content)) as tf:
-                    for m in tf.getmembers():
-                        if not m.isfile():
-                            continue
-                        body = tf.extractfile(m).read()
-                        rows.append((apath, m.name, m.size, body))
-            yield pd.DataFrame(
-                rows, columns=["archive", "name", "size", "body"])
+    def unpack(row):
+        apath, content = row
+        with tarfile.open(fileobj=io.BytesIO(content)) as tf:
+            for m in tf.getmembers():
+                if m.isfile():
+                    yield apath, m.name, m.size, tf.extractfile(m).read()
 
-    return raw.select("path", "content").mapInPandas(
-        unpack, schema="archive string, name string, size long, "
-                       "body binary")
+    return flatmap_rows(
+        raw.select("path", "content"), unpack,
+        "archive string, name string, size long, body binary")
 
 
 def zip_reader(spark: SparkSession, path: str) -> DataFrame:
@@ -87,34 +79,25 @@ def zip_reader(spark: SparkSession, path: str) -> DataFrame:
     import io
     import zipfile
 
-    import pandas as pd
-
     raw = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.zip").load(path)
+    methods = {zipfile.ZIP_STORED: "stored", zipfile.ZIP_DEFLATED: "deflate"}
 
-    def unpack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        methods = {zipfile.ZIP_STORED: "stored",
-                   zipfile.ZIP_DEFLATED: "deflate"}
-        for pdf in batches:
-            rows = []
-            for apath, content in zip(pdf["path"], pdf["content"]):
-                with zipfile.ZipFile(io.BytesIO(content)) as zf:
-                    for info in zf.infolist():
-                        if info.is_dir():
-                            continue
-                        rows.append((
-                            apath, info.filename, info.file_size,
-                            info.compress_size,
-                            methods.get(info.compress_type,
-                                        str(info.compress_type)),
-                            zf.read(info)))
-            yield pd.DataFrame(
-                rows, columns=["archive", "name", "size",
-                               "compressed", "method", "body"])
+    def unpack(row):
+        apath, content = row
+        with zipfile.ZipFile(io.BytesIO(content)) as zf:
+            for info in zf.infolist():
+                if not info.is_dir():
+                    yield (apath, info.filename, info.file_size,
+                           info.compress_size,
+                           methods.get(info.compress_type,
+                                       str(info.compress_type)),
+                           zf.read(info))
 
-    return raw.select("path", "content").mapInPandas(
-        unpack, schema="archive string, name string, size long, "
-                       "compressed long, method string, body binary")
+    return flatmap_rows(
+        raw.select("path", "content"), unpack,
+        "archive string, name string, size long, compressed long, "
+        "method string, body binary")
 
 
 def webdataset_samples(spark: SparkSession, path: str) -> DataFrame:

@@ -56,10 +56,11 @@ import json
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+
+from ..slice import flatmap_rows
 
 MAGIC = b"Obj\x01"
 
@@ -838,26 +839,20 @@ def avro_reader(spark: SparkSession, path: str, schema: str,
     as one relation, the evolution story a long-lived 100 TB dataset
     needs; the pinned DDL then names the READER fields.
     File-granular parallelism."""
-    import pandas as pd
-
     from . import ddl_field_names
 
     raw = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.avro").load(path)
     want = ddl_field_names(spark, schema)
 
-    def unpack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            out = []
-            for apath, content in zip(pdf["path"], pdf["content"]):
-                fields, rows = read_avro_blob(bytes(content),
-                                              reader_schema)
-                names = [f[0] for f in fields]
-                if names != want:
-                    raise ValueError(
-                        f"avro: {apath} writer schema fields {names} "
-                        f"!= pinned {want}")
-                out.extend(rows)
-            yield pd.DataFrame(out, columns=want)
+    def unpack(row):
+        apath, content = row
+        fields, rows = read_avro_blob(bytes(content), reader_schema)
+        names = [f[0] for f in fields]
+        if names != want:
+            raise ValueError(
+                f"avro: {apath} writer schema fields {names} "
+                f"!= pinned {want}")
+        return rows
 
-    return raw.select("path", "content").mapInPandas(unpack, schema)
+    return flatmap_rows(raw.select("path", "content"), unpack, schema)

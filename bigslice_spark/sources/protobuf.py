@@ -37,9 +37,10 @@ shard at write time.
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..slice import flatmap_rows
 
 _ZERO = {"int64": 0, "sint64": 0, "bool": False, "string": "",
          "bytes": b"", "double": 0.0, "float": 0.0, "fixed64": 0,
@@ -421,8 +422,6 @@ def protobuf_reader(spark: SparkSession, path: str,
     schema is declared by the caller (there is no embedded schema —
     protobuf's contract), the Spark DDL is pinned, and output columns
     follow the DDL order. File-granular parallelism."""
-    import pandas as pd
-
     _check_schema(proto_schema)
     raw = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.pb").load(path)
@@ -434,12 +433,8 @@ def protobuf_reader(spark: SparkSession, path: str,
         raise ValueError(f"protobuf: DDL columns {missing} not in the "
                          f"declared message schema")
 
-    def unpack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for msg in read_delimited(proto_schema, bytes(content)):
-                    rows.append(tuple(msg[c] for c in want))
-            yield pd.DataFrame(rows, columns=want)
+    def unpack(row):
+        for msg in read_delimited(proto_schema, bytes(row[0])):
+            yield tuple(msg[c] for c in want)
 
-    return raw.select("content").mapInPandas(unpack, schema)
+    return flatmap_rows(raw.select("content"), unpack, schema)

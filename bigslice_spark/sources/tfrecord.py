@@ -25,9 +25,10 @@ exactly how TF pipelines shard them).
 from __future__ import annotations
 
 import struct
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..slice import flatmap_rows
 
 _CRC_TABLE = []
 for _n in range(256):
@@ -87,19 +88,11 @@ def tfrecord_reader(spark: SparkSession, path: str) -> DataFrame:
     """TFRecord files under ``path`` as (record long, payload binary)
     rows, record = 0-based position within its file (pair with the
     protobuf decoder for structured payloads)."""
-    import pandas as pd
-
     raw = spark.read.format("binaryFile") \
         .option("pathGlobFilter", "*.tfrecord").load(path)
 
-    def unpack(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            rows = []
-            for content in pdf["content"]:
-                for n, payload in enumerate(
-                        read_tfrecord_blob(bytes(content))):
-                    rows.append((n, payload))
-            yield pd.DataFrame(rows, columns=["record", "payload"])
+    def unpack(row):
+        return enumerate(read_tfrecord_blob(bytes(row[0])))
 
-    return raw.select("content").mapInPandas(
-        unpack, schema="record long, payload binary")
+    return flatmap_rows(raw.select("content"), unpack,
+                        "record long, payload binary")

@@ -36,6 +36,8 @@ from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..slice import flatmap_rows
+
 
 # ---------------------------------------------------------------------
 # Record-level codec (pure functions; used by the Spark reader,
@@ -199,40 +201,26 @@ def warc_reader(spark: SparkSession, path: str,
     within one file stream through a single task — the same
     non-splittable contract as the tar source, amortized by crawl
     file counts."""
-    import pandas as pd
-
     r = spark.read.format("binaryFile")
     if glob:
         r = r.option("pathGlobFilter", glob)
     raw = r.load(path)
-    return raw.select("path", "content").mapInPandas(_parse_batches,
-                                                     schema=WARC_SCHEMA)
+    return flatmap_rows(raw.select("path", "content"), _parse_row,
+                        WARC_SCHEMA)
 
 
-def _parse_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-    """(path, content) batches -> parsed WARC record rows (the shared
-    Arrow stage behind warc_reader and warc_stream_reader)."""
-    import pandas as pd
-
-    for pdf in batches:
-        rows = []
-        for fpath, content in zip(pdf["path"], pdf["content"]):
-            for headers, payload in parse_warc(bytes(content)):
-                wtype = headers.get("WARC-Type", "")
-                status = hct = None
-                if wtype == "response":
-                    status, hct, payload = \
-                        split_http_payload(payload)
-                rows.append((
-                    fpath, wtype, headers.get("WARC-Record-ID"),
-                    headers.get("WARC-Date"),
-                    headers.get("WARC-Target-URI"),
-                    headers.get("Content-Type"), status, hct,
-                    payload))
-        yield pd.DataFrame(rows, columns=[
-            "file", "warc_type", "record_id", "warc_date",
-            "target_uri", "content_type", "http_status",
-            "http_content_type", "payload"])
+def _parse_row(row: tuple) -> Iterator[tuple]:
+    """One (path, content) file row -> its parsed WARC record rows (the
+    shared per-row stage behind warc_reader and warc_stream_reader)."""
+    fpath, content = row
+    for headers, payload in parse_warc(bytes(content)):
+        wtype = headers.get("WARC-Type", "")
+        status = hct = None
+        if wtype == "response":
+            status, hct, payload = split_http_payload(payload)
+        yield (fpath, wtype, headers.get("WARC-Record-ID"),
+               headers.get("WARC-Date"), headers.get("WARC-Target-URI"),
+               headers.get("Content-Type"), status, hct, payload)
 
 
 def warc_stream_reader(spark: SparkSession, path: str,
@@ -253,8 +241,8 @@ def warc_stream_reader(spark: SparkSession, path: str,
     if glob:
         r = r.option("pathGlobFilter", glob)
     raw = r.load(path)
-    return raw.select("path", "content").mapInPandas(_parse_batches,
-                                                     schema=WARC_SCHEMA)
+    return flatmap_rows(raw.select("path", "content"), _parse_row,
+                        WARC_SCHEMA)
 
 
 def warc_sink(df: DataFrame, path: str, uri_col: str = "target_uri",

@@ -38,6 +38,7 @@ from bigslice_spark.operators.multimodal import (extract_features,
                                                  make_wav,
                                                  repartition_by_bytes,
                                                  resize_images)
+from bigslice_spark.slice import flatmap_rows
 
 FORMATS = ("ppm", "bmp", "png", "jpeg", "jpeg_prog", "gif",
            "wav", "mp4_mjpeg", "mp4_pcm", "mp4_ima4", "flac", "pdf")
@@ -110,19 +111,12 @@ def main() -> None:
     # 1. synthesize the mixed corpus: each doc carries one format,
     #    chosen by doc_id — then repartition by PAYLOAD BYTES so a
     #    task's decode work is bounded by data volume, not row count
-    import pandas as pd
+    def gen(row):
+        d = int(row[0])
+        fmt = FORMATS[d % len(FORMATS)]
+        yield d, fmt, bytearray(_blob(d, fmt))
 
-    def gen(batches):
-        for pdf in batches:
-            rows = []
-            for d in pdf["doc_id"]:
-                d = int(d)
-                fmt = FORMATS[d % len(FORMATS)]
-                rows.append((d, fmt, bytearray(_blob(d, fmt))))
-            yield pd.DataFrame(rows, columns=["id", "fmt", "media"])
-
-    media = docs.mapInPandas(
-        gen, schema="id long, fmt string, media binary")
+    media = flatmap_rows(docs, gen, "id long, fmt string, media binary")
     media = repartition_by_bytes(media, target_partition_mb=1).cache()
     stats = (media.groupBy("fmt")
              .agg(F.count(F.lit(1)).alias("n"),

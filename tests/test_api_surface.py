@@ -17,7 +17,7 @@ import bigslice_spark
 # decision the code makes (see CHANGES.md).
 REMOVED_OPTIONS = {"reliable", "broadcast_labels", "broadcast_ranks",
                    "vectorized", "persist_tokens", "broadcast_eval",
-                   "broadcast_other", "pure"}
+                   "broadcast_other", "pure", "broadcast_reference"}
 
 
 def _callables():
@@ -75,3 +75,28 @@ def test_ivf_topk_accepts_only_join_and_hierarchical():
             ivf_topk(None, None, assign_method=gone)
         assert "'join'" in str(ex.value), ex.value
         assert "'hierarchical'" in str(ex.value), ex.value
+
+
+def test_per_row_python_stages_go_through_flatmap_rows():
+    """One per-row Python stage: operators and sources reach Arrow
+    batches through slice.flatmap_rows. ``mapInPandas(`` is left only
+    where a stage works on a whole batch or partition: the Misra-Gries
+    partial, the Arrow IPC reader's whole-file frames and the WARC
+    sink's per-partition writer."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(bigslice_spark.__file__).parent
+    found = []
+    for sub in ("operators", "sources"):
+        for path in sorted((pkg / sub).glob("*.py")):
+            fn = None
+            for line in path.read_text().splitlines():
+                m = re.match(r"def (\w+)\(", line)
+                if m:
+                    fn = m.group(1)
+                if "mapInPandas(" in line:
+                    found.append((f"{sub}/{path.name}", fn))
+    assert found == [("operators/sketch.py", "heavy_hitters"),
+                     ("sources/__init__.py", "arrow_ipc_reader"),
+                     ("sources/warc.py", "warc_sink")], found

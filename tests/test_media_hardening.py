@@ -90,3 +90,53 @@ def test_corruption_fuzz_contract(seed, kind):
         dec(_mutate(blob, rng))
     except (ValueError, NotImplementedError):
         pass
+
+
+MISSING_BLOB_OPS = ["wav_samples", "flac_samples", "pdf_pages",
+                    "image_dhash", "mp4_pcm", "mp4_meta", "mp4_demux",
+                    "frame_sample", "extract_features", "html_extract"]
+
+
+@pytest.mark.parametrize("op", MISSING_BLOB_OPS)
+def test_missing_blob_policy(spark, op):
+    """Each decoder's policy for a NULL and an empty payload: the
+    honest-raise decoders name the row and the operator; the container
+    demuxers and frame sampling emit no rows; feature extraction emits
+    the zero descriptor; HTML extraction emits an empty extraction."""
+    from bigslice_spark.operators.audio import (flac_samples, mp4_pcm,
+                                                wav_samples)
+    from bigslice_spark.operators.html import html_extract
+    from bigslice_spark.operators.imagehash import image_dhash
+    from bigslice_spark.operators.mp4 import mp4_demux, mp4_meta
+    from bigslice_spark.operators.multimodal import (extract_features,
+                                                     frame_sample)
+    from bigslice_spark.operators.pdf import pdf_pages
+
+    if op == "html_extract":
+        df = spark.createDataFrame([(1, None), (2, "")],
+                                   "doc_id long, html string")
+        assert sorted(tuple(r) for r in html_extract(df).collect()) == [
+            (1, "", "", "", 0, 0), (2, "", "", "", 0, 0)]
+        return
+    rows = [(1, None), (2, bytearray())]
+    raising = {"wav_samples": wav_samples, "flac_samples": flac_samples,
+               "pdf_pages": pdf_pages, "image_dhash": image_dhash}
+    if op in raising:
+        for rid, blob in rows:
+            df = spark.createDataFrame([(rid, blob)],
+                                       "id long, media binary")
+            with pytest.raises(Exception, match=(
+                    f"NULL media blob for id={rid}: filter missing "
+                    f"rows before {op}")):
+                raising[op](df).collect()
+        return
+    df = spark.createDataFrame(rows, "id long, media binary")
+    if op == "extract_features":
+        got = sorted((r["id"], r["n_bytes"], list(r["feat"]))
+                     for r in extract_features(df, fake=False).collect())
+        assert got == [(1, 0, [0.0] * 8), (2, 0, [0.0] * 8)]
+        return
+    empty = {"mp4_pcm": mp4_pcm, "mp4_meta": mp4_meta,
+             "mp4_demux": mp4_demux,
+             "frame_sample": lambda d: frame_sample(d, fake=False)}
+    assert empty[op](df).collect() == []

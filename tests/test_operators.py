@@ -683,6 +683,35 @@ def test_asof_strict_vs_inclusive(spark):
     assert got["l1"] is None and got["l2"] == 8.0
 
 
+def test_flatmap_rows_edges(spark):
+    """The one per-row stage: a batch whose rows all map to nothing
+    yields no frame (the result keeps the declared schema), an ``int``
+    id keeps its type through the positional frame, and a NULL binary
+    value reaches ``fn`` as None."""
+    from pyspark.sql.types import IntegerType
+
+    from bigslice_spark.slice import flatmap_rows
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "3")
+    try:
+        df = spark.createDataFrame(
+            [(i, None if i % 2 else bytearray(b"x" * i))
+             for i in range(9)], "id int, b binary").coalesce(1)
+        none = flatmap_rows(df, lambda row: (), "id int, n long")
+        assert none.collect() == []
+        assert none.schema.simpleString() == "struct<id:int,n:bigint>"
+        # ids 0-2 form the first batch of the one partition: it maps to
+        # nothing, the later batches do not
+        out = flatmap_rows(
+            df, lambda row: [(row[0], row[1] is None)] if row[0] > 2
+            else [], "id int, null_blob boolean")
+        assert out.schema["id"].dataType == IntegerType()
+        assert sorted(tuple(r) for r in out.collect()) == [
+            (i, bool(i % 2)) for i in range(3, 9)]
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
 def test_fold_stream_null_keys_kept(session, spark):
     """Spark groupBy keeps a null-key group; fold_stream must too, and
     must emit it ONCE even when its rows span Arrow batches."""
@@ -697,6 +726,20 @@ def test_fold_stream_null_keys_kept(session, spark):
             lambda acc, chunk: [acc[0] + len(chunk)],
             lambda key, acc: {"k": key[0], "n": acc[0]},
             "k string, n long")
+        got = {r["k"]: r["n"] for r in out.df.collect()}
+        assert got == {"a": 3, None: 20}
+        assert out.df.count() == 2
+        # the segmented (two-stage) path keeps the null-key group too:
+        # its stage-1 runs and its stage-2 merge both span batches
+        seg = session.const(2, keys, [v % 8 for v in range(23)],
+                            list(range(23)), names=["k", "s", "v"],
+                            schema="k string, s long, v long")
+        out = seg.fold_stream(
+            lambda: [0],
+            lambda acc, chunk: [acc[0] + len(chunk)],
+            lambda key, acc: {"k": key[0], "n": acc[0]},
+            "k string, n long", segment_col="s",
+            merge=lambda a, b: [a[0] + b[0]])
         got = {r["k"]: r["n"] for r in out.df.collect()}
         assert got == {"a": 3, None: 20}
         assert out.df.count() == 2

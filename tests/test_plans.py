@@ -284,8 +284,7 @@ def test_bloom_join_probe_counts(spark, tables):
 def test_ngram_novelty_corpus_never_shuffles_on_grams(spark, tables):
     """Novelty scoring at 100 TB: the candidate corpus's shingles meet
     the reference grams via a broadcast LEFT join (map-side, no corpus
-    exchange on gram text); with broadcast off, the same code degrades
-    to a shuffle join instead of failing."""
+    exchange on gram text)."""
     from bigslice_spark.operators.decontam import ngram_novelty
     docs = tables["documents"]
     ref = docs.filter(F.col("doc_id") % 10 == 0)
@@ -293,17 +292,6 @@ def test_ngram_novelty_corpus_never_shuffles_on_grams(spark, tables):
     txt = explain_str(ngram_novelty(cand, ref))
     assert "BroadcastHashJoin" in txt, txt[:2000]
     assert "SortMergeJoin" not in txt and "ShuffledHashJoin" not in txt
-    # with broadcast off AND Catalyst's size-based auto-broadcast
-    # disabled (the "reference too big" regime), the same code must
-    # still plan — as a shuffle join, not an error
-    thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        big = explain_str(ngram_novelty(cand, ref,
-                                        broadcast_reference=False))
-        assert "BroadcastHashJoin" not in big, big[:2000]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr)
 
 
 def test_repetition_stats_single_shuffle(spark, tables):
