@@ -20,20 +20,19 @@ from bigslice_spark.queries import ORACLE, QUERIES
 # Entries whose implementation changed this round: they must re-prove
 # under the driver before any other, whatever their last match.
 CHANGED: tuple[str, ...] = (
-    "op_flatmap_pandas", "op_fold_stream", "op_fold_stream_segmented",
-    "source_tar", "multimodal_meta", "multimodal_features",
-    "kmeans_step", "kmeans_train", "multimodal_frames",
-    "multimodal_decode", "multimodal_jpeg", "multimodal_gif",
-    "multimodal_mp4", "source_warc", "html_extract", "web_pipeline",
-    "html_links", "stream_warc", "multimodal_resize",
-    "multimodal_mjpeg", "ngram_novelty", "audio_spectral",
-    "audio_mp4_pcm", "audio_segments", "audio_adpcm", "audio_g711",
-    "audio_flac", "audio_pipeline", "source_zip", "pdf_extract",
+    "trigram_search", "regex_search", "nb_classifier", "pdf_extract",
+    "op_cache_partial", "op_cache", "source_tar", "source_csv",
+    "source_csv_malformed", "source_binary", "stream_sink_parquet",
+    "op_compact", "scan_reader_lines", "trigram_index_grep",
+    "source_jsonl", "indexed_lookup", "upsert_merge",
+    "schema_evolution", "upsert_partitioned", "compact_partitioned",
+    "source_orc", "snapshot_diff", "stream_upsert",
+    "stream_dedup_against", "source_warc", "web_pipeline",
+    "bucketed_join", "stream_warc", "source_zip", "source_xml",
     "source_avro", "source_protobuf", "source_tfrecord",
-    "source_webdataset", "image_dhash", "video_dhash",
-    "source_avro_complex", "source_avro_zstd", "source_avro_logical",
-    "source_avro_evolution", "source_protobuf_maps",
-    "image_dedup_phash", "video_dedup")
+    "source_webdataset", "source_arrow_ipc", "source_avro_complex",
+    "source_avro_zstd", "source_avro_logical",
+    "source_avro_evolution", "source_protobuf_maps")
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
 

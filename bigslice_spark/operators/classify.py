@@ -110,61 +110,10 @@ def nb_train(df: DataFrame, label_col: str = "label",
     return wc, class_stats, glob
 
 
-def nb_self_classify(df: DataFrame, label_col: str = "label",
-                     text_col: str = "text",
-                     id_col: str = "doc_id") -> DataFrame:
-    """Train on ``df`` and classify the SAME corpus — the common
-    self-labelling loop — returning exactly
-    ``nb_classify(df, *nb_train(df, label_col, text_col))``, but
-    tokenizing the corpus ONCE instead of four times (r14, guide
-    §1.2/§2.4): the composed form explodes tokens separately for
-    word_counts, per-class token totals, the vocabulary count AND the
-    classify pass's per-doc counts, and Spark shares no work between
-    those subtrees. Here one explode aggregates to the per-document
-    word-count relation (id, label, w, dw) — far smaller than the
-    token stream, the materialization point — and word_counts /
-    class token totals / V / the classify side all derive from it by
-    re-aggregation (identical integer counts by associativity of
-    count/sum). Doc counts (N, per-class n_docs) still come from
-    ``df`` directly: zero-token documents count toward both but never
-    reach the token relation.
-
-    WHEN IT PAYS (r14 continuation measurement): use this form when
-    tokenization is expensive (BPE/unigram encode, normalization
-    pipelines) — then one tokenize pass beats four by construction.
-    With the cheap codegen whitespace ``tokens()``, the materialize
-    write + 4 reads of the (id, label, w) relation COST MORE than the
-    saved re-scans at data scale: interleaved fresh-JVM A/B vs the
-    composed form at sf1 lost all 4 pairs (calm-box 6.5s composed vs
-    7.4-8.9s fused; per-stage profile puts ~2.5-3.5s in the eager
-    checkpoint build), and a calm-box sf0.1 A/B was a wash. The
-    nb_classifier registry entry therefore uses the composed form."""
-    from ..checkpoint import materialize
-    g = (df.select(F.col(id_col), F.col(label_col).alias("label"),
-                   F.explode(tokens(text_col)).alias("w"))
-         .groupBy(id_col, "label", "w")
-         .agg(F.count(F.lit(1)).cast("long").alias("dw")))
-    g = materialize(g)
-    wc = (g.groupBy("label", "w")
-          .agg(F.sum("dw").cast("long").alias("cnt")))
-    cls = (df.groupBy(F.col(label_col).alias("label"))
-           .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-    ctok = (g.groupBy("label")
-            .agg(F.sum("dw").cast("long").alias("n_tokens")))
-    class_stats = (cls.join(ctok, on="label", how="left")
-                   .na.fill({"n_tokens": 0}))
-    glob = (df.agg(F.count(F.lit(1)).cast("long").alias("N"))
-            .crossJoin(g.agg(F.count_distinct("w").cast("long")
-                             .alias("V"))))
-    return nb_classify(df, wc, class_stats, glob, text_col, id_col,
-                       doc_words=g.select(id_col, "w", "dw"))
-
-
 def nb_classify(df: DataFrame, word_counts: DataFrame,
                 class_stats: DataFrame, glob: DataFrame,
                 text_col: str = "text",
-                id_col: str = "doc_id",
-                doc_words: DataFrame | None = None) -> DataFrame:
+                id_col: str = "doc_id") -> DataFrame:
     """(id_col, pred, n_words) for every document with ≥1 token:
     argmax_c [ ln(n_docs_c / N)
                + Σ_w cnt_dw · ln((cnt_cw + 1) / (n_tokens_c + V)) ]
@@ -182,18 +131,16 @@ def nb_classify(df: DataFrame, word_counts: DataFrame,
     never carries the xC expansion. The argmax window partitions by
     document over exactly C rows — no skew at any corpus size.
 
-    ``doc_words`` optionally supplies the per-document (id, w, dw)
-    word-count relation when the caller already has it (the
-    nb_self_classify path) — skipping this pass's own tokenize +
-    aggregate of the corpus."""
-    if doc_words is not None:
-        dw = doc_words.select(F.col(id_col), F.col("w"),
-                              F.col("dw").cast("long"))
-    else:
-        dw = (df.select(F.col(id_col),
-                        F.explode(tokens(text_col)).alias("w"))
-              .groupBy(id_col, "w")
-              .agg(F.count(F.lit(1)).cast("long").alias("dw")))
+    Training and classifying the same corpus composes as
+    ``nb_classify(df, *nb_train(df))``: its four token explodes share
+    no work, yet with the codegen whitespace ``tokens()`` that is
+    cheaper than materializing a per-document word-count relation
+    for them to share (measured: that shape lost all 4 interleaved
+    sf1 A/B pairs and was a wash at sf0.1)."""
+    dw = (df.select(F.col(id_col),
+                    F.explode(tokens(text_col)).alias("w"))
+          .groupBy(id_col, "w")
+          .agg(F.count(F.lit(1)).cast("long").alias("dw")))
     wcm = (word_counts.groupBy("w")
            .agg(F.map_from_entries(
                F.sort_array(F.collect_list(F.struct("label", "cnt"))))

@@ -23,8 +23,8 @@ these) — is decrypted transparently: RC4-40/128 (/V 1-2 and the /V 4
 "/V2" crypt filter), AES-128-CBC (/AESV2) and PDF 2.0's AES-256
 (/V 5 /AESV3, R5/R6 incl. /EncryptMetadata false), with §7.6.3/§7.6.4
 password algorithms and §7.6.2 per-object keys in
-operators/pdfcrypt.py (clean-room; RC4/AES pinned to published test
-vectors).
+operators/pdfcrypt.py (clean-room RC4, OpenSSL AES; both pinned to
+published test vectors).
 
 Honest-raise contract (the repo's codec rule): a NON-EMPTY user
 password, non-/Standard security handlers, split

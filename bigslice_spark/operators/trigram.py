@@ -1,34 +1,40 @@
-"""Trigram-indexed substring search — distributed grep with
+"""Trigram-indexed substring and regex search — distributed grep with
 index-pruned scans (the public Google Code Search construction:
 Cox, "Regular Expression Matching with a Trigram Index", 2012).
 
 At 100 TB you cannot full-scan a corpus for every literal/needle
 query. The construction: a postings relation (doc_id, trigram) —
-every distinct 3-gram per document — answers a literal query in two
-steps: (1) CANDIDATES = documents whose posting set covers ALL the
-literal's trigrams (a substring occurrence implies every one of its
-trigrams occurs, so this over-approximates and never loses a match);
-(2) VERIFY = exact ``instr`` on the candidates only. The result
-provably EQUALS the full-scan answer — which is exactly what the
-registry oracle checks.
+every distinct 3-gram per document — answers a query in two steps:
+(1) CANDIDATES = documents whose posting set covers ALL trigrams of
+one of the pattern's alternatives (an occurrence implies every one
+of its required trigrams occurs, so this over-approximates and never
+loses a match); (2) VERIFY = the exact predicate on the candidates
+only. The result provably EQUALS the full-scan answer — which is
+exactly what the registry oracle checks.
+
+ONE candidate-and-verify pipeline (``_candidates`` + ``_grep``)
+serves both searches: ``regex_plan`` compiles a regex to OR/AND
+alternatives with an ``rlike`` verify, and a literal is a one-run
+AND plan with an ``instr`` verify (``substring_search``).
 
 Spark-first shape:
-- postings build is pure codegen (sequence + transform + substring +
-  array_distinct + explode) — no UDF;
-- the needed-trigram set is tiny and BROADCAST; the posting join
-  groups by doc_id with a partial-agg-friendly count(distinct tri)
-  (bounded by the literal's trigram count);
-- candidates semi-join the corpus; the exact verify is codegen
-  ``instr``;
+- postings build is pure codegen (an ``instr`` probe per needed
+  trigram, or shifted ``regexp_extract_all`` passes for a full
+  index) — no UDF;
+- the needed-trigram spec is tiny and BROADCAST; the posting join
+  groups by (q, alt, doc_id) with a partial-agg-friendly count(*)
+  (bounded by the alternative's trigram count);
+- candidates join the corpus back; the exact verify is codegen;
 - persisted form: ``write_trigram_index`` partitions postings by
   ``pmod(xxhash64(tri), nparts)`` so a query's needed trigrams prune
   to a handful of partitions (PartitionFilters — plan-gated in
   tests). One index write amortizes over every subsequent query,
   the 100 TB story.
 
-Literals shorter than 3 bytes cannot be trigram-pruned; they verify
-against the full corpus (honest fallback, flagged in the plan by the
-absence of the postings join).
+Literals shorter than 3 chars and regexes with no required 3-char
+run cannot be trigram-pruned; they verify against the full corpus
+(honest fallback, flagged in the plan by the absence of the
+postings join).
 
 Reference: grailbio/bigslice has no search surface; part of the
 §2.4 retrieval family next to operators/search.py (BM25).
@@ -36,7 +42,9 @@ Reference: grailbio/bigslice has no search surface; part of the
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -218,52 +226,89 @@ def read_trigram_index(spark, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def substring_candidates(postings: DataFrame,
-                         literals: Sequence[str],
-                         indexed_parts: int | None = None
-                         ) -> DataFrame:
-    """(q, doc_id) pairs whose posting set covers ALL trigrams of
-    ``literals[q]`` — the over-approximation to verify. Literals
-    under 3 bytes yield no rows here (callers fall back to a full
-    verify). ``indexed_parts`` must match the ``nparts`` the index
-    was written with, enabling partition pruning on ``tp``.
+def _candidates(postings: DataFrame,
+                spec_rows: Sequence[tuple[int, int, str]],
+                indexed_parts: int | None = None) -> DataFrame:
+    """(q, alt, doc_id) triples whose posting set covers ALL trigrams
+    of alternative ``alt`` of pattern ``q`` — the over-approximation
+    to verify. ``spec_rows`` holds one row per distinct (q, alt,
+    tri). ``indexed_parts`` (the index's ``nparts``) prunes the scan
+    to the needed ``tp=`` buckets, replayed driver-side by
+    ``_bucket_of`` — no job.
 
     ``postings`` must be (doc_id, tri)-DISTINCT — true of every
-    producer (``trigram_postings`` both paths, ``write_trigram_index``
-    round-trips) — which lets the cover count be a plain ``count(*)``
-    over the needed-set join instead of ``count(distinct tri)``:
-    Spark plans a grouped distinct count as four aggregates and TWO
-    exchanges (the first keyed on (q, doc_id, tri)), where count(*)
-    partial-aggregates map-side straight onto (q, doc_id) and
-    shuffles one row per candidate (guide §2.2; Exchange -1 per
-    query family, plan-gated in tests)."""
+    producer — so the join emits each (q, alt, doc_id, tri) at most
+    once and the cover count is a plain ``count(*)``: a grouped
+    ``count(distinct tri)`` plans four aggregates and TWO exchanges,
+    where count(*) partial-aggregates map-side onto (q, alt, doc_id)
+    and shuffles one row per candidate (plan-gated in tests)."""
     spark = postings.sparkSession
-    need_rows = [(qi, t)
-                 for qi, lit in enumerate(literals)
-                 for t in literal_trigrams(lit)]
-    if not need_rows:
-        return local_df(spark, [], "q int, doc_id long")
-    need = local_df(spark, need_rows, "q int, tri string")
-    counts = {qi: len(literal_trigrams(lit))
-              for qi, lit in enumerate(literals)
-              if len(lit) >= 3}
-    kdf = local_df(spark, list(counts.items()), "q int, k int")
     p = postings
     if indexed_parts:
-        # prune the index scan to the needed trigrams' partitions —
-        # bucket values replayed driver-side with the writer's hash
-        # (_bucket_of == pmod(xxhash64, nparts), test-pinned): no
-        # collect job
         buckets = sorted({_bucket_of(t, indexed_parts)
-                          for _, t in need_rows})
+                          for _, _, t in spec_rows})
         p = p.filter(F.col("tp").isin(buckets))
-    cand = (p.join(F.broadcast(need), "tri")
-            .groupBy("q", "doc_id")
+    spec = local_df(spark, list(spec_rows),
+                    "q int, alt int, tri string")
+    k = Counter((q, alt) for q, alt, _ in spec_rows)
+    kdf = local_df(spark, [(q, alt, n)
+                           for (q, alt), n in sorted(k.items())],
+                   "q int, alt int, k int")
+    return (p.join(F.broadcast(spec), "tri")
+            .groupBy("q", "alt", "doc_id")
             .agg(F.count(F.lit(1)).alias("got"))
-            .join(F.broadcast(kdf), "q")
+            .join(F.broadcast(kdf), ["q", "alt"])
             .filter(F.col("got") == F.col("k"))
-            .select("q", "doc_id"))
-    return cand
+            .select("q", "alt", "doc_id"))
+
+
+def _grep(docs: DataFrame, patterns: Sequence[str],
+          plans: Sequence[tuple[str, list[list[str]]]], verify: str,
+          id_col: str, text_col: str, postings: DataFrame | None,
+          indexed_parts: int | None) -> DataFrame:
+    """The one candidate-and-verify pipeline: (pattern, doc_id) for
+    every document where SQL predicate ``verify`` (over ``__t`` and
+    ``pattern``) holds, pruned by the trigram index. ``plans[q]`` has
+    ``regex_plan``'s shape: each group of an 'or'/'and' plan is one
+    alternative whose literals' trigrams must ALL occur; 'scan'
+    patterns cannot be pruned and verify against the full corpus.
+    Without ``postings`` a needed-only index is built on the fly
+    (one-shot mode — still correct, no amortization)."""
+    spark = docs.sparkSession
+    spec_rows = [(q, alt, t)
+                 for q, (_, groups) in enumerate(plans)
+                 for alt, lits in enumerate(groups)
+                 for t in dict.fromkeys(t for s in lits
+                                        for t in literal_trigrams(s))]
+    corpus = docs.select(F.col(id_col).alias("doc_id"),
+                         F.col(text_col).alias("__t"))
+    parts = []
+    if spec_rows:
+        if postings is None:
+            needed = sorted({t for _, _, t in spec_rows})
+            postings = trigram_postings(docs, id_col, text_col,
+                                        only=needed)
+            indexed_parts = None
+        cand = _candidates(postings, spec_rows,
+                           indexed_parts).select("q", "doc_id")
+        # only a multi-alternative pattern can yield one (q, doc_id)
+        # twice — the driver knows, so single-alternative calls skip
+        # the extra exchange
+        if any(len(groups) > 1 for _, groups in plans):
+            cand = cand.distinct()
+        pat_df = F.broadcast(local_df(spark, list(enumerate(patterns)),
+                                      "q int, pattern string"))
+        parts.append(cand.join(pat_df, "q").join(corpus, "doc_id"))
+    scan = [(p,) for p, (kind, _) in zip(patterns, plans)
+            if kind == "scan"]
+    if scan:
+        parts.append(corpus.crossJoin(
+            F.broadcast(local_df(spark, scan, "pattern string"))))
+    if not parts:
+        return local_df(spark, [], "pattern string, doc_id long")
+    return reduce(DataFrame.unionByName,
+                  [p.filter(F.expr(verify)).select("pattern", "doc_id")
+                   for p in parts])
 
 
 def substring_search(docs: DataFrame, literals: Sequence[str],
@@ -273,44 +318,16 @@ def substring_search(docs: DataFrame, literals: Sequence[str],
     """Index-pruned distributed grep: for each literal, the exact set
     of documents containing it — (pattern, doc_id), identical to the
     full-scan answer (candidates can only over-approximate; the
-    ``instr`` verify removes false positives). ``postings`` is a
-    persisted index from write_trigram_index (pass its nparts via
-    ``indexed_parts``); built on the fly from ``docs`` when omitted
-    (one-shot mode — still correct, no amortization)."""
-    spark = docs.sparkSession
-    if postings is None:
-        needed = sorted({t for s in literals if len(s) >= 3
-                         for t in literal_trigrams(s)})
-        postings = trigram_postings(docs, id_col, text_col,
-                                    only=needed)
-    lit_df = F.broadcast(local_df(
-        spark, [(i, s) for i, s in enumerate(literals)],
-        "q int, pattern string"))
-    long_idx = [i for i, s in enumerate(literals) if len(s) >= 3]
-    short_idx = [i for i, s in enumerate(literals) if len(s) < 3]
-    out = None
-    if long_idx:
-        cand = substring_candidates(postings, literals, indexed_parts)
-        verified = (cand.join(lit_df, "q")
-                    .join(docs.select(F.col(id_col).alias("doc_id"),
-                                      F.col(text_col).alias("__t")),
-                          "doc_id")
-                    .filter(F.expr("instr(__t, pattern) > 0"))
-                    .select("pattern", "doc_id"))
-        out = verified
-    if short_idx:
-        # sub-trigram needles: no pruning possible — full verify
-        sdf = F.broadcast(local_df(
-            spark, [(literals[i],) for i in short_idx],
-            "pattern string"))
-        full = (docs.select(F.col(id_col).alias("doc_id"),
-                            F.col(text_col).alias("__t"))
-                .crossJoin(sdf)
-                .filter(F.expr("instr(__t, pattern) > 0"))
-                .select("pattern", "doc_id"))
-        out = full if out is None else out.unionByName(full)
-    return out if out is not None else local_df(
-        spark, [], "pattern string, doc_id long")
+    ``instr`` verify removes false positives). A literal is a one-run
+    AND plan; one under 3 chars scans. ``postings`` is a persisted
+    index from write_trigram_index (pass its nparts via
+    ``indexed_parts``); built on the fly from ``docs`` when omitted."""
+    return _grep(docs, literals,
+                 [("and", [[s]]) if len(s) >= 3 else ("scan", [])
+                  for s in literals],
+                 "instr(__t, pattern) > 0", id_col, text_col, postings,
+                 indexed_parts)
+
 
 
 # ------------------------------------------------- regex → trigram
@@ -472,71 +489,6 @@ def regex_search(docs: DataFrame, patterns: Sequence[str],
     """Index-pruned distributed regex grep: (pattern, doc_id) for
     each document with a match, identical to a full-scan ``rlike``
     (pruning is sound-only; the verify is the real regex)."""
-    spark = docs.sparkSession
-    plans = {qi: regex_plan(p) for qi, p in enumerate(patterns)}
-    # alternative spec rows: (q, alt, tri) + per-(q, alt) cover count.
-    # 'or' plans: one alt per literal; 'and' plans: ONE alt holding
-    # every run's trigrams.
-    spec_rows: list[tuple[int, int, str]] = []
-    for qi, (kind, groups) in plans.items():
-        if kind == "or":
-            for ai, lits in enumerate(groups):
-                for t in {t for s in lits for t in literal_trigrams(s)}:
-                    spec_rows.append((qi, ai, t))
-        elif kind == "and":
-            for t in {t for s in groups[0]
-                      for t in literal_trigrams(s)}:
-                spec_rows.append((qi, 0, t))
-    pat_df = F.broadcast(local_df(
-        spark, [(i, p) for i, p in enumerate(patterns)],
-        "q int, pattern string"))
-    corpus = docs.select(F.col(id_col).alias("doc_id"),
-                         F.col(text_col).alias("__t"))
-    pruned_q = sorted({q for q, _, _ in spec_rows})
-    out = None
-    if spec_rows:
-        if postings is None:
-            needed = sorted({t for _, _, t in spec_rows})
-            p = trigram_postings(docs, id_col, text_col, only=needed)
-        else:
-            p = postings
-            if indexed_parts:
-                # driver-side bucket replay (_bucket_of — no collect
-                # job; see substring_candidates)
-                buckets = sorted({_bucket_of(t, indexed_parts)
-                                  for _, _, t in spec_rows})
-                p = p.filter(F.col("tp").isin(buckets))
-        spec = local_df(spark, spec_rows, "q int, alt int, tri string")
-        # per-(q, alt) cover sizes are known driver-side (spec_rows is
-        # set-built, one row per distinct (q, alt, tri)) — inline them
-        # instead of re-deriving via a distinct aggregate
-        kc: dict[tuple[int, int], int] = {}
-        for q, alt, _ in spec_rows:
-            kc[(q, alt)] = kc.get((q, alt), 0) + 1
-        kdf = local_df(spark, [(q, alt, k) for (q, alt), k
-                               in sorted(kc.items())],
-                       "q int, alt int, k int")
-        # cover count is count(*): postings are (doc_id, tri)-distinct
-        # (contract — see substring_candidates) and spec holds one row
-        # per (q, alt, tri), so the join emits each (q, alt, doc_id,
-        # tri) at most once; a distinct count would cost a second
-        # exchange keyed on tri
-        cand = (p.join(F.broadcast(spec), "tri")
-                .groupBy("q", "alt", "doc_id")
-                .agg(F.count(F.lit(1)).alias("got"))
-                .join(F.broadcast(kdf), ["q", "alt"])
-                .filter(F.col("got") == F.col("k"))
-                .select("q", "doc_id").distinct())
-        out = (cand.join(pat_df, "q").join(corpus, "doc_id")
-               .filter(F.expr("__t rlike pattern"))
-               .select("pattern", "doc_id"))
-    scan_q = [q for q in plans if q not in pruned_q]
-    if scan_q:
-        sdf = F.broadcast(local_df(
-            spark, [(patterns[q],) for q in scan_q], "pattern string"))
-        full = (corpus.crossJoin(sdf)
-                .filter(F.expr("__t rlike pattern"))
-                .select("pattern", "doc_id"))
-        out = full if out is None else out.unionByName(full)
-    return out if out is not None else local_df(
-        spark, [], "pattern string, doc_id long")
+    return _grep(docs, patterns, [regex_plan(p) for p in patterns],
+                 "__t rlike pattern", id_col, text_col, postings,
+                 indexed_parts)

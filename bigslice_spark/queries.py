@@ -16,6 +16,10 @@ Conventions (driver contract, see repo __spark_entry__.py):
 
 from __future__ import annotations
 
+import atexit
+import functools
+import shutil
+import tempfile
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
@@ -57,6 +61,23 @@ def query(name: str, oracle: str | None = None):
 def _s(spark: SparkSession, sf_dir: str) -> tuple[Session, dict]:
     sess = Session(spark)
     return sess, load_tables(spark, sf_dir)
+
+
+@functools.cache
+def _fixture_root() -> str:
+    """The per-process directory every registry fixture lives under,
+    created on first use together with the ``atexit`` hook that
+    removes it — importing this module does no work. Entries return
+    DataFrames that read their fixture files lazily, so the files
+    must outlive the call but not the process."""
+    root = tempfile.mkdtemp(prefix="bss_fixtures_")
+    atexit.register(shutil.rmtree, root, True)
+    return root
+
+
+def _fixture_dir(prefix: str) -> str:
+    """A fresh fixture directory under ``_fixture_root()``."""
+    return tempfile.mkdtemp(prefix=prefix, dir=_fixture_root())
 
 
 def dsum(expr: Column | str, scale: int = 4) -> Column:
@@ -589,9 +610,8 @@ def op_cache_partial(spark, sf_dir):
     must still be the complete table."""
     import os
     import shutil
-    import tempfile
     sess, t = _s(spark, sf_dir)
-    prefix = tempfile.mkdtemp(prefix="bsc_pcache_")
+    prefix = _fixture_dir("bsc_pcache_")
     sl = sess.wrap(t["nation"]
                    .select("n_nationkey", "n_name", "n_regionkey"))
     sl.cache_partial(prefix, F.col("n_nationkey"), 4)   # writes all 4
@@ -643,9 +663,8 @@ def op_prefixed(spark, sf_dir):
 def op_cache(spark, sf_dir):
     """bigslice.Cache/ReadCache (reference cache.go:16-95): parquet-backed
     materialization with existence short-circuit."""
-    import tempfile
     sess, t = _s(spark, sf_dir)
-    prefix = tempfile.mkdtemp(prefix="bsc_cache_")
+    prefix = _fixture_dir("bsc_cache_")
     sl = sess.wrap(t["region"]).map_("r_regionkey", "r_name")
     sl.cache(prefix)          # writes
     return sl.cache(prefix).df  # short-circuits to read
@@ -697,10 +716,9 @@ def source_tar(spark, sf_dir):
     import io
     import os
     import tarfile
-    import tempfile
 
     from .sources import tar_reader
-    d = os.path.join(tempfile.gettempdir(), "bsq_tar_fixture")
+    d = os.path.join(_fixture_root(), "bsq_tar_fixture")
     os.makedirs(d, exist_ok=True)
     p = os.path.join(d, "fixture.tar")
     if not os.path.exists(p):
@@ -727,9 +745,8 @@ def source_csv(spark, sf_dir):
     round-tripped through CSV in a scratch dir and read back — the
     oracle checks losslessness against the parquet original (integer and
     string columns only; floats would need a format contract)."""
-    import tempfile
     _, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bsq_csv_")
+    d = _fixture_dir("bsq_csv_")
     t["nation"].select("n_nationkey", "n_name", "n_regionkey") \
         .write.mode("overwrite").option("header", "true").csv(d)
     return spark.read.schema(
@@ -752,10 +769,9 @@ def source_csv_malformed(spark, sf_dir):
     file written per run; the oracle states the expected parse
     verbatim."""
     import os
-    import tempfile
 
     from .sources import read_csv
-    d = tempfile.mkdtemp(prefix="bss_badcsv_")
+    d = _fixture_dir("bss_badcsv_")
     with open(os.path.join(d, "data.csv"), "w") as fh:
         fh.write("k,name\n0,alpha\n1,beta\n2,gamma,extra\n"
                  "x,delta\n3,epsilon\n")
@@ -2077,13 +2093,12 @@ def source_binary(spark, sf_dir):
     door for multimodal ingest (SURVEY §2.1 #19's Spark mapping): one
     file per region row round-tripped through binary content."""
     import os
-    import tempfile
     from .sources import binary_files
     _, t = _s(spark, sf_dir)
     # fresh dir per call: a basename-keyed cache would serve stale files
     # when a different corpus shares the basename, and the write is only
     # 5 tiny files anyway
-    d = tempfile.mkdtemp(prefix="bsc_bin_")
+    d = _fixture_dir("bsc_bin_")
     for key, name in t["region"].select("r_regionkey",
                                         "r_name").collect():
         with open(os.path.join(d, f"{key}.txt"), "w") as f:
@@ -2106,12 +2121,11 @@ def stream_sink_parquet(spark, sf_dir):
     writeStream): append-mode filter/projection driven into a parquet
     file sink with checkpointed exactly-once commits, read back and
     compared to the batch filter."""
-    import tempfile
     from .streaming import stream_events, stream_to_parquet
     ev = stream_events(spark, sf_dir)
     out = (ev.filter(F.col("event_type") == "purchase")
            .select("event_id", "user_id", "value"))
-    d = tempfile.mkdtemp(prefix="bsc_ssink_")
+    d = _fixture_dir("bsc_ssink_")
     return stream_to_parquet(out, f"{d}/data", f"{d}/ckpt")
 
 
@@ -2122,9 +2136,8 @@ def op_compact(spark, sf_dir):
     """Small-files compaction (Session.compact_parquet): orders written
     as 64 tiny files, compacted to byte-sized output files; content
     must round-trip exactly."""
-    import tempfile
     sess, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bsc_compact_")
+    d = _fixture_dir("bsc_compact_")
     src, dst = f"{d}/src", f"{d}/dst"
     (t["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
      .repartition(64).write.parquet(src))
@@ -2145,10 +2158,9 @@ def scan_reader_lines(spark, sf_dir):
     """bigslice.ScanReader (reference scan.go:22-69) equivalent: write the
     documents out as text once, read them back through the line source."""
     import os
-    import tempfile
     from .sources import scan_reader
     _, t = _s(spark, sf_dir)
-    d = os.path.join(tempfile.gettempdir(),
+    d = os.path.join(_fixture_root(),
                      f"bsc_lines_{os.path.basename(sf_dir)}")
     if not os.path.exists(os.path.join(d, "_SUCCESS")):
         t["documents"].select("text").write.mode("overwrite").text(d)
@@ -3440,14 +3452,12 @@ def trigram_index_grep_q(spark, sf_dir):
     measures the amortized shape: build once, query many. The oracle
     is the two full-scan answers UNION ALL'd — the index provably
     loses nothing and invents nothing across both query families."""
-    import tempfile
-
     from .operators.trigram import (read_trigram_index, regex_search,
                                     substring_search,
                                     write_trigram_index)
     _, t = _s(spark, sf_dir)
     docs = t["documents"]
-    path = tempfile.mkdtemp(prefix="bss_tri_idx_")
+    path = _fixture_dir("bss_tri_idx_")
     nparts = 64
     write_trigram_index(docs, path, nparts=nparts)
     postings = read_trigram_index(spark, path)
@@ -3685,11 +3695,9 @@ def source_jsonl(spark, sf_dir):
     the parquet original. The oracle reads the parquet view — it never
     touches the temp files, so there is no ordering hazard between the
     driver's two runs."""
-    import tempfile
-
     from .sources import read_json
     _, t = _s(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="bss_jsonl_")
+    out = _fixture_dir("bss_jsonl_")
     t["documents"].write.mode("overwrite").json(out)
     return read_json(
         spark, out,
@@ -3739,10 +3747,9 @@ def indexed_lookup_q(spark, sf_dir):
     write_zordered; plan-gated (PushedFilters on the indexed scan)
     in tests/test_plans.py. The oracle reads the parquet view, so
     the temp layout only has to be value-faithful."""
-    import tempfile
 
     sess, t = _s(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="bss_idx_lookup_")
+    out = _fixture_dir("bss_idx_lookup_")
     sess.write_indexed(
         t["documents"].select("doc_id", "lang", "n_chars"), out,
         bloom_cols=["doc_id"], bloom_ndv=100_000,
@@ -3860,12 +3867,10 @@ def upsert_merge(spark, sf_dir):
     an immutable v=2 snapshot (readers resolve max committed version).
     The doubled price is x+x — exact in IEEE, so the oracle replays
     bitwise."""
-    import tempfile
-
     from .operators.upsert import read_latest, upsert
     _, t = _s(spark, sf_dir)
     base = t["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="bss_upsert_")
+    path = _fixture_dir("bss_upsert_")
     upsert(spark, path, base, ["o_orderkey"])
     updates = (base.filter(F.col("o_orderkey") % 10 == 0)
                .withColumn("o_totalprice",
@@ -3887,13 +3892,11 @@ def schema_evolution_q(spark, sf_dir):
     the diff reports exactly that column as added — pure metadata
     (manifest schemas), no data scan. The oracle states the expected
     delta verbatim."""
-    import tempfile
-
     from .operators.upsert import schema_diff, upsert
     _, t = _s(spark, sf_dir)
     base = t["orders"].select(
         "o_orderkey", "o_orderpriority", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="bss_schemaev_")
+    path = _fixture_dir("bss_schemaev_")
     upsert(spark, path, base, ["o_orderkey"],
            partition_by=["o_orderpriority"])
     upsert(spark, path,
@@ -3923,13 +3926,11 @@ def upsert_partitioned_q(spark, sf_dir):
     other four carry forward by _MANIFEST.json reference at zero data
     cost — merge cost O(touched partitions), not O(table). The doubled
     price is x+x — exact in IEEE, so the oracle replays bitwise."""
-    import tempfile
-
     from .operators.upsert import read_latest, upsert
     _, t = _s(spark, sf_dir)
     base = t["orders"].select(
         "o_orderkey", "o_orderpriority", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="bss_upsertp_")
+    path = _fixture_dir("bss_upsertp_")
     upsert(spark, path, base, ["o_orderkey"],
            partition_by=["o_orderpriority"])
     updates = (base.filter((F.col("o_orderpriority") == "1-URGENT")
@@ -4047,14 +4048,12 @@ def compact_partitioned_q(spark, sf_dir):
     untouched layout carried by manifest reference. Rows are
     byte-identical to the source — the oracle is the identity
     projection."""
-    import tempfile
-
     from .operators.upsert import (compact_partitions, read_latest,
                                    upsert)
     _, t = _s(spark, sf_dir)
     base = t["orders"].select(
         "o_orderkey", "o_orderpriority", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="bss_compactp_")
+    path = _fixture_dir("bss_compactp_")
     upsert(spark, path, base, ["o_orderkey"],
            partition_by=["o_orderpriority"])
     compact_partitions(spark, path, min_files=1)
@@ -4184,12 +4183,10 @@ def source_orc(spark, sf_dir):
     columnar-format interop story (both formats share Spark's
     pushdown/pruning machinery). Oracle reads the parquet view; the
     temp dir is never touched by the driver's oracle run."""
-    import tempfile
-
     from .sources import read_orc
     _, t = _s(spark, sf_dir)
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"]
-    out = tempfile.mkdtemp(prefix="bss_orc_")
+    out = _fixture_dir("bss_orc_")
     t["orders"].select(*cols).write.mode("overwrite").orc(out)
     return read_orc(spark, out).select(*cols)
 
@@ -4244,12 +4241,10 @@ def snapshot_diff_q(spark, sf_dir):
     delete %100=0), then diffs v1->v2 - one full-outer key join with
     null-safe struct compare. The oracle states the expected change
     set directly from the base table."""
-    import tempfile
-
     from .operators.upsert import snapshot_diff, upsert
     _, t = _s(spark, sf_dir)
     base = t["orders"].select("o_orderkey", "o_custkey", "o_totalprice")
-    path = tempfile.mkdtemp(prefix="bss_diff_")
+    path = _fixture_dir("bss_diff_")
     upsert(spark, path, base, ["o_orderkey"])
     updates = (base.filter(F.col("o_orderkey") % 10 == 0)
                .withColumn("o_totalprice",
@@ -4371,15 +4366,13 @@ def stream_upsert_q(spark, sf_dir):
     micro-batch rewrites only the shards it touches (manifest
     carry-forward), not the full snapshot. Over the finite source the
     final table equals the batch filter."""
-    import tempfile
-
     from .streaming import stream_events, stream_upsert
     ev = (stream_events(spark, sf_dir)
           .filter(F.col("event_type") == "purchase")
           .select("event_id", "user_id",
                   F.unix_micros("ts").alias("ts_us"),
                   (F.col("user_id") % 16).cast("long").alias("shard")))
-    base = tempfile.mkdtemp(prefix="bss_supsert_")
+    base = _fixture_dir("bss_supsert_")
     return stream_upsert(ev, base + "/tbl", ["event_id"],
                          checkpoint=base + "/ckpt",
                          partition_by=["shard"])
@@ -5335,14 +5328,12 @@ def stream_dedup_against_q(spark, sf_dir):
     corpus signature index is built once and reused per micro-batch.
     Batch-mode equivalence is the oracle (admission depends only on
     the static corpus, not the batching)."""
-    import tempfile
-
     from .streaming import stream_dedup_against, stream_documents
     _, t = _s(spark, sf_dir)
     new = (stream_documents(spark, sf_dir)
            .filter(F.col("doc_id") % 11 == 0))
     corpus = t["documents"].filter(F.col("doc_id") % 11 != 0)
-    base = tempfile.mkdtemp(prefix="bss_admit_")
+    base = _fixture_dir("bss_admit_")
     out = stream_dedup_against(new, corpus, base + "/out",
                                base + "/ckpt", threshold=0.7,
                                portable=True)
@@ -6096,11 +6087,9 @@ def source_warc_q(spark, sf_dir):
     BODY (so a framing slip, a Content-Length off-by-one, or a head/
     body split bug surfaces as a text/byte-count mismatch). The sink
     summary is one row per partition (metadata-scale collect)."""
-    import tempfile
-
     from .sources.warc import warc_reader, warc_sink
     _, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bss_warc_")
+    d = _fixture_dir("bss_warc_")
     body = F.encode(F.col("text"), "UTF-8")
     head = F.concat(
         F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/plain; "
@@ -6189,14 +6178,12 @@ def web_pipeline_q(spark, sf_dir):
     16-byte hashes). Survivor = min doc_id per digest; dup_count
     proves the duplicated crawls collapsed. The oracle reassembles
     every stage's contribution from the parquet originals."""
-    import tempfile
-
     from .operators.dedup import exact_dedup
     from .operators.html import html_extract
     from .operators.web import registrable_domain
     from .sources.warc import warc_reader, warc_sink
     _, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bss_webpipe_")
+    d = _fixture_dir("bss_webpipe_")
 
     ids = F.col("doc_id").cast("string")
     page = F.concat(
@@ -6686,11 +6673,9 @@ def bucketed_join_q(spark, sf_dir):
     write time deletes both shuffle legs from every subsequent join.
     The oracle replays the same join relationally from the raw
     parquet, so the bucketed write must be lossless too."""
-    import tempfile
-
     from .operators.projection import write_bucketed
     _, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bss_bkt_")
+    d = _fixture_dir("bss_bkt_")
     suffix = d.rsplit("_", 1)[-1]
     li = write_bucketed(t["lineitem"].select("l_orderkey",
                                              "l_extendedprice"),
@@ -6721,12 +6706,10 @@ def stream_warc_q(spark, sf_dir):
     losslessness check as source_warc (doc_id from the target URI,
     text from the HTTP response body). Stateless stream — no
     watermark, append mode."""
-    import tempfile
-
     from .sources.warc import warc_sink, warc_stream_reader
     from .streaming import run_to_completion
     _, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bss_warcstream_")
+    d = _fixture_dir("bss_warcstream_")
     body = F.encode(F.col("text"), "UTF-8")
     head = F.concat(
         F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/plain; "
@@ -8097,7 +8080,6 @@ def source_zip(spark, sf_dir):
     central directory all break the hash."""
     import io
     import os
-    import tempfile
     import zipfile
 
     from .sources import zip_reader
@@ -8108,7 +8090,7 @@ def source_zip(spark, sf_dir):
          zipfile.ZIP_DEFLATED),
         ("data/tail.bin", b"tail\n", zipfile.ZIP_DEFLATED),
     ]
-    d = os.path.join(tempfile.gettempdir(), "bsq_zip_fixture")
+    d = os.path.join(_fixture_root(), "bsq_zip_fixture")
     os.makedirs(d, exist_ok=True)
     p = os.path.join(d, "fixture.zip")
     if not os.path.exists(p):
@@ -8135,11 +8117,9 @@ def source_xml(spark, sf_dir):
     nation is round-tripped through an XML write and read back with a
     pinned schema; the oracle checks losslessness against the parquet
     original (the source_csv contract, third format)."""
-    import tempfile
-
     from .sources import read_xml
     _, t = _s(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bsq_xml_")
+    d = _fixture_dir("bsq_xml_")
     (t["nation"].select("n_nationkey", "n_name", "n_regionkey")
      .write.format("xml").option("rowTag", "nation")
      .mode("overwrite").save(d))
@@ -8224,7 +8204,6 @@ def source_avro(spark, sf_dir):
     source_csv/source_xml contract, fourth format)."""
     import json
     import os
-    import tempfile
 
     from .sources.avro import avro_reader, make_avro
     _, t = _s(spark, sf_dir)
@@ -8236,7 +8215,7 @@ def source_avro(spark, sf_dir):
             {"name": "n_nationkey", "type": "long"},
             {"name": "n_name", "type": "string"},
             {"name": "n_regionkey", "type": "long"}]})
-    d = tempfile.mkdtemp(prefix="bsq_avro_")
+    d = _fixture_dir("bsq_avro_")
     half = len(rows) // 2
     for fname, chunk, codec in (
             ("a.avro", rows[:half], "deflate"),
@@ -8331,7 +8310,6 @@ def source_protobuf(spark, sf_dir):
     losslessness against the parquet original (the csv/xml/avro
     contract, fifth format)."""
     import os
-    import tempfile
 
     from .sources.protobuf import (encode_message, frame_delimited,
                                    protobuf_reader)
@@ -8362,7 +8340,7 @@ def source_protobuf(spark, sf_dir):
                               {"info": {"len": len(name)}})
         return head + tail
 
-    d = tempfile.mkdtemp(prefix="bsq_pb_")
+    d = _fixture_dir("bsq_pb_")
     half = len(rows) // 2
     for fname, chunk in (("a.pb", rows[:half]), ("b.pb", rows[half:])):
         with open(os.path.join(d, fname), "wb") as f:
@@ -8398,7 +8376,6 @@ def source_tfrecord(spark, sf_dir):
     with no TensorFlow dependency. Oracle checks losslessness against
     the parquet original (sixth format)."""
     import os
-    import tempfile
 
     from .sources.protobuf import decode_message, make_delimited
     from .sources.tfrecord import make_tfrecord, tfrecord_reader
@@ -8410,7 +8387,7 @@ def source_tfrecord(spark, sf_dir):
             t["nation"].select("n_nationkey", "n_name", "n_regionkey")
             .collect()]                    # 25 rows: metadata-scale
     from .sources.protobuf import encode_message
-    d = tempfile.mkdtemp(prefix="bsq_tfr_")
+    d = _fixture_dir("bsq_tfr_")
     half = len(rows) // 2
     for fname, chunk in (("a.tfrecord", rows[:half]),
                          ("b.tfrecord", rows[half:])):
@@ -8446,7 +8423,6 @@ def source_webdataset(spark, sf_dir):
     import io
     import os
     import tarfile
-    import tempfile
 
     from .sources import webdataset_samples
     files = []
@@ -8454,7 +8430,7 @@ def source_webdataset(spark, sf_dir):
         files.append((f"train/{i:03d}.txt",
                       f"sample {word} text".encode()))
         files.append((f"train/{i:03d}.cls", b"7"))
-    d = os.path.join(tempfile.gettempdir(), "bsq_wds_fixture")
+    d = os.path.join(_fixture_root(), "bsq_wds_fixture")
     os.makedirs(d, exist_ok=True)
     p = os.path.join(d, "shard0.tar")
     if not os.path.exists(p):
@@ -8896,7 +8872,6 @@ def source_arrow_ipc(spark, sf_dir):
     format)."""
     import io
     import os
-    import tempfile
 
     import pyarrow as pa
 
@@ -8908,7 +8883,7 @@ def source_arrow_ipc(spark, sf_dir):
     schema = pa.schema([("n_nationkey", pa.int64()),
                         ("n_name", pa.string()),
                         ("n_regionkey", pa.int64())])
-    d = tempfile.mkdtemp(prefix="bsq_arrow_")
+    d = _fixture_dir("bsq_arrow_")
     half = len(rows) // 2
     for fname, chunk in (("a.arrow", rows[:half]),
                          ("b.arrow", rows[half:])):
@@ -9187,7 +9162,6 @@ def source_avro_complex_q(spark, sf_dir):
     scalars so the oracle can replay every leaf analytically."""
     import json
     import os
-    import tempfile
 
     from .sources.avro import avro_reader, make_avro
     _, t = _s(spark, sf_dir)
@@ -9219,7 +9193,7 @@ def source_avro_complex_q(spark, sf_dir):
             {"name": "fp", "type": {"type": "fixed", "name": "F4",
                                     "size": 4}},
             {"name": "maybe", "type": ["string", "null"]}]})
-    d = tempfile.mkdtemp(prefix="bsq_avroc_")
+    d = _fixture_dir("bsq_avroc_")
     half = len(rows) // 2
     for fname, chunk, codec in (
             ("a.avro", rows[:half], "snappy"),
@@ -9259,7 +9233,6 @@ def source_avro_zstd(spark, sf_dir):
     source_avro contract, zstd edition)."""
     import json
     import os
-    import tempfile
 
     from .sources.avro import avro_reader, make_avro
     _, t = _s(spark, sf_dir)
@@ -9271,7 +9244,7 @@ def source_avro_zstd(spark, sf_dir):
             {"name": "n_nationkey", "type": "long"},
             {"name": "n_name", "type": "string"},
             {"name": "n_regionkey", "type": "long"}]})
-    d = tempfile.mkdtemp(prefix="bsq_avroz_")
+    d = _fixture_dir("bsq_avroz_")
     half = len(rows) // 2
     for fname, chunk, codec in (
             ("a.avro", rows[:half], "zstd"),
@@ -9308,7 +9281,6 @@ def source_avro_logical(spark, sf_dir):
     import datetime
     import json
     import os
-    import tempfile
     from decimal import Decimal
 
     from .sources.avro import avro_reader, make_avro
@@ -9332,7 +9304,7 @@ def source_avro_logical(spark, sf_dir):
             {"name": "ts", "type": {
                 "type": "long",
                 "logicalType": "timestamp-micros"}}]})
-    dd = tempfile.mkdtemp(prefix="bsq_avrol_")
+    dd = _fixture_dir("bsq_avrol_")
     with open(os.path.join(dd, "a.avro"), "wb") as f:
         f.write(make_avro(sch, rows, codec="deflate", block_rows=7))
     return avro_reader(
@@ -9362,7 +9334,6 @@ def source_avro_evolution(spark, sf_dir):
     round-trip."""
     import json
     import os
-    import tempfile
 
     from .sources.avro import avro_reader, make_avro
     _, t = _s(spark, sf_dir)
@@ -9384,7 +9355,7 @@ def source_avro_evolution(spark, sf_dir):
             {"name": "n_nationkey", "type": "long"},
             {"name": "n_name", "type": "string"},
             {"name": "n_regionkey", "type": "long", "default": 99}]})
-    d = tempfile.mkdtemp(prefix="bsq_avroe_")
+    d = _fixture_dir("bsq_avroe_")
     old = [(n, k, f"legacy row {k}") for k, n, _ in rows if k < 12]
     new = [r for r in rows if r[0] >= 12]
     for fname, sch, chunk, codec in (
@@ -9416,7 +9387,6 @@ def source_protobuf_maps(spark, sf_dir):
     canonicalizer contract) so the oracle replays every entry
     analytically."""
     import os
-    import tempfile
 
     from .sources.protobuf import make_delimited, protobuf_reader
     _, t = _s(spark, sf_dir)
@@ -9427,7 +9397,7 @@ def source_protobuf_maps(spark, sf_dir):
             .collect()]                    # 25 rows: metadata-scale
     sch = {1: ("n_nationkey", "int64"),
            2: ("attrs", ("map", "string", "int64"))}
-    d = tempfile.mkdtemp(prefix="bsq_pbm_")
+    d = _fixture_dir("bsq_pbm_")
     with open(os.path.join(d, "a.pb"), "wb") as f:
         f.write(make_delimited(sch, rows))
     df = protobuf_reader(spark, d, sch,
@@ -9549,15 +9519,9 @@ def nb_classifier_q(spark, sf_dir):
     counting, smoothing, summation or the argmax breaks the hash."""
     from .operators.classify import nb_classify, nb_train
     _, t = _s(spark, sf_dir)
-    # Composed form, deliberately (r14 continuation): the fused
-    # nb_self_classify (one tokenize pass via a materialized per-doc
-    # word-count relation) won only on a degraded box at sf0.1; a
-    # calm-box interleaved A/B was a wash at sf0.1 and a consistent
-    # 1.2-1.4x LOSS at sf1 (checkpoint write+read of the (id,label,w)
-    # relation costs more than the three re-tokenize scans it saves —
-    # whitespace tokenize is cheap codegen). nb_self_classify remains
-    # the right call when tokenization dominates (real BPE/unigram
-    # encode); see its docstring for the measurements.
+    # Composed form: a one-tokenize fork through a materialized
+    # per-doc word-count relation lost at sf1 (whitespace tokenize is
+    # cheap codegen); see nb_classify's docstring.
     docs = t["documents"]
     wc, cls, glob = nb_train(docs, label_col="lang")
     return nb_classify(docs, wc, cls, glob)

@@ -100,3 +100,15 @@ def test_per_row_python_stages_go_through_flatmap_rows():
     assert found == [("operators/sketch.py", "heavy_hitters"),
                      ("sources/__init__.py", "arrow_ipc_reader"),
                      ("sources/warc.py", "warc_sink")], found
+
+
+def test_merged_and_moved_paths_stay_gone():
+    """One grep pipeline, one Naive Bayes path, one AES: the second
+    copies do not come back (the clean-room AES is a test reference,
+    tests/aes_reference.py)."""
+    from bigslice_spark.operators import classify, pdfcrypt, trigram
+    assert not hasattr(trigram, "substring_candidates")
+    assert not hasattr(classify, "nb_self_classify")
+    assert "doc_words" not in inspect.signature(
+        classify.nb_classify).parameters
+    assert not hasattr(pdfcrypt, "_cbc_encrypt_py")

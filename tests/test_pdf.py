@@ -78,55 +78,57 @@ def test_bogus_startxref_raises():
 
 
 def test_crypto_published_vectors():
-    """The clean-room primitives are pinned to PUBLIC known answers:
-    RC4 to the classic "Key"/"Plaintext" vector, AES-128 to the
-    FIPS-197 Appendix C.1 round-trip."""
-    from bigslice_spark.operators.pdfcrypt import (
-        aes128_decrypt_block, aes128_encrypt_block, rc4)
+    """The cipher primitives are pinned to PUBLIC known answers: RC4
+    to the classic "Key"/"Plaintext" vector, AES-128/256 to the
+    FIPS-197 Appendix C.1/C.3 round-trips (one block under CBC with a
+    zero IV is ECB)."""
+    from bigslice_spark.operators.pdfcrypt import (aes_cbc_decrypt_nopad,
+                                                   aes_cbc_encrypt_nopad,
+                                                   rc4)
     assert rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
     assert rc4(b"Key", rc4(b"Key", b"payload")) == b"payload"
-    key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = aes128_encrypt_block(key, pt)
-    assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert aes128_decrypt_block(key, ct) == pt
-    # AES-256: the FIPS-197 Appendix C.3 known answer
-    k256 = bytes(range(32))
-    ct = aes128_encrypt_block(k256, pt)
-    assert ct.hex() == "8ea2b7ca516745bfeafc49904b496089"
-    assert aes128_decrypt_block(k256, ct) == pt
+    for key, want in (
+            (bytes(range(16)), "69c4e0d86a7b0430d8cdb78070b4c55a"),
+            (bytes(range(32)), "8ea2b7ca516745bfeafc49904b496089")):
+        ct = aes_cbc_encrypt_nopad(key, bytes(16), pt)
+        assert ct.hex() == want
+        assert aes_cbc_decrypt_nopad(key, bytes(16), ct) == pt
 
 
 def test_aes_cross_validated_against_openssl():
-    """Independent oracle: the clean-room AES (both key sizes, ECB
-    and raw CBC) must agree byte-exactly with the OpenSSL-backed
-    `cryptography` package on randomized inputs."""
-    cryptography = pytest.importorskip("cryptography")  # noqa: F841
+    """Independent oracle: the clean-room reference AES
+    (tests/aes_reference.py — both key sizes, ECB and raw CBC) must
+    agree byte-exactly with the OpenSSL-backed `cryptography` package
+    the operator runs on, over randomized inputs."""
     import random
 
     from cryptography.hazmat.primitives.ciphers import (Cipher,
                                                         algorithms,
                                                         modes)
 
-    from bigslice_spark.operators.pdfcrypt import (
-        _cbc_decrypt_py, _cbc_encrypt_py, aes128_encrypt_block)
+    from .aes_reference import (cbc_decrypt, cbc_encrypt,
+                                decrypt_block, encrypt_block)
+    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
+    for key, want in (      # the derived S-box meets FIPS-197 C.1/C.3
+            (bytes(range(16)), "69c4e0d86a7b0430d8cdb78070b4c55a"),
+            (bytes(range(32)), "8ea2b7ca516745bfeafc49904b496089")):
+        assert encrypt_block(key, pt).hex() == want
+        assert decrypt_block(key, bytes.fromhex(want)) == pt
     rnd = random.Random(20260816)
     for klen in (16, 32):
         for _ in range(8):
             key = bytes(rnd.randrange(256) for _ in range(klen))
             blk = bytes(rnd.randrange(256) for _ in range(16))
             ref = Cipher(algorithms.AES(key), modes.ECB()).encryptor()
-            assert (aes128_encrypt_block(key, blk)
-                    == ref.update(blk) + ref.finalize())
+            assert encrypt_block(key, blk) == ref.update(blk) + ref.finalize()
             iv = bytes(rnd.randrange(256) for _ in range(16))
             data = bytes(rnd.randrange(256)
                          for _ in range(16 * rnd.randint(1, 6)))
             ref = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
             want = ref.update(data) + ref.finalize()
-            # the clean-room CBC directly — the cross-implementation
-            # pin, not OpenSSL vs itself
-            assert _cbc_encrypt_py(key, iv, data) == want
-            assert _cbc_decrypt_py(key, iv, want) == data
+            assert cbc_encrypt(key, iv, data) == want
+            assert cbc_decrypt(key, iv, want) == data
 
 
 def test_aes_cbc_padding_round_trip_and_corruption():

@@ -977,14 +977,20 @@ def test_trigram_index_prunes_and_matches_full_scan(spark, tables,
     """operators/trigram.py (r14): the index may only
     OVER-approximate — after the instr verify the result must EQUAL
     the full-scan answer (including a literal with zero matches and
-    a sub-trigram needle that falls back to full verify); the
-    persisted index must plan PartitionFilters on the trigram hash
-    bucket; the needed-trigram set must broadcast."""
+    a sub-trigram needle that falls back to full verify, and the
+    adversarial literals below, on both on-the-fly and persisted
+    postings); the persisted index must plan PartitionFilters on the
+    trigram hash bucket; the needed-trigram set must broadcast."""
     from bigslice_spark.operators.trigram import (read_trigram_index,
                                                   substring_search,
                                                   write_trigram_index)
     docs = tables["documents"]
-    lits = ["hash scan", "key order", "zz-not-there", "qu"]
+    lits = ["hash scan", "key order", "zz-not-there", "qu",
+            "aaaa", "batch batch",     # repeated trigrams
+            "hash",                    # trigrams ⊂ "hash scan"'s
+            "",                        # matches every doc
+            "naïve wïndöw",            # multi-byte UTF-8
+            "key order"]               # duplicate in the same call
 
     def full_scan(s):
         return {r["doc_id"] for r in
@@ -996,6 +1002,9 @@ def test_trigram_index_prunes_and_matches_full_scan(spark, tables,
                  substring_search(docs, lits).collect())
     assert got == want
     assert not full_scan("zz-not-there")     # the zero-match literal
+    assert full_scan("batch batch") and full_scan("hash")
+    assert len(full_scan("")) == docs.filter("text IS NOT NULL").count()
+    assert substring_search(docs, []).collect() == []
 
     d = str(tmp_path_factory.mktemp("tri") / "idx")
     write_trigram_index(docs, d, nparts=16)
@@ -1004,6 +1013,10 @@ def test_trigram_index_prunes_and_matches_full_scan(spark, tables,
                   substring_search(docs, lits, postings=idx,
                                    indexed_parts=16).collect())
     assert got2 == want
+    empty = substring_search(docs, [], postings=idx, indexed_parts=16)
+    assert empty.collect() == []
+    assert empty.schema.simpleString() == \
+        "struct<pattern:string,doc_id:bigint>"
     plan = explain_str(substring_search(docs, ["hash scan"],
                                         postings=idx,
                                         indexed_parts=16))

@@ -40,3 +40,26 @@ def test_readme_registry_count_current():
     assert int(m.group(1)) == len(QUERIES), (
         f"README says {m.group(1)}-query registry but len(QUERIES) is "
         f"{len(QUERIES)} — update README.md")
+
+
+def test_fixture_dirs_removed_at_process_exit():
+    """Entries write their fixtures under one per-process root that an
+    ``atexit`` hook removes: a fresh interpreter that makes a fixture
+    directory and exits leaves nothing behind, and importing the
+    registry makes no directory at all."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+    code = ("import bigslice_spark.queries as q\n"
+            "assert q._fixture_root.cache_info().currsize == 0\n"
+            "d = q._fixture_dir('bss_exit_test_')\n"
+            "open(d + '/part', 'w').write('x')\n"
+            "print(d)\n")
+    out = subprocess.run(
+        [sys.executable, "-c", code], check=True, capture_output=True,
+        text=True, cwd=pathlib.Path(__file__).parent.parent)
+    d = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(d).startswith("bss_exit_test_"), d
+    assert not os.path.exists(d)
+    assert not os.path.exists(os.path.dirname(d))

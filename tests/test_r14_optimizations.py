@@ -45,21 +45,6 @@ def test_bucketed_self_join_bn_col_matches_window_count(spark):
     assert got == want
 
 
-def test_nb_self_classify_equals_composed_train_classify(spark, tables):
-    """The fused single-tokenization path must reproduce the composed
-    nb_train + nb_classify predictions exactly."""
-    from bigslice_spark.operators.classify import (nb_classify,
-                                                   nb_self_classify,
-                                                   nb_train)
-    docs = tables["documents"]
-    wc, cls, glob = nb_train(docs, label_col="lang")
-    want = _rows(nb_classify(docs, wc, cls, glob),
-                 ["doc_id", "pred", "n_words"])
-    got = _rows(nb_self_classify(docs, label_col="lang"),
-                ["doc_id", "pred", "n_words"])
-    assert got == want
-
-
 def test_trigram_postings_only_matches_full_intersection(spark, tables):
     """The instr-probe one-shot build must yield exactly the needed
     subset of the full postings relation."""

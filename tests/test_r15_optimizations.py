@@ -231,14 +231,14 @@ def test_trigram_postings_distinct_invariant(spark):
 
 
 def test_trigram_cover_count_star_equals_distinct_shape(spark):
-    """substring_candidates with the count(*) cover must equal the
+    """_candidates with the count(*) cover must equal the
     count(distinct) form it replaced, on a corpus where candidate
     cover counting actually matters (shared trigrams across needles,
     repeated trigrams inside documents)."""
     from pyspark.sql import functions as F
 
-    from bigslice_spark.operators.trigram import (literal_trigrams,
-                                                  substring_candidates,
+    from bigslice_spark.operators.trigram import (_candidates,
+                                                  literal_trigrams,
                                                   trigram_postings)
 
     docs = spark.createDataFrame(
@@ -249,9 +249,9 @@ def test_trigram_cover_count_star_equals_distinct_shape(spark):
         "doc_id long, text string")
     lits = ["hash scan", "key order", "spark window"]
     post = trigram_postings(docs)
-    got = substring_candidates(post, lits)
     need_rows = [(qi, t) for qi, lit in enumerate(lits)
                  for t in literal_trigrams(lit)]
+    got = _candidates(post, [(qi, 0, t) for qi, t in need_rows])
     need = spark.createDataFrame(need_rows, "q int, tri string")
     kdf = spark.createDataFrame(
         [(qi, len(literal_trigrams(lit)))
