@@ -5,6 +5,7 @@ operator honest at 100TB.
 - assert_pushed_filters:    the parquet scan actually received the filter.
 - assert_broadcast / assert_no_shuffle_before_partial_agg: join/agg
                             strategy checks used by the plan tests.
+- broadcast_scans:          the tables each broadcast build side reads.
 - advise_shuffle_partitions: bigslice's nshard ↔ shuffle-partition policy
                             (reference docs/parallelism.md:19-105): size
                             partitions by input bytes, not a constant.
@@ -132,7 +133,14 @@ def plan_report(df: DataFrame) -> dict:
       python runner's rejoin buffer. Fix: udf.asNondeterministic()
       pins the node where written (the r9c bloom_probe finding:
       81s -> 5s-equivalent at 16x);
-    - pushed_scans: (read_schema, pushed_filters) per parquet scan.
+    - pushed_scans: (read_schema, pushed_filters) per parquet scan;
+    - broadcast_scans: per BroadcastExchange, the (table, aggregated)
+      pairs of the scans its build side reads, ``aggregated`` True
+      when an aggregate sits between the scan and the exchange. A
+      fact table broadcast raw (``("lineitem", False)``) is the star
+      join built on the wrong side: Catalyst sizes a join's output as
+      the product of its inputs, so a dimension composite can look
+      bigger than the filtered fact scan (the q3 finding).
 
     The same predicates the tests/test_plans.py gates assert, exposed
     for interactive use; feed the dict to your own thresholds.
@@ -154,7 +162,42 @@ def plan_report(df: DataFrame) -> dict:
                          "MapInPandas", "FlatMapGroupsInPandas")),
         "duplicated_python_udf": _duplicated_python_udf(tree),
         "pushed_scans": scans_with_pushed_filters(df),
+        "broadcast_scans": broadcast_scans(df),
     }
+
+
+def broadcast_scans(df: DataFrame) -> list[list[tuple[str, bool]]]:
+    """One entry per BroadcastExchange in the physical plan (the final
+    adaptive plan once ``df`` has run): the ``(table, aggregated)``
+    pair of every parquet scan its build side reads, in plan order.
+    ``table`` is the scanned path's base name less ``.parquet``;
+    ``aggregated`` is True when an aggregate sits between the scan and
+    the exchange."""
+    out: list = []
+
+    def walk(node, builds: tuple) -> None:
+        kind = node.getClass().getSimpleName()
+        if kind.endswith("QueryStageExec"):     # adaptive stage
+            return walk(node.plan(), builds)
+        if kind == "BroadcastExchangeExec":
+            out.append([])
+            builds += ((out[-1], False),)
+        elif kind.endswith("AggregateExec"):
+            builds = tuple((scans, True) for scans, _ in builds)
+        elif kind == "FileSourceScanExec":
+            path = node.relation().location().rootPaths().apply(0)
+            table = path.getName().removesuffix(".parquet")
+            for scans, aggregated in builds:
+                scans.append((table, aggregated))
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i), builds)
+
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        plan = plan.executedPlan()
+    walk(plan, ())
+    return out
 
 
 def _duplicated_python_udf(tree: str) -> bool:

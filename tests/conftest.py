@@ -61,19 +61,18 @@ def duck(sf_dir):
 
 
 @pytest.fixture
-def cluster_checkpoint(spark):
+def cluster_checkpoint(spark, tmp_path_factory):
     """Context-manager factory: inside it, checkpoint.materialize takes
     the cluster path (a reliable checkpoint, as under a non-local
     master) — ``_single_jvm`` is patched to say no, and the context
     has a checkpoint dir."""
     import contextlib
-    import tempfile
     from unittest import mock
 
     from bigslice_spark import checkpoint
     sc = spark.sparkContext
     if sc.getCheckpointDir() is None:
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="bss_ckpt_"))
+        sc.setCheckpointDir(str(tmp_path_factory.mktemp("ckpt")))
 
     @contextlib.contextmanager
     def cluster():

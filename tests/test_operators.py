@@ -4,7 +4,6 @@ behavior, empty-group cogroup zero values, cache short-circuiting,
 pandas-path vs pure-Python reference equality."""
 
 import os
-import tempfile
 
 import pyspark.sql.functions as F
 import pytest
@@ -75,8 +74,8 @@ def test_scan_batches_arrow_path(session, spark):
     assert shards.value >= 1
 
 
-def test_cache_short_circuits(session):
-    prefix = tempfile.mkdtemp(prefix="bsc_cache_test_")
+def test_cache_short_circuits(session, tmp_path):
+    prefix = str(tmp_path)
     sl = session.const(2, [1, 2, 3], names=["n"], schema="n long")
     c1 = sl.cache(prefix)
     assert sorted(c1.collect()) == [(1,), (2,), (3,)]
@@ -88,11 +87,11 @@ def test_cache_short_circuits(session):
     assert sorted(c2.collect()) == [(1,), (2,), (3,)]
 
 
-def test_cache_gc_helpers(session):
+def test_cache_gc_helpers(session, tmp_path):
     """list_caches enumerates prefix dirs with size + completeness;
     drop_cache deletes a cache dir but refuses non-cache dirs."""
     import pytest
-    root = tempfile.mkdtemp(prefix="bsc_cache_gc_")
+    root = str(tmp_path)
     sl = session.const(2, [1, 2, 3], names=["n"], schema="n long")
     sl.cache(os.path.join(root, "a"))
     sl.cache(os.path.join(root, "b"))
@@ -160,12 +159,12 @@ def test_writer_func_terminal_calls(session, spark):
     assert acc_eof.value == out.num_shard()
 
 
-def test_cache_partial_per_shard(session, spark):
+def test_cache_partial_per_shard(session, spark, tmp_path):
     """CachePartial semantics (reference cache.go:45-66): delete ONE
     shard's files → only that shard is rewritten (other shard files
     untouched on disk), and the result is still complete."""
     import shutil
-    prefix = tempfile.mkdtemp(prefix="bsc_pcache_test_")
+    prefix = str(tmp_path)
     sl = session.const(4, list(range(40)), names=["n"], schema="n long")
     c1 = sl.cache_partial(prefix, F.col("n"), 4)
     assert sorted(r[0] for r in c1.collect()) == list(range(40))
@@ -192,10 +191,10 @@ def test_cache_partial_per_shard(session, spark):
         assert dir_sig(d) == sig
 
 
-def test_cache_partial_null_shard_values(session, spark):
+def test_cache_partial_null_shard_values(session, spark, tmp_path):
     """NULL shard values must not brick the prefix: they land in shard 0
     (coalesce before pmod) and a rerun still short-circuits."""
-    prefix = tempfile.mkdtemp(prefix="bsc_pcache_null_")
+    prefix = str(tmp_path)
     df = spark.createDataFrame(
         [(None,), (1,), (2,), (3,)], "n long")
     sl = session.wrap(df)
@@ -211,8 +210,8 @@ def test_cache_partial_null_shard_values(session, spark):
     assert c2.count() == 4
 
 
-def test_compact_parquet_rejects_overlapping_dst(session, spark):
-    src = tempfile.mkdtemp(prefix="bsc_compact_src_")
+def test_compact_parquet_rejects_overlapping_dst(session, spark, tmp_path):
+    src = str(tmp_path)
     spark.range(10).write.mode("overwrite").parquet(src)
     with pytest.raises(ValueError, match="overlaps"):
         session.compact_parquet(src, src)
@@ -775,10 +774,9 @@ def test_asof_null_timestamps(spark):
         assert got == want, f"{direction}: {got}"
 
 
-def test_stream_to_parquet_empty_result(spark, sf_dir):
-    import tempfile
+def test_stream_to_parquet_empty_result(spark, sf_dir, tmp_path):
     from bigslice_spark.streaming import stream_events, stream_to_parquet
-    d = tempfile.mkdtemp(prefix="bsc_ssink_empty_")
+    d = str(tmp_path)
     ev = stream_events(spark, sf_dir)
     out = stream_to_parquet(
         ev.filter(F.col("event_type") == "no_such_type")

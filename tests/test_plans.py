@@ -3,12 +3,15 @@ value-correct and still carry a plan that dies at scale — these tests pin
 the physical strategies (pushdown, broadcast, partial agg, shuffle counts)
 so a refactor can't silently regress them."""
 
+import re
+
 import pyspark.sql.functions as F
 
 from bigslice_spark.plans import (assert_broadcast_join,
                                   assert_partial_aggregation,
-                                  assert_pushed_filters, count_exchanges,
-                                  explain_str, scans_with_pushed_filters)
+                                  assert_pushed_filters, broadcast_scans,
+                                  count_exchanges, explain_str,
+                                  scans_with_pushed_filters)
 from bigslice_spark.queries import QUERIES
 
 
@@ -29,7 +32,25 @@ def test_q1_prunes_columns(spark, sf_dir):
 
 
 def test_q3_broadcasts_dims(spark, sf_dir):
-    assert_broadcast_join(QUERIES["q3_shipping_priority"](spark, sf_dir))
+    """q3 streams lineitem: its build sides are customer and the
+    date-filtered orders, never the lineitem scan."""
+    df = QUERIES["q3_shipping_priority"](spark, sf_dir)
+    built = {t for scans in broadcast_scans(df) for t, _ in scans}
+    assert built == {"customer", "orders"}, broadcast_scans(df)
+
+
+def test_no_tpch_query_broadcasts_raw_lineitem(spark, sf_dir):
+    """The fact table is always the streamed side: no q<N>_ entry's
+    broadcast build side scans lineitem without an aggregate in
+    between (aggregated lineitem, as in q11/q15/q18/q20, is
+    dimension-sized and fine). Plans only; nothing runs."""
+    raw = {}
+    for name in sorted(QUERIES):
+        if re.match(r"q\d+_", name):
+            builds = broadcast_scans(QUERIES[name](spark, sf_dir))
+            if any(("lineitem", False) in scans for scans in builds):
+                raw[name] = builds
+    assert not raw, raw
 
 
 def test_q5_broadcasts_dims(spark, sf_dir):

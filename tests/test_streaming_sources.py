@@ -3,7 +3,6 @@
 import io
 import os
 import tarfile
-import tempfile
 
 import pyspark.sql.functions as F
 
@@ -45,7 +44,7 @@ def test_stateful_user_counts(spark, sf_dir, tables):
     assert got == batch
 
 
-def test_watermark_drops_late_data(spark):
+def test_watermark_drops_late_data(spark, tmp_path):
     """The §2.3 late-data claim, pinned: in append mode with a 1-hour
     watermark, an event arriving in a later micro-batch but timestamped
     BEFORE the advanced watermark must be dropped; an in-watermark
@@ -53,7 +52,7 @@ def test_watermark_drops_late_data(spark):
     import pandas as pd
     from pyspark.sql import types as T
 
-    d = tempfile.mkdtemp(prefix="bsc_late_")
+    d = str(tmp_path)
     src, out = os.path.join(d, "src"), os.path.join(d, "sink")
     os.makedirs(src)
     schema = T.StructType([T.StructField("ts", T.TimestampType()),
@@ -105,9 +104,9 @@ def test_watermark_drops_late_data(spark):
     assert not any(s.startswith("2026-01-01T09:00") for s, _ in got), got
 
 
-def test_scan_reader_lines(spark):
+def test_scan_reader_lines(spark, tmp_path):
     from bigslice_spark.sources import scan_reader
-    d = tempfile.mkdtemp(prefix="bsc_text_")
+    d = str(tmp_path)
     with open(os.path.join(d, "a.txt"), "w") as f:
         f.write("alpha beta\ngamma\n\ndelta\n")
     df = scan_reader(spark, d, nshard=2)
@@ -115,9 +114,9 @@ def test_scan_reader_lines(spark):
     assert lines == ["", "alpha beta", "delta", "gamma"]
 
 
-def test_tar_reader(spark):
+def test_tar_reader(spark, tmp_path):
     from bigslice_spark.sources import tar_reader
-    d = tempfile.mkdtemp(prefix="bsc_tar_")
+    d = str(tmp_path)
     buf = io.BytesIO()
     with tarfile.open(fileobj=buf, mode="w") as tf:
         for name, data in [("x/one.txt", b"hello"), ("two.bin", b"\x00\x01")]:
