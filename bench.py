@@ -1,5 +1,5 @@
 """Benchmark harness: runs headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+/root/testdata/sf0.1) on session.get_spark and prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...}, "sf": ...}
 
 PROTOCOL (round 12, VERDICT r11 task 5): the default invocation —
@@ -13,15 +13,17 @@ list-position JVM contamination of a 42→60-query run; this protocol
 ends that class of dispute. Within a subprocess, timing includes
 plan + execution + a driver-side count().
 
-Knob: SPARK_GRAFT_BENCH_ONLY=a,b,c runs exactly the named entries
-in-process, in one JVM — the per-query subprocess target, and, with
-every name listed, a whole-list single-JVM run (not comparable to
-fresh-JVM artifacts).
+Knob: SPARK_GRAFT_BENCH_ONLY=a,b,c runs exactly the named registry
+entries in-process, in one JVM — the per-query subprocess target (any
+registry entry, so ab.py can A/B non-headline queries), and, with every
+name listed, a whole-list single-JVM run (not comparable to fresh-JVM
+artifacts).
 
 This module is also the one harness the other scripts import: the
-session conf (BENCH_CONF, bench_session), the warmup, the query
-resolver (VARIANTS, query_fn), the timed run (timed), the fresh-JVM
-runner (run_fresh) and the >1.5x mover gate (movers).
+warmup, the query resolver (VARIANTS, query_fn), the timed run
+(timed), the fresh-JVM runner (run_fresh) and the >1.5x mover gate
+(movers). Every script starts Spark through session.get_spark, the
+conf library users get.
 """
 
 from __future__ import annotations
@@ -35,7 +37,9 @@ import sys
 import time
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
+
+from bigslice_spark.session import get_spark
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 
@@ -136,46 +140,6 @@ HEADLINE = [
     # 100 TB shape; VERDICT r14 task 5)
     "trigram_index_grep",
 ]
-
-
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-# Deliberately the SAME harness conf BENCH_r01/r02 ran (stock 10 MB
-# broadcast threshold, no skew-join flag, default codegen split): round
-# 3 switched the bench to the engine's production conf (64 MB broadcast
-# etc.) and regressed the recorded totals ~2.5s at sf0.1 — fresh-JVM
-# A/B medians (3 runs each, round 4): r2-era conf 33.3s vs
-# 64MB+skew+split256 35.9s, with the losses concentrated in
-# similarity_lsh/op_fold_stream/similarity_topk (forced broadcasts of
-# mid-size sides cost driver build time at this SF). The production
-# conf remains session._DEFAULT_CONF — right for real deployments — but
-# the bench must stay apples-to-apples with the r1 baseline the ratchet
-# tracks.
-BENCH_CONF = {
-    "spark.master": f"local[{CPUS}]",
-    "spark.sql.shuffle.partitions": CPUS,
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.session.timeZone": "UTC",
-    "spark.sql.legacy.parquet.nanosAsLong": "true",
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
-    "spark.ui.enabled": "false",
-}
-
-
-def bench_session(app: str, event_dir: str | None = None):
-    """A SparkSession on BENCH_CONF; with ``event_dir``, an uncompressed,
-    unrolled event log is written there."""
-    conf = dict(BENCH_CONF)
-    if event_dir:
-        conf.update({"spark.eventLog.enabled": "true",
-                     "spark.eventLog.compress": "false",
-                     "spark.eventLog.rolling.enabled": "false",
-                     "spark.eventLog.dir": event_dir})
-    spark = SparkSession.builder.appName(app).config(map=conf).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    return spark
 
 
 def warmup(spark, sf_dir: str) -> None:
@@ -305,7 +269,7 @@ def run_here(app: str, names: list[str], sf_dir: str,
              force: Callable = DataFrame.count) -> dict[str, float]:
     """Seconds per name (timed) in one session of this process, after
     the warmup; one progress line per name on stderr."""
-    spark = bench_session(app)
+    spark = get_spark(app)
     warmup(spark, sf_dir)
     times = {}
     for name in names:
@@ -522,16 +486,20 @@ def main() -> None:
     if not only:
         orchestrate(sf_dir, sf)
         return
-    wanted = {q.strip() for q in only.split(",") if q.strip()}
-    unknown = wanted - set(HEADLINE)
+    from bigslice_spark.queries import QUERIES
+    wanted = list(dict.fromkeys(q.strip() for q in only.split(",")
+                                if q.strip()))
+    unknown = [q for q in wanted if q not in QUERIES]
     if unknown:
-        # a typo must not silently drop a ratchet entry from the
-        # recorded artifact
+        # a typo must not silently drop an entry from the recorded
+        # artifact
         raise SystemExit(
-            f"SPARK_GRAFT_BENCH_ONLY names not in HEADLINE: "
-            f"{sorted(unknown)}")
-    times = run_here("bigslice_spark_bench",
-                     [q for q in HEADLINE if q in wanted], sf_dir)
+            f"SPARK_GRAFT_BENCH_ONLY names not in the registry: {unknown}")
+    # HEADLINE names in HEADLINE order, then any other registry entry
+    # (an ab.py A/B of a non-headline query) in the order given
+    names = [q for q in HEADLINE if q in wanted] + \
+        [q for q in wanted if q not in HEADLINE]
+    times = run_here("bigslice_spark_bench", names, sf_dir)
     total = round(sum(v for v in times.values() if v > 0), 3)
     print(json.dumps({
         "metric": "headline_queries_total_wall",

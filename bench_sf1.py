@@ -97,7 +97,7 @@ def main() -> None:
     doc = {
         "round": int(m.group(1)) if m else -1,
         "sf": 1.0,
-        "cpus": int(bench.CPUS),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()),
         "driver_mem": mem,
         "protocol": ("fresh JVM per query (bench.py subprocess with "
                      "SPARK_GRAFT_BENCH_ONLY=<name>); bench.py's "

@@ -9,7 +9,7 @@ key with 10^9 rows while the other 999 executors idle. Two tools:
   (oracle-checkable) but the heaviest reducer shrinks by ~nsalts.
   Use when the small side is too big to broadcast AND keys are skewed;
   otherwise prefer broadcast() or AQE skew-join splitting
-  (spark.sql.adaptive.skewJoin, on by default in Session).
+  (spark.sql.adaptive.skewJoin, on by Spark default).
 
 - two-stage salted aggregation lives as a pattern in
   queries.op_salted_agg: groupBy(key, salt) partial → groupBy(key)

@@ -15,30 +15,26 @@ from typing import Any, Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Defaults chosen for scale, not just local tests:
-# - AQE on: runtime partition coalescing + skew-join splitting replaces
-#   bigslice's static nshard choice (docs/parallelism.md:19-105).
+# Only settings that differ from Spark's own defaults (the defaults the
+# plans rely on are pinned by test_session_conf_pins_plan_shaping_values):
 # - shuffle.partitions: overridable; on a real cluster set ~2-3x total cores.
 # - Arrow on: every Python-side operator (fold/flatmap custom paths) moves
 #   batches, never rows — the analog of bigslice's 128-row Frames
 #   (reference internal/defaultsize/defaultsize.go:14-16).
-# - maxPartitionBytes 128m: at 100 TB this yields ~800k input splits, which
-#   Spark's scheduler handles; larger values risk executor OOM on wide rows.
 _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_CPUS", "32"),
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
-    "spark.sql.parquet.filterPushdown": "true",
     # Wide sketch aggregates (64-column minhash MINs, 384-term LSH
     # projections) generate single giant codegen methods whose Janino +
     # C2 compile time is superlinear in method size; splitting at 256
     # chars measured ~25% faster cold on the dedup/LSH pipelines with
     # no steady-state penalty (C2 re-inlines the split methods).
     "spark.sql.codegen.methodSplitThreshold": "256",
-    "spark.sql.files.maxPartitionBytes": "134217728",
+    # 64 MB, not Spark's 10 MB: a trade measured over the whole registry
+    # (PERFORMANCE.md, "One session conf"). Mid-size build sides
+    # (similarity_lsh, decontaminate_bloom, multimodal_gif) run faster
+    # broadcast; triangle_count and q10 run faster at 10 MB.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     "spark.ui.enabled": "false",
     # driver testdata writes events.ts as INT64 TIMESTAMP(NANOS) which the

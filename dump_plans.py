@@ -16,6 +16,7 @@ import os
 import sys
 
 import bench
+from bigslice_spark.session import get_spark
 
 
 def main() -> None:
@@ -24,7 +25,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     outdir = os.path.join(bench.HERE, "plans", tag)
     os.makedirs(outdir, exist_ok=True)
-    spark = bench.bench_session("bigslice_spark_plandump")
+    spark = get_spark("bigslice_spark_plandump")
     from bigslice_spark.checkpoint import release_all
 
     for name in names:
@@ -36,7 +37,7 @@ def main() -> None:
             txt = buf.getvalue()
         except Exception as ex:
             txt = f"ERROR building {name}: {ex}\n"
-        hdr = (f"# {name} @ {sf_dir} {bench.BENCH_CONF['spark.master']} "
+        hdr = (f"# {name} @ {sf_dir} {spark.sparkContext.master} "
                f"— {suffix}\n"
                f"# NOTE: legs upstream of materialize() points execute "
                f"eagerly at build time and appear here as Scan "

@@ -15,6 +15,7 @@ script is the runnable user journey with per-stage survivor counts.
 Run: python examples/llm_pipeline.py [sf_dir]
 """
 import sys
+import tempfile
 
 sys.path.insert(0, __file__.rsplit("/", 2)[0])
 
@@ -34,7 +35,7 @@ from bigslice_spark.operators.text import (bpe_token_count, chunk_documents,
                                            quality_score)
 
 
-def main() -> None:
+def main(tmp: str) -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sess = Session()
     scope = Scope(sess.spark)
@@ -230,11 +231,9 @@ def main() -> None:
     #     with upsert(partition_by=...) touching only its languages),
     #     then fold the write's shards into one file per partition and
     #     report table health — the round-5 serving-layer ending.
-    import tempfile
-
     from bigslice_spark.operators.upsert import (compact_partitions,
                                                  snapshot_stats, upsert)
-    table = tempfile.mkdtemp(prefix="llm_serving_") + "/corpus"
+    table = tmp + "/corpus"
     upsert(sess.spark, table, docs, ["doc_id"], partition_by=["lang"])
     compact_partitions(sess.spark, table, min_files=2)
     for r in snapshot_stats(sess.spark, table).collect():
@@ -246,4 +245,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    with tempfile.TemporaryDirectory(prefix="llm_serving_") as tmp:
+        main(tmp)

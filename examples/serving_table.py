@@ -23,7 +23,7 @@ import pyspark.sql.functions as F
 from bigslice_spark import Session
 
 
-def main() -> None:
+def main(tmp: str) -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sess = Session()
     spark = sess.spark
@@ -31,7 +31,7 @@ def main() -> None:
         ConcurrentWriteError, compact_partitions, read_latest,
         read_version, snapshot_diff, upsert, vacuum, _write_committed)
 
-    path = tempfile.mkdtemp(prefix="serving_tbl_") + "/customers"
+    path = tmp + "/customers"
     cust = (spark.read.parquet(f"{sf_dir}/customer.parquet")
             .select("c_custkey", "c_name", "c_acctbal",
                     F.col("c_mktsegment").alias("segment")))
@@ -93,4 +93,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    with tempfile.TemporaryDirectory(prefix="serving_tbl_") as tmp:
+        main(tmp)

@@ -15,7 +15,7 @@ import pyspark.sql.functions as F
 from bigslice_spark import Session
 
 
-def main() -> None:
+def main(out: str) -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sess = Session()
     ev = sess.read_parquet(f"{sf_dir}/events.parquet")
@@ -31,7 +31,6 @@ def main() -> None:
             return
         seen.append((shard, len(pdf)))
 
-    out = tempfile.mkdtemp(prefix="urls_out_")
     counts.writer_func(tap).write_parquet(out)
     for domain, hits in counts.collect():
         print(f"{domain}\t{hits}")
@@ -39,4 +38,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    with tempfile.TemporaryDirectory(prefix="urls_out_") as out:
+        main(out)

@@ -34,7 +34,7 @@ from bigslice_spark.operators.web import registrable_domain
 from bigslice_spark.sources.warc import warc_reader, warc_sink
 
 
-def main() -> None:
+def main(crawl_dir: str) -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     sess = Session()
     scope = Scope(sess.spark)
@@ -43,7 +43,6 @@ def main() -> None:
     # 0. synthesize the crawl: each doc becomes an HTML page inside an
     # HTTP response inside per-record-gzip WARC; every tenth page is
     # crawled twice (the duplicate the pipeline must collapse)
-    crawl_dir = tempfile.mkdtemp(prefix="web_ingest_")
     ids = F.col("doc_id").cast("string")
     page = F.concat(
         F.lit("<html><head><title>Doc "), ids,
@@ -136,4 +135,5 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    with tempfile.TemporaryDirectory(prefix="web_ingest_") as tmp:
+        main(tmp)

@@ -17,7 +17,7 @@ unmodified: SPARK_GRAFT_SF_DIR=<out> bench.py.
 
 Run: python make_sf1.py [out_dir] [src_dir]   (default out
 /tmp/spark_graft_sf1.0 — the 'sf1.0' suffix is what bench.py's sf regex
-reports; the session is bench.py's, on local[$SPARK_GRAFT_CPUS])
+reports; the session is session.get_spark's, on local[$SPARK_GRAFT_CPUS])
 """
 
 import os
@@ -70,9 +70,8 @@ def amplify(df, name: str, amp: int):
 def main() -> None:
     src = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1.0"
-    import bench
-    from bigslice_spark.session import load_tables
-    spark = bench.bench_session("bss_make_sf1")
+    from bigslice_spark.session import get_spark, load_tables
+    spark = get_spark("bss_make_sf1")
     t = load_tables(spark, src)
 
     os.makedirs(out, exist_ok=True)

@@ -1,14 +1,14 @@
 """Per-layer profiler for bench queries (guide §1: measure first).
 
-Runs each named query through the bench harness (bench.py's session
-plus an event log, its warmup, its timed build + count()), then
-attributes the event log's jobs to queries by job group (``bss:<name>``)
-and prints per query: eager jobs (submitted before the build returned:
-materialize rounds, broadcast builds, collects) and terminal jobs, each
-as count and seconds; driver-only time (build minus the eager jobs);
-other groups' jobs inside the query's window (expect 0); and per job its
-stages' wall, tasks, task time, GC, input records, shuffle bytes and
-spill.
+Runs each named query through the bench harness (a session.get_spark
+session plus an event log, bench.py's warmup, its timed build +
+count()), then attributes the event log's jobs to queries by job group
+(``bss:<name>``) and prints per query: eager jobs (submitted before the
+build returned: materialize rounds, broadcast builds, collects) and
+terminal jobs, each as count and seconds; driver-only time (build minus
+the eager jobs); other groups' jobs inside the query's window (expect
+0); and per job its stages' wall, tasks, task time, GC, input records,
+shuffle bytes and spill.
 
     python profile_query.py lpa_communities [more names...]
 
@@ -23,6 +23,7 @@ import sys
 import time
 
 import bench
+from bigslice_spark.session import get_spark
 
 
 def _union_s(intervals: list[tuple[float, float]]) -> float:
@@ -128,7 +129,11 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     evdir = f"/tmp/spark-events-{os.getpid()}"
     os.makedirs(evdir, exist_ok=True)
-    spark = bench.bench_session("bigslice_spark_profile", event_dir=evdir)
+    spark = get_spark("bigslice_spark_profile", conf={
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+        "spark.eventLog.dir": evdir})
     bench.warmup(spark, sf_dir)
 
     marks = {}

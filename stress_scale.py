@@ -1,5 +1,5 @@
 """Scale-stress harness: measure how the heavy operators scale when the
-input grows 1x -> 4x -> 16x, holding the box fixed (local[32]).
+input grows 1x -> 4x -> 16x, holding the box fixed.
 
 The 100 TB question is not "how fast at sf0.1" but "what's the growth
 curve": an operator whose wall time grows ~linearly in input rows (with
@@ -19,7 +19,7 @@ The replicas are make_sf1.py's (``make_sf1.amplify``).
 
 Run: python stress_scale.py [sf_dir]   (prints one JSON line per
 operator x amplification with rows and wall seconds; the session is
-bench.py's, on local[$SPARK_GRAFT_CPUS])
+session.get_spark's, on local[$SPARK_GRAFT_CPUS])
 """
 
 import json
@@ -60,9 +60,9 @@ def cold_warm(make) -> dict:
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
 
-    spark = bench.bench_session("bss_stress")
+    from bigslice_spark.session import get_spark, load_tables
+    spark = get_spark("bss_stress")
 
-    from bigslice_spark.session import load_tables
     from bigslice_spark.operators.dedup import minhash_lsh_pairs
     from bigslice_spark.operators.timeseries import (rolling_zscore,
                                                      time_rollup)

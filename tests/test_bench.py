@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 import bench
 
 CONTRACT_KEYS = {"metric", "value", "unit", "queries", "sf",
@@ -110,3 +112,32 @@ def test_prev_fresh_times_skips_core_count_runs_and_old_rounds(tmp_path):
                 '"baseline_subset_inseq":{"word_count":0.9}}'}))
     assert bench._prev_fresh_times(str(tmp_path)) == (
         14, {"word_count": 1.5})
+
+
+def _bench_only(monkeypatch, only):
+    """bench.main's in-process path for SPARK_GRAFT_BENCH_ONLY=``only``,
+    with a stub run_here; returns the names it was asked to run."""
+    ran = []
+
+    def run_here(app, names, sf_dir):
+        ran.extend(names)
+        return {n: 1.0 for n in names}
+    monkeypatch.setattr(bench, "run_here", run_here)
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_ONLY", only)
+    bench.main()
+    return ran
+
+
+def test_bench_only_runs_registry_entries_outside_headline(
+        monkeypatch, capsys):
+    ran = _bench_only(monkeypatch,
+                      "q4_order_priority,word_count,q1_pricing_summary")
+    # headline names in HEADLINE order, then the rest as given
+    assert ran == ["q1_pricing_summary", "word_count", "q4_order_priority"]
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["queries"] == {n: 1.0 for n in ran}
+
+
+def test_bench_only_typo_exits(monkeypatch):
+    with pytest.raises(SystemExit, match="q4_order_prority"):
+        _bench_only(monkeypatch, "q4_order_priority,q4_order_prority")

@@ -823,25 +823,21 @@ def test_plan_report_flags_duplicated_python_udf(spark, tables):
     assert plan_report(bad)["duplicated_python_udf"]
 
 
-def test_bucketed_join_has_no_table_exchanges(spark, sf_dir):
+def test_bucketed_join_has_no_table_exchanges(spark, sf_dir, tmp_path):
     # the co-located-join guarantee: both bucketed tables read back
     # pre-partitioned on the join key; the ONLY exchange in the plan
     # is the final tiny group-by, never either table
-    import tempfile
-
     import pyspark.sql.functions as F
     from bigslice_spark.operators.projection import write_bucketed
     from bigslice_spark.plans import explain_str
     from bigslice_spark.session import load_tables
     t = load_tables(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="bkt_gate_")
-    sfx = d.rsplit("_", 1)[-1]
     li = write_bucketed(t["lineitem"].select("l_orderkey",
                                              "l_extendedprice"),
-                        f"{d}/li", f"gate_li_{sfx}", "l_orderkey")
+                        str(tmp_path / "li"), "gate_li", "l_orderkey")
     o = write_bucketed(t["orders"].select("o_orderkey",
                                           "o_orderpriority"),
-                       f"{d}/o", f"gate_o_{sfx}", "o_orderkey")
+                       str(tmp_path / "o"), "gate_o", "o_orderkey")
     j = (li.hint("merge").join(o, li.l_orderkey == o.o_orderkey)
          .groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")))
     txt = explain_str(j)
@@ -1075,3 +1071,22 @@ def test_regex_trigram_plans_and_full_scan_equality(spark, tables):
                       F.col("text").rlike(p)).select("doc_id")
                   .collect())
     assert got == want
+
+
+def test_session_conf_pins_plan_shaping_values(spark):
+    """The plan-shaping values every session runs under: five Spark
+    defaults that _DEFAULT_CONF relies on without restating, and the two
+    it overrides. A Spark upgrade that moves one fails here instead of
+    silently changing plans."""
+    expected = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.files.maxPartitionBytes": "134217728",
+        "spark.sql.autoBroadcastJoinThreshold": "67108864",
+        "spark.sql.codegen.methodSplitThreshold": "256",
+    }
+    # an unset byte-size conf reads back with its unit ("134217728b")
+    got = {k: spark.conf.get(k).removesuffix("b") for k in expected}
+    assert got == expected

@@ -139,16 +139,14 @@ def test_spark_reader_splits_http(spark, tmp_path):
     assert bytes(out["request"]["payload"]).startswith(b"GET /")
 
 
-def test_warc_stream_reader_matches_batch(spark):
-    import tempfile
-
+def test_warc_stream_reader_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from bigslice_spark.sources.warc import (warc_reader, warc_sink,
                                              warc_stream_reader)
     from bigslice_spark.streaming import run_to_completion
 
-    d = tempfile.mkdtemp(prefix="warc_stream_")
+    d = str(tmp_path)
     body = F.encode(F.concat(F.lit("doc "), F.col("id")), "UTF-8")
     head = F.concat(
         F.lit("HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n"
