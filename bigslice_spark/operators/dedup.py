@@ -555,23 +555,18 @@ def embedding_cosine_pairs(df: DataFrame, vec_col: str = "embedding",
     """Embedding near-dup pairs: cosine ≥ threshold within coarse buckets
     (label / LSH band / IVF cell). The bucket join bounds the quadratic
     candidate space; cosine is a codegen'd zip_with/aggregate in double."""
-    from .similarity import _dim_of, _dot_wide
-    dim = _dim_of(df, vec_col)
-    v = df.select(F.col(id_col), F.col(bucket_col).alias("bk"),
-                  F.transform(F.col(vec_col),
-                              lambda x: x.cast("double")).alias("v"))
-    v = v.withColumn("n", F.sqrt(_dot_wide("v", "v", dim))) \
-        .filter(F.col("n") > 0)
+    from .similarity import _cosine, _prep
     # cut once: the norm projection feeds the self-join's two sides
     # plus the bucket-size aggregate (the semantic_dedup rule) — an
     # unmaterialized subtree would re-run the corpus-scale dot/sqrt
     # per reference
-    v = materialize(v)
-    dot = _dot_wide("v_a", "v_b", dim)
+    v = materialize(_prep(df, vec_col, id_col,
+                          F.col(bucket_col).alias("bk"),
+                          names=(id_col, "v", "n")))
     return (_bucketed_self_join(v.toDF("id", "bk", "v", "n"), ["bk"],
                                 chunk_target=chunk_target)
             .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine", dot / (F.col("n_a") * F.col("n_b")))
+            .withColumn("cosine", _cosine("v_a", "v_b", "n_a", "n_b"))
             .filter(F.col("cosine") >= threshold)
             .select("id_a", "id_b", "cosine"))
 
@@ -848,21 +843,21 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
     clustering.kmeans_assign_ivf, O(√k) per vector) and pass
     ``cell_col=`` to skip the inline assignment entirely.
     """
-    from .similarity import _dot_wide, _lit_vec, _sq_l2
-    dim = len(centroids[0])
-    keep = [F.col(cell_col)] if cell_col else []
-    v = df.select(F.col(id_col), *keep,
-                  F.transform(F.col(vec_col),
-                              lambda x: x.cast("double")).alias("__v__"))
+    from .similarity import _cosine, _lit_vec, _prep, _sq_l2
+    # zero-norm and NULL vectors stay: with no near neighbor, they
+    # survive
+    names = ("id", "__v__", "n")
     if cell_col:
-        cell = F.col(cell_col).cast("int")
+        v = _prep(df, vec_col, id_col,
+                  F.col(cell_col).cast("int").alias("cell"),
+                  names=names, nonzero=False)
     else:
+        v = _prep(df, vec_col, id_col, names=names, nonzero=False)
         cell = F.array_min(F.array(*[
             F.struct(_sq_l2("__v__", _lit_vec(c)).alias("d"),
                      F.lit(ci).alias("cell"))
             for ci, c in enumerate(centroids)]))["cell"]
-    v = v.select(F.col(id_col).alias("id"), cell.alias("cell"), "__v__")
-    v = v.withColumn("n", F.sqrt(_dot_wide("__v__", "__v__", dim)))
+        v = v.select("id", cell.alias("cell"), "__v__", "n")
     # the assignment subtree feeds BOTH the candidate self-join and
     # the survivor anti-join — cut it once so the corpus-scale scan +
     # argmin doesn't run twice (the ngram_jaccard shared-index rule)
@@ -871,9 +866,7 @@ def semantic_dedup(df: DataFrame, centroids: list[list[float]],
                 v.filter(F.col("n") > 0).toDF("id", "cell", "v", "n"),
                 ["cell"], chunk_target=chunk_target)
             .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn("cosine",
-                        _dot_wide("v_a", "v_b", dim)
-                        / (F.col("n_a") * F.col("n_b"))))
+            .withColumn("cosine", _cosine("v_a", "v_b", "n_a", "n_b")))
     # drop rule as an AGGREGATE, not a row filter: `max(cosine) >= t`
     # ≡ `∃ pair >= t` (same doubles, same verdict), but a row filter
     # here gets pushed INTO the sort-merge join condition, where the

@@ -49,13 +49,12 @@ def _seq_dot(a, b) -> float:
     return acc
 
 from .clustering import seed_centroids
-from .similarity import (_as_double_vec, _dim_of, _dot_wide, _prep,
+from .similarity import (_QUERY, _as_double_vec, _dim_of, _prep,
                          _rerank, _sq_l2)
 
 
-def _normed(df: DataFrame, vec_col: str, id_col: str,
-            dim: int) -> DataFrame:
-    p = _prep(df, vec_col, id_col, dim)
+def _normed(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    p = _prep(df, vec_col, id_col)
     unit = F.transform("v", lambda x: x / F.col("nrm"))
     return p.select("nid", unit.alias("v"))
 
@@ -95,7 +94,7 @@ def pq_train(df: DataFrame, m: int = 8, ksub: int = 16,
     if sample_mod and sample_mod > 1:
         src = df.filter(
             F.pmod(F.xxhash64(F.col(id_col)), sample_mod) == 0)
-    unit = _normed(src, vec_col, id_col, dim)
+    unit = _normed(src, vec_col, id_col)
     sub_structs = [F.struct(F.lit(j).alias("j"),
                             F.slice("v", j * dsub + 1, dsub)
                             .alias("sub")) for j in range(m)]
@@ -153,7 +152,7 @@ def pq_encode(df: DataFrame, codebooks: list,
     m = len(codebooks)
     dsub = dim // m
     ksub = len(codebooks[0])
-    unit = _normed(df, vec_col, id_col, dim)
+    unit = _normed(df, vec_col, id_col)
     spark = df.sparkSession
     cents = local_df(
         spark, [(j, c, [float(x) for x in codebooks[j][c]],
@@ -219,10 +218,6 @@ def pq_topk(df: DataFrame, queries: DataFrame, codebooks: list,
         tab = [_seq_dot(qv[j * dsub:(j + 1) * dsub], cent)
                for j in range(m) for cent in codebooks[j]]
         tabs.append((r["nid"], tab))
-    if not tabs:
-        return _rerank(
-            local_df(df.sparkSession,
-                     [], "qid long, nid long, cosine double"), k)
     qdf = local_df(spark, tabs, "qid long, tab array<double>")
 
     encoded = pq_encode(df, codebooks, vec_col, id_col, dim)
@@ -243,12 +238,7 @@ def pq_topk(df: DataFrame, queries: DataFrame, codebooks: list,
     # exact re-rank of the shortlist against raw vectors; the
     # shortlist (queries x oversample*k rows) broadcasts so the
     # corpus side never shuffles for it
-    corpus = _prep(df, vec_col, id_col, dim)
-    qs = _prep(queries, vec_col, id_col, dim) \
-        .select(F.col("nid").alias("qid"), F.col("v").alias("qv"),
-                F.col("nrm").alias("qnrm"))
-    scored = (corpus.join(F.broadcast(cand), "nid")
-              .join(F.broadcast(qs), "qid")
-              .withColumn("cosine", _dot_wide("v", "qv", dim)
-                          / (F.col("nrm") * F.col("qnrm"))))
-    return _rerank(scored, k)
+    corpus = _prep(df, vec_col, id_col)
+    qs = _prep(queries, vec_col, id_col, names=_QUERY)
+    return _rerank(corpus.join(F.broadcast(cand), "nid")
+                   .join(F.broadcast(qs), "qid"), k)

@@ -15,6 +15,12 @@ Three tiers, same output shape (qid, nid, cosine, rank):
                      sample), assign each vector to its cell, probe the
                      nprobe nearest cells per query, exact rerank inside.
 
+Each tier keeps only its candidate stage. Corpus and queries go through
+one normalize step (_prep) and every candidate pair through one verify
+step (_rerank: the _cosine score, then the per-query top k), which
+pq.pq_topk shares; dedup's embedding_cosine_pairs and semantic_dedup
+use the same _prep and _cosine.
+
 All distance math is an index-ordered array fold seeded with 0.0 —
 _dot_wide for dot products, _sq_l2 for squared L2: the same
 left-associative sum (a[0]*b[0] + a[1]*b[1] + ...) the DuckDB oracles
@@ -36,7 +42,7 @@ def _as_double_vec(col) -> "F.Column":
     return F.transform(col, lambda x: x.cast("double"))
 
 
-def _dot_wide(a: str, b: str, dim: int) -> "F.Column":
+def _dot_wide(a: str, b: str) -> "F.Column":
     # Index-ordered dot product as ONE array fold (one F.expr parse —
     # building expressions operator-by-operator costs a py4j round trip
     # each, measured ~8s of driver time for the 6-plane LSH plan).
@@ -53,8 +59,6 @@ def _dot_wide(a: str, b: str, dim: int) -> "F.Column":
     # for every double except -0.0 (normalized to +0.0, equal-comparing
     # and only reachable when every partial sum is a signed zero), so
     # values still match the unrolled sums the DuckDB oracles replay.
-    # `dim` stays in the signature: callers use it to size the probe
-    # side and the oracles' unrolled SQL.
     return F.expr(
         f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         f"CAST(0.0 AS DOUBLE), (acc, t) -> acc + t)")
@@ -95,16 +99,39 @@ def _dim_of(df: DataFrame, vec_col: str) -> int:
     return len(row[0])
 
 
-def _prep(df: DataFrame, vec_col: str, id_col: str, dim: int) -> DataFrame:
-    v = df.select(F.col(id_col).alias("nid"),
-                  _as_double_vec(F.col(vec_col)).alias("v"))
-    return v.withColumn("nrm", F.sqrt(_dot_wide("v", "v", dim))) \
-        .filter(F.col("nrm") > 0)
+_QUERY = ("qid", "qv", "qnrm")
 
 
-def _rerank(scored: DataFrame, k: int) -> DataFrame:
+def _prep(df: DataFrame, vec_col: str, id_col: str, *keep,
+          names: tuple = ("nid", "v", "nrm"),
+          nonzero: bool = True) -> DataFrame:
+    """The one normalize step of every vector operator, corpus side and
+    query side (``names=_QUERY``): (id, *keep, v, nrm) under ``names``,
+    ``v`` the vector cast to double and ``nrm`` its L2 norm, keeping
+    only rows with nrm > 0 (NULL and all-zero vectors have no cosine).
+    ``nonzero=False`` keeps them, for callers that still return those
+    rows."""
+    nid, v, nrm = names
+    out = df.select(F.col(id_col).alias(nid), *keep,
+                    _as_double_vec(F.col(vec_col)).alias(v))
+    out = out.withColumn(nrm, F.sqrt(_dot_wide(v, v)))
+    return out.filter(F.col(nrm) > 0) if nonzero else out
+
+
+def _cosine(a: str = "v", b: str = "qv", na: str = "nrm",
+            nb: str = "qnrm") -> "F.Column":
+    """Cosine of two prepped vectors: the one exact score of every
+    operator's verify step."""
+    return _dot_wide(a, b) / (F.col(na) * F.col(nb))
+
+
+def _rerank(cands: DataFrame, k: int) -> DataFrame:
+    """The verify step of the top-k operators: score each candidate
+    (corpus, query) pair with _cosine and keep the k best per query,
+    rank ties broken by neighbor id."""
     w = W.partitionBy("qid").orderBy(F.desc("cosine"), "nid")
-    return (scored.withColumn("rank", F.row_number().over(w))
+    return (cands.withColumn("cosine", _cosine())
+            .withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("qid", "nid", "cosine", "rank"))
 
@@ -112,22 +139,14 @@ def _rerank(scored: DataFrame, k: int) -> DataFrame:
 def brute_force_topk(df: DataFrame, queries: DataFrame, k: int = 10,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      q_vec_col: str | None = None,
-                     q_id_col: str | None = None,
-                     dim: int | None = None) -> DataFrame:
+                     q_id_col: str | None = None) -> DataFrame:
     """Exact cosine top-k: broadcast queries × corpus scan, window top-k.
     Rank ties broken by neighbor id for determinism."""
-    q_vec_col = q_vec_col or vec_col
-    q_id_col = q_id_col or id_col
-    dim = dim or _dim_of(df, vec_col)
-    corpus = _prep(df, vec_col, id_col, dim)
-    qs = queries.select(F.col(q_id_col).alias("qid"),
-                        _as_double_vec(F.col(q_vec_col)).alias("qv"))
-    qs = qs.withColumn("qnrm", F.sqrt(_dot_wide("qv", "qv", dim))) \
-        .filter(F.col("qnrm") > 0)
-    scored = (corpus.join(F.broadcast(qs), F.col("nid") != F.col("qid"))
-              .withColumn("cosine", _dot_wide("v", "qv", dim)
-                          / (F.col("nrm") * F.col("qnrm"))))
-    return _rerank(scored, k)
+    corpus = _prep(df, vec_col, id_col)
+    qs = _prep(queries, q_vec_col or vec_col, q_id_col or id_col,
+               names=_QUERY)
+    return _rerank(corpus.join(F.broadcast(qs),
+                               F.col("nid") != F.col("qid")), k)
 
 
 def _hyperplanes(dim: int, nbits: int, seed: int = 42) -> list[list[float]]:
@@ -165,24 +184,17 @@ def lsh_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     """Random-hyperplane LSH ANN: equi-join on bucket id, exact rerank
     inside buckets. multiprobe=m additionally probes buckets at hamming
     distance 1 for the first m bit positions (recall knob)."""
-    dim = dim or _dim_of(df, vec_col)
-    planes = _hyperplanes(dim, nbits)
-    corpus = _prep(df, vec_col, id_col, dim) \
+    planes = _hyperplanes(dim or _dim_of(df, vec_col), nbits)
+    corpus = _prep(df, vec_col, id_col) \
         .withColumn("bk", _bucket_expr("v", planes))
-    qs = queries.select(F.col(id_col).alias("qid"),
-                        _as_double_vec(F.col(vec_col)).alias("qv"))
-    qs = (qs.withColumn("qnrm", F.sqrt(_dot_wide("qv", "qv", dim)))
-          .filter(F.col("qnrm") > 0)
-          .withColumn("bk0", _bucket_expr("qv", planes)))
+    qs = _prep(queries, vec_col, id_col, names=_QUERY) \
+        .withColumn("bk0", _bucket_expr("qv", planes))
     probes = [F.col("bk0")]
     for i in range(max(0, multiprobe - 1)):
         probes.append(F.col("bk0").bitwiseXOR(F.lit(1 << i)))
     qs = qs.withColumn("bk", F.explode(F.array(*probes)))
-    scored = (corpus.join(qs, on="bk")
-              .filter(F.col("nid") != F.col("qid"))
-              .withColumn("cosine", _dot_wide("v", "qv", dim)
-                          / (F.col("nrm") * F.col("qnrm"))))
-    return _rerank(scored, k)
+    return _rerank(corpus.join(qs, on="bk")
+                   .filter(F.col("nid") != F.col("qid")), k)
 
 
 def _auto_ncells(n: int, cell_target: int) -> int:
@@ -215,20 +227,19 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
              sample_fraction: float = 1.0, seed: int = 42,
              dim: int | None = None,
              centers: list[list[float]] | None = None,
-             max_iter: int = 8, cell_target: int = 4096,
-             assign_method: str = "join") -> DataFrame:
+             max_iter: int = 8, cell_target: int = 4096) -> DataFrame:
     """IVF ANN: KMeans cells (pyspark.ml), probe nprobe nearest cells.
     Trains on a sample; assignment + rerank are expression-level.
-    Pass ``dim`` when known — the fallback inference is a driver-side
-    ``.first()`` (one extra tiny job per call). Pass ``centers=``
-    (k×dim floats, e.g. a previous call's training or
-    clustering.kmeans_train output) to SKIP the MLlib fit entirely —
+    Pass ``centers=`` (k×dim floats, e.g. a previous call's training
+    or clustering.kmeans_train output) to SKIP the MLlib fit entirely —
     the production shape: train the coarse quantizer once per corpus
-    snapshot, reuse it for every query batch. With EXPLICIT ncells
-    and no centers, the fit runs over sample_fraction of the corpus
-    (default 1.0 — kept for backward-compatible determinism): on a
-    large corpus pass ``sample_fraction≈256·ncells/N`` yourself, the
-    standard points-per-centroid rule the auto path applies for you.
+    snapshot, reuse it for every query batch. ``dim`` only validates
+    ``centers=`` (when omitted, one driver-side ``.first()`` reads it
+    off the corpus). With EXPLICIT ncells and no centers, the fit runs
+    over sample_fraction of the corpus (default 1.0 — kept for
+    backward-compatible determinism): on a large corpus pass
+    ``sample_fraction≈256·ncells/N`` yourself, the standard
+    points-per-centroid rule the auto path applies for you.
 
     ``ncells=None`` (the default) AUTO-SIZES to ~N/``cell_target``
     (floor 16, capped at 4·√N and 65 536 — see ``_auto_ncells`` for
@@ -239,21 +250,13 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     until the caps bind (one column-pruned count() when neither
     ncells nor centers is given).
 
-    ``assign_method``: ``join`` (exact) assigns the corpus with
-    clustering.kmeans_assign — broadcast the centroid table, one
-    _sq_l2 fold per (vector, cell), min(struct(d, cell)) per vector
-    (map-side partial agg, no cliff at any ncells) — and takes the
-    nprobe nearest cells per query with the same broadcast and a
-    small window. ``hierarchical`` keeps that query side but assigns
-    the CORPUS through clustering.kmeans_assign_ivf — O(√ncells) per
-    vector instead of O(ncells), the opt-in for index builds where
-    auto-sized ncells makes flat assignment the O(N^1.5) bottleneck;
-    cell contents may differ slightly from the exact argmin (IVF
-    approximation)."""
-    if assign_method not in ("join", "hierarchical"):
-        raise ValueError(f"unknown assign_method: {assign_method!r} "
-                         "(expected 'join' or 'hierarchical')")
-    dim = dim or _dim_of(df, vec_col)
+    The corpus is assigned with clustering.kmeans_assign — broadcast
+    the centroid table, one _sq_l2 fold per (vector, cell),
+    min(struct(d, cell)) per vector (map-side partial agg, no cliff at
+    any ncells) — and each query takes its nprobe nearest cells with
+    the same broadcast and a small window. Callers that assign cells
+    themselves (clustering.kmeans_assign_ivf, O(√ncells) per vector)
+    use semantic_dedup(cell_col=) or their own equi-join."""
     n_corpus = None
     if ncells is None:
         if centers is not None:
@@ -270,7 +273,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
                 target = 256 * ncells
                 if n_corpus > target:
                     sample_fraction = target / n_corpus
-    corpus = _prep(df, vec_col, id_col, dim)
+    corpus = _prep(df, vec_col, id_col)
     if centers is None:
         try:
             from pyspark.ml.clustering import KMeans
@@ -290,6 +293,7 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
     else:
         if not centers:
             raise ValueError("centers must be a non-empty list")
+        dim = dim or _dim_of(df, vec_col)
         bad = [len(c) for c in centers if len(c) != dim]
         if bad:
             raise ValueError(
@@ -299,18 +303,13 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
         # just returns every cell), exactly like the trained path with
         # nprobe > ncells — train-once/reuse parity
 
-    from .clustering import kmeans_assign, kmeans_assign_ivf
-    qs = queries.select(F.col(id_col).alias("qid"),
-                        _as_double_vec(F.col(vec_col)).alias("qv"))
-    qs = (qs.withColumn("qnrm", F.sqrt(_dot_wide("qv", "qv", dim)))
-          .filter(F.col("qnrm") > 0))
+    from .clustering import kmeans_assign
+    qs = _prep(queries, vec_col, id_col, names=_QUERY)
     # corpus: broadcast-join argmin (map-side partial agg — the only
     # exchange hashes nid, never the 16-value cell id); queries: same
     # broadcast with a per-qid window for the nprobe-nearest cells —
     # query sets are small by contract
-    assign = kmeans_assign_ivf if assign_method == "hierarchical" \
-        else kmeans_assign
-    cells = assign(df, centers, vec_col, id_col) \
+    cells = kmeans_assign(df, centers, vec_col, id_col) \
         .select(F.col(id_col).alias("nid"), "cell")
     assigned = corpus.join(cells, on="nid")
     cents = local_df(
@@ -322,8 +321,5 @@ def ivf_topk(df: DataFrame, queries: DataFrame, k: int = 10,
           .withColumn("__pr", F.row_number().over(wq))
           .filter(F.col("__pr") <= nprobe)
           .drop("c", "__qd", "__pr"))
-    scored = (assigned.join(qs, on="cell")
-              .filter(F.col("nid") != F.col("qid"))
-              .withColumn("cosine", _dot_wide("v", "qv", dim)
-                          / (F.col("nrm") * F.col("qnrm"))))
-    return _rerank(scored, k)
+    return _rerank(assigned.join(qs, on="cell")
+                   .filter(F.col("nid") != F.col("qid")), k)

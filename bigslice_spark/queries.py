@@ -1444,17 +1444,22 @@ def dedup_components(spark, sf_dir):
     return connected_components(pairs, src="id_a", dst="id_b")
 
 
+def _dot_sql(a: str, b: str, dim: int) -> str:
+    """The cosine oracles' dot product of array columns ``a`` and
+    ``b``, written out term by term: the left-associative sum
+    similarity._dot_wide's 0.0-seeded fold evaluates, so the doubles
+    match bitwise."""
+    return " + ".join(f"CAST({a}[{i+1}] AS DOUBLE) * CAST({b}[{i+1}] "
+                      f"AS DOUBLE)" for i in range(dim))
+
+
 def _embed_pairs_oracle(dim: int = 64, threshold: float = 0.4) -> str:
     """SQL replay of embedding_cosine_pairs: same-label pairs, cosine in
     the exact left-associative order _dot_wide's array fold evaluates
     (0.0-seeded fold == unrolled sum, bitwise) → identical doubles →
     an exact threshold filter."""
-    dot = " + ".join(
-        f"CAST(a.embedding[{i+1}] AS DOUBLE) * CAST(b.embedding[{i+1}] "
-        f"AS DOUBLE)" for i in range(dim))
-    nsum = " + ".join(
-        f"CAST(embedding[{i+1}] AS DOUBLE) * CAST(embedding[{i+1}] AS "
-        f"DOUBLE)" for i in range(dim))
+    dot = _dot_sql("a.embedding", "b.embedding", dim)
+    nsum = _dot_sql("embedding", "embedding", dim)
     return f"""
     WITH norms AS (SELECT vec_id AS id, sqrt({nsum}) AS nrm
                    FROM embeddings),
@@ -1597,12 +1602,8 @@ def dedup_embedding(spark, sf_dir):
 def _cosine_oracle(dim: int = 64) -> str:
     """Wide left-associative dot/norm sums — the exact expression order
     brute_force_topk's codegen uses, so the doubles match bitwise."""
-    dot = " + ".join(
-        f"CAST(qv[{i+1}] AS DOUBLE) * CAST(v[{i+1}] AS DOUBLE)"
-        for i in range(dim))
-    nsum = " + ".join(
-        f"CAST(embedding[{i+1}] AS DOUBLE) * CAST(embedding[{i+1}] AS "
-        f"DOUBLE)" for i in range(dim))
+    dot = _dot_sql("qv", "v", dim)
+    nsum = _dot_sql("embedding", "embedding", dim)
     return f"""
     WITH q AS (SELECT vec_id AS qid, embedding AS qv FROM embeddings
                WHERE vec_id < 5),
@@ -1630,7 +1631,7 @@ def similarity_topk(spark, sf_dir):
     _, t = _s(spark, sf_dir)
     emb = t["embeddings"]
     qs = emb.filter(F.col("vec_id") < 5)
-    return brute_force_topk(emb, qs, k=10, dim=64)
+    return brute_force_topk(emb, qs, k=10)
 
 
 def _lsh_oracle(dim: int = 64, nbits: int = 6, multiprobe: int = 2,
@@ -1653,12 +1654,8 @@ def _lsh_oracle(dim: int = 64, nbits: int = 6, multiprobe: int = 2,
                          f"THEN {1 << i} ELSE 0 END)")
         return " + ".join(terms)
 
-    dot = " + ".join(
-        f"CAST(v[{i+1}] AS DOUBLE) * CAST(qv[{i+1}] AS DOUBLE)"
-        for i in range(dim))
-    nsum = " + ".join(
-        f"CAST(embedding[{i+1}] AS DOUBLE) * CAST(embedding[{i+1}] AS "
-        f"DOUBLE)" for i in range(dim))
+    dot = _dot_sql("v", "qv", dim)
+    nsum = _dot_sql("embedding", "embedding", dim)
     probes = ["bk0"] + [f"xor(bk0, {1 << i})"
                         for i in range(max(0, multiprobe - 1))]
     probe_sel = " UNION ALL ".join(
@@ -1700,6 +1697,22 @@ def similarity_lsh(spark, sf_dir):
     return lsh_topk(emb, qs, k=10, nbits=6, multiprobe=2, dim=64)
 
 
+def _recall_ok(approx, emb, qs):
+    """(qid, recall_ok): per query, does ``approx`` share at least 5
+    of brute-force cosine's top 10 over the same corpus — the property
+    check of the ANN entries whose index is not SQL-replayable."""
+    from .operators.similarity import brute_force_topk
+    bf = brute_force_topk(emb, qs, k=10)
+    hits = (approx.select("qid", "nid")
+            .join(bf.select("qid", "nid"), ["qid", "nid"])
+            .groupBy("qid").agg(F.count(F.lit(1)).alias("n_hits")))
+    return (bf.select("qid").distinct()
+            .join(hits, on="qid", how="left")
+            .select("qid",
+                    (F.coalesce(F.col("n_hits"), F.lit(0)) >= 5)
+                    .alias("recall_ok")))
+
+
 @query("similarity_ivf", """
     SELECT vec_id AS qid, true AS recall_ok
     FROM embeddings WHERE vec_id < 5
@@ -1712,20 +1725,12 @@ def similarity_ivf(spark, sf_dir):
     ≥ 0.5 — a violated bound hash-mismatches. Measured: ≥ 0.5 at
     nprobe=3 across SFs; the entry runs nprobe=4 (superset of probed
     cells ⇒ recall only improves)."""
-    from .operators.similarity import brute_force_topk, ivf_topk
+    from .operators.similarity import ivf_topk
     _, t = _s(spark, sf_dir)
     emb = t["embeddings"]
     qs = emb.filter(F.col("vec_id") < 5)
-    ivf = ivf_topk(emb, qs, k=10, ncells=8, nprobe=4, dim=64)
-    bf = brute_force_topk(emb, qs, k=10, dim=64)
-    hits = (ivf.select("qid", "nid")
-            .join(bf.select("qid", "nid"), ["qid", "nid"])
-            .groupBy("qid").agg(F.count(F.lit(1)).alias("n_hits")))
-    return (bf.select("qid").distinct()
-            .join(hits, on="qid", how="left")
-            .select("qid",
-                    (F.coalesce(F.col("n_hits"), F.lit(0)) >= 5)
-                    .alias("recall_ok")))
+    return _recall_ok(
+        ivf_topk(emb, qs, k=10, ncells=8, nprobe=4, dim=64), emb, qs)
 
 
 @query("token_counts", rf"""
@@ -4632,12 +4637,8 @@ def _semantic_dedup_oracle(k: int = 8, dim: int = 64,
     pairs at ``threshold``, survivors = vectors with no lower-id near
     neighbor in their cell (the greedy lower-id drop rule shared by
     every dedup family here)."""
-    dot = " + ".join(
-        f"CAST(a.embedding[{i+1}] AS DOUBLE)"
-        f" * CAST(b.embedding[{i+1}] AS DOUBLE)" for i in range(dim))
-    nsum = " + ".join(
-        f"CAST(embedding[{i+1}] AS DOUBLE)"
-        f" * CAST(embedding[{i+1}] AS DOUBLE)" for i in range(dim))
+    dot = _dot_sql("a.embedding", "b.embedding", dim)
+    nsum = _dot_sql("embedding", "embedding", dim)
     return f"""
     WITH {_seed_cells_cte(k, dim)},
     norms AS (SELECT vec_id, sqrt({nsum}) AS nrm FROM embeddings),
@@ -6761,7 +6762,6 @@ def similarity_pq_q(spark, sf_dir):
     sf0.01, >= 0.5 at sf0.1; training is bitwise-deterministic so the
     booleans are stable)."""
     from .operators.pq import pq_topk, pq_train
-    from .operators.similarity import brute_force_topk
     _, t = _s(spark, sf_dir)
     emb = t["embeddings"]
     qs = emb.filter(F.col("vec_id") < 5)
@@ -6772,16 +6772,8 @@ def similarity_pq_q(spark, sf_dir):
     # sample-bounded while encode/search still cover every vector.
     books = pq_train(emb, m=8, ksub=16, dim=64, iters=1,
                      sample_mod=2)
-    pq = pq_topk(emb, qs, books, k=10, dim=64, oversample=16)
-    bf = brute_force_topk(emb, qs, k=10, dim=64)
-    hits = (pq.select("qid", "nid")
-            .join(bf.select("qid", "nid"), ["qid", "nid"])
-            .groupBy("qid").agg(F.count(F.lit(1)).alias("n_hits")))
-    return (bf.select("qid").distinct()
-            .join(hits, on="qid", how="left")
-            .select("qid",
-                    (F.coalesce(F.col("n_hits"), F.lit(0)) >= 5)
-                    .alias("recall_ok")))
+    return _recall_ok(
+        pq_topk(emb, qs, books, k=10, dim=64, oversample=16), emb, qs)
 
 
 @query("multimodal_resize", """

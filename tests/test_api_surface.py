@@ -9,7 +9,6 @@ import importlib
 import inspect
 import pkgutil
 
-import pytest
 
 import bigslice_spark
 
@@ -17,7 +16,8 @@ import bigslice_spark
 # decision the code makes (see CHANGES.md).
 REMOVED_OPTIONS = {"reliable", "broadcast_labels", "broadcast_ranks",
                    "vectorized", "persist_tokens", "broadcast_eval",
-                   "broadcast_other", "pure", "broadcast_reference"}
+                   "broadcast_other", "pure", "broadcast_reference",
+                   "assign_method"}
 
 
 def _callables():
@@ -65,16 +65,15 @@ def test_nearest_centroid_operators_take_no_method():
     assert not hasattr(pq, "_code_expr")
 
 
-def test_ivf_topk_accepts_only_join_and_hierarchical():
-    from bigslice_spark.operators.similarity import ivf_topk
-    assert inspect.signature(ivf_topk).parameters[
-        "assign_method"].default == "join"
-    for gone in ("auto", "unrolled"):
-        # the value is checked before the frames are touched
-        with pytest.raises(ValueError) as ex:
-            ivf_topk(None, None, assign_method=gone)
-        assert "'join'" in str(ex.value), ex.value
-        assert "'hierarchical'" in str(ex.value), ex.value
+def test_cosine_kernel_takes_no_dim():
+    """The dot-product fold never read ``dim``, so the shared prep, the
+    fold, its public re-export and the exact top-k take none (and
+    brute_force_topk runs no dim probe)."""
+    from bigslice_spark.functions import dot_product_wide
+    from bigslice_spark.operators import similarity
+    for fn in (similarity._dot_wide, similarity._prep, dot_product_wide,
+               similarity.brute_force_topk):
+        assert "dim" not in inspect.signature(fn).parameters, fn
 
 
 def test_per_row_python_stages_go_through_flatmap_rows():

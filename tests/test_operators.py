@@ -864,6 +864,63 @@ def test_similarity_lsh_recall_vs_brute(spark, tables):
     assert recall >= 0.2, f"LSH recall too low: {recall}"
 
 
+def test_cosine_operators_on_an_empty_corpus(spark):
+    """No dim probe: an empty corpus gives an empty frame with the
+    output columns, not a 'cannot infer dim' error."""
+    from bigslice_spark.operators.dedup import embedding_cosine_pairs
+    from bigslice_spark.operators.pq import pq_topk
+    from bigslice_spark.operators.similarity import brute_force_topk
+    empty = spark.createDataFrame(
+        [], "vec_id long, embedding array<float>, label int")
+    pairs = embedding_cosine_pairs(empty)
+    assert pairs.columns == ["id_a", "id_b", "cosine"]
+    assert pairs.collect() == []
+    top = brute_force_topk(empty, empty, k=3)
+    assert top.columns == ["qid", "nid", "cosine", "rank"]
+    assert top.collect() == []
+    # no query survives the norm filter: the ADC table set is empty
+    books = [[[1.0, 0.0], [0.0, 1.0]]] * 2
+    pq = pq_topk(empty, empty, books, k=3, dim=4)
+    assert pq.columns == ["qid", "nid", "cosine", "rank"]
+    assert pq.collect() == []
+
+
+def _build_jobs(session, spark, group, build):
+    """Ids of the jobs ``build()`` schedules under a scoped job group
+    (the listener bus is drained first, so none is missed)."""
+    with session.job_group(group):
+        build()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark.sparkContext.statusTracker().getJobIdsForGroup(group)
+
+
+def test_cosine_operator_builds_run_no_dim_probe(session, spark, tables):
+    """Building brute_force_topk schedules no job, and building
+    embedding_cosine_pairs schedules only its two materialize points:
+    the normalized vectors and _bucketed_self_join's hot-key sizing
+    (no `.first()` dim probe before them)."""
+    from bigslice_spark.checkpoint import materialize, release
+    from bigslice_spark.operators.dedup import (_bucketed_self_join,
+                                                embedding_cosine_pairs)
+    from bigslice_spark.operators.similarity import (_prep,
+                                                     brute_force_topk)
+    emb = tables["embeddings"]
+    qs = emb.filter(F.col("vec_id") < 3)
+    assert _build_jobs(session, spark, "t:bf",
+                       lambda: brute_force_topk(emb, qs, k=3)) == []
+    whole = _build_jobs(session, spark, "t:pairs",
+                        lambda: embedding_cosine_pairs(emb))
+    norm = []
+    prep = _prep(emb, "embedding", "vec_id",
+                 F.col("label").alias("bk")).toDF("id", "bk", "v", "n")
+    assert len(_build_jobs(session, spark, "t:norm",
+                           lambda: norm.append(materialize(prep)))) == 1
+    sizing = _build_jobs(session, spark, "t:sizing",
+                         lambda: _bucketed_self_join(norm[0], ["bk"]))
+    release(norm[0])
+    assert len(whole) == 1 + len(sizing), (whole, sizing)
+
+
 def test_repartition_func_preserves_content(session):
     sl = session.const(4, list(range(50)), names=["n"], schema="n long")
     out = sl.repartition_func(8, F.col("n") * 7 + 1)
@@ -2243,29 +2300,6 @@ def test_coarse_membership_deterministic_tiebreak():
                              [[1.0, 0.0], [-1.0, 0.0]]) == [0, 1]
 
 
-def test_ivf_topk_hierarchical_assign(spark, tables):
-    """The hierarchical corpus-assign path returns well-formed top-k
-    with high overlap against the exact join path (cells shift only
-    for vectors whose nearest centroid is outside the probed groups)."""
-    from bigslice_spark.operators.clustering import seed_centroids
-    from bigslice_spark.operators.similarity import ivf_topk
-    emb = tables["embeddings"]
-    qs = emb.limit(5)
-    cents = seed_centroids(16, 64)
-    a = ivf_topk(emb, qs, k=5, centers=cents, nprobe=4,
-                 assign_method="join")
-    b = ivf_topk(emb, qs, k=5, centers=cents, nprobe=4,
-                 assign_method="hierarchical")
-    pa = {(r["qid"], r["nid"]) for r in a.collect()}
-    pb = {(r["qid"], r["nid"]) for r in b.collect()}
-    # both paths fill the top-k (pair counts may differ by a few when
-    # a corpus vector lands in a different cell)
-    assert pa and pb and abs(len(pa) - len(pb)) <= len(pa) // 2
-    # ≥50% candidate overlap at this tiny scale is the sanity floor;
-    # exactness is NOT the contract (IVF approximation)
-    assert len(pa & pb) >= int(0.5 * min(len(pa), len(pb)))
-
-
 def test_kmeans_train_reduces_cost_and_is_layout_stable(spark, tables):
     from bigslice_spark.operators.clustering import (kmeans_assign,
                                                      kmeans_train,
@@ -3560,7 +3594,7 @@ def test_ivf_accepts_precomputed_centers(spark, tables):
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
     from bigslice_spark.operators.similarity import _prep
-    corpus = _prep(emb, "embedding", "vec_id", 64)
+    corpus = _prep(emb, "embedding", "vec_id")
     km = KMeans(k=4, seed=42, featuresCol="feat", maxIter=8)
     model = km.fit(corpus.withColumn("feat", array_to_vector("v")))
     centers = [[float(x) for x in c] for c in model.clusterCenters()]
@@ -3574,10 +3608,9 @@ def test_ivf_accepts_precomputed_centers(spark, tables):
 
 
 def test_ivf_join_assignment_matches_unrolled_bitwise(spark, tables):
-    """ivf_topk's broadcast-fold assignment (the default, and the
-    explicit ``join``) agrees on every (qid, nid, cosine, rank) with
-    the unrolled distance text it replaced — the fold computes the
-    identical left-associative float sums."""
+    """ivf_topk's broadcast-fold assignment agrees on every (qid, nid,
+    cosine, rank) with the unrolled distance text it replaced — the
+    fold computes the identical left-associative float sums."""
     import pyspark.sql.functions as F
     from bigslice_spark.operators.clustering import seed_centroids
     from bigslice_spark.operators.similarity import ivf_topk
@@ -3585,9 +3618,8 @@ def test_ivf_join_assignment_matches_unrolled_bitwise(spark, tables):
     emb = tables["embeddings"]
     qs = emb.filter(F.col("vec_id") < 3)
     cents = seed_centroids(24, 64)
-    un = ivf_topk_unrolled(emb, qs, cents, k=5, nprobe=3, dim=64)
-    jo = ivf_topk(emb, qs, k=5, nprobe=3, dim=64, centers=cents,
-                  assign_method="join")
+    un = ivf_topk_unrolled(emb, qs, cents, k=5, nprobe=3)
+    jo = ivf_topk(emb, qs, k=5, nprobe=3, dim=64, centers=cents)
     au = ivf_topk(emb, qs, k=5, nprobe=3, dim=64, centers=cents)
     rows = lambda d: sorted(map(tuple, d.collect()))
     assert rows(un) == rows(jo) == rows(au)
@@ -3907,7 +3939,7 @@ def test_pq_joint_train_matches_per_subspace_kmeans(spark, tables):
     from bigslice_spark.operators.pq import _normed, pq_train
     emb = tables["embeddings"]
     books = pq_train(emb, m=4, ksub=8, dim=64, iters=2)
-    unit = _normed(emb, "embedding", "vec_id", 64)
+    unit = _normed(emb, "embedding", "vec_id")
     for j in range(4):
         sub = unit.select(F.col("nid").alias("vec_id"),
                           F.slice("v", j * 16 + 1, 16).alias("sub"))
@@ -3938,7 +3970,7 @@ def test_pq_topk_beats_random_and_reranks_exact(spark, tables):
     qs = emb.filter(F.col("vec_id") < 3)
     books = pq_train(emb, m=8, ksub=16, dim=64, iters=2)
     pq = pq_topk(emb, qs, books, k=10, dim=64, oversample=16)
-    bf = brute_force_topk(emb, qs, k=10, dim=64)
+    bf = brute_force_topk(emb, qs, k=10)
     # exact cosine on returned rows: PQ's cosine for a (qid, nid) it
     # shares with brute force must MATCH brute force's bitwise
     bfv = {(r["qid"], r["nid"]): r["cosine"] for r in bf.collect()}

@@ -9,8 +9,7 @@ text bit for bit."""
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bigslice_spark.operators.similarity import (_as_double_vec,
-                                                 _dot_wide,
+from bigslice_spark.operators.similarity import (_QUERY, _as_double_vec,
                                                  _fold_dot_literal, _prep,
                                                  _rerank)
 
@@ -54,15 +53,12 @@ def kmeans_means_unrolled(df: DataFrame, centroids: list[list[float]],
 
 def ivf_topk_unrolled(df: DataFrame, queries: DataFrame,
                       centers: list[list[float]], k: int, nprobe: int,
-                      dim: int, vec_col: str = "embedding",
+                      vec_col: str = "embedding",
                       id_col: str = "vec_id") -> DataFrame:
     """ivf_topk with the corpus cells and the query probe lists taken
     from the unrolled distance array (array_min / array_sort)."""
-    corpus = _prep(df, vec_col, id_col, dim)
-    qs = queries.select(F.col(id_col).alias("qid"),
-                        _as_double_vec(F.col(vec_col)).alias("qv"))
-    qs = (qs.withColumn("qnrm", F.sqrt(_dot_wide("qv", "qv", dim)))
-          .filter(F.col("qnrm") > 0))
+    corpus = _prep(df, vec_col, id_col)
+    qs = _prep(queries, vec_col, id_col, names=_QUERY)
     assigned = corpus.withColumn(
         "cell", F.array_min(cell_dists(centers, "v"))["cell"])
     qs = (qs.withColumn("cells", F.slice(
@@ -70,11 +66,8 @@ def ivf_topk_unrolled(df: DataFrame, queries: DataFrame,
           .withColumn("cell", F.explode(
               F.transform("cells", lambda s: s["cell"])))
           .drop("cells"))
-    scored = (assigned.join(qs, on="cell")
-              .filter(F.col("nid") != F.col("qid"))
-              .withColumn("cosine", _dot_wide("v", "qv", dim)
-                          / (F.col("nrm") * F.col("qnrm"))))
-    return _rerank(scored, k)
+    return _rerank(assigned.join(qs, on="cell")
+                   .filter(F.col("nid") != F.col("qid")), k)
 
 
 def pq_encode_unrolled(df: DataFrame, codebooks: list, dim: int,
@@ -95,7 +88,7 @@ def pq_encode_unrolled(df: DataFrame, codebooks: list, dim: int,
             cands.append(F.struct(d.alias("d"), F.lit(c).alias("c")))
         return F.least(*cands).getField("c")
 
-    unit = _normed(df, vec_col, id_col, dim)
+    unit = _normed(df, vec_col, id_col)
     return unit.select("nid", F.array(*[code(j, codebooks[j])
                                         for j in range(m)])
                        .alias("codes"))
